@@ -194,7 +194,19 @@ object Bench {
     // total = the gate queries only, so round-over-round totals stay
     // comparable; the #prod twins are informational.
     val total = results.map(_._2).filter(_ >= 0).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+    // run context, so a regression traces to a machine shape and a
+    // commit: the session's cores and shuffle partitions, and the
+    // checkout's HEAD ("unknown" outside a git checkout)
+    val repoRoot = sys.env.getOrElse("SPARK_GRAFT_REPO", sys.props("user.dir"))
+    val sha = try {
+      import scala.sys.process._
+      Process(Seq("git", "rev-parse", "HEAD"), new java.io.File(repoRoot))
+        .!!(ProcessLogger(_ => ())).trim
+    } catch { case _: Exception => "unknown" }
+    val context = s""""cpus":${spark.sparkContext.defaultParallelism},""" +
+      s""""shufflePartitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+      s""""git":"$sha""""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir",$context}"""
     // The full one-line JSON exceeds the driver's 2000-char output tail at
     // 257+ queries, so the LAST stdout line must be a compact summary that
     // still parses as the bench contract: total + errors + a slowest-5
@@ -208,7 +220,6 @@ object Bench {
     // noise chase — the r9 "knn_ivf 6.42s" incident. Subset runs
     // (SPARK_GRAFT_ONLY) skip it: a partial map would masquerade as a
     // full-surface regression baseline.
-    val repoRoot = sys.env.getOrElse("SPARK_GRAFT_REPO", sys.props("user.dir"))
     if (only.isEmpty && Files.isDirectory(Paths.get(repoRoot, ".git")))
       Files.write(Paths.get(repoRoot, "BENCH_full_latest.json"),
         json.getBytes(StandardCharsets.UTF_8))
@@ -216,7 +227,7 @@ object Bench {
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$slowest,"errors":$errs,"full_json":"$out","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$slowest,"errors":$errs,"full_json":"$out","sf":"$sfDir",$context}""")
     spark.stop()
   }
 }

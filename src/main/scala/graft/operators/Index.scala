@@ -477,7 +477,8 @@ object Index {
     * neighbors (union-kNN sparsification — the `neardup_pagerank`
     * cap=64 discipline applied to the dense rung), so the candidate
     * mass entering the EXPENSIVE term-keyed exact rescoring is
-    * ≤ [[ProfileCap]]·N pairs at ANY duplicate density — a contract,
+    * ≤ [[ProfileProbes]]·[[ProfileCap]]·N pairs at ANY duplicate
+    * density (the cap applies per probed cell) — a contract,
     * where r13's uncapped co-probe relation carried Θ(n²/cells)
     * by declared design.
     *
@@ -520,8 +521,9 @@ object Index {
     * vocab-profile rollup, a narrow broadcast-centroid assignment, a
     * cid-keyed pair join whose per-pair work is one codegen'd 32-dim
     * dot, and a per-doc top-cap window — so the candidate relation
-    * handed to the term-keyed rescoring is ≤ [[ProfileCap]]·N however
-    * dense the corpus ([[ProfileCap]]'s scaladoc prices the cap).
+    * handed to the term-keyed rescoring is ≤ [[ProfileProbes]]·
+    * [[ProfileCap]]·N however dense the corpus ([[ProfileCap]]'s
+    * scaladoc prices the cap).
     * All arithmetic is the bitwise cross-engine float→double fold
     * ([[graft.functions.VectorFns.dot]] ↔ OracleSql.dot), so both
     * engines assign identical cells and identical kNN ranks.
@@ -531,7 +533,8 @@ object Index {
     * several cells emits once per cell (and the fat-cell block path
     * emits both union-kNN directions). Callers must `.distinct()`
     * after unioning it with their other candidate rungs; the ≤
-    * [[ProfileCap]]·N bound holds for the DISTINCT'd relation.
+    * [[ProfileProbes]]·[[ProfileCap]]·N bound holds for the DISTINCT'd
+    * relation.
     */
   private[graft] def profileIvfCandidatesOf(w: DataFrame,
                                             cap: Int = ProfileCap): DataFrame = {

@@ -321,11 +321,12 @@ object Query {
 
   /** [[searchIndex]] against a pinned serving snapshot
     * ([[graft.sources.IndexStore.open]]) — identical results and
-    * pruning, but the index relation, universe and `_meta` are
-    * resolved ONCE per session instead of re-listed per query (the
-    * measured per-query planning floor of the serving mix). Snapshot
-    * semantics are the handle's: takedowns/segments landed after
-    * `open` need a re-open.
+    * pruning, but the index listing, its dead-key set and `_meta` are
+    * resolved ONCE per handle instead of per query (the measured
+    * per-query planning floor of the serving mix; see
+    * [[graft.sources.IndexStore.OpenIndex]]). Snapshot semantics are
+    * the handle's: takedowns/segments landed after `open` need a
+    * re-open.
     */
   def searchIndexOn(oi: graft.sources.IndexStore.OpenIndex,
                     query: String): DataFrame = {
@@ -422,8 +423,8 @@ object Query {
     */
   private[graft] def rankedFetchPlan(spark: SparkSession, indexPath: String,
                                      query: String, nBuckets: Int): DataFrame =
-    leafPostingsOn(graft.sources.IndexStore.open(spark, indexPath, nBuckets),
-      parse(query), query)
+    leafPostingsOn(graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets,
+      withMeta = true), parse(query), query)
 
   /** [[leafPostings]] against a pinned snapshot: same three leaf
     * sources, planned over the handle's already-resolved relation.
@@ -639,15 +640,17 @@ object Query {
 
   /** The shared MaxScore ladder of [[searchRankedIndex]] /
     * [[searchRankedIndexStats]]: (docUb, theta, cand, scoredCand).
-    * The per-query form opens a fresh snapshot (read-latest
-    * semantics); serving sessions hold one [[graft.sources.IndexStore
-    * .OpenIndex]] and go through [[rankedIndexFramesOn]].
+    * The per-query form plans over a one-query handle
+    * ([[graft.sources.IndexStore.openOnce]]: read-latest, versions and
+    * takedowns resolved inline, nothing materialized); serving
+    * sessions hold one [[graft.sources.IndexStore.OpenIndex]] and go
+    * through [[rankedIndexFramesOn]].
     */
   private def rankedIndexFrames(spark: SparkSession, indexPath: String,
                                 query: String, k: Int, nBuckets: Int,
                                 id: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
     rankedIndexFramesOn(
-      graft.sources.IndexStore.open(spark, indexPath, nBuckets,
+      graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets,
         withMeta = hasFieldLeaf(parse(query))), query, k)
 
   private def rankedIndexFramesOn(oi: graft.sources.IndexStore.OpenIndex,

@@ -581,28 +581,67 @@ object IndexStore {
       .filter(levenshtein(col("term"), lit(t)) <= d)
   }
 
-  /** Read an index back, transparently decoding a delta-gap `gaps`
-    * column to absolute `positions` (see [[save]]) and anti-joining
-    * out any tombstoned doc_ids. The decode is a narrow codegen'd map
-    * AFTER scan filters apply, and term/bucket predicates push through
-    * the anti-join's streamed side, so partition pruning and term
-    * pushdown are unaffected (auditIndex asserts this); the tombstone
-    * side is a small frame AQE broadcasts.
+  /** Read an index back, read-latest: the raw relation (a delta-gap
+    * `gaps` column decoded back to absolute `positions`, see [[save]])
+    * anti-joined against the store's [[deadKeysOf dead-key set]],
+    * planned here and run with the query — every call re-lists the
+    * store, so it sees every landing and takedown so far. The decode
+    * is a narrow codegen'd map AFTER scan filters apply, and
+    * term/bucket predicates push through the anti-join's streamed
+    * side, so partition pruning and term pushdown are unaffected
+    * (auditIndex asserts this); the dead-key side is a
+    * doc-count-sized frame AQE broadcasts. A store with at most one
+    * segment and no tombstones reads with no join at all.
     */
-  def load(spark: SparkSession, path: String): DataFrame = {
-    val segs = segmentIds(spark, path)
-    if (segs.nonEmpty) return loadSegmented(spark, path, segs)
-    val raw0 = spark.read.parquet(path)
+  def load(spark: SparkSession, path: String): DataFrame =
+    loadListed(spark, path, rootListing(spark, path))
+
+  /** [[load]] over an already-taken [[RootListing]]: the postings and
+    * the dead-key set both describe the segments of `l`, whatever
+    * landed since.
+    */
+  private[graft] def loadListed(spark: SparkSession, path: String,
+                                l: RootListing): DataFrame =
+    live(rawOf(spark, path, l), deadKeysOf(spark, path, l))
+
+  /** The index relation at `path` as written, before version and
+    * takedown resolution: `gaps` decoded to `positions`, and on a
+    * segmented store the `seg` partition column typed long (the
+    * dead-key set's type) so the anti-join keys compare without a
+    * cast. A segmented store reads exactly the `seg=` dirs of `l`
+    * (the root as basePath keeps `seg` a partition column), so a
+    * segment renamed in after the listing is outside this read just
+    * as it is outside the dead-key set.
+    */
+  private def rawOf(spark: SparkSession, path: String, l: RootListing): DataFrame = {
+    val raw0 =
+      if (l.segs.isEmpty) spark.read.parquet(path)
+      else spark.read.option("basePath", path)
+        .parquet(l.segs.map(id => s"$path/seg=$id"): _*)
     val raw =
       if (raw0.columns.contains("gaps"))
         raw0.withColumn("positions", PostingsFns.deltaDecode(col("gaps")))
           .drop("gaps")
       else raw0
-    tombstonesOf(spark, path) match {
-      case Some(t) if raw.columns.contains("doc_id") =>
-        raw.join(t, Seq("doc_id"), "left_anti")
+    if (raw.columns.contains("seg")) raw.withColumn("seg", col("seg").cast("long"))
+    else raw
+  }
+
+  /** The rows of `raw` that readers see: `raw` anti-joined on the
+    * dead-key set's columns, then a segmented store's `seg` column
+    * dropped (output columns: `doc_id` first, then the stored ones).
+    * A title-keyed index carries no `doc_id`, so doc-keyed tombstones
+    * cannot name its rows and it reads unfiltered.
+    */
+  private def live(raw: DataFrame, dead: Option[DataFrame]): DataFrame = {
+    val kept = dead match {
+      case Some(d) if d.columns.forall(raw.columns.contains) =>
+        raw.join(d, d.columns.toSeq, "left_anti")
       case _ => raw
     }
+    if (!raw.columns.contains("seg")) kept
+    else kept.select(("doc_id" +: raw.columns.filter(c => c != "doc_id" && c != "seg"))
+      .map(col): _*)
   }
 
   /** Fail loudly when the caller's `nBuckets` is not the one the
@@ -645,27 +684,64 @@ object IndexStore {
     * `searchRankedIndex` call re-resolves the index relation —
     * `spark.read.parquet` lists the bucket directories and reads
     * footers again, a driver-side cost that grows with the store and
-    * was the measured ~0.3s p50 floor on the 500k-doc store. `open`
-    * resolves the listing ONCE (plus the universe frame, the `_stats`
-    * pair and `_meta` when present); the `*On` query variants
-    * ([[lookupOn]], [[lookupTermsOn]], [[graft.operators.Query
-    * .searchIndexOn]]/[[graft.operators.Query.searchRankedIndexOn]])
-    * plan against the held frames, so a query pays only its own
-    * filter/aggregate planning.
+    * was the measured ~0.3s p50 floor on the 500k-doc store.
+    *
+    * What a handle resolves ONCE:
+    *  - at [[open]], driver-side: the store [[fingerprint]], then one
+    *    [[RootListing]] that fixes the segment set both the `raw`
+    *    relation (its file listing) and the plan of the
+    *    [[deadKeysOf dead-key set]] (over those segments' manifests
+    *    and the tombstone files listed then) read, then the `_stats`
+    *    pair, `_meta` and `_fuzzy`;
+    *  - at the first query, one job: the dead-key set, materialized
+    *    by `localCheckpoint` into [[idx]] — the held rows every later
+    *    query anti-joins, so no query re-reads a `_docs` manifest or
+    *    a tombstone file. A store with at most one segment and no
+    *    tombstones has no set to hold and no join in [[idx]].
+    *
+    * The held rows live in the executors' block managers with no
+    * lineage (`localCheckpoint`), for as long as the handle serves:
+    * losing an executor that holds some of them fails every later
+    * query on the handle, and [[stale]] does not report it (the store
+    * did not move). Recover by [[open]]ing a fresh handle.
+    *
+    * What each query still plans for itself: its own bucket-pruned
+    * filters over [[idx]] and the NOT-universe distinct
+    * ([[universe]]). The `*On` query variants ([[lookupOn]],
+    * [[lookupTermsOn]], [[graft.operators.Query.searchIndexOn]]/
+    * [[graft.operators.Query.searchRankedIndexOn]],
+    * [[graft.streaming.Stream.hybridServeOn]]) plan against the held
+    * frames.
     *
     * Snapshot semantics, stated plainly: segments, tombstones and
-    * stats landed AFTER `open` are not visible through the handle —
-    * re-open on refresh. That is the serving deployment's usual
-    * snapshot contract (the maintenance loops publish by atomic
-    * rename; a handle pins one published state). The per-query paths
-    * keep their read-latest semantics unchanged.
+    * stats landed AFTER `open` are not visible through the handle,
+    * queried or not (every listing above is taken at `open`) —
+    * re-open on refresh ([[reopenIfStale]]). That is the serving
+    * deployment's usual snapshot contract (the maintenance loops
+    * publish by atomic rename; a handle pins one published state).
+    * The per-query paths keep their read-latest semantics unchanged.
     */
   final case class OpenIndex(spark: SparkSession, path: String, nBuckets: Int,
-                             idx: DataFrame, universe: DataFrame,
+                             raw: DataFrame, deadKeys: Option[DataFrame],
                              stats: Option[(DataFrame, DataFrame)],
                              meta: Option[DataFrame],
                              fuzzy: Option[DataFrame] = None,
                              fp: String = "") {
+    /** The resolved index relation: [[raw]] anti-joined against the
+      * dead-key set, which the first access materializes (the one job
+      * a handle adds, run by its first query, never by [[open]]). A
+      * one-query handle ([[openOnce]]) carries an already-resolved
+      * [[raw]] and no dead-key set, so nothing is materialized.
+      */
+    lazy val idx: DataFrame = live(raw, deadKeys.map(_.localCheckpoint()))
+
+    /** The indexed doc set NOT ranges over; its id column follows the
+      * indexed corpus (title for tsv, doc_id otherwise).
+      */
+    lazy val universe: DataFrame =
+      idx.select(Seq("doc_id", "title").find(raw.columns.contains).getOrElse("doc_id"))
+        .distinct()
+
     /** Indexed doc count from the `_stats` corpus row (−1 without
       * stats) — collected once per handle; the ranked path's ladder
       * gate reads it instead of running a per-query count job.
@@ -674,31 +750,52 @@ object IndexStore {
       stats.map(_._2.select(col("n")).head().getDouble(0).toLong).getOrElse(-1L)
   }
 
-  /** Resolve a serving snapshot (see [[OpenIndex]]). One listing +
-    * side-table reads; no job runs until a query does. `withMeta =
-    * false` skips the `_meta` resolution — the per-query wrappers pass
-    * it when the query has no field leaf, so field-less queries never
-    * pay that listing (sessions keep the default and hold everything).
+  /** Resolve a serving snapshot (see [[OpenIndex]] for what it holds).
+    * Listings + side-table reads; nothing is computed until a query
+    * runs (the only jobs here are the parquet reader's own listing and
+    * footer reads) — the dead-key set is planned here and materialized
+    * by the first query.
+    * `withMeta = false` skips the `_meta` resolution — the per-query
+    * wrappers ([[openOnce]]) pass it when the query has no field
+    * leaf, so field-less queries never pay that listing (sessions keep
+    * the default and hold everything).
     */
   def open(spark: SparkSession, path: String,
            nBuckets: Int = DefaultBuckets,
-           withMeta: Boolean = true): OpenIndex = {
+           withMeta: Boolean = true): OpenIndex =
+    snapshot(spark, path, nBuckets, withMeta, hold = true)
+
+  /** A handle for ONE query — the per-query ranked wrappers'
+    * (`Query.searchRankedIndex` and its siblings). It is read-latest
+    * like [[load]]: its [[OpenIndex.idx]] is `load`'s plan, the
+    * dead-key set resolved inline with the query, so it holds nothing
+    * and building it runs no checkpoint job.
+    */
+  private[graft] def openOnce(spark: SparkSession, path: String, nBuckets: Int,
+                              withMeta: Boolean): OpenIndex =
+    snapshot(spark, path, nBuckets, withMeta, hold = false)
+
+  private def snapshot(spark: SparkSession, path: String, nBuckets: Int,
+                       withMeta: Boolean, hold: Boolean): OpenIndex = {
     requireBucketsMatch(spark, path, nBuckets)
-    val idx = load(spark, path)
-    // id column follows the indexed corpus (title for tsv, doc_id
-    // otherwise) — the universe frame's column name carries it
-    val idCol = Seq("doc_id", "title").find(idx.columns.contains).getOrElse("doc_id")
-    OpenIndex(spark, path, nBuckets, idx,
-      idx.select(idCol).distinct(),
+    // the fingerprint BEFORE the listing: a landing between the two
+    // leaves the handle [[stale]] (so it is re-opened), never missing
+    // a landing its fingerprint claims to cover
+    val fp = fingerprint(spark, path)
+    val l = rootListing(spark, path)
+    val (raw, dead) = (rawOf(spark, path, l), deadKeysOf(spark, path, l))
+    OpenIndex(spark, path, nBuckets,
+      if (hold) raw else live(raw, dead), if (hold) dead else None,
       if (hasStats(spark, path)) Some(loadStats(spark, path)) else None,
       if (withMeta && hasMeta(spark, path)) Some(loadMeta(spark, path)) else None,
       if (hasFuzzy(spark, path)) Some(loadFuzzy(spark, path)) else None,
-      fingerprint(spark, path))
+      fp)
   }
 
   /** [[lookup]] against a pinned [[OpenIndex]] snapshot — same plan
     * (planning-time bucket pruning + pushed term equality), no
-    * re-listing.
+    * re-listing, and no manifest or tombstone read: the dead-key side
+    * is the handle's held rows.
     */
   def lookupOn(oi: OpenIndex, term: String): DataFrame =
     oi.idx
@@ -803,11 +900,11 @@ object IndexStore {
   // rename, so segment existence doubles as the idempotent-replay
   // marker and NO store-wide swap happens outside compaction.
   //
-  // Read-time semantics are unchanged: [[load]] resolves documents
-  // LAST-WRITER-WINS across segments (a re-crawled doc's newer segment
-  // supersedes all its older postings) using each segment's tiny
-  // `_docs` manifest — doc-count-sized, so a bucket-pruned lookup
-  // never scans other buckets to resolve versions. Read amplification
+  // Read-time semantics: documents resolve LAST-WRITER-WINS across
+  // segments (a re-crawled doc's newer segment supersedes all its older
+  // postings) through each segment's tiny `_docs` manifest —
+  // doc-count-sized, so a bucket-pruned lookup never scans other
+  // buckets to resolve versions ([[deadKeysOf]]). Read amplification
   // is |segments| per bucket, which compaction bounds.
 
   /** Per-segment manifest of the doc_ids the segment (re)wrote —
@@ -816,13 +913,61 @@ object IndexStore {
   private val DocsManifest = "_docs"
 
   /** Segment ids present at `path` (empty for a plain single layout). */
-  def segmentIds(spark: SparkSession, path: String): Seq[Long] = {
+  def segmentIds(spark: SparkSession, path: String): Seq[Long] =
+    rootListing(spark, path).segs
+
+  /** One listing of a store root: its segment ids, sorted, and whether
+    * it carries a tombstone dir. A read takes it ONCE and derives both
+    * of its sides from it — the postings relation ([[rawOf]]) and the
+    * [[deadKeysOf dead-key set]] — so a segment that lands while a
+    * reader resolves is in both sides or in neither.
+    */
+  private[graft] final case class RootListing(segs: Seq[Long], tombstoned: Boolean)
+
+  private[graft] def rootListing(spark: SparkSession, path: String): RootListing = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toLong)
-      .sorted.toSeq
+    val names = if (!fs.exists(p)) Array.empty[String]
+                else fs.listStatus(p).map(_.getPath.getName)
+    RootListing(
+      names.filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toLong).sorted.toSeq,
+      names.contains(Tombstones.Dir))
+  }
+
+  /** The DEAD-KEY set of the store at `path` — the keys of every row a
+    * reader must drop, planned (not computed) from the root listing `l`:
+    *
+    *  - at most one segment: the tombstoned doc_ids, keyed `doc_id`
+    *    (None without tombstones — the reader then carries no join);
+    *  - two or more segments: the `(doc_id, seg)` pairs a NEWER
+    *    segment's manifest supersedes, from ONE aggregation over the
+    *    union of the manifests. Tombstoned ids enter that union at
+    *    seg = +inf, so every real version of a tombstoned doc is
+    *    superseded too and the one aggregation yields both rules.
+    *
+    * [[saveSegment]] writes each manifest as exactly its segment's
+    * posting doc set, so a posting row `(d, s)` is dead iff a later
+    * manifest holds `d` or `d` is tombstoned — the last-writer-wins
+    * rule, stated as the rows to drop rather than the ones to keep.
+    */
+  private def deadKeysOf(spark: SparkSession, path: String,
+                         l: RootListing): Option[DataFrame] = {
+    val tombs = if (l.tombstoned) Tombstones.keysOf(spark, path) else None
+    if (l.segs.size < 2) tombs
+    else {
+      // one read of every manifest: with the store root as basePath,
+      // each manifest row carries its `seg=` dir as a partition value
+      val manifests = spark.read.option("basePath", path)
+        .parquet(l.segs.map(id => s"$path/seg=$id/$DocsManifest"): _*)
+        .select(col("doc_id"), col("seg").cast("long").as("seg"))
+      val versions = manifests +:
+        tombs.toSeq.map(_.select(col("doc_id"), lit(Long.MaxValue).as("seg")))
+      Some(versions.reduce(_.unionByName(_))
+        .withColumn("newest", max(col("seg")).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
+        .filter(col("seg") < col("newest"))
+        .select("doc_id", "seg"))
+    }
   }
 
   /** Land `delta` as segment `segId` of the segmented store at `path`:
@@ -951,34 +1096,5 @@ object IndexStore {
     // the takedown epoch survives the fold ([[Tombstones.carryEpoch]])
     Tombstones.carryEpoch(spark, path, tmpRoot)
     StoreSwap.swap(fs, root, tmpRoot)
-  }
-
-  /** Last-writer-wins resolution over a segmented store: every row
-    * tagged with its segment id, kept iff that id is the row's doc's
-    * NEWEST segment (one left-semi join against the manifest-derived
-    * doc→max-segment frame — manifests are doc-count-sized, and the
-    * term/bucket predicates of a lookup push through the semi-join's
-    * streamed side into each segment's pruned scan).
-    */
-  private def loadSegmented(spark: SparkSession, path: String,
-                            segs: Seq[Long]): DataFrame = {
-    val raw0 = spark.read.parquet(path)
-    val raw =
-      if (raw0.columns.contains("gaps"))
-        raw0.withColumn("positions", PostingsFns.deltaDecode(col("gaps")))
-          .drop("gaps")
-      else raw0
-    val docMax = segs.map { id =>
-        spark.read.parquet(s"$path/seg=$id/$DocsManifest")
-          .select(col("doc_id"), lit(id).as("seg"))
-      }.reduce(_.unionByName(_))
-      .groupBy("doc_id").agg(max(col("seg")).as("seg"))
-    val resolved = raw.withColumn("seg", col("seg").cast("long"))
-      .join(docMax, Seq("doc_id", "seg"), "left_semi")
-      .drop("seg")
-    tombstonesOf(spark, path) match {
-      case Some(t) => resolved.join(t, Seq("doc_id"), "left_anti")
-      case None => resolved
-    }
   }
 }

@@ -24,9 +24,10 @@ import org.apache.spark.sql.functions._
   *    silently un-delete its takedowns. An id EQUAL to the horizon is
   *    the legitimate replay of the last uncommitted batch.
   *  - [[setOf]] — the accumulated distinct key set readers anti-join
-  *    out; a file-less tree (crash between mkdir and file commit)
-  *    reads as None instead of bricking every load with a
-  *    schema-inference error.
+  *    out ([[keysOf]] is the same read without the distinct, for a
+  *    reader that aggregates the keys itself); a file-less tree
+  *    (crash between mkdir and file commit) reads as None instead of
+  *    bricking every load with a schema-inference error.
   *
   *  Folding tombstones away for real is each store's own compaction
   *  move: the rewrite reads through the store's (anti-joined) reader
@@ -36,7 +37,11 @@ import org.apache.spark.sql.functions._
   *  there is nothing left to clobber.
   */
 object Tombstones {
-  private val Dir = "_tombstones"
+  /** The tombstone dir's name inside a store — visible to this
+    * package so a store's own root listing can tell "no tombstones"
+    * without a second listing.
+    */
+  private[sources] val Dir = "_tombstones"
   private val AppliedUpToPrefix = "_applied_upto_"
   private val EpochFile = "_takedown_epoch"
 
@@ -214,12 +219,20 @@ object Tombstones {
 
   /** The store's accumulated tombstone set (distinct keys across all
     * landings); None when nothing was ever deleted — or when the tree
-    * holds no data file yet (crash leftover). The recursive read
-    * skips partition inference so [[append]] files at the dir root
-    * and [[landBatch]] `src_batch=` subdirs mix freely.
+    * holds no data file yet (crash leftover).
     */
   def setOf(spark: SparkSession, path: String,
             key: String = "doc_id"): Option[DataFrame] =
+    keysOf(spark, path, key).map(_.distinct())
+
+  /** Every landed tombstone key, duplicates kept — [[setOf]] without
+    * its distinct, for readers that fold the keys into an aggregation
+    * of their own ([[IndexStore]]'s dead-key set). The recursive read
+    * skips partition inference so [[append]] files at the dir root
+    * and [[landBatch]] `src_batch=` subdirs mix freely.
+    */
+  private[sources] def keysOf(spark: SparkSession, path: String,
+                              key: String = "doc_id"): Option[DataFrame] =
     if (hasAny(spark, path)) {
       // mergeSchema: landings under different key names must surface
       // BOTH columns (footer-of-first-file inference would silently
@@ -233,12 +246,11 @@ object Tombstones {
       // a caller appending with the default key to a vec_id-keyed store
       // leaves a union schema carrying both columns. A blind rename then
       // duplicated the column and every later read failed ambiguous.
-      val keyed =
+      Some(
         if (raw.columns.contains(key) && raw.columns.contains("doc_id") &&
             key != "doc_id")
           raw.select(coalesce(col(key), col("doc_id")).as(key))
         else if (raw.columns.contains(key)) raw.select(col(key))
-        else raw.select(col("doc_id").as(key))
-      Some(keyed.distinct())
+        else raw.select(col("doc_id").as(key)))
     } else None
 }

@@ -995,6 +995,152 @@ class SourcesSpec extends SparkSpec {
     assert(IndexStore.stale(oi3), "a stats refresh must flip stale")
   }
 
+  /** A 3-segment store with re-landed docs and two takedown batches:
+    * doc 1 lands in every segment, the last time with fewer terms (its
+    * older `spark`/`key order` postings must vanish); doc 7 is
+    * re-landed, then taken down (every version must go); docs 2 and 5
+    * are taken down in separate batches. Returns the live corpus.
+    */
+  private def churnedStore(path: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val segs = Seq(
+      Seq(0L -> "spark makes key order fast and spark is neat",
+        1L -> "key order matters in a sort",
+        2L -> "slow spark query with key order",
+        3L -> "alpha beta gamma",
+        7L -> "spark key order seven"),
+      Seq(4L -> "spark join engine key order",
+        1L -> "key order matters spark join",
+        5L -> "spark streaming slow"),
+      Seq(1L -> "join",
+        6L -> "spark key order delta",
+        7L -> "spark join seven"))
+    segs.zipWithIndex.foreach { case (docs, i) =>
+      assert(IndexStore.saveSegment(
+        Index.invertedIndexOf(docs.toDF("doc_id", "text")), path, i.toLong, nBuckets = 4))
+      if (i == 1) IndexStore.deleteBatch(Seq(2L).toDF("doc_id"), path, 0L)
+    }
+    IndexStore.deleteBatch(Seq(5L, 7L).toDF("doc_id"), path, 1L)
+    IndexStore.saveStats(spark, path)
+    val gone = Set(2L, 5L, 7L)
+    segs.flatten.reverse.distinctBy(_._1).filterNot(d => gone(d._1))
+      .toDF("doc_id", "text")
+  }
+
+  test("dead-key set: *On serving equals the per-query path and the live corpus on a churned segmented store") {
+    val path = tmpDir("graft-deadkeys") + "/index"
+    val liveDocs = churnedStore(path)
+    val oi = IndexStore.open(spark, path, nBuckets = 4)
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("doc_id").collect().map(_.getLong(0)).distinct.sorted.toSeq
+    val term = IndexStore.lookup(spark, path, "spark", nBuckets = 4)
+      .orderBy("doc_id", "term").collect().toSeq
+    assert(IndexStore.lookupOn(oi, "spark").orderBy("doc_id", "term").collect().toSeq === term)
+    assert(term.map(_.getAs[Long]("doc_id")).distinct === Seq(0L, 4L, 6L))
+    assert(ids(IndexStore.lookupOn(oi, "spark")) ===
+      ids(operators.Query.search(liveDocs, "spark")))
+    Seq("spark AND join", "\"key order\"", "join AND NOT spark",
+        "key AND NOT (slow OR seven)", "alpha OR matters").foreach { q =>
+      val got = ids(operators.Query.searchIndexOn(oi, q))
+      assert(got === ids(operators.Query.searchIndex(spark, path, q, nBuckets = 4)),
+        s"handle vs per-query for '$q'")
+      assert(got === ids(operators.Query.search(liveDocs, q)), s"handle vs corpus for '$q'")
+    }
+    assert(ids(operators.Query.searchIndexOn(oi, "join AND NOT spark")) === Seq(1L),
+      "doc 1's superseded spark postings must not survive")
+    Seq("spark OR join", "\"key order\" OR alpha").foreach { q =>
+      def ranked(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val got = ranked(operators.Query.searchRankedIndexOn(oi, q, k = 10))
+      assert(got === ranked(operators.Query.searchRankedIndex(spark, path, q, k = 10,
+        nBuckets = 4)), s"ranked handle vs per-query for '$q'")
+      assert(got === ranked(operators.Query.searchRanked(liveDocs, q, k = 10)),
+        s"ranked handle vs corpus for '$q'")
+    }
+  }
+
+  test("dead-key set: handle plans read no manifest or tombstone file; a 1-segment clean store plans no join") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def scans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] =
+      H.collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    // one segment, no tombstones: nothing to resolve, so no join and
+    // no exchange in the served plan
+    val one = tmpDir("graft-deadkeys1") + "/index"
+    IndexStore.saveSegment(Index.invertedIndexOf(
+      Seq((0L, "spark key"), (1L, "spark order")).toDF("doc_id", "text")), one, 0L, nBuckets = 4)
+    val plan1 = IndexStore.lookupOn(IndexStore.open(spark, one, nBuckets = 4), "spark")
+      .queryExecution.executedPlan.toString
+    assert(!plan1.contains("Join") && !plan1.contains("Exchange"), plan1)
+    // churned store: after the handle's first query, a query plan reads
+    // the postings only — bucket-pruned — and the held dead-key rows
+    val path = tmpDir("graft-deadkeys3") + "/index"
+    churnedStore(path)
+    def metaScans(df: org.apache.spark.sql.DataFrame) = scans(df).filter(_.relation
+      .location.rootPaths.exists(p => p.toString.contains("_docs") ||
+        p.toString.contains("_tombstones")))
+    // the read-latest paths plan the manifests and tombstones per
+    // query: they hold nothing between queries
+    assert(metaScans(IndexStore.lookup(spark, path, "spark", nBuckets = 4)).nonEmpty)
+    assert(metaScans(operators.Query.searchRankedIndex(spark, path, "spark OR join",
+      k = 5, nBuckets = 4)).nonEmpty)
+    val oi = IndexStore.open(spark, path, nBuckets = 4)
+    IndexStore.lookupOn(oi, "spark").collect()
+    Seq(IndexStore.lookupOn(oi, "join"),
+        operators.Query.searchIndexOn(oi, "spark AND \"key order\""),
+        operators.Query.searchRankedIndexOn(oi, "spark OR join", k = 5)).foreach { df =>
+      assert(metaScans(df).isEmpty, df.queryExecution.executedPlan.toString)
+      val postings = scans(df).filter(_.relation.partitionSchema.fieldNames.contains("term_bucket"))
+      assert(postings.nonEmpty && postings.forall(_.partitionFilters
+        .exists(_.references.exists(_.name == "term_bucket"))),
+        df.queryExecution.executedPlan.toString)
+    }
+  }
+
+  test("dead-key set: landings after open stay invisible through the old handle until reopenIfStale") {
+    import spark.implicits._
+    val path = tmpDir("graft-deadkeys-snap") + "/index"
+    churnedStore(path)
+    val queried = IndexStore.open(spark, path, nBuckets = 4)
+    val unqueried = IndexStore.open(spark, path, nBuckets = 4)
+    def served(oi: IndexStore.OpenIndex): (Set[Long], Set[Long]) = (
+      operators.Query.searchIndexOn(oi, "spark").collect().map(_.getLong(0)).toSet,
+      operators.Query.searchIndexOn(oi, "neat").collect().map(_.getLong(0)).toSet)
+    val before = served(queried)
+    assert(before === ((Set(0L, 4L, 6L), Set(0L))))
+    // doc 0 re-lands without `neat`/`spark`, doc 4 is taken down
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(
+      Seq((0L, "key order only")).toDF("doc_id", "text")), path, 3L, nBuckets = 4))
+    assert(IndexStore.deleteBatch(Seq(4L).toDF("doc_id"), path, 2L))
+    assert(served(queried) === before, "a queried handle's dead-key set is pinned")
+    assert(served(unqueried) === before, "an unqueried handle is pinned at open")
+    assert(IndexStore.stale(queried))
+    val fresh = IndexStore.reopenIfStale(queried)
+    assert(served(fresh) === ((Set(6L), Set.empty[Long])))
+  }
+
+  test("dead-key set: a segment landing after the root listing is in neither side of the read") {
+    import spark.implicits._
+    val path = tmpDir("graft-deadkeys-race") + "/index"
+    churnedStore(path)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val listed = rows(IndexStore.load(spark, path))
+    val l = IndexStore.rootListing(spark, path)
+    // lands between a reader's listing and its reads: doc 0 re-lands
+    // with different terms, doc 9 is new
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(
+      Seq((0L, "key order only"), (9L, "spark nine")).toDF("doc_id", "text")),
+      path, 3L, nBuckets = 4))
+    assert(rows(IndexStore.loadListed(spark, path, l)) === listed,
+      "the read must resolve exactly the listed segments: doc 0 once, at its listed version")
+    val latest = IndexStore.load(spark, path)
+    assert(latest.filter($"doc_id" === 0L).select("term").as[String].collect().sorted.toSeq ===
+      Seq("key", "only", "order"))
+    assert(latest.filter($"doc_id" === 9L).count() === 2L)
+  }
+
   test("index merge carries side tables: merged store serves ranked/fielded/fuzzy immediately") {
     import spark.implicits._
     val base = tmpDir("graft-mergeside") + "/base"
