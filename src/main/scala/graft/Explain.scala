@@ -315,6 +315,16 @@ object Explain {
     "index_lookup" -> Rule(required = Seq("PartitionFilters", "term_bucket")),
     "index_lookup_terms" -> Rule(required = Seq("PartitionFilters", "term_bucket")),
     "searchindex_prefix" -> Rule(required = Seq("StringStartsWith(term,quer")),
+    // boolean and phrase queries evaluate per document over the ONE
+    // bucket-pruned fetch: stored positions feed the window kernel as
+    // arrays, so a Generate (positions re-exploded into token rows)
+    // means the per-node join chain came back
+    "searchindex_bool" -> Rule(
+      required = Seq("PartitionFilters", "term_bucket"),
+      forbidden = Seq("Generate", "documents")),
+    "searchindex_phrase" -> Rule(
+      required = Seq("PartitionFilters", "term_bucket"),
+      forbidden = Seq("Generate", "documents")),
     // the index-served BM25 path: on the default (single-pass) branch
     // the leaf fetch is bucket-pruned at planning time and the corpus
     // NEVER appears; on the FORCED MaxScore branch (maxscoreRows=0)
@@ -385,9 +395,9 @@ object Explain {
     }
 
   /** [[IndexAuditRules]] violations: saves a small index from sfDir
-    * into a temp dir, then audits the three saved-index retrieval
-    * plans (single-term lookup, multi-term lookup, grammar query with
-    * a prefix leaf).
+    * into a temp dir, then audits the saved-index retrieval plans
+    * (single- and multi-term lookup, grammar queries with a prefix,
+    * boolean, phrase and metadata leaf, and the ranked path).
     */
   def auditIndex(spark: org.apache.spark.sql.SparkSession, sfDir: String): Seq[String] = {
     val idx = java.nio.file.Files.createTempDirectory("graft-audit-idx")
@@ -404,6 +414,10 @@ object Explain {
         sources.IndexStore.lookupTerms(spark, idx, Seq("spark", "join"), nBuckets = 8),
       "searchindex_prefix" ->
         operators.Query.searchIndex(spark, idx, "quer* AND NOT slow", nBuckets = 8),
+      "searchindex_bool" ->
+        operators.Query.searchIndex(spark, idx, "spark AND join", nBuckets = 8),
+      "searchindex_phrase" ->
+        operators.Query.searchIndex(spark, idx, "\"key order\"", nBuckets = 8),
       "searchranked_index" ->
         operators.Query.searchRankedIndex(spark, idx, "spark AND join",
           nBuckets = 8),

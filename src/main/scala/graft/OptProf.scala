@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * that actually costs, not the one that looks heavy. Not a gate
   * surface — numbers land in OPTIMIZATION_r15.md.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.OptProf [section ...]"
+  * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.OptProf [guarded] [graph]"
+  * (no section = guarded)
   */
 object OptProf {
   def main(args: Array[String]): Unit = {
@@ -74,112 +75,6 @@ object OptProf {
       time("guarded: end-to-end") { noop(Index.tfidfCosineGuarded(spark, sfDir)) }
     }
 
-    if (sections("rung")) {
-      // replicate profileIvfCandidatesOf internals stage by stage
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.VectorFns
-      val docs = Tables.documents(spark, sfDir)
-      val base = Index.tokenStreamOf(docs).groupBy("doc_id", "term")
-        .agg(count(lit(1)).cast("double").as("tf"))
-      val nDf = docs.agg(count(lit(1)).cast("double").as("n"))
-      val dfT = base.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-      val w = base.join(dfT, "term").crossJoin(broadcast(nDf))
-        .filter(col("df") < col("n"))
-        .select(col("doc_id"), col("term"), col("df"), col("n"),
-          (col("tf") * log(col("n") / col("df"))).as("w"))
-        .localCheckpoint()
-      val ProfileDims = Index.ProfileDims
-      val ProfileCells = Index.ProfileCells
-      val ProfileProbes = Index.ProfileProbes
-      val cap = Index.ProfileCap
-      val dWin = Window.orderBy(col("df").desc, col("term"))
-      val topIdx = w.groupBy("term").agg(max(col("df")).as("df"))
-        .orderBy(col("df").desc, col("term")).limit(ProfileDims)
-        .select(col("term"), (row_number().over(dWin) - 1).as("idx"))
-      def profRaw = w.join(broadcast(topIdx), "term")
-        .groupBy("doc_id")
-        .agg(map_from_entries(sort_array(collect_list(
-          struct(col("idx"), col("w"))))).as("m"))
-        .select(col("doc_id"), expr(
-          s"transform(sequence(0, ${ProfileDims - 1}), " +
-            "i -> cast(coalesce(try_element_at(m, i), 0.0d) as float))").as("emb"))
-      time("rung: prof build (no ckpt)") { noop(profRaw) }
-      val prof = profRaw.localCheckpoint()
-      val cents = prof.orderBy("doc_id").limit(ProfileCells)
-        .select(col("doc_id").as("cid"), col("emb").as("ce"))
-      val aWin = Window.partitionBy("doc_id").orderBy(col("sim").desc, col("cid"))
-      def assigned = prof.crossJoin(broadcast(cents))
-        .withColumn("sim",
-          VectorFns.dot(col("emb"), col("ce")) /
-            (sqrt(VectorFns.dot(col("emb"), col("emb"))) *
-              sqrt(VectorFns.dot(col("ce"), col("ce"))) + lit(1e-12)))
-        .withColumn("rk", row_number().over(aWin))
-        .filter(col("rk") <= ProfileProbes)
-        .select(col("doc_id"), col("cid"))
-      time("rung: assignment") { noop(assigned) }
-      import spark.implicits._
-      val blockSize = 4096
-      val m0 = assigned.join(prof, "doc_id")
-        .select(col("cid"), col("doc_id"), col("emb"))
-      val csize = m0.groupBy("cid").agg(count(lit(1)).as("csz"))
-      val withSz = m0.join(broadcast(csize), "cid")
-      time("rung: withSz materialize") { noop(withSz) }
-      def dotf(a: Array[Float], b: Array[Float]): Double = {
-        var s = 0.0; var k = 0
-        val n = math.min(a.length, b.length)
-        while (k < n) { s += a(k).toDouble * b(k).toDouble; k += 1 }
-        s
-      }
-      val ord = new Ordering[(Double, Long)] {
-        def compare(x: (Double, Long), y: (Double, Long)): Int = {
-          val c = java.lang.Double.compare(y._1, x._1)
-          if (c != 0) c else java.lang.Long.compare(x._2, y._2)
-        }
-      }
-      def knnPartial(qs: Array[(Long, Array[Float])],
-                     ds: Array[(Long, Array[Float])],
-                     same: Boolean): Iterator[(Long, Long, Double)] = {
-        val qn = qs.map(q => math.sqrt(dotf(q._2, q._2)))
-        val dn = if (same) qn else ds.map(d => math.sqrt(dotf(d._2, d._2)))
-        qs.indices.iterator.flatMap { i =>
-          val pq = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord)
-          var j = 0
-          while (j < ds.length) {
-            if (!(same && j == i)) {
-              val s = dotf(qs(i)._2, ds(j)._2) / (qn(i) * dn(j) + 1e-12)
-              if (pq.size < cap) pq.enqueue((s, ds(j)._1))
-              else if (ord.compare((s, ds(j)._1), pq.head) < 0) {
-                pq.dequeue(); pq.enqueue((s, ds(j)._1))
-              }
-            }
-            j += 1
-          }
-          pq.toList.map(t => (qs(i)._1, t._2, t._1))
-        }
-      }
-      def small = withSz.filter(col("csz") <= blockSize)
-        .select(col("cid"), col("doc_id"), col("emb"))
-        .as[(Long, Long, Array[Float])]
-        .groupByKey(_._1)
-        .flatMapGroups { (_, it) =>
-          val rows = it.toArray
-          val m = rows.length
-          if (m - 1 <= cap)
-            (for (i <- 0 until m; j <- 0 until m if i != j)
-              yield (rows(i)._2, rows(j)._2)).iterator
-          else {
-            val members = rows.map(r => (r._2, r._3))
-            knnPartial(members, members, same = true).map(t => (t._1, t._2))
-          }
-        }.toDF("doc_a", "doc_b")
-      time("rung: small kNN kernel") { noop(small) }
-      time("rung: small + orient + distinct") {
-        noop(small
-          .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-            greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-          .distinct())
-      }
-    }
     if (sections("graph")) {
       val docs = Tables.documents(spark, sfDir)
       time("graph: simhashDf") { noop(Dedup.simhashDf(docs)) }

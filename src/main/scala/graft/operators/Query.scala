@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.functions.PostingsFns
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Boolean/phrase query-string surface over the positional index —
@@ -18,14 +19,19 @@ import org.apache.spark.sql.functions._
   *           | term '~' [d] | term
   * }}}
   *
-  * Each AST node compiles to a DataFrame of matching doc ids:
-  * terms/phrases filter the (already term-filtered) token stream, AND
-  * is a left-semi join, OR a union-distinct, NOT an anti-join against
-  * the document universe. The plan is fully declarative — Catalyst
-  * sees one tree, pushes every term equality into the scan, and AQE
-  * broadcasts the small sides; nothing is evaluated per-document on
-  * the driver. At 100 TB each leaf touches only its term's postings
-  * (one scan-pruned filter), never the corpus.
+  * Evaluation is document-at-a-time over positional postings
+  * (Zobel & Moffat, "Inverted Files for Text Search Engines", 2006):
+  * the query's leaf postings — one index fetch, or the token stream
+  * cut to the leaf terms — group ONCE by document into a
+  * `term → sorted positions` map, and the whole AST compiles to one
+  * boolean Column over that frame. Term leaves test key presence,
+  * prefix/fuzzy leaves scan the keys, phrase/slop/NEAR leaves run a
+  * codegen'd merge-walk window kernel over the position lists, and
+  * AND/OR/NOT are the boolean operators (NOT ranges over the document
+  * universe, `lang:`/`source:` leaves over the metadata rows). One
+  * shuffle per query, whatever the AST's shape; nothing is evaluated
+  * on the driver. At 100 TB the fetch touches only the query terms'
+  * postings (one scan-pruned filter), never the corpus.
   */
 object Query {
 
@@ -146,117 +152,195 @@ object Query {
     q
   }
 
-  /** Compile an AST to the frame of matching ids. `tok` is a
-    * positional token stream (id, term, pos); `universe` is the
-    * distinct id frame NOT ranges over.
+  // ---- the evaluator: one per-document predicate over one fetch ------
+
+  /** Column names of the evaluator's per-document frame. */
+  private val PosMap = "__postings"
+  private val InUniverse = "__in_universe"
+
+  /** The positions-map key of a leaf term: the term itself over an
+    * unfielded source, `field term` over a fielded one (a token never
+    * holds whitespace, so the two parts cannot run together). Plain
+    * leaves of a fielded source read the default `body` field.
     */
-  def eval(tok: DataFrame, universe: DataFrame, q: Q, id: String = "doc_id",
-           meta: DataFrame = null): DataFrame = {
-    // a FIELDED token source (r15 — `field`-tagged rows from
-    // [[searchFielded]] or a fielded index) scopes every plain text
-    // leaf to the default `body` field; TField leaves pick their own.
-    // An unfielded source passes through unchanged — plain search
-    // plans are untouched.
-    val btok =
-      if (tok.columns.contains("field")) tok.filter(col("field") === "body")
-      else tok
-    q match {
-    case Field(f, v) =>
-      // metadata leaves filter the doc frame, not the token stream —
-      // an equality Catalyst pushes into the metadata scan. The corpus
-      // path passes the doc frame itself; the saved-index path passes
-      // the `_meta` side table ([[graft.sources.IndexStore.loadMeta]]).
-      // Absent metadata fails loudly.
-      require(meta != null,
-        s"field query '$f:$v' needs a metadata frame (for a saved " +
-          "index: IndexStore.saveMeta beside the build)")
-      meta.filter(col(f) === v).select(col(id)).distinct()
-    case TField(f, t) =>
-      require(tok.columns.contains("field"),
-        s"text-field query '$f:$t' needs a fielded token source — " +
-          "searchFielded on a corpus, or an index built with " +
-          "Index.fieldedInvertedIndexOf")
-      tok.filter(col("field") === f && col("term") === t)
-        .select(col(id)).distinct()
-    case Term(t) =>
-      btok.filter(col("term") === t).select(col(id)).distinct()
-    case Boost(t, _) => // boost weighs ranking only; matching is the term
-      eval(tok, universe, Term(t), id, meta)
-    case Prefix(p) =>
-      // StartsWith pushes into the scan like the equality; over a
-      // term-sorted IndexStore bucket it min/max-prunes row groups too
-      btok.filter(col("term").startsWith(p)).select(col(id)).distinct()
-    case Fuzzy(t, d) =>
-      // expand against the AGGREGATED vocabulary (distinct terms, not
-      // the token stream), then one broadcast semi-join back — the
-      // [[Index.fuzzyTermOf]] probe as a grammar leaf
-      val vt = btok.select("term").distinct()
-        .filter(levenshtein(col("term"), lit(t)) <= d)
-      btok.join(broadcast(vt), "term").select(col(id)).distinct()
-    case Phrase(ts) =>
-      // positional adjacency chain anchored on the first word: one
-      // filtered frame per word, joined on (id, pos offset)
-      val anchor = btok.filter(col("term") === ts.head)
-        .select(col(id), col("pos"))
-      ts.zipWithIndex.tail.foldLeft(anchor) { case (acc, (w, i)) =>
-        val nxt = btok.filter(col("term") === w)
-          .select(col(id).as("__id"), col("pos").as("__p"))
-        acc.join(nxt, acc(id) === col("__id") && col("__p") === acc("pos") + i)
-          .select(acc(id), acc("pos"))
-      }.select(col(id)).distinct()
-    case PhraseSlop(ts, k) =>
-      // ordered chain like Phrase, but each step tracks the PREVIOUS
-      // word's position and admits gaps of 1..k+1 (k = 0 ≡ Phrase)
-      val anchor = btok.filter(col("term") === ts.head)
-        .select(col(id), col("pos").as("__last"))
-      ts.tail.foldLeft(anchor) { (acc, w) =>
-        val nxt = btok.filter(col("term") === w)
-          .select(col(id).as("__id"), col("pos").as("__p"))
-        acc.join(nxt, acc(id) === col("__id") &&
-            col("__p") > col("__last") && col("__p") <= col("__last") + (k + 1))
-          .select(acc(id), col("__p").as("__last"))
-      }.select(col(id)).distinct()
-    case Near(a, b, k) =>
-      // positional co-occurrence within ±k (unordered) — the grammar
-      // surface of proximitySearch; both leaves are term-pruned scans
-      val pa = btok.filter(col("term") === a).select(col(id), col("pos"))
-      val pb = btok.filter(col("term") === b)
-        .select(col(id).as("__nid"), col("pos").as("__np"))
-      pa.join(pb, pa(id) === col("__nid") &&
-          abs(col("__np") - col("pos")) <= k && col("__np") =!= col("pos"))
-        .select(pa(id)).distinct()
-    case And(l, r) =>
-      eval(tok, universe, l, id, meta)
-        .join(eval(tok, universe, r, id, meta), Seq(id), "left_semi")
-    case Or(l, r) =>
-      eval(tok, universe, l, id, meta)
-        .unionByName(eval(tok, universe, r, id, meta)).distinct()
-    case Not(inner) =>
-      universe.join(eval(tok, universe, inner, id, meta), Seq(id), "left_anti")
-    }
+  private def keyOf(fielded: Boolean, t: String, f: String = "body"): String =
+    if (fielded) s"$f $t" else t
+
+  /** The distinct metadata (`lang:`/`source:`) leaves of an AST. */
+  private def fieldLeaves(q: Q): Seq[(String, String)] = q match {
+    case Field(f, v) => Seq((f, v))
+    case And(l, r) => (fieldLeaves(l) ++ fieldLeaves(r)).distinct
+    case Or(l, r) => (fieldLeaves(l) ++ fieldLeaves(r)).distinct
+    case Not(inner) => fieldLeaves(inner)
+    case _ => Nil
   }
+
+  private def hasNot(q: Q): Boolean = q match {
+    case Not(_) => true
+    case And(l, r) => hasNot(l) || hasNot(r)
+    case Or(l, r) => hasNot(l) || hasNot(r)
+    case _ => false
+  }
+
+  /** The AST's value on a document that holds none of its leaf terms:
+    * Some(false) when no such document can match, otherwise Some(true)
+    * or None (the answer rides its metadata or universe membership).
+    * Only when it is not Some(false) do the universe / `_meta` rows
+    * join the evaluation as documents of their own.
+    */
+  private def leafless(q: Q): Option[Boolean] = q match {
+    case Field(_, _) => None
+    case Not(inner) => leafless(inner).map(!_)
+    case And(l, r) => (leafless(l), leafless(r)) match {
+      case (Some(false), _) | (_, Some(false)) => Some(false)
+      case (Some(true), Some(true)) => Some(true)
+      case _ => None
+    }
+    case Or(l, r) => (leafless(l), leafless(r)) match {
+      case (Some(true), _) | (_, Some(true)) => Some(true)
+      case (Some(false), Some(false)) => Some(false)
+      case _ => None
+    }
+    case _ => Some(false)
+  }
+
+  /** The AST as one boolean Column over the per-document frame:
+    * posting leaves test the document's `term → sorted positions` map
+    * (key presence, a key scan for prefix/fuzzy, the
+    * [[graft.functions.PostingsFns.within]] kernel for positional
+    * leaves), metadata leaves read their per-document flag, NOT is
+    * "in the universe and not the operand". Every leaf is non-null, so
+    * the boolean algebra is two-valued.
+    */
+  private def predicate(q: Q, fielded: Boolean, flags: Map[(String, String), String]): Column = {
+    val m = col(PosMap)
+    def key(t: String) = keyOf(fielded, t)
+    def anyKey(p: Column => Column) = exists(map_keys(m), p)
+    def pred(q: Q): Column = q match {
+      case Term(t) => map_contains_key(m, lit(key(t)))
+      case Boost(t, _) => map_contains_key(m, lit(key(t))) // a boost weighs ranking only
+      case TField(f, t) =>
+        require(fielded,
+          s"text-field query '$f:$t' needs a fielded token source — " +
+            "searchFielded on a corpus, or an index built with " +
+            "Index.fieldedInvertedIndexOf")
+        map_contains_key(m, lit(keyOf(fielded, t, f)))
+      case Prefix(p) => anyKey(_.startsWith(key(p)))
+      case Fuzzy(t, d) =>
+        // a shared `field ` prefix leaves the edit distance unchanged
+        anyKey(k => k.startsWith(key("")) && levenshtein(k, lit(key(t))) <= d)
+      case Phrase(ts) => PostingsFns.within(m, ts.map(key), 1, 1)
+      // ordered like Phrase, each step admitting gaps of 1..k+1
+      case PhraseSlop(ts, k) => PostingsFns.within(m, ts.map(key), 1, k + 1)
+      // unordered within ±k, never the same position
+      case Near(a, b, k) =>
+        PostingsFns.within(m, Seq(key(a), key(b)), 1, k) ||
+          PostingsFns.within(m, Seq(key(b), key(a)), 1, k)
+      case Field(f, v) => coalesce(col(flags((f, v))), lit(false))
+      case And(l, r) => pred(l) && pred(r)
+      case Or(l, r) => pred(l) || pred(r)
+      case Not(inner) => coalesce(col(InUniverse), lit(false)) && !pred(inner)
+    }
+    pred(q)
+  }
+
+  /** The ids of the documents `q` matches — the one query evaluator.
+    *
+    * `rows` are the query's leaf postings, one row per (id, [field,]
+    * term) with its sorted `positions`: an index fetch
+    * ([[leafPostings]]) or a grouped token stream ([[tokenLeafRows]]).
+    * They group ONCE by id into a `term → positions` map, and the
+    * whole AST runs as one filter over that frame ([[predicate]]):
+    * one shuffle for the leaves, no per-node join.
+    *
+    * Documents without any leaf term join in only when the AST can
+    * match one ([[leafless]]): the `universe` (the ids NOT ranges
+    * over) when a NOT can hold there, and the `meta` rows (the ids
+    * `lang:`/`source:` leaves range over) when a metadata leaf can.
+    * Otherwise `meta` joins the leaf documents only for its flags, and
+    * `universe` stays out of the plan.
+    */
+  private def matchesOf(rows: DataFrame, q: Q, id: String, universe: => DataFrame,
+                        meta: DataFrame): DataFrame = {
+    val fielded = rows.columns.contains("field")
+    val key = if (fielded) concat_ws(" ", col("field"), col("term")) else col("term")
+    val byDoc = rows.groupBy(col(id))
+      .agg(map_from_entries(collect_list(struct(key, col("positions")))).as(PosMap))
+    val outer = !leafless(q).contains(false)
+    val docs =
+      if (outer && hasNot(q))
+        universe.select(col(id), lit(true).as(InUniverse)).join(byDoc, Seq(id), "left")
+      else byDoc.withColumn(InUniverse, lit(true))
+    val fields = fieldLeaves(q)
+    val flags = fields.zipWithIndex.map { case (fv, i) => fv -> s"__field$i" }.toMap
+    val framed =
+      if (fields.isEmpty) docs
+      else {
+        // absent metadata fails loudly
+        require(meta != null,
+          s"field query '${fields.head._1}:${fields.head._2}' needs a metadata " +
+            "frame (for a saved index: IndexStore.saveMeta beside the build)")
+        val hits = fields.map { case (f, v) => max(col(f) === v).as(flags((f, v))) }
+        val perDoc = meta.groupBy(col(id)).agg(hits.head, hits.tail: _*)
+        docs.join(perDoc, Seq(id), if (outer) "full_outer" else "left")
+      }
+    val withMap =
+      if (outer) framed.withColumn(PosMap,
+        coalesce(col(PosMap), typedLit(Map.empty[String, Seq[Long]])))
+      else framed
+    withMap.filter(predicate(q, fielded, flags)).select(col(id))
+  }
+
+  /** The leaf-term filter of a term column: exact terms, prefixes and
+    * (on a scan) fuzzy terms, OR'd; `lit(false)` for a query with none.
+    */
+  private def leafHit(terms: Seq[String], prefixes: Seq[String],
+                      fuzzy: Seq[(String, Int)]): Column =
+    ((if (terms.isEmpty) Nil else Seq(col("term").isin(terms.distinct: _*))) ++
+      prefixes.distinct.map(col("term").startsWith) ++
+      fuzzy.distinct.map { case (t, d) => levenshtein(col("term"), lit(t)) <= d })
+      .reduceOption(_ || _).getOrElse(lit(false))
+
+  /** The leaf rows of a corpus query: the positional token stream
+    * (`id, term, [field,] pos`) cut to the query's leaf terms and
+    * grouped per (id, [field,] term) to sorted positions. A fuzzy
+    * leaf expands against the stream's AGGREGATED vocabulary (distinct
+    * terms), which then semi-joins back — the [[Index.fuzzyTermOf]]
+    * probe — so no per-token edit distance runs.
+    */
+  private def tokenLeafRows(tok: DataFrame, q: Q, id: String): DataFrame = {
+    val (ts, ps, fz) = leaves(q)
+    val hit = leafHit(ts, ps, fz)
+    val leafToks =
+      if (fz.isEmpty) tok.filter(hit)
+      else tok.join(broadcast(tok.select("term").distinct().filter(hit)), Seq("term"), "left_semi")
+    val keys = Seq(col(id)) ++
+      (if (tok.columns.contains("field")) Seq(col("field")) else Nil) :+ col("term")
+    leafToks.groupBy(keys: _*).agg(sort_array(collect_list(col("pos"))).as("positions"))
+  }
+
+  /** [[matchesOf]] over a document corpus's token stream. */
+  private def corpusMatches(docs: DataFrame, tok: DataFrame, q: Q, id: String): DataFrame =
+    matchesOf(tokenLeafRows(tok, q, id), q, id, docs.select(col(id)).distinct(), meta = docs)
 
   /** Parse + run a query string against a document corpus. */
   def search(docs: DataFrame, query: String, id: String = "doc_id",
-             text: String = "text"): DataFrame = {
-    val tok = Index.tokenStreamOf(docs, id, text)
-    eval(tok, docs.select(col(id)).distinct(), parse(query), id, meta = docs)
-  }
+             text: String = "text"): DataFrame =
+    corpusMatches(docs, Index.tokenStreamOf(docs, id, text), parse(query), id)
 
   /** [[search]] over MULTIPLE text fields (r15): `fields` names each
     * field's text column ([[Index.fieldedTokenStreamOf]]); plain
     * leaves match the mandatory `body` field, `title:term` leaves
-    * their own. Metadata (`lang:`) and boolean composition are
-    * unchanged — fielded and metadata leaves compose through the same
-    * semi-join AND.
+    * their own. Each document's positions map is keyed by field and
+    * term, so fielded, plain and metadata (`lang:`) leaves compose in
+    * the same per-document predicate.
     */
   def searchFielded(docs: DataFrame, query: String,
                     fields: Map[String, org.apache.spark.sql.Column],
                     id: String = "doc_id"): DataFrame = {
     require(fields.contains("body"),
       "fielded search needs a 'body' field — the grammar's default scope")
-    val tok = Index.fieldedTokenStreamOf(docs, fields, id)
-    eval(tok, docs.select(col(id)).distinct(), parse(query), id, meta = docs)
+    corpusMatches(docs, Index.fieldedTokenStreamOf(docs, fields, id), parse(query), id)
   }
 
   /** The exact-term, prefix, and fuzzy leaves of an AST — what a
@@ -267,7 +351,7 @@ object Query {
     case Boost(t, _) => (Seq(t), Nil, Nil)
     case Field(_, _) => (Nil, Nil, Nil)
     // a fielded term fetches the SAME bucket-pruned postings as the
-    // plain term; eval scopes them to the field afterwards
+    // plain term; the positions map keys them by field
     case TField(_, t) => (Seq(t), Nil, Nil)
     case Prefix(p) => (Nil, Seq(p), Nil)
     case Fuzzy(t, d) => (Nil, Nil, Seq((t, d)))
@@ -284,40 +368,33 @@ object Query {
   /** Parse + run a query string against a SAVED index
     * ([[graft.sources.IndexStore]]) instead of re-tokenizing a corpus —
     * the index-once / query-many path the reference builds its index
-    * for. Exact-term leaves arrive via ONE bucket-pruned multi-term
-    * scan ([[graft.sources.IndexStore.lookupTerms]]); prefix leaves
-    * scan with a pushed StartsWith (term-sorted row groups prune
-    * inside each bucket); positions explode back to the (doc, term,
-    * pos) stream [[eval]] compiles against, so phrase adjacency and
-    * boolean composition are the SAME plan as the corpus path — only
+    * for. The query's leaves arrive in ONE fetch ([[leafPostings]]:
+    * exact terms bucket-pruned, prefix leaves with a pushed
+    * StartsWith), and the stored position lists feed [[matchesOf]]
+    * as they are — the same evaluator as the corpus path, so only
     * the leaf source changes, and it reads ≤ |query terms| / nBuckets
     * of the index.
     *
-    * NOT ranges over the INDEXED documents (the index has no row for
-    * a zero-token document — same universe the reference's artifact
-    * defines).
+    * The call reads ONE snapshot: the leaves and the NOT universe
+    * both come off one [[graft.sources.IndexStore.load]] (one root
+    * listing), and the universe enters the plan only when the query
+    * needs it. NOT ranges over the INDEXED documents (the index has
+    * no row for a zero-token document — same universe the reference's
+    * artifact defines).
     */
   def searchIndex(spark: SparkSession, indexPath: String, query: String,
                   nBuckets: Int = graft.sources.IndexStore.DefaultBuckets,
                   id: String = "doc_id"): DataFrame = {
     val ast = parse(query)
-    val fetched = leafPostings(spark, indexPath, ast, nBuckets, query)
-    val tok = fetched.select(tokCols(fetched, id): _*)
-    val universe = graft.sources.IndexStore.load(spark, indexPath)
-      .select(id).distinct()
-    eval(tok, universe, ast, id, metaOf(spark, indexPath, ast))
+    graft.sources.IndexStore.requireBucketsMatch(spark, indexPath, nBuckets)
+    val idx = graft.sources.IndexStore.load(spark, indexPath)
+    def fuzzy =
+      if (graft.sources.IndexStore.hasFuzzy(spark, indexPath))
+        Some(graft.sources.IndexStore.loadFuzzy(spark, indexPath))
+      else None
+    matchesOf(leafPostings(idx, nBuckets, fuzzy, ast), ast, id,
+      idx.select(col(id)).distinct(), metaOf(spark, indexPath, ast))
   }
-
-  /** The exploded-positions projection of a leaf fetch — carries the
-    * `field` tag when the index is fielded
-    * ([[Index.fieldedInvertedIndexOf]]), so [[eval]] can scope plain
-    * leaves to `body` and `title:` leaves to theirs.
-    */
-  private def tokCols(fetched: DataFrame,
-                      id: String): Seq[org.apache.spark.sql.Column] =
-    (Seq(col(id), col("term")) ++
-      (if (fetched.columns.contains("field")) Seq(col("field")) else Nil)) :+
-      explode(col("positions")).as("pos")
 
   /** [[searchIndex]] against a pinned serving snapshot
     * ([[graft.sources.IndexStore.open]]) — identical results and
@@ -332,87 +409,54 @@ object Query {
                     query: String): DataFrame = {
     val id = oi.universe.columns.head
     val ast = parse(query)
-    val fetched = leafPostingsOn(oi, ast, query)
-    eval(fetched.select(tokCols(fetched, id): _*), oi.universe, ast, id,
-      oi.meta.orNull)
-  }
-
-  /** Whether the AST carries a [[Field]] leaf anywhere — the gate
-    * that keeps field-less queries from paying the `_meta` listing
-    * (a per-query driver-side cost measured on the serving mix).
-    */
-  private def hasFieldLeaf(q: Q): Boolean = q match {
-    case Field(_, _) => true
-    case And(l, r) => hasFieldLeaf(l) || hasFieldLeaf(r)
-    case Or(l, r) => hasFieldLeaf(l) || hasFieldLeaf(r)
-    case Not(inner) => hasFieldLeaf(inner)
-    case _ => false
+    matchesOf(leafPostingsOn(oi, ast), ast, id, oi.universe, oi.meta.orNull)
   }
 
   /** The index's `_meta` side table when the QUERY needs one (fielded
     * `lang:`/`source:` leaves evaluate against it, doc-keyed and
-    * tombstone-filtered), else null — [[eval]] then fails loudly only
-    * if the query actually HAS a field leaf. Field-less queries skip
-    * even the existence check's read.
+    * tombstone-filtered), else null — [[matchesOf]] then fails loudly
+    * only if the query actually HAS a field leaf. Field-less queries
+    * skip even the existence check's read.
     */
   private def metaOf(spark: SparkSession, indexPath: String, ast: Q): DataFrame =
-    if (hasFieldLeaf(ast) && graft.sources.IndexStore.hasMeta(spark, indexPath))
+    if (fieldLeaves(ast).nonEmpty && graft.sources.IndexStore.hasMeta(spark, indexPath))
       graft.sources.IndexStore.loadMeta(spark, indexPath)
     else null
 
-  /** The posting rows a query's leaves need, fetched from the saved
-    * index: exact-term leaves via ONE bucket-pruned multi-term scan,
-    * prefix leaves via a pushed StartsWith, fuzzy leaves via a
-    * dictionary distance scan. Returns (id, term, tf, positions) rows —
-    * the shared leaf source of [[searchIndex]] (which explodes
-    * positions back to a token stream) and [[searchRankedIndex]]
-    * (which also reads tf and per-term row counts off the SAME fetch).
+  /** The posting rows a query's leaves need, fetched from a resolved
+    * index relation `idx` in ONE filtered scan: exact-term leaves
+    * bucket-pruned, prefix leaves by a pushed StartsWith (term-sorted
+    * row groups prune inside each bucket), fuzzy leaves through the
+    * `_fuzzy` table when there is one. Each posting row arrives at
+    * most once, however many leaves it serves. Returns (id, term, tf,
+    * positions[, field]) rows — the leaf source of [[searchIndex]]
+    * and of [[searchRankedIndex]] (which also reads tf and per-term
+    * row counts off the SAME fetch).
     */
-  private def leafPostings(spark: SparkSession, indexPath: String, ast: Q,
-                           nBuckets: Int, query: String): DataFrame = {
+  private def leafPostings(idx: DataFrame, nBuckets: Int, fuzzyTable: => Option[DataFrame],
+                           ast: Q): DataFrame = {
     val (ts, ps, fz) = leaves(ast)
-    val byTerm =
-      if (ts.nonEmpty)
-        Seq(graft.sources.IndexStore.lookupTerms(spark, indexPath, ts.distinct, nBuckets))
-      else Nil
-    val byPrefix = ps.distinct.map(p =>
-      graft.sources.IndexStore.load(spark, indexPath)
-        .filter(col("term").startsWith(p)).drop("term_bucket"))
     // fuzzy leaves can't bucket-prune directly (an edit can land in
     // any bucket). With the `_fuzzy` SymSpell side table the leaf
     // resolves to its candidate TERM SET first (variant-IN probe +
     // exact verify, a bounded driver collect like the hybrid path's
-    // term list) and fetches those terms' postings bucket-pruned;
-    // without it, the declared fallback is the full-dictionary
-    // levenshtein scan
-    val fuzzyTable =
-      if (fz.nonEmpty && graft.sources.IndexStore.hasFuzzy(spark, indexPath))
-        Some(graft.sources.IndexStore.loadFuzzy(spark, indexPath))
-      else None
-    val byFuzzy = fz.distinct.map { case (t, d) =>
-      fuzzyTable match {
-        case Some(fzt) if d <= graft.sources.IndexStore.FuzzyMaxEdits =>
-          val cands = graft.sources.IndexStore.fuzzyTermsVia(fzt, t, d)
-            .collect().map(_.getString(0)).toSeq
-          if (cands.isEmpty)
-            graft.sources.IndexStore.load(spark, indexPath)
-              .limit(0).drop("term_bucket")
-          else graft.sources.IndexStore.lookupTerms(spark, indexPath,
-            cands, nBuckets)
-        case _ =>
-          graft.sources.IndexStore.load(spark, indexPath)
-            .filter(levenshtein(col("term"), lit(t)) <= d).drop("term_bucket")
-      }
+    // term list), and the candidates fetch bucket-pruned beside the
+    // exact terms; without it, the declared fallback is the
+    // full-dictionary levenshtein scan
+    val table = if (fz.isEmpty) None else fuzzyTable
+    val (probed, scanned) =
+      if (table.isEmpty) (Nil, fz)
+      else fz.distinct.partition(_._2 <= graft.sources.IndexStore.FuzzyMaxEdits)
+    val cands = probed.flatMap { case (t, d) =>
+      graft.sources.IndexStore.fuzzyTermsVia(table.get, t, d)
+        .collect().map(_.getString(0)).toSeq
     }
-    // a PURE-field query (`lang:en`) has no postings to fetch — its
-    // evaluation runs entirely against `_meta`; hand eval an empty
-    // token stream instead of refusing the query (r15)
-    if (byTerm.isEmpty && byPrefix.isEmpty && byFuzzy.isEmpty && hasFieldLeaf(ast))
-      return graft.sources.IndexStore.load(spark, indexPath)
-        .limit(0).drop("term_bucket")
-    require(byTerm.nonEmpty || byPrefix.nonEmpty || byFuzzy.nonEmpty,
-      s"query has no leaves: $query")
-    (byTerm ++ byPrefix ++ byFuzzy).reduce(_ unionByName _)
+    val exact = (ts ++ cands).distinct
+    val byTerm =
+      if (exact.isEmpty) lit(false) else graft.sources.IndexStore.termsIn(exact, nBuckets)
+    // a pure-field query (`lang:en`) fetches nothing: the filter is
+    // false and its evaluation rides `_meta` alone
+    idx.filter(byTerm || leafHit(Nil, ps, scanned)).drop("term_bucket")
   }
 
   /** The UNCHECKPOINTED leaf-fetch plan of a ranked/boolean query —
@@ -424,39 +468,13 @@ object Query {
   private[graft] def rankedFetchPlan(spark: SparkSession, indexPath: String,
                                      query: String, nBuckets: Int): DataFrame =
     leafPostingsOn(graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets,
-      withMeta = true), parse(query), query)
+      withMeta = true), parse(query))
 
-  /** [[leafPostings]] against a pinned snapshot: same three leaf
-    * sources, planned over the handle's already-resolved relation.
+  /** [[leafPostings]] against a handle's resolved relation and its
+    * pinned `_fuzzy` table.
     */
-  private def leafPostingsOn(oi: graft.sources.IndexStore.OpenIndex, ast: Q,
-                             query: String): DataFrame = {
-    val (ts, ps, fz) = leaves(ast)
-    val byTerm =
-      if (ts.nonEmpty) Seq(graft.sources.IndexStore.lookupTermsOn(oi, ts.distinct))
-      else Nil
-    val byPrefix = ps.distinct.map(p =>
-      oi.idx.filter(col("term").startsWith(p)).drop("term_bucket"))
-    val byFuzzy = fz.distinct.map { case (t, d) =>
-      oi.fuzzy match {
-        // the handle's pinned `_fuzzy` table: candidate terms by
-        // variant probe, then a bucket-pruned postings fetch
-        case Some(fzt) if d <= graft.sources.IndexStore.FuzzyMaxEdits =>
-          val cands = graft.sources.IndexStore.fuzzyTermsVia(fzt, t, d)
-            .collect().map(_.getString(0)).toSeq
-          if (cands.isEmpty) oi.idx.limit(0).drop("term_bucket")
-          else graft.sources.IndexStore.lookupTermsOn(oi, cands)
-        case _ =>
-          oi.idx.filter(levenshtein(col("term"), lit(t)) <= d).drop("term_bucket")
-      }
-    }
-    // pure-field query: empty token stream, evaluation rides `_meta`
-    if (byTerm.isEmpty && byPrefix.isEmpty && byFuzzy.isEmpty && hasFieldLeaf(ast))
-      return oi.idx.limit(0).drop("term_bucket")
-    require(byTerm.nonEmpty || byPrefix.nonEmpty || byFuzzy.nonEmpty,
-      s"query has no leaves: $query")
-    (byTerm ++ byPrefix ++ byFuzzy).reduce(_ unionByName _)
-  }
+  private def leafPostingsOn(oi: graft.sources.IndexStore.OpenIndex, ast: Q): DataFrame =
+    leafPostings(oi.idx, oi.nBuckets, oi.fuzzy, ast)
 
   /** The positive (non-negated) words of a query — the terms ranking
     * should score. NOT-subtrees only exclude documents.
@@ -513,7 +531,7 @@ object Query {
     val tok = Index.tokenStreamOf(docs, id, text)
     // meta = the doc frame itself, like [[search]]: fielded (lang:/
     // source:) restrictions compose with ranking on the corpus path too
-    val matches = eval(tok, docs.select(col(id)).distinct(), ast, id, meta = docs)
+    val matches = corpusMatches(docs, tok, ast, id)
     val nDf = docs.agg(count(lit(1)).cast("double").as("n"))
     val dl = tok.groupBy(id).agg(count(lit(1)).cast("double").as("dl"))
     val avgdlDf = dl.agg(avg(col("dl")).as("avgdl"))
@@ -543,7 +561,8 @@ object Query {
     * you'd never run at 100 TB). Everything per-query rides the ONE
     * bucket-pruned leaf fetch [[searchIndex]] already does:
     *
-    *   - matching: same [[eval]] plan over the exploded positions;
+    *   - matching: the same evaluator ([[matchesOf]]) over the
+    *     fetched position lists;
     *   - tf: the stored per-posting `tf` column of the fetched rows;
     *   - df: a per-term row count over the SAME fetch — a bucket-pruned
     *     term fetch returns the term's COMPLETE posting list, so df
@@ -651,7 +670,7 @@ object Query {
                                 id: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
     rankedIndexFramesOn(
       graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets,
-        withMeta = hasFieldLeaf(parse(query))), query, k)
+        withMeta = fieldLeaves(parse(query)).nonEmpty), query, k)
 
   private def rankedIndexFramesOn(oi: graft.sources.IndexStore.OpenIndex,
                                   query: String, k: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -684,12 +703,12 @@ object Query {
     // prices the ladder's scored-vs-candidates split.
     val ladder = terms.size.toLong * math.max(oi.nDocs, 0L) >= oi.spark.conf
       .get("spark.graft.maxscoreRows", "10000000").toLong
-    val postings0 = leafPostingsOn(oi, ast, query)
+    val postings0 = leafPostingsOn(oi, ast)
     val postings = if (ladder) postings0.localCheckpoint() else postings0
-    val tok = postings.select(tokCols(postings, id): _*)
-    // the universe frame only enters the plan under a NOT node — a
-    // NOT-less ranked query never scans beyond its terms' buckets
-    val matches = eval(tok, oi.universe, ast, id, oi.meta.orNull)
+    // the universe frame only enters the plan when the query can match
+    // a document without its terms (`x OR NOT y`); a NOT-less ranked
+    // query never scans beyond its terms' buckets
+    val matches = matchesOf(postings, ast, id, oi.universe, oi.meta.orNull)
     val (dl, corpus) = oi.stats.get
     // over a FIELDED index, ranking scores the BODY field's tf only
     // (title rows would double-count the title tokens; per-field
@@ -764,9 +783,9 @@ object Query {
       .orderBy("doc_id")
 
   /** Gate query: a 3-term quoted phrase — exercises the n-term
-    * positional adjacency chain in [[eval]]'s Phrase plan (one
-    * doc+offset-keyed join per extra word; 2-term `phrase_search` is
-    * the shortest instance).
+    * positional chain of the window kernel (each step one merge walk
+    * over the next word's positions; 2-term `phrase_search` is the
+    * shortest instance).
     */
   def phrase3Search(spark: SparkSession, dir: String): DataFrame =
     search(Tables.documents(spark, dir), "\"small query line\"")
@@ -820,9 +839,10 @@ object Query {
       .orderBy("doc_id")
 
   /** Gate query: metadata field restriction inside the boolean
-    * grammar ([[Field]] — `lang:`/`source:` leaves filter the doc
-    * frame, composing with term leaves through the same semi-join
-    * AND), the fielded-search surface every search engine exposes.
+    * grammar ([[Field]] — `lang:`/`source:` leaves read per-document
+    * flags off the doc frame, composing with term leaves in the same
+    * per-document predicate), the fielded-search surface every search
+    * engine exposes.
     */
   def queryField(spark: SparkSession, dir: String): DataFrame =
     search(Tables.documents(spark, dir), "lang:en AND (spark OR query) AND NOT source:src0")

@@ -654,7 +654,7 @@ object IndexStore {
     * which can only catch too-SMALL values. One driver-side file
     * read / listing, no job.
     */
-  private def requireBucketsMatch(spark: SparkSession, path: String,
+  private[graft] def requireBucketsMatch(spark: SparkSession, path: String,
                                   nBuckets: Int): Unit =
     savedBuckets(spark, path) match {
       case Some(saved) =>
@@ -706,8 +706,9 @@ object IndexStore {
     * did not move). Recover by [[open]]ing a fresh handle.
     *
     * What each query still plans for itself: its own bucket-pruned
-    * filters over [[idx]] and the NOT-universe distinct
-    * ([[universe]]). The `*On` query variants ([[lookupOn]],
+    * filters over [[idx]] and, only when its AST can match a document
+    * without its terms (a NOT that can hold there), the NOT-universe
+    * distinct ([[universe]]). The `*On` query variants ([[lookupOn]],
     * [[lookupTermsOn]], [[graft.operators.Query.searchIndexOn]]/
     * [[graft.operators.Query.searchRankedIndexOn]],
     * [[graft.streaming.Stream.hybridServeOn]]) plan against the held
@@ -806,11 +807,16 @@ object IndexStore {
   /** [[lookupTerms]] against a pinned [[OpenIndex]] snapshot. */
   def lookupTermsOn(oi: OpenIndex, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "lookupTerms needs at least one term")
-    val buckets = terms.map(bucketOf(_, oi.nBuckets)).distinct
-    oi.idx
-      .filter(col("term_bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .drop("term_bucket")
+    oi.idx.filter(termsIn(terms, oi.nBuckets)).drop("term_bucket")
   }
+
+  /** The multi-term fetch filter over an index relation: the bucket
+    * IN-list prunes directories at planning time, the term IN-list
+    * pushes into the surviving buckets' row groups.
+    */
+  private[graft] def termsIn(terms: Seq[String], nBuckets: Int): org.apache.spark.sql.Column =
+    col("term_bucket").isin(terms.map(bucketOf(_, nBuckets)).distinct: _*) &&
+      col("term").isin(terms: _*)
 
   /** Partition-pruned single-term lookup: the `term_bucket` equality
     * prunes directories at planning time; the `term` equality pushes
@@ -834,10 +840,7 @@ object IndexStore {
                   nBuckets: Int = DefaultBuckets): DataFrame = {
     require(terms.nonEmpty, "lookupTerms needs at least one term")
     requireBucketsMatch(spark, path, nBuckets)
-    val buckets = terms.map(bucketOf(_, nBuckets)).distinct
-    load(spark, path)
-      .filter(col("term_bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .drop("term_bucket")
+    load(spark, path).filter(termsIn(terms, nBuckets)).drop("term_bucket")
   }
 
   /** Incremental index maintenance: merge a delta index (the postings

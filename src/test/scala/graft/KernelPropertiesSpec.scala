@@ -18,6 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - SimHash's order-independence (what makes it shuffle-safe),
   *  - the delta-gap codec's roundtrip (what makes a saved index
   *    readable),
+  *  - the positional window kernel against brute force (what phrase,
+  *    sloppy-phrase and NEAR evaluation rests on),
   *  - the float-vector folds' exact symmetry/self-similarity.
   *
   * No SparkSession: these target the kernels the expressions call
@@ -153,6 +155,52 @@ class KernelPropertiesSpec extends AnyFunSuite {
     check(Prop.forAll(genPos) { ps =>
       PostingsImpl.deltaDecode(PostingsImpl.deltaEncode(lArr(ps))).toLongArray.toSeq == ps
     })
+  }
+
+  // -- positional window kernel -------------------------------------------
+
+  /** ∃ p0 ∈ ls(0), p1 ∈ ls(1), … with every step p(i) − p(i−1) in [lo, hi],
+    * by enumeration. */
+  private def bruteChain(ls: List[List[Long]], lo: Long, hi: Long): Boolean = {
+    def from(prev: Long, rest: List[List[Long]]): Boolean = rest match {
+      case Nil => true
+      case h :: t => h.exists(p => p - prev >= lo && p - prev <= hi && from(p, t))
+    }
+    ls.head.exists(p => from(p, ls.tail))
+  }
+
+  test("window kernel: chain equals brute force on random sorted lists (empty, duplicates, boundary gaps)") {
+    // a narrow position range makes duplicates, exact-boundary gaps and
+    // empty lists frequent; lo may be negative or equal to hi
+    val genList = Gen.frequency(1 -> Gen.const(Nil),
+      6 -> Gen.listOf(Gen.choose(0L, 10L)).map(_.sorted))
+    val genCase = for {
+      n <- Gen.choose(1, 4)
+      ls <- Gen.listOfN(n, genList)
+      lo <- Gen.choose(-3L, 3L)
+      w <- Gen.choose(0L, 3L)
+    } yield (ls, lo, lo + w)
+    check(Prop.forAll(genCase) { case (ls, lo, hi) =>
+      PostingsImpl.chain(ls.map(lArr).toArray, lo, hi) == bruteChain(ls, lo, hi)
+    })
+    // the window's edges are inclusive on both sides
+    def two(a: Long, b: Long, lo: Long, hi: Long) =
+      PostingsImpl.chain(Array(lArr(Seq(a)), lArr(Seq(b))), lo, hi)
+    assert(two(0, 1, 1, 1) && two(0, 3, 1, 3) && two(5, 2, -3, -1))
+    assert(!two(0, 2, 1, 1) && !two(0, 4, 1, 3) && !two(0, 0, 1, 3) && !two(5, 1, -3, -1))
+  }
+
+  test("window kernel: within looks its keys up in the positions map, absent key = false") {
+    import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+    val m = new ArrayBasedMapData(sArr(Seq("key", "order", "the")),
+      new GenericArrayData(Array[Any](lArr(Seq(0L, 7L)), lArr(Seq(1L, 9L)), lArr(Seq(3L, 4L)))))
+    def keys(ks: String*) = ks.map(UTF8String.fromString).toArray
+    assert(PostingsImpl.within(m, keys("key", "order"), 1, 1))
+    assert(!PostingsImpl.within(m, keys("order", "key"), 1, 1))
+    assert(PostingsImpl.within(m, keys("order", "key"), -1, -1))
+    assert(PostingsImpl.within(m, keys("the", "the"), 1, 1))
+    assert(!PostingsImpl.within(m, keys("key", "absent"), -100, 100))
+    assert(PostingsImpl.within(m, keys("key"), 0, 0))
   }
 
   // -- vector folds -------------------------------------------------------

@@ -383,6 +383,27 @@ class SourcesSpec extends SparkSpec {
     intercept[IllegalArgumentException](operators.Query.parse("(a AND b) NEAR/2 c"))
   }
 
+  test("query over saved index: a boolean query executes as one index scan and one shuffle") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val path = tmpDir("graft-idxbool") + "/index"
+    IndexStore.save(Index.invertedIndexOf(Seq(
+      (0L, "spark makes key order fast"),
+      (1L, "key order matters"),
+      (2L, "slow spark query with key order"),
+      (3L, "spark alone")).toDF("doc_id", "text")), path, nBuckets = 4)
+    // the leaves' postings are fetched once and grouped once by doc:
+    // no second scan of the fetch, no per-node join exchange
+    val df = operators.Query.searchIndex(spark, path, "spark AND key", nBuckets = 4)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq === Seq(0L, 2L))
+    val plan = df.queryExecution.executedPlan
+    val scans = H.collect(plan) { case s: FileSourceScanExec => s }
+    val shuffles = H.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(scans.size === 1 && shuffles.size === 1, plan.toString)
+  }
+
   test("ranked query over saved index: BM25 matches the corpus path row for row") {
     val docs = sources.Tables.documents(spark, sfDir)
     val path = tmpDir("graft-idxrank") + "/index"
