@@ -65,27 +65,15 @@ object CorpusStore {
   def tombstoneBatchCount(spark: SparkSession, path: String): Int =
     Tombstones.batchCount(spark, path)
 
-  /** Fold tombstones into the layout FOR REAL, in place: rewrite the
-    * store through the (anti-joined) [[load]] into a temp dir — the
-    * `_tombstones` tree does not travel — then the [[StoreSwap]]
-    * two-rename. Deleted documents leave disk and the reader-side
-    * anti-join list resets to empty. No-op when nothing is deleted.
+  /** Fold tombstones into the layout FOR REAL, in place: the store's
+    * (anti-joined) [[load]] rewritten as a plain root by
+    * [[SegmentedStore.fold]] — deleted documents leave disk, the
+    * reader-side anti-join list resets to empty, and the takedown
+    * epoch survives for the rebuild-on-takedown consumers
+    * (pack/interleave stores). No-op when nothing is deleted.
     */
-  def foldTombstones(spark: SparkSession, path: String): Unit = {
-    if (!Tombstones.hasAny(spark, path)) return
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StoreSwap.recover(fs, root) // a prior fold may have died mid-swap
-    val tmp = path + ".compacting"
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    if (fs.exists(tmpPath)) fs.delete(tmpPath, true)
-    save(load(spark, path), tmp)
-    // the takedown epoch survives the purge (r15): it is the one
-    // artifact rebuild-on-takedown consumers (pack/interleave stores)
-    // check, and it must not reset when the landings fold away
-    Tombstones.carryEpoch(spark, path, tmp)
-    StoreSwap.swap(fs, root, tmp)
-  }
+  def foldTombstones(spark: SparkSession, path: String): Unit =
+    SegmentedStore.fold(spark, path)(save(load(spark, path), _))
 
   /** Small-files compaction: coalesce an accumulation of per-batch
     * document directories (the `batch=<id>` landing dirs the

@@ -71,10 +71,13 @@ object IndexStore {
       .parquet(path)
     // persist the layout's bucket count AFTER the (overwriting) data
     // write, so lookups validate against the truth, not a stale marker
+    writeBuckets(index.sparkSession, path, nBuckets)
+  }
+
+  private def writeBuckets(spark: SparkSession, path: String, nBuckets: Int): Unit = {
     val marker = new org.apache.hadoop.fs.Path(path, BucketsMarker)
-    val fs = marker.getFileSystem(
-      index.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
+    val out = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(marker, true)
     try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
   }
 
@@ -97,8 +100,8 @@ object IndexStore {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.isDirectory(p) && {
       val names = fs.listStatus(p).map(_.getPath.getName)
-      names.contains(BucketsMarker) ||
-        names.exists(n => n.startsWith("term_bucket=") || n.startsWith("seg="))
+      names.contains(BucketsMarker) || names.exists(_.startsWith("term_bucket=")) ||
+        SegmentedStore.listing(spark, path).segs.nonEmpty
     }
   }
 
@@ -150,12 +153,6 @@ object IndexStore {
     */
   def tombstoneBatchCount(spark: SparkSession, path: String): Int =
     Tombstones.batchCount(spark, path)
-
-  private def hasTombstones(spark: SparkSession, path: String): Boolean =
-    Tombstones.hasAny(spark, path)
-
-  private def tombstonesOf(spark: SparkSession, path: String): Option[DataFrame] =
-    Tombstones.setOf(spark, path)
 
   /** Rewrite the index at `path` with tombstoned docs dropped for
     * real, into `outPath` with no tombstone directory — the compaction
@@ -483,7 +480,7 @@ object IndexStore {
         "beside the index build (compaction carries it forward)")
     val raw = spark.read.parquet(
       new org.apache.hadoop.fs.Path(path, MetaDir).toString)
-    tombstonesOf(spark, path) match {
+    Tombstones.setOf(spark, path) match {
       case Some(t) if raw.columns.contains("doc_id") =>
         raw.join(t, Seq("doc_id"), "left_anti")
       case _ => raw
@@ -583,66 +580,47 @@ object IndexStore {
 
   /** Read an index back, read-latest: the raw relation (a delta-gap
     * `gaps` column decoded back to absolute `positions`, see [[save]])
-    * anti-joined against the store's [[deadKeysOf dead-key set]],
-    * planned here and run with the query — every call re-lists the
-    * store, so it sees every landing and takedown so far. The decode
-    * is a narrow codegen'd map AFTER scan filters apply, and
-    * term/bucket predicates push through the anti-join's streamed
+    * anti-joined against the store's dead-key set
+    * ([[SegmentedStore.deadKeys]] over the segments' `_docs`
+    * manifests), planned here and run with the query — every call
+    * re-lists the store, so it sees every landing and takedown so far.
+    * The decode is a narrow codegen'd map AFTER scan filters apply,
+    * and term/bucket predicates push through the anti-join's streamed
     * side, so partition pruning and term pushdown are unaffected
-    * (auditIndex asserts this); the dead-key side is a
-    * doc-count-sized frame AQE broadcasts. A store with at most one
-    * segment and no tombstones reads with no join at all.
+    * (auditIndex asserts this); the dead-key side is a doc-count-sized
+    * frame AQE broadcasts. A store with at most one segment and no
+    * tombstones reads with no join at all.
     */
   def load(spark: SparkSession, path: String): DataFrame =
-    loadListed(spark, path, rootListing(spark, path))
+    loadListed(spark, path, SegmentedStore.listing(spark, path))
 
-  /** [[load]] over an already-taken [[RootListing]]: the postings and
-    * the dead-key set both describe the segments of `l`, whatever
-    * landed since.
+  /** [[load]] over an already-taken listing: the postings and the
+    * dead-key set both describe the segments of `l`, whatever landed
+    * since.
     */
   private[graft] def loadListed(spark: SparkSession, path: String,
-                                l: RootListing): DataFrame =
-    live(rawOf(spark, path, l), deadKeysOf(spark, path, l))
+                                l: SegmentedStore.Listing): DataFrame =
+    SegmentedStore.live(rawOf(spark, path, l), deadKeysOf(spark, path, l), "doc_id")
 
   /** The index relation at `path` as written, before version and
-    * takedown resolution: `gaps` decoded to `positions`, and on a
-    * segmented store the `seg` partition column typed long (the
-    * dead-key set's type) so the anti-join keys compare without a
-    * cast. A segmented store reads exactly the `seg=` dirs of `l`
-    * (the root as basePath keeps `seg` a partition column), so a
-    * segment renamed in after the listing is outside this read just
-    * as it is outside the dead-key set.
+    * takedown resolution ([[SegmentedStore.read]] of the segments of
+    * `l`), with `gaps` decoded to `positions`.
     */
-  private def rawOf(spark: SparkSession, path: String, l: RootListing): DataFrame = {
-    val raw0 =
-      if (l.segs.isEmpty) spark.read.parquet(path)
-      else spark.read.option("basePath", path)
-        .parquet(l.segs.map(id => s"$path/seg=$id"): _*)
-    val raw =
-      if (raw0.columns.contains("gaps"))
-        raw0.withColumn("positions", PostingsFns.deltaDecode(col("gaps")))
-          .drop("gaps")
-      else raw0
-    if (raw.columns.contains("seg")) raw.withColumn("seg", col("seg").cast("long"))
-    else raw
+  private def rawOf(spark: SparkSession, path: String,
+                    l: SegmentedStore.Listing): DataFrame = {
+    val raw = SegmentedStore.read(spark, path, l)
+    if (!raw.columns.contains("gaps")) raw
+    else raw.withColumn("positions", PostingsFns.deltaDecode(col("gaps"))).drop("gaps")
   }
 
-  /** The rows of `raw` that readers see: `raw` anti-joined on the
-    * dead-key set's columns, then a segmented store's `seg` column
-    * dropped (output columns: `doc_id` first, then the stored ones).
-    * A title-keyed index carries no `doc_id`, so doc-keyed tombstones
-    * cannot name its rows and it reads unfiltered.
+  /** The index's dead-key set: each segment's versions are its `_docs`
+    * manifest, which [[saveSegment]] writes as exactly the segment's
+    * posting doc set.
     */
-  private def live(raw: DataFrame, dead: Option[DataFrame]): DataFrame = {
-    val kept = dead match {
-      case Some(d) if d.columns.forall(raw.columns.contains) =>
-        raw.join(d, d.columns.toSeq, "left_anti")
-      case _ => raw
-    }
-    if (!raw.columns.contains("seg")) kept
-    else kept.select(("doc_id" +: raw.columns.filter(c => c != "doc_id" && c != "seg"))
-      .map(col): _*)
-  }
+  private def deadKeysOf(spark: SparkSession, path: String,
+                         l: SegmentedStore.Listing): Option[DataFrame] =
+    SegmentedStore.deadKeys(spark, path, l, "doc_id")(
+      SegmentedStore.read(spark, path, l, "/" + DocsManifest))
 
   /** Fail loudly when the caller's `nBuckets` is not the one the
     * index was SAVED with — ANY other value (smaller or larger)
@@ -664,16 +642,14 @@ object IndexStore {
       case None =>
         val p = new org.apache.hadoop.fs.Path(path)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val top = fs.listStatus(p).map(_.getPath)
         // a SEGMENTED root has no term_bucket= dirs of its own —
-        // descend into the seg= dirs so the bound still sees real
+        // descend into the segments so the bound still sees real
         // bucket ids (a flat root listing would vacuously accept ANY
         // count and a wrong-count lookup would return empty postings)
-        val bucketDirs = top.filter(_.getName.startsWith("term_bucket=")) ++
-          top.filter(_.getName.startsWith("seg="))
-            .flatMap(seg => fs.listStatus(seg).map(_.getPath)
-              .filter(_.getName.startsWith("term_bucket=")))
-        val ids = bucketDirs.map(_.getName.stripPrefix("term_bucket=").toLong)
+        val dirs = p +: SegmentedStore.listing(spark, path).segs
+          .map(id => new org.apache.hadoop.fs.Path(SegmentedStore.dir(path, id)))
+        val ids = dirs.flatMap(d => fs.listStatus(d).map(_.getPath.getName))
+          .filter(_.startsWith("term_bucket=")).map(_.stripPrefix("term_bucket=").toLong)
         require(ids.isEmpty || ids.max < nBuckets,
           s"index at $path has bucket ids up to ${ids.max} — it was not saved " +
             s"with nBuckets=$nBuckets; pass the bucket count used at save time")
@@ -688,8 +664,8 @@ object IndexStore {
     *
     * What a handle resolves ONCE:
     *  - at [[open]], driver-side: the store [[fingerprint]], then one
-    *    [[RootListing]] that fixes the segment set both the `raw`
-    *    relation (its file listing) and the plan of the
+    *    [[SegmentedStore.Listing]] that fixes the segment set both the
+    *    `raw` relation (its file listing) and the plan of the
     *    [[deadKeysOf dead-key set]] (over those segments' manifests
     *    and the tombstone files listed then) read, then the `_stats`
     *    pair, `_meta` and `_fuzzy`;
@@ -734,7 +710,8 @@ object IndexStore {
       * one-query handle ([[openOnce]]) carries an already-resolved
       * [[raw]] and no dead-key set, so nothing is materialized.
       */
-    lazy val idx: DataFrame = live(raw, deadKeys.map(_.localCheckpoint()))
+    lazy val idx: DataFrame =
+      SegmentedStore.live(raw, deadKeys.map(_.localCheckpoint()), "doc_id")
 
     /** The indexed doc set NOT ranges over; its id column follows the
       * indexed corpus (title for tsv, doc_id otherwise).
@@ -783,10 +760,10 @@ object IndexStore {
     // leaves the handle [[stale]] (so it is re-opened), never missing
     // a landing its fingerprint claims to cover
     val fp = fingerprint(spark, path)
-    val l = rootListing(spark, path)
+    val l = SegmentedStore.listing(spark, path)
     val (raw, dead) = (rawOf(spark, path, l), deadKeysOf(spark, path, l))
     OpenIndex(spark, path, nBuckets,
-      if (hold) raw else live(raw, dead), if (hold) dead else None,
+      if (hold) raw else SegmentedStore.live(raw, dead, "doc_id"), if (hold) dead else None,
       if (hasStats(spark, path)) Some(loadStats(spark, path)) else None,
       if (withMeta && hasMeta(spark, path)) Some(loadMeta(spark, path)) else None,
       if (hasFuzzy(spark, path)) Some(loadFuzzy(spark, path)) else None,
@@ -893,22 +870,16 @@ object IndexStore {
 
   // ---- segmented (LSM-style) layout -----------------------------------
   //
-  // A SEGMENTED index store is a directory of `seg=<id>` sub-indexes
-  // (each a full [[save]] layout), landed one per streaming batch and
-  // folded by [[compactSegments]]. The point is the per-batch WRITE
-  // cost: the swap-based maintenance path rewrites the whole store
-  // every batch (O(|store|) regardless of delta size — the r10
-  // VERDICT's streaming-family 100 TB posture gap); a segment landing
-  // writes exactly the delta, and the landing is one atomic directory
-  // rename, so segment existence doubles as the idempotent-replay
-  // marker and NO store-wide swap happens outside compaction.
-  //
-  // Read-time semantics: documents resolve LAST-WRITER-WINS across
-  // segments (a re-crawled doc's newer segment supersedes all its older
-  // postings) through each segment's tiny `_docs` manifest —
-  // doc-count-sized, so a bucket-pruned lookup never scans other
-  // buckets to resolve versions ([[deadKeysOf]]). Read amplification
-  // is |segments| per bucket, which compaction bounds.
+  // A SEGMENTED index store is a [[SegmentedStore]] (which states the
+  // landing, resolution and fold protocol) whose segments are full
+  // [[save]] layouts, landed one per streaming batch by [[saveSegment]]
+  // and folded by [[compactSegments]]. The point is the per-batch
+  // WRITE cost: a landing writes exactly the delta, where a
+  // whole-store rewrite is O(|store|) whatever the delta. Documents
+  // resolve last-writer-wins through each segment's tiny `_docs`
+  // manifest — doc-count-sized, so a bucket-pruned lookup never scans
+  // other buckets to resolve versions ([[deadKeysOf]]). Read
+  // amplification is |segments| per bucket, which compaction bounds.
 
   /** Per-segment manifest of the doc_ids the segment (re)wrote —
     * underscore-prefixed so parquet data listings skip it.
@@ -917,111 +888,36 @@ object IndexStore {
 
   /** Segment ids present at `path` (empty for a plain single layout). */
   def segmentIds(spark: SparkSession, path: String): Seq[Long] =
-    rootListing(spark, path).segs
+    SegmentedStore.listing(spark, path).segs
 
-  /** One listing of a store root: its segment ids, sorted, and whether
-    * it carries a tombstone dir. A read takes it ONCE and derives both
-    * of its sides from it — the postings relation ([[rawOf]]) and the
-    * [[deadKeysOf dead-key set]] — so a segment that lands while a
-    * reader resolves is in both sides or in neither.
-    */
-  private[graft] final case class RootListing(segs: Seq[Long], tombstoned: Boolean)
-
-  private[graft] def rootListing(spark: SparkSession, path: String): RootListing = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names = if (!fs.exists(p)) Array.empty[String]
-                else fs.listStatus(p).map(_.getPath.getName)
-    RootListing(
-      names.filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toLong).sorted.toSeq,
-      names.contains(Tombstones.Dir))
-  }
-
-  /** The DEAD-KEY set of the store at `path` — the keys of every row a
-    * reader must drop, planned (not computed) from the root listing `l`:
-    *
-    *  - at most one segment: the tombstoned doc_ids, keyed `doc_id`
-    *    (None without tombstones — the reader then carries no join);
-    *  - two or more segments: the `(doc_id, seg)` pairs a NEWER
-    *    segment's manifest supersedes, from ONE aggregation over the
-    *    union of the manifests. Tombstoned ids enter that union at
-    *    seg = +inf, so every real version of a tombstoned doc is
-    *    superseded too and the one aggregation yields both rules.
-    *
-    * [[saveSegment]] writes each manifest as exactly its segment's
-    * posting doc set, so a posting row `(d, s)` is dead iff a later
-    * manifest holds `d` or `d` is tombstoned — the last-writer-wins
-    * rule, stated as the rows to drop rather than the ones to keep.
-    */
-  private def deadKeysOf(spark: SparkSession, path: String,
-                         l: RootListing): Option[DataFrame] = {
-    val tombs = if (l.tombstoned) Tombstones.keysOf(spark, path) else None
-    if (l.segs.size < 2) tombs
-    else {
-      // one read of every manifest: with the store root as basePath,
-      // each manifest row carries its `seg=` dir as a partition value
-      val manifests = spark.read.option("basePath", path)
-        .parquet(l.segs.map(id => s"$path/seg=$id/$DocsManifest"): _*)
-        .select(col("doc_id"), col("seg").cast("long").as("seg"))
-      val versions = manifests +:
-        tombs.toSeq.map(_.select(col("doc_id"), lit(Long.MaxValue).as("seg")))
-      Some(versions.reduce(_.unionByName(_))
-        .withColumn("newest", max(col("seg")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
-        .filter(col("seg") < col("newest"))
-        .select("doc_id", "seg"))
-    }
-  }
-
-  /** Land `delta` as segment `segId` of the segmented store at `path`:
-    * build the full bucketed layout (plus the `_docs` manifest) in a
-    * dot-prefixed temp dir, then ONE atomic rename into `seg=<segId>`.
-    * Returns false (a no-op) when the segment already exists — the
-    * replayed-batch case; the rename is the only visibility point, so
-    * a crash mid-build leaves an invisible temp dir that the next
-    * call sweeps. Refuses a path holding a PLAIN layout (mixing the
-    * two layouts would corrupt partition discovery): adopt one by
-    * compacting it into `seg=<id>` form offline first.
+  /** Land `delta` as segment `segId` of the segmented store at `path`
+    * ([[SegmentedStore.land]]): the full bucketed layout plus the
+    * `_docs` manifest, published by one atomic rename. Returns false
+    * (a no-op) when the segment already exists — the replayed-batch
+    * case — or when the delta holds no postings. Refuses a path
+    * holding a PLAIN layout, and a bucket count other than the
+    * store's.
     */
   def saveSegment(delta: DataFrame, path: String, segId: Long,
                   nBuckets: Int = DefaultBuckets): Boolean = {
     val spark = delta.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val seg = new org.apache.hadoop.fs.Path(path, s"seg=$segId")
-    if (fs.exists(seg)) return false
-    if (fs.exists(root))
-      require(fs.listStatus(root).map(_.getPath.getName)
-          .forall(n => !n.startsWith("term_bucket=")),
-        s"$path holds a plain index layout; compact it into a segmented " +
-          "store before landing segments")
     // a segment with a DIFFERENT bucket count would make term lookups
     // silently miss postings in half the layout — fail loudly instead
     savedBuckets(spark, path).foreach(saved =>
       require(saved == nBuckets,
         s"segmented store at $path was created with nBuckets=$saved, " +
           s"not $nBuckets; pass the store's bucket count"))
-    val tmp = new org.apache.hadoop.fs.Path(path, s".seg-tmp-$segId")
-    if (fs.exists(tmp)) fs.delete(tmp, true) // crash leftover from a dead build
-    save(delta, tmp.toString, nBuckets)
-    delta.select(col("doc_id")).distinct().coalesce(1)
-      .write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(tmp, DocsManifest).toString)
-    // root-level bucket marker so requireBucketsMatch validates the
-    // segmented store exactly like a plain one (same value each batch).
-    // Written BEFORE the segment rename: any VISIBLE segment then
-    // implies the marker exists — the reverse order left a window
-    // (crash between rename and marker) where a marker-less segmented
-    // store silently accepted lookups with any bucket count. A crash
-    // after the marker but before the rename leaves marker + invisible
-    // tmp only, which the replaying batch completes consistently (the
-    // nBuckets equality was already enforced above).
-    val marker = new org.apache.hadoop.fs.Path(path, BucketsMarker)
-    if (!fs.exists(marker)) {
-      val out = fs.create(marker, true)
-      try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
+    val landed = SegmentedStore.land(spark, path, segId, partitioned = true) { tmp =>
+      // root-level bucket marker so requireBucketsMatch validates the
+      // segmented store exactly like a plain one (same value each
+      // batch). Written BEFORE the segment rename: any VISIBLE segment
+      // then implies the marker exists, so a marker-less segmented
+      // store can never silently accept lookups with any bucket count
+      if (savedBuckets(spark, path).isEmpty) writeBuckets(spark, path, nBuckets)
+      save(delta, tmp, nBuckets)
+      delta.select(col("doc_id")).distinct().coalesce(1)
+        .write.mode("overwrite").parquet(s"$tmp/$DocsManifest")
     }
-    StoreSwap.mustRename(fs, tmp, seg)
     // incremental stats refresh (r15 — the landed-after-stats doc
     // drop): when the store carries `_stats`, fold the just-landed
     // segment's doc lengths in ([[refreshStatsWith]] — O(|delta|+|dl|),
@@ -1030,74 +926,46 @@ object IndexStore {
     // this window leaves the segment landed and stats one refresh
     // behind — [[statsFresh]] reads false and the ranked path's left
     // join still serves the segment's docs (drift, never a drop).
-    if (hasStats(spark, path)) {
-      val landed0 = spark.read.parquet(seg.toString)
-      val landed = // fielded segment: body-field lengths, like saveStats
+    if (landed && hasStats(spark, path)) {
+      val landed0 = spark.read.parquet(SegmentedStore.dir(path, segId))
+      val fields = // fielded segment: body-field lengths, like saveStats
         if (landed0.columns.contains("field"))
           landed0.filter(col("field") === "body")
         else landed0
-      val segIdCol = Seq("title", "doc_id").find(landed.columns.contains)
+      val segIdCol = Seq("title", "doc_id").find(fields.columns.contains)
         .getOrElse("doc_id")
-      refreshStatsWith(spark, path, landed.groupBy(col(segIdCol))
+      refreshStatsWith(spark, path, fields.groupBy(col(segIdCol))
         .agg(sum(col("tf")).cast("double").as("dl")))
     }
-    true
+    landed
   }
 
-  /** Fold every segment of the store at `path` into one (`seg=<max>`),
-    * resolving doc versions and root-level tombstones for real, via
-    * the [[StoreSwap]] two-rename — the bound on segment-count read
-    * amplification. No-op below two segments.
+  /** Fold every segment of the store at `path` into one
+    * ([[SegmentedStore.fold]]), resolving doc versions and tombstones
+    * for real — the bound on segment-count read amplification. A
+    * never-segmented store with tombstones folds to a plain root. The
+    * side tables are rebuilt inside the swap: `_stats` and `_fuzzy`
+    * from the fold's output, `_meta` carried and filtered to the
+    * fold's survivors. No-op below two segments without tombstones.
     */
   def compactSegments(spark: SparkSession, path: String): Unit = {
-    val segs = segmentIds(spark, path)
-    // the fold runs when the store has segments to merge OR tombstones
-    // to drop for real (r13 takedown loop: a PLAIN or one-segment
-    // store accumulating deletes still needs its anti-join list folded
-    // away — the old `< 2` guard silently skipped exactly that store)
-    if (segs.size < 2 && !hasTombstones(spark, path)) return
     val nb = savedBuckets(spark, path).getOrElse(DefaultBuckets)
-    val resolved = load(spark, path).drop("term_bucket")
-    val tmpRoot = path + ".compacting"
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(tmpRoot)))
-      fs.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
-    if (segs.nonEmpty) {
-      save(resolved, s"$tmpRoot/seg=${segs.max}", nb)
-      // derive the manifest from the JUST-WRITTEN segment — a
-      // column-pruned scan of the fold's own output — instead of
-      // executing the `resolved` plan a second time (two full loads of
-      // the segmented store per compaction, and unlike localCheckpoint
-      // it pins nothing in executor memory at 100 TB store sizes)
-      spark.read.parquet(s"$tmpRoot/seg=${segs.max}")
-        .select(col("doc_id")).distinct().coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmpRoot/seg=${segs.max}/$DocsManifest")
-      val marker = new org.apache.hadoop.fs.Path(tmpRoot, BucketsMarker)
-      val out = fs.create(marker, true)
-      try out.write(nb.toString.getBytes("UTF-8")) finally out.close()
-    } else
-      // a never-segmented store folds to a plain root (save() writes
-      // the bucket marker itself); landing a seg= layout here would
-      // silently convert the store's read path on a pure-delete fold
-      save(resolved, tmpRoot, nb)
-    // stats refresh rides compaction: recompute the serving-stats side
-    // table from the just-folded segment so it lands inside the swap
-    // (the two-rename replaces the whole root — stats left in the old
-    // root would vanish, and stale ones would misprice every score)
-    if (hasStats(spark, path)) saveStats(spark, tmpRoot)
-    // ...and the fielded-search metadata is CARRIED (it cannot be
-    // derived from postings), filtered to the fold's survivors so a
-    // takedown'd doc's metadata leaves disk with its postings
-    if (hasMeta(spark, path))
-      carryMeta(spark, path, tmpRoot,
-        if (segs.nonEmpty) s"$tmpRoot/seg=${segs.max}" else tmpRoot)
-    // the fuzzy dictionary rebuilds from the fold's output inside the
-    // same swap (derivable from postings, unlike `_meta` — a term
-    // whose last postings folded away leaves the dictionary here)
-    if (hasFuzzy(spark, path)) saveFuzzy(spark, tmpRoot)
-    // the takedown epoch survives the fold ([[Tombstones.carryEpoch]])
-    Tombstones.carryEpoch(spark, path, tmpRoot)
-    StoreSwap.swap(fs, root, tmpRoot)
+    SegmentedStore.fold(spark, path)(
+      dir => save(load(spark, path).drop("term_bucket"), dir, nb),
+      (root, data) => {
+        writeBuckets(spark, root, nb)
+        if (data != root)
+          // the manifest from the JUST-WRITTEN segment (a column-pruned
+          // scan of the fold's own output), not a second run of the
+          // resolving plan
+          spark.read.parquet(data).select(col("doc_id")).distinct().coalesce(1)
+            .write.mode("overwrite").parquet(s"$data/$DocsManifest")
+        if (hasStats(spark, path)) saveStats(spark, root)
+        // `_meta` cannot be derived from postings: carried, filtered to
+        // the survivors so a takedown'd doc's metadata leaves with it
+        if (hasMeta(spark, path)) carryMeta(spark, path, root, data)
+        // a term whose last postings folded away leaves the dictionary
+        if (hasFuzzy(spark, path)) saveFuzzy(spark, root)
+      })
   }
 }

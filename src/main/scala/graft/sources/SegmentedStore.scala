@@ -1,0 +1,284 @@
+package graft.sources
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The one segmented-store lifecycle (LSM-style: O'Neil et al., "The
+  * Log-Structured Merge-Tree", 1996), shared by the index store
+  * ([[IndexStore.saveSegment]]/[[IndexStore.compactSegments]]), the
+  * streaming embed, chunk-pack, interleave-pack and set stores
+  * ([[graft.streaming.Stream]]) and the corpus store's tombstone fold
+  * ([[CorpusStore.foldTombstones]]). This object owns the on-disk
+  * format; every other file names it through the members here.
+  *
+  * The protocol:
+  *
+  *  - '''Layout.''' A store root holds `seg=<id>` directories, one per
+  *    landing, each a complete parquet layout of its own (optionally
+  *    partitioned inside). Underscore- and dot-prefixed root entries
+  *    are invisible to parquet listings: side tables (`_stats`,
+  *    `_tombstones`, ...), marker files, and in-flight temp dirs. A
+  *    store written whole (never segmented) has its data at the root
+  *    instead, and [[land]] refuses to mix the two.
+  *  - '''Listing.''' A reader takes ONE root listing ([[Listing]]) and
+  *    derives everything it reads from it, so a segment renamed in
+  *    while it resolves is in every side of the read or in none.
+  *  - '''Landing.''' [[land]] builds the segment in a dot-prefixed
+  *    temp dir (`.seg-tmp-<id>`, swept if a dead build left it) and
+  *    publishes it with ONE atomic rename: a visible segment is
+  *    complete, and its existence makes a replay a no-op. An empty
+  *    delta never lands (a data-less segment fails schema inference
+  *    on every later read). A batch-keyed landing stamps the applied
+  *    horizon marker `_applied_upto_<batchId>` inside the segment
+  *    before the rename, so the landing and its horizon commit
+  *    together; [[horizon]]/[[requireInHorizon]] read and guard it.
+  *  - '''Resolution.''' Keys resolve last-writer-wins across
+  *    segments: a row `(key, seg)` is dead iff a newer segment holds
+  *    `key` or `key` is tombstoned ([[deadKeys]]); readers anti-join
+  *    the dead set ([[live]]).
+  *  - '''Folding.''' [[fold]] rewrites the resolved content as
+  *    `seg=<max>` of a fresh root (`<root>.compacting`) — or as a
+  *    plain root for a never-segmented store — with the horizon
+  *    marker, the takedown epoch and the corpus-epoch stamp carried,
+  *    store-specific side tables written by the caller, then replaces
+  *    the root through the [[StoreSwap]] two-rename. The `_tombstones`
+  *    tree does not travel: a fold purges what it resolved away.
+  */
+private[graft] object SegmentedStore {
+  private val SegPrefix = "seg="
+  private val TmpPrefix = ".seg-tmp-"
+  private val FoldSuffix = ".compacting"
+  private val HorizonPrefix = "_applied_upto_"
+
+  /** Root stamp of a rebuild-on-takedown store: the corpus takedown
+    * epoch its content reflects ([[graft.streaming.Stream.stampCorpusEpoch]]).
+    */
+  val CorpusEpochFile = "_corpus_epoch"
+
+  /** Root files a fold carries into the replacement root. */
+  private val CarriedFiles = Seq(Tombstones.EpochFile, CorpusEpochFile)
+
+  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  private def visible(name: String): Boolean =
+    !name.startsWith(".") && !name.startsWith("_")
+
+  /** One listing of a store root: its segment ids, sorted; whether it
+    * carries a tombstone dir; whether it holds any visible entry
+    * (segments or a plain layout's data).
+    */
+  final case class Listing(segs: Seq[Long], tombstoned: Boolean, hasData: Boolean) {
+    /** The id the next landing takes: ids are monotonic, so segment
+      * order is landing order even across folds.
+      */
+    def nextSeg: Long = segs.lastOption.getOrElse(-1L) + 1L
+  }
+
+  def listing(spark: SparkSession, path: String): Listing = {
+    val (fs, p) = fsOf(spark, path)
+    val names = if (!fs.exists(p)) Array.empty[String]
+                else fs.listStatus(p).map(_.getPath.getName)
+    Listing(
+      names.filter(_.startsWith(SegPrefix)).map(_.stripPrefix(SegPrefix).toLong).sorted.toSeq,
+      names.contains(Tombstones.Dir), names.exists(visible))
+  }
+
+  /** The directory of segment `id`. */
+  def dir(path: String, id: Long): String = s"$path/$SegPrefix$id"
+
+  /** The segments of `l` as one relation (a `sub` path such as
+    * `/_docs` reads that entry of each segment instead). With the root
+    * as basePath each row carries its segment as a `seg` column, typed
+    * long like [[deadKeys]]' so anti-join keys compare without a cast.
+    * A never-segmented store reads its root.
+    */
+  def read(spark: SparkSession, path: String, l: Listing, sub: String = ""): DataFrame =
+    if (l.segs.isEmpty) spark.read.parquet(path)
+    else spark.read.option("basePath", path)
+      .parquet(l.segs.map(dir(path, _) + sub): _*)
+      .withColumn("seg", col("seg").cast("long"))
+
+  /** The DEAD-KEY set of the store at `path` — the keys of every row a
+    * reader must drop, planned (not computed) from the listing `l`:
+    *
+    *  - at most one segment: the tombstoned keys, keyed `key` (None
+    *    without tombstones — the reader then carries no join);
+    *  - two or more segments: the `(key, seg)` pairs a NEWER segment
+    *    supersedes, from ONE aggregation over `versions` (the `(key,
+    *    seg)` pair of every row version the segments of `l` hold).
+    *    Tombstoned keys enter that union at seg = Long.MaxValue, so
+    *    every real version of a tombstoned key is superseded too and
+    *    the one aggregation yields both rules.
+    */
+  def deadKeys(spark: SparkSession, path: String, l: Listing, key: String)
+              (versions: => DataFrame): Option[DataFrame] = {
+    val tombs = if (l.tombstoned) Tombstones.keysOf(spark, path, key) else None
+    if (l.segs.size < 2) tombs
+    else Some((versions.select(col(key), col("seg")) +:
+        tombs.toSeq.map(_.select(col(key), lit(Long.MaxValue).as("seg"))))
+      .reduce(_.unionByName(_))
+      .withColumn("newest", max(col("seg")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(key)))
+      .filter(col("seg") < col("newest"))
+      .select(key, "seg"))
+  }
+
+  /** The rows of `raw` readers see: `raw` anti-joined on the dead-key
+    * set's columns, then the `seg` column dropped (output columns:
+    * `key` first, then the stored ones). A relation that lacks the
+    * dead set's columns (a title-keyed index against doc-keyed
+    * tombstones) cannot be named by it and reads unfiltered.
+    */
+  def live(raw: DataFrame, dead: Option[DataFrame], key: String): DataFrame = {
+    val kept = dead match {
+      case Some(d) if d.columns.forall(raw.columns.contains) =>
+        raw.join(d, d.columns.toSeq, "left_anti")
+      case _ => raw
+    }
+    if (!raw.columns.contains("seg")) kept
+    else kept.select((key +: raw.columns.filter(c => c != key && c != "seg")).map(col): _*)
+  }
+
+  // ---- applied horizon ------------------------------------------------
+
+  /** Batch ids of the horizon markers directly inside `dir`. */
+  def markers(fs: FileSystem, dir: Path): Seq[Long] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).map(_.getPath.getName)
+      .filter(_.startsWith(HorizonPrefix)).map(_.stripPrefix(HorizonPrefix).toLong).toSeq
+
+  private def segmentMarkers(fs: FileSystem, path: String, segs: Seq[Long]): Seq[Long] =
+    segs.flatMap(id => markers(fs, new Path(dir(path, id))))
+
+  /** Stamp `dir` as applied up to `batchId`, dropping the older
+    * markers there (the max subsumes them).
+    */
+  def stampHorizon(fs: FileSystem, dir: Path, batchId: Long): Unit = {
+    fs.create(new Path(dir, HorizonPrefix + batchId), true).close()
+    markers(fs, dir).filter(_ < batchId)
+      .foreach(b => fs.delete(new Path(dir, HorizonPrefix + b), false))
+  }
+
+  /** The store's APPLIED HORIZON: the highest batch id whose landing
+    * committed — the max marker inside any segment, or at the root
+    * (a whole-rewrite store stamps its root, see [[stampHorizon]]).
+    * A segmented store written before the markers falls back to its
+    * max segment id (those ids WERE batch ids). -1 for an absent or
+    * unstamped store.
+    */
+  def horizon(spark: SparkSession, path: String): Long = {
+    val (fs, p) = fsOf(spark, path)
+    val segs = listing(spark, path).segs
+    (markers(fs, p) ++ segmentMarkers(fs, path, segs)).maxOption.getOrElse(segs.lastOption.getOrElse(-1L))
+  }
+
+  /** The store's [[horizon]], after failing LOUDLY when `batchId`
+    * sits below it. Batch ids within one query only move forward, so
+    * a lower id means the stream was restarted with a FRESH checkpoint
+    * over an existing store — double-applied sums, inverted segment
+    * order, replaced ledger rows. An id EQUAL to the horizon is the
+    * legitimate replay of the last uncommitted batch: callers
+    * recompute their idempotent outputs and [[land]] no-ops.
+    */
+  def requireInHorizon(spark: SparkSession, path: String, batchId: Long): Long = {
+    val upto = horizon(spark, path)
+    require(batchId >= upto,
+      s"batch $batchId is below the applied horizon $upto of store " +
+        s"$path: the stream was restarted with a fresh checkpoint " +
+        "over an existing store. Restart from the original checkpoint, " +
+        "or point the stream at a fresh store path")
+    upto
+  }
+
+  // ---- landing ----------------------------------------------------------
+
+  /** True when `dir` holds at least one visible data FILE at any depth:
+    * files under an underscore- or dot-prefixed entry (markers,
+    * manifests, `_SUCCESS`, checksums) don't count.
+    */
+  def hasDataFiles(fs: FileSystem, dir: Path): Boolean = {
+    if (!fs.exists(dir)) return false
+    val root = fs.makeQualified(dir).toUri.getPath
+    val it = fs.listFiles(dir, true)
+    while (it.hasNext) {
+      val rel = it.next().getPath.toUri.getPath.stripPrefix(root)
+      if (rel.split("/").filter(_.nonEmpty).forall(visible)) return true
+    }
+    false
+  }
+
+  /** Land segment `segId` of the store at `path`: `write` builds it in
+    * the temp dir it is handed, then one atomic rename publishes it.
+    * Returns false, landing nothing, when the segment already exists
+    * (a replay), when `batch` is a batch id the store's applied
+    * horizon already covers, or when the write emitted no rows.
+    * `partitioned` says whether `write` partitions its output: such a
+    * write emits no data file for an empty delta, so file presence
+    * alone decides; an unpartitioned one writes a zero-row file, so it
+    * also takes a limit-1 read of the written output. `batch` stamps
+    * the segment as applied up to that batch id. Refuses a root
+    * holding a plain layout (mixed directory depths would corrupt
+    * partition discovery): adopt one by rewriting it as a segment first.
+    */
+  def land(spark: SparkSession, path: String, segId: Long, partitioned: Boolean,
+           batch: Option[Long] = None)(write: String => Unit): Boolean = {
+    val (fs, root) = fsOf(spark, path)
+    val seg = new Path(dir(path, segId))
+    if (fs.exists(seg) || batch.exists(_ <= horizon(spark, path))) return false
+    if (fs.exists(root))
+      require(fs.listStatus(root).forall { st =>
+        val n = st.getPath.getName
+        n.startsWith(SegPrefix) || !visible(n)
+      }, s"$path holds a plain (never-segmented) layout; rewrite it " +
+        s"into $SegPrefix<id> form before landing segments")
+    val tmp = new Path(path, s"$TmpPrefix$segId")
+    if (fs.exists(tmp)) fs.delete(tmp, true) // a dead build's leftover
+    write(tmp.toString)
+    // skipping is replay-safe: the caller's recompute is
+    // deterministic, so a replayed empty batch skips again
+    val wroteRows = hasDataFiles(fs, tmp) &&
+      (partitioned || !spark.read.parquet(tmp.toString).isEmpty)
+    if (!wroteRows) { fs.delete(tmp, true); return false }
+    batch.foreach(stampHorizon(fs, tmp, _))
+    StoreSwap.mustRename(fs, tmp, seg)
+    true
+  }
+
+  // ---- folding ----------------------------------------------------------
+
+  /** Fold the store at `path` into one: `write` rewrites its resolved
+    * content into the directory it is handed — `seg=<max>` of a fresh
+    * root, or that root itself for a never-segmented store — and
+    * `sideTables(foldRoot, dataDir)` writes the store's own side
+    * tables into the fold root; the highest horizon marker, the
+    * takedown epoch and the corpus-epoch stamp are carried, and the
+    * [[StoreSwap]] two-rename replaces the root. Runs when there are
+    * two or more segments, or tombstones to purge; otherwise a no-op.
+    */
+  def fold(spark: SparkSession, path: String)(write: String => Unit,
+           sideTables: (String, String) => Unit = (_, _) => ()): Unit = {
+    val (fs, root) = fsOf(spark, path)
+    StoreSwap.recover(fs, root) // a prior fold may have died mid-swap
+    val l = listing(spark, path)
+    if (l.segs.size < 2 && !(l.hasData && Tombstones.hasAny(spark, path))) return
+    val tmpRoot = path + FoldSuffix
+    if (fs.exists(new Path(tmpRoot))) fs.delete(new Path(tmpRoot), true)
+    val dataDir = l.segs.lastOption.fold(tmpRoot)(dir(tmpRoot, _))
+    write(dataDir)
+    // segment ids are not batch ids: without the max marker the
+    // folded store's horizon would fall back to the wrong number
+    segmentMarkers(fs, path, l.segs).maxOption.foreach(stampHorizon(fs, new Path(dataDir), _))
+    CarriedFiles.map(new Path(root, _)).filter(fs.exists).foreach { f =>
+      val in = fs.open(f)
+      val bytes = try in.readAllBytes() finally in.close()
+      val out = fs.create(new Path(tmpRoot, f.getName), true)
+      try out.write(bytes) finally out.close()
+    }
+    sideTables(tmpRoot, dataDir)
+    StoreSwap.swap(fs, root, tmpRoot)
+  }
+}

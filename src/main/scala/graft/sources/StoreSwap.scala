@@ -2,12 +2,12 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The crash-safe saved-store swap protocol shared by the streaming
-  * maintenance sinks ([[graft.streaming.Stream]]) and the segmented
-  * stores' compaction ([[IndexStore.compactSegments]]): a two-rename
-  * replacement (base → backup, replacement → base, drop backup last)
-  * so there is never a moment with zero store copies on disk, plus
-  * the recovery step that repairs a crash between the two renames.
+/** The crash-safe whole-store replacement: a two-rename swap (base →
+  * backup, replacement → base, drop backup last) so there is never a
+  * moment with zero store copies on disk, plus the recovery step that
+  * repairs a crash between the two renames. [[SegmentedStore.fold]]
+  * (which states the segmented-store protocol) and the whole-rewrite
+  * streaming ledgers ([[graft.streaming.Stream]]) publish through it.
   * Paths use their OWN filesystem — `FileSystem.get(conf)` would
   * resolve fs.defaultFS and break for object-store paths (where
   * rename is copy+delete: the swap stays CORRECT there — failures

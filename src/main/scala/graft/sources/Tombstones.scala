@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *    one O(|ids|) parquet batch, however large the store;
   *  - [[landBatch]] — the streaming form: a micro-batch's ids land as
   *    ONE `src_batch=<id>` subdir that a replay REPLACES
-  *    (exactly-once at batch granularity), stamped with an
-  *    `_applied_upto_<id>` horizon marker. A landing BELOW the
+  *    (exactly-once at batch granularity), stamped with a horizon
+  *    marker ([[SegmentedStore.stampHorizon]]). A landing BELOW the
   *    horizon FAILS LOUDLY: batch ids within one query only move
   *    forward, so a lower id means a fresh-checkpoint restart over
   *    outstanding landings — overwriting an earlier batch's dir would
@@ -29,12 +29,12 @@ import org.apache.spark.sql.functions._
   *    (crash between mkdir and file commit) reads as None instead of
   *    bricking every load with a schema-inference error.
   *
-  *  Folding tombstones away for real is each store's own compaction
-  *  move: the rewrite reads through the store's (anti-joined) reader
-  *  and the `_tombstones` dir simply does not travel into the new
-  *  layout. After a fold the horizon is gone WITH the landings — a
-  *  fresh checkpoint over a just-folded store is legitimate because
-  *  there is nothing left to clobber.
+  *  Folding tombstones away for real is [[SegmentedStore.fold]]: the
+  *  rewrite reads through the store's (anti-joined) reader and the
+  *  `_tombstones` dir does not travel into the new layout. After a
+  *  fold the horizon is gone WITH the landings — a fresh checkpoint
+  *  over a just-folded store is legitimate because there is nothing
+  *  left to clobber.
   */
 object Tombstones {
   /** The tombstone dir's name inside a store — visible to this
@@ -42,32 +42,19 @@ object Tombstones {
     * without a second listing.
     */
   private[sources] val Dir = "_tombstones"
-  private val AppliedUpToPrefix = "_applied_upto_"
-  private val EpochFile = "_takedown_epoch"
+
+  /** The takedown-epoch file at a store root ([[epoch]]). */
+  private[sources] val EpochFile = "_takedown_epoch"
 
   private def dirOf(path: String) = new org.apache.hadoop.fs.Path(path, Dir)
 
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** True when `dir` holds at least one visible data FILE at any
-    * depth (horizon markers and dot-prefixed leftovers don't count).
-    */
-  private def hasDataFilesUnder(fs: org.apache.hadoop.fs.FileSystem,
-                                dir: org.apache.hadoop.fs.Path): Boolean = {
-    if (!fs.exists(dir)) return false
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val n = it.next().getPath.getName
-      if (!n.startsWith(".") && !n.startsWith("_")) return true
-    }
-    false
-  }
-
   /** Whether the store at `path` carries any tombstone DATA. */
   def hasAny(spark: SparkSession, path: String): Boolean = {
     val p = dirOf(path)
-    hasDataFilesUnder(fsOf(spark, p), p)
+    SegmentedStore.hasDataFiles(fsOf(spark, p), p)
   }
 
   /** A listing-derived fingerprint of the store's tombstone tree —
@@ -112,12 +99,9 @@ object Tombstones {
     val p = dirOf(path)
     val fs = fsOf(spark, p)
     if (!fs.exists(p)) return -1L
-    val names = fs.listStatus(p).map(_.getPath.getName)
-    val marks = names.filter(_.startsWith(AppliedUpToPrefix))
-      .map(_.stripPrefix(AppliedUpToPrefix).toLong)
-    if (marks.nonEmpty) marks.max
-    else names.filter(_.startsWith("src_batch="))
-      .map(_.stripPrefix("src_batch=").toLong).maxOption.getOrElse(-1L)
+    SegmentedStore.markers(fs, p).maxOption.getOrElse(
+      fs.listStatus(p).map(_.getPath.getName).filter(_.startsWith("src_batch="))
+        .map(_.stripPrefix("src_batch=").toLong).maxOption.getOrElse(-1L))
   }
 
   // ---- takedown epoch (r15 — the rebuild-on-takedown tripwire key) ----
@@ -155,10 +139,10 @@ object Tombstones {
     try out.write(next.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Re-write the epoch file into a fold's staging dir so the
-    * store-root swap carries it — every fold of a tombstone-covered
-    * store must call this (the epoch is the one takedown artifact
-    * that SURVIVES the purge, by design).
+  /** Copy the epoch into the root of a rewrite at another path
+    * (`compact(in, out)`): the epoch is the one takedown artifact that
+    * SURVIVES the purge, by design. An in-place [[SegmentedStore.fold]]
+    * carries it itself.
     */
   def carryEpoch(spark: SparkSession, fromPath: String,
                  toPath: String): Unit = {
@@ -206,14 +190,8 @@ object Tombstones {
       .parquet(new org.apache.hadoop.fs.Path(tomb, s"src_batch=$srcBatch").toString)
     // stamp the horizon AFTER the landing (a crash in between replays
     // the same batch, which the >= guard admits and the overwrite
-    // makes idempotent), then drop older markers — subsumed by the max
-    val fs = fsOf(spark, tomb)
-    fs.create(new org.apache.hadoop.fs.Path(tomb, AppliedUpToPrefix + srcBatch),
-      true).close()
-    fs.listStatus(tomb).map(_.getPath)
-      .filter(p => p.getName.startsWith(AppliedUpToPrefix) &&
-        p.getName.stripPrefix(AppliedUpToPrefix).toLong < srcBatch)
-      .foreach(fs.delete(_, false))
+    // makes idempotent)
+    SegmentedStore.stampHorizon(fsOf(spark, tomb), tomb, srcBatch)
     true
   }
 

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
+import graft.sources.{SegmentedStore, StoreSwap}
 
 /** Structured Streaming operators (SURVEY §2.G): the streaming
   * re-expression of the batch `window_tumbling` and `sessionize`
@@ -331,64 +332,38 @@ object Stream {
     * [[graft.sources.IndexStore]] index fresh — each micro-batch
     * builds the positional postings of its documents
     * ([[graft.operators.Index.invertedIndexOf]]) and lands them as
-    * ONE SEGMENT of a segmented store
-    * ([[graft.sources.IndexStore.saveSegment]]): the per-batch write
-    * is DELTA-SIZED however large the store grows (r10 VERDICT item
-    * 3 — the old path re-merged and rewrote the whole store every
-    * batch, an O(|store|) write that is a real ceiling at a 100 TB
-    * index). Document granularity is preserved at READ time
-    * (last-writer-wins across segments: a re-crawled doc's old
-    * postings disappear), and [[graft.sources.IndexStore
-    * .compactSegments]] folds the store whenever the segment count
-    * reaches `compactEvery`, bounding read amplification. This is the
-    * streaming completion of the reference's batch-only indexer: the
-    * same index artifact, kept current instead of rebuilt.
+    * ONE SEGMENT ([[graft.sources.IndexStore.saveSegment]]; the
+    * landing, last-writer-wins and fold protocol is
+    * [[graft.sources.SegmentedStore]]'s): the per-batch write is
+    * DELTA-SIZED however large the store grows, a re-crawled doc's old
+    * postings disappear at read time, a batch with no postings lands
+    * nothing, and [[graft.sources.IndexStore.compactSegments]] folds
+    * the store whenever the segment count reaches `compactEvery`. This
+    * is the streaming completion of the reference's batch-only
+    * indexer: the same index artifact, kept current instead of rebuilt.
     *
     * foreachBatch is the right tool (vs a streaming agg sink): the
-    * landing is an arbitrary batch job — a bucketed index build —
-    * not an incremental aggregation. Exactly-once = IDEMPOTENT BY
-    * CONTENT, exactly like the old full-merge path (and unlike the
-    * marker-keyed pack store): segments take monotonically increasing
-    * ids, so a replayed (or fresh-query-re-fed) batch lands a
-    * DUPLICATE segment — harmless, because doc-granular
-    * last-writer-wins resolves it to the identical postings, and the
-    * next compaction sweeps it. Compaction keeps the two-rename swap
-    * (never a moment with zero store copies on disk), repaired by the
-    * recovery step at the next batch. State lives in the store, not
-    * executor memory, so a 100 TB index streams through.
+    * landing is an arbitrary batch job — a bucketed index build — not
+    * an incremental aggregation. Exactly-once = IDEMPOTENT BY CONTENT
+    * (unlike the batch-keyed pack store): segments take monotonically
+    * increasing ids, so a replayed batch lands a DUPLICATE segment —
+    * harmless, because doc-granular last-writer-wins resolves it to
+    * the identical postings, and the next fold sweeps it.
     */
-  // the crash-safe swap protocol lives in sources.StoreSwap (shared
-  // with the segmented stores' compaction); these aliases keep every
-  // sink's call sites readable
-  private def mustRename(fs: org.apache.hadoop.fs.FileSystem,
-                         from: org.apache.hadoop.fs.Path,
-                         to: org.apache.hadoop.fs.Path): Unit =
-    graft.sources.StoreSwap.mustRename(fs, from, to)
-
-  private def recoverStore(fs: org.apache.hadoop.fs.FileSystem,
-                           base: org.apache.hadoop.fs.Path): Unit =
-    graft.sources.StoreSwap.recover(fs, base)
-
-  private def swapStore(fs: org.apache.hadoop.fs.FileSystem,
-                        base: org.apache.hadoop.fs.Path, merged: String): Unit =
-    graft.sources.StoreSwap.swap(fs, base, merged)
-
   def indexMaintenance(docs: DataFrame, indexPath: String,
-                       nBuckets: Int = 8, compactEvery: Int = 16): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+                       nBuckets: Int = 8, compactEvery: Int = CompactEvery): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(indexPath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath) // a compaction may have died mid-swap
+        StoreSwap.recover(fs, basePath) // a compaction may have died mid-swap
         val delta = graft.operators.Index.invertedIndexOf(batch)
-        val existing = graft.sources.IndexStore.segmentIds(spark, indexPath)
-        val segId = existing.lastOption.getOrElse(-1L) + 1L
-        graft.sources.IndexStore.saveSegment(delta, indexPath, segId, nBuckets)
-        if (existing.size + 1 >= compactEvery)
+        val l = SegmentedStore.listing(spark, indexPath)
+        if (graft.sources.IndexStore.saveSegment(delta, indexPath, l.nextSeg, nBuckets) &&
+            l.segs.size + 1 >= compactEvery)
           graft.sources.IndexStore.compactSegments(spark, indexPath)
-        () // foreachBatch wants (Dataset, Long) => Unit, not => Boolean
       }
 
   /** Continuous takedown processing — the DELETION twin of
@@ -412,7 +387,7 @@ object Stream {
     *     generalized to fold a plain or one-segment store too) —
     *     deleted postings leave disk, the anti-join list resets to
     *     empty, and the serving-stats side table refreshes inside the
-    *     same crash-safe two-rename swap.
+    *     same fold ([[graft.sources.SegmentedStore.fold]]).
     *
     * Deletion state lives in the store (not the checkpoint), and the
     * store family's fresh-checkpoint contract applies: a restart from
@@ -453,7 +428,7 @@ object Stream {
     * a takedown past the stamp ([[requirePackFresh]]).
     */
   def takedownMaintenance(ids: DataFrame, indexPath: String,
-                          compactEvery: Int = 16,
+                          compactEvery: Int = CompactEvery,
                           corpusPath: Option[String] = None,
                           embedPath: Option[String] = None): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     ids.writeStream
@@ -462,20 +437,20 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(indexPath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath) // a fold may have died mid-swap
+        StoreSwap.recover(fs, basePath) // a fold may have died mid-swap
         graft.sources.IndexStore.deleteBatch(batch, indexPath, batchId)
         if (graft.sources.IndexStore.tombstoneBatchCount(spark, indexPath) >= compactEvery)
           graft.sources.IndexStore.compactSegments(spark, indexPath)
         corpusPath.foreach { cp =>
           val root = new org.apache.hadoop.fs.Path(cp)
-          recoverStore(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+          StoreSwap.recover(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
           graft.sources.CorpusStore.deleteBatch(batch, cp, batchId)
           if (graft.sources.CorpusStore.tombstoneBatchCount(spark, cp) >= compactEvery)
             graft.sources.CorpusStore.foldTombstones(spark, cp)
         }
         embedPath.foreach { ep =>
           val root = new org.apache.hadoop.fs.Path(ep)
-          recoverStore(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+          StoreSwap.recover(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
           graft.sources.Tombstones.landBatch(
             batch.select(col("doc_id").as("vec_id")), ep, batchId, key = "vec_id")
           if (graft.sources.Tombstones.batchCount(spark, ep) >= compactEvery)
@@ -490,110 +465,66 @@ object Stream {
     * norm the batch, assign each vector to its nearest centroid from
     * a SAVED centroid table ([[graft.operators.Similarity
     * .saveCentroids]] — the coarse quantizer is trained once and
-    * fixed, so bucket ids stay stable across batches), then merge at
-    * VECTOR granularity (a re-embedded vec_id's old assignment
-    * disappears — the re-crawled-document rule applied to vectors)
-    * and rewrite the store partitioned by bucket, so query-time
-    * bucket reads prune directories exactly like the term-bucketed
-    * IndexStore. Exactly-once by idempotent replay + the same
-    * two-rename crash-safe swap.
+    * fixed, so bucket ids stay stable across batches), then land the
+    * assignments as one bucket-partitioned segment
+    * ([[graft.sources.SegmentedStore]]), so query-time bucket reads
+    * prune directories exactly like the term-bucketed IndexStore.
+    * Vectors resolve last-writer-wins at read ([[loadEmbedStore]]: a
+    * re-embedded vec_id's old assignment disappears — the
+    * re-crawled-document rule applied to vectors). Exactly-once by
+    * content, like [[indexMaintenance]].
     */
   def embedIndexMaintenance(vecs: DataFrame, centroidPath: String,
-                            storePath: String, compactEvery: Int = 16): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+                            storePath: String, compactEvery: Int = CompactEvery): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath) // a compaction may have died mid-swap
+        StoreSwap.recover(fs, basePath) // a compaction may have died mid-swap
         val cent = spark.read.parquet(centroidPath)
         val assigned = graft.operators.Similarity
           .ivfAssignTo(graft.operators.Similarity.withNormOf(batch), cent)
           .select(col("vec_id"), col("embedding"), col("nm"), col("bucket"))
         // delta-sized landing (r10 VERDICT item 3): each batch's
-        // assignments land as seg=<id>/bucket=<b> (bucket partitioning
-        // INSIDE the segment keeps serve-side directory pruning);
+        // assignments land as one segment partitioned by bucket (bucket
+        // partitioning INSIDE the segment keeps serve-side pruning);
         // vector granularity is resolved last-writer-wins at read
         // ([[loadEmbedStore]]) — a re-embedded vec_id's newest segment
         // wins even when its bucket changed. Ids are monotonic, so a
         // replayed batch lands a duplicate segment that resolves
         // identically (content-idempotent, like [[indexMaintenance]]).
-        val segId = segmentIdsAt(fs, basePath).lastOption.getOrElse(-1L) + 1L
-        landSegment(assigned, storePath, segId, fs, partitionCol = Some("bucket"))
-        if (segmentIdsAt(fs, basePath).size >= compactEvery)
-          compactEmbedStore(spark, storePath)
+        landThenFold(assigned, storePath, None, Some("bucket"), compactEvery)(
+          loadEmbedStore(spark, storePath))
         ()
       }
 
   /** Read an [[embedIndexMaintenance]] store with vector-granular
-    * last-writer-wins resolution: a vec_id's rows from any segment
-    * older than its newest are dropped (one column-pruned (vec_id,
-    * seg) scan + a left-semi join — ids are ~100× narrower than the
-    * embedding payload the old full-rewrite path copied every batch).
-    * Bucket predicates still prune each segment's `bucket=` dirs and
-    * push through the semi-join's streamed side. A plain
-    * (pre-segment or compacted single-segment) store passes through.
-    *
-    * The read is PINNED to one FS listing: the segment dirs listed up
-    * front are exactly the paths handed to the scan, so the
-    * single-segment fast path and the data it reads can never
-    * disagree. (Deriving the fast path from a listing but the scan
-    * from a later root re-list was a TOCTOU under concurrent
-    * serve+maintain: a segment landing between the two made the
-    * reader skip resolution yet scan both the stale and fresh rows of
-    * a re-embedded vec_id.) A segment landed after the listing is
-    * simply not part of this read's snapshot.
+    * last-writer-wins resolution ([[SegmentedStore.deadKeys]]): a
+    * vec_id's rows from any segment older than its newest, and every
+    * row of a taken-down vec_id, anti-join out. The versions are one
+    * column-pruned `(vec_id, seg)` projection of the store — ids are
+    * ~100× narrower than the embedding payload — and a store with at
+    * most one segment resolves takedowns only. Bucket predicates
+    * still prune each segment's `bucket=` dirs and push through the
+    * anti-join's streamed side. The read is PINNED to one root
+    * listing: a segment landed after it is in no side of this read.
     */
   def loadEmbedStore(spark: SparkSession, storePath: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = segmentIdsAt(fs, base)
-    // a compacted (or single-landing) store needs NO resolution: skip
-    // the full-store vecMax scan so a serve batch reads only its
-    // probed buckets — the resolver's O(|store| ids) pass is paid
-    // only while multiple segments are outstanding
-    val resolved =
-      if (segs.isEmpty) spark.read.parquet(storePath)
-      else if (segs.size == 1)
-        // reading the one segment dir directly discovers its bucket=
-        // partitions and yields no seg column — nothing to resolve
-        spark.read.parquet(s"$storePath/seg=${segs.head}")
-      else {
-        val raw = spark.read.option("basePath", storePath)
-          .parquet(segs.map(id => s"$storePath/seg=$id"): _*)
-        val vecMax = raw.select(col("vec_id"), col("seg").cast("long").as("seg"))
-          .groupBy("vec_id").agg(max(col("seg")).as("seg"))
-        raw.withColumn("seg", col("seg").cast("long"))
-          .join(vecMax, Seq("vec_id", "seg"), "left_semi")
-          .drop("seg")
-      }
-    // takedowns anti-join out at read time (r14 — the IndexStore
-    // contract applied to embeddings: a deleted document's vector
-    // must not serve from knnServe/hybridServe between folds). Bucket
-    // predicates still push through the anti-join's streamed side.
-    graft.sources.Tombstones.setOf(spark, storePath, key = "vec_id") match {
-      case Some(t) => resolved.join(t, Seq("vec_id"), "left_anti")
-      case None => resolved
-    }
+    val l = SegmentedStore.listing(spark, storePath)
+    val raw = SegmentedStore.read(spark, storePath, l)
+    SegmentedStore.live(raw,
+      SegmentedStore.deadKeys(spark, storePath, l, "vec_id")(raw), "vec_id")
   }
 
-  /** Fold every segment of the embed store into one (`seg=<max>`,
-    * bucket-partitioned) via the crash-safe swap — tombstoned vectors
-    * leave disk (the rewrite reads through [[loadEmbedStore]]'s
-    * anti-join and `_tombstones` does not travel through the swap).
-    * No-op below two segments unless tombstones are pending (the
-    * r13 compactSegments generalization, applied here).
+  /** Fold every segment of the embed store into one, bucket-partitioned
+    * ([[SegmentedStore.fold]]) — tombstoned vectors leave disk (the
+    * rewrite reads through [[loadEmbedStore]]). No-op below two
+    * segments unless tombstones are pending.
     */
-  def compactEmbedStore(spark: SparkSession, storePath: String): Unit = {
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (segmentIdsAt(fs, base).size < 2 &&
-        !graft.sources.Tombstones.hasAny(spark, storePath)) return
-    foldSegments(spark, storePath, loadEmbedStore(spark, storePath),
-      partitionCol = Some("bucket"),
-      force = graft.sources.Tombstones.hasAny(spark, storePath))
-  }
+  def compactEmbedStore(spark: SparkSession, storePath: String): Unit =
+    foldTo(spark, storePath, Some("bucket"))(loadEmbedStore(spark, storePath))
 
   /** Streaming ANN serving — the query side of [[embedIndexMaintenance]]:
     * each micro-batch of query vectors is assigned to its IVF bucket
@@ -793,7 +724,7 @@ object Stream {
     finally prov.close()
     val dest = new org.apache.hadoop.fs.Path(storePath, Sq8Dir)
     if (fs.exists(dest)) fs.delete(dest, true)
-    graft.sources.StoreSwap.mustRename(fs, tmp, dest)
+    StoreSwap.mustRename(fs, tmp, dest)
   }
 
   /** Whether the `_sq8` layout exists AND still matches the store
@@ -897,8 +828,6 @@ object Stream {
   // loaders compare the stamp against the corpus's CURRENT epoch and
   // fail loudly on mismatch, naming the rebuild.
 
-  private val CorpusEpochStamp = "_corpus_epoch"
-
   /** Stamp the corpus store's current takedown epoch into a
     * rebuild-on-takedown store. The maintenance sinks call this per
     * landing (pass `corpusPath` to [[packMaintenance]]/
@@ -907,7 +836,7 @@ object Stream {
     */
   def stampCorpusEpoch(spark: SparkSession, storePath: String,
                        corpusPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(storePath, CorpusEpochStamp)
+    val p = new org.apache.hadoop.fs.Path(storePath, SegmentedStore.CorpusEpochFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(graft.sources.Tombstones.epoch(spark, corpusPath)
@@ -923,7 +852,7 @@ object Stream {
     */
   def packFresh(spark: SparkSession, storePath: String,
                 corpusPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(storePath, CorpusEpochStamp)
+    val p = new org.apache.hadoop.fs.Path(storePath, SegmentedStore.CorpusEpochFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stamped =
       if (!fs.exists(p)) 0L
@@ -951,13 +880,14 @@ object Stream {
     * .packChunksOf]] kept current over a document stream: each
     * micro-batch's token counts extend the global token line from the
     * stored offset (state-in-store: the pack table itself carries the
-    * running total as Σ n_tokens), new pack contributions merge with
-    * the stored table at PACK granularity (a boundary-straddling pack's
-    * partial rows sum, first/last docs min/max), and the two-rename
-    * swap lands it crash-safe — so a training run can consume packs
-    * while the corpus is still arriving. The token line is laid out in
-    * ARRIVAL order (batch by batch, doc_id within a batch): when
-    * documents arrive in doc_id order the result equals the batch
+    * running total as Σ n_tokens), and new pack contributions land as
+    * one segment ([[graft.sources.SegmentedStore]]) that merges with
+    * the stored ones at PACK granularity at read time
+    * ([[loadChunkStore]]: a boundary-straddling pack's partial rows
+    * sum, first/last docs min/max) — so a training run can consume
+    * packs while the corpus is still arriving. The token line is laid
+    * out in ARRIVAL order (batch by batch, doc_id within a batch):
+    * when documents arrive in doc_id order the result equals the batch
     * [[graft.operators.Pipeline.packChunksOf]] exactly (spec-asserted);
     * out-of-order arrival packs in stream order — the only order a
     * stream can honor. Within a batch the prefix sum is the distributed
@@ -966,8 +896,8 @@ object Stream {
     *
     * Unlike the doc-granular index merges, summing partial pack rows
     * is NOT naturally replay-idempotent — so each landing stamps the
-    * store's APPLIED HORIZON (`_applied_upto_<batchId>` inside the
-    * new segment, one atomic rename with the data) and a batch the
+    * store's APPLIED HORIZON inside the new segment, one atomic rename
+    * with the data ([[graft.sources.SegmentedStore]]), and a batch the
     * horizon already covers no-ops. A batch BELOW the horizon fails
     * loudly: that is a fresh checkpoint restarted over an existing
     * store, which would double-count every replayed pack.
@@ -981,9 +911,8 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath) // a compaction may have died mid-swap
-        val upto = appliedUpTo(fs, basePath)
-        requireBatchInHorizon(batchId, upto, storePath)
+        StoreSwap.recover(fs, basePath) // a compaction may have died mid-swap
+        val upto = SegmentedStore.requireInHorizon(spark, storePath, batchId)
         if (batchId > upto) { // == upto: replayed batch, already landed → no-op
           val counts = batch
             .select(col("doc_id"),
@@ -992,7 +921,7 @@ object Stream {
           // Σ n_tokens is additive across the partial pack rows, so the
           // offset needs one column-pruned scan of the segments
           val offset: Long =
-            if (storeHasData(fs, basePath))
+            if (SegmentedStore.listing(spark, storePath).hasData)
               spark.read.parquet(storePath)
                 .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
             else 0L
@@ -1013,12 +942,11 @@ object Stream {
           // fold at read time ([[loadChunkStore]]) and compaction
           // bounds the merge width — the old path rewrote the whole
           // pack table every batch
-          landBatchSegment(delta, storePath, batchId, fs)
+          landThenFold(delta, storePath, Some(batchId))(loadChunkStore(spark, storePath))
           // takedown tripwire: record which corpus takedown state
-          // this landing reflects ([[stampCorpusEpoch]])
+          // this landing reflects ([[stampCorpusEpoch]]) — after the
+          // landing, so a crash in between leaves the store loud
           corpusPath.foreach(cp => stampCorpusEpoch(spark, storePath, cp))
-          if (segmentIdsAt(fs, basePath).size >= 16)
-            compactChunkStore(spark, storePath)
         }
         ()
       }
@@ -1043,11 +971,11 @@ object Stream {
       .select("pack_id", "n_docs", "n_tokens", "first_doc", "last_doc")
   }
 
-  /** Fold every segment of a chunk-pack store into one (`seg=<max>`)
-    * via the crash-safe swap. No-op below two segments.
+  /** Fold every segment of a chunk-pack store into one
+    * ([[graft.sources.SegmentedStore.fold]]). No-op below two segments.
     */
   def compactChunkStore(spark: SparkSession, storePath: String): Unit =
-    foldSegments(spark, storePath, loadChunkStore(spark, storePath))
+    foldTo(spark, storePath, None)(loadChunkStore(spark, storePath))
 
   /** Streaming MMC4-style sequence assembly — `media_interleave`'s
     * streaming twin, completing the multimodal family's §G rung: each
@@ -1056,8 +984,8 @@ object Stream {
     * (atomic 32-token text chunks + the fixed-slot media anchor), lays
     * the segments on the global token line from the stored offset
     * (state-in-store: Σ n_tokens of the pack table, ONE column-pruned
-    * scan), and lands its pack delta as a `seg=<batchId>` partition of
-    * the SEGMENTED pack store — a delta-sized write however large the
+    * scan), and lands its pack delta as one segment of the SEGMENTED
+    * pack store ([[graft.sources.SegmentedStore]]) — a delta-sized write however large the
     * store grows (r10 VERDICT item 3; the old path re-merged and
     * rewrote the whole pack table every batch). Pack-granular merge
     * happens at READ time ([[loadPackStore]]): counts sum, first/last
@@ -1068,7 +996,7 @@ object Stream {
     * [[compactPackStore]] folds segments when the count reaches
     * `compactEvery`. Segment ids are monotonic and the applied
     * horizon rides inside each landing's atomic rename
-    * ([[landBatchSegment]]): replay no-ops, and a fresh checkpoint
+    * ([[landThenFold]]): replay no-ops, and a fresh checkpoint
     * restarted over an existing store fails loudly instead of landing
     * lower-ordered segments that would silently invert the media_refs
     * concatenation. When documents arrive in doc_id order the
@@ -1076,7 +1004,7 @@ object Stream {
     * restart drill included).
     */
   def interleaveMaintenance(docs: DataFrame, storePath: String,
-                            compactEvery: Int = 16,
+                            compactEvery: Int = CompactEvery,
                             corpusPath: Option[String] = None)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream
@@ -1085,9 +1013,8 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath) // a compaction may have died mid-swap
-        val upto = appliedUpTo(fs, basePath)
-        requireBatchInHorizon(batchId, upto, storePath)
+        StoreSwap.recover(fs, basePath) // a compaction may have died mid-swap
+        val upto = SegmentedStore.requireInHorizon(spark, storePath, batchId)
         if (batchId > upto) { // == upto: replayed batch, already landed → no-op
           val segs = graft.operators.Multimodal.interleaveSegmentsOf(
             batch.select(col("doc_id"), col("text")))
@@ -1095,7 +1022,7 @@ object Stream {
           // additive across the partial pack rows) — a column-pruned
           // scan, never a full-store materialization
           val offset: Long =
-            if (storeHasData(fs, basePath))
+            if (SegmentedStore.listing(spark, storePath).hasData)
               spark.read.parquet(storePath)
                 .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
             else 0L
@@ -1104,135 +1031,23 @@ object Stream {
               value = col("cost"), bucket = expr("doc_id div 64"))
             .withColumn("cb", col("running") - col("cost") + lit(offset))
           val delta = graft.operators.Multimodal.interleavePackRollup(cum)
-          landBatchSegment(delta, storePath, batchId, fs)
+          landThenFold(delta, storePath, Some(batchId), compactEvery = compactEvery)(
+            loadPackStore(spark, storePath))
           // takedown tripwire stamp, like [[packMaintenance]]'s
           corpusPath.foreach(cp => stampCorpusEpoch(spark, storePath, cp))
-          if (segmentIdsAt(fs, basePath).size >= compactEvery)
-            compactPackStore(spark, storePath)
         }
         ()
       }
 
-  /** Segment ids of a segmented pack store (empty when the store is
-    * absent or a plain single layout).
+  /** A segmented store folds once it holds this many segments — every
+    * maintenance sink's fold trigger (and `compactEvery` default).
     */
-  private def segmentIdsAt(fs: org.apache.hadoop.fs.FileSystem,
-                           base: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).map(_.getPath.getName)
-      .filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toLong)
-      .sorted.toSeq
+  private[graft] val CompactEvery = 16
 
-  /** True when the store directory exists AND holds at least one
-    * VISIBLE entry (a dot-prefixed dead tmp build or a bare mkdir is
-    * not data). The sinks gate their prior-state reads on this, not
-    * bare `fs.exists` — a first-batch crash inside a landing leaves
-    * the root with only an invisible tmp dir, and a raw parquet read
-    * of that would throw on every replay, bricking the stream.
-    * (Empty SEGMENTS can't arise: [[landSegment]] refuses to land a
-    * delta whose write emitted no data files.)
-    */
-  private def storeHasData(fs: org.apache.hadoop.fs.FileSystem,
-                           base: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(base) && fs.listStatus(base).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith(".") && !n.startsWith("_")
-    }
-
-  /** True when `dir` holds at least one visible data FILE at any
-    * depth (`_SUCCESS`, applied markers, and dot-prefixed leftovers
-    * don't count). This is the "did the write emit any rows" test the
-    * landing gate needs: `partitionBy` on an empty frame writes no
-    * partition dirs at all, so an empty delta landed blindly would
-    * become a data-less segment that fails schema inference on every
-    * later whole-store read — a replay-loop brick.
-    */
-  private def hasDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: org.apache.hadoop.fs.Path): Boolean = {
-    if (!fs.exists(dir)) return false
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val n = it.next().getPath.getName
-      if (!n.startsWith(".") && !n.startsWith("_")) return true
-    }
-    false
-  }
-
-  /** Name prefix of the applied-horizon marker a batch-keyed landing
-    * leaves INSIDE its segment dir (underscore prefix: invisible to
-    * parquet readers). The marker travels with the segment through
-    * the one atomic rename, so "the segment is visible" and "batch
-    * `<id>` is recorded as applied" can never disagree — the failure
-    * the old root-level marker schemes had a window for.
-    */
-  private val AppliedUpToPrefix = "_applied_upto_"
-
-  /** Highest batchId recorded by an [[AppliedUpToPrefix]] marker in
-    * any segment of the store; None when no segment carries one.
-    */
-  private def markerUpTo(fs: org.apache.hadoop.fs.FileSystem,
-                         base: org.apache.hadoop.fs.Path): Option[Long] = {
-    if (!fs.exists(base)) return None
-    val marks = fs.listStatus(base).map(_.getPath)
-      .filter(_.getName.startsWith("seg="))
-      .flatMap(seg => fs.listStatus(seg).map(_.getPath.getName)
-        .filter(_.startsWith(AppliedUpToPrefix))
-        .map(_.stripPrefix(AppliedUpToPrefix).toLong))
-    if (marks.isEmpty) None else Some(marks.max)
-  }
-
-  /** The store's APPLIED HORIZON: the highest batchId whose landing
-    * committed. Markers are the source of truth; a store written
-    * before the marker scheme falls back to its max segment id (those
-    * stores' segment ids WERE batch ids, so the two schemes agree at
-    * the upgrade boundary). -1 for an absent or segment-less store.
-    */
-  private def appliedUpTo(fs: org.apache.hadoop.fs.FileSystem,
-                          base: org.apache.hadoop.fs.Path): Long =
-    markerUpTo(fs, base)
-      .getOrElse(segmentIdsAt(fs, base).lastOption.getOrElse(-1L))
-
-  /** Fail LOUDLY when `batchId` sits below the store's applied
-    * horizon. Batch ids within one query only move forward, so a
-    * lower id means the stream was restarted with a FRESH checkpoint
-    * over an existing store — out of contract for every batch-keyed
-    * store, and previously a SILENT corruption (double-applied sums,
-    * inverted media_refs segment order) instead of an error. An id
-    * EQUAL to the horizon is the legitimate replay of the last
-    * uncommitted batch: callers recompute their idempotent outputs
-    * and [[landBatchSegment]] no-ops the landing.
-    */
-  private def requireBatchInHorizon(batchId: Long, upto: Long,
-                                    storePath: String): Unit =
-    require(batchId >= upto,
-      s"batch $batchId is below the applied horizon $upto of store " +
-        s"$storePath: the stream was restarted with a fresh checkpoint " +
-        "over an existing store. Restart from the original checkpoint, " +
-        "or point the stream at a fresh store path")
-
-  /** Applied horizon of a whole-rewrite SWAP store (the bounded-state
-    * ledgers: day counts, source mix, CMS cells): one
-    * `_applied_upto_<id>` marker at the store ROOT, written into each
-    * rewrite's tmp dir so the two-rename swap carries data + horizon
-    * atomically (old markers vanish with the replaced dir — exactly
-    * one marker exists). -1 for an absent or pre-upgrade store; the
-    * guard then activates on the first post-upgrade rewrite. These
-    * stores' sum-merge rows are keyed by src_batch, so a fresh
-    * checkpoint re-feeding old batch ids would silently REPLACE
-    * earlier batches' ledger rows — same corruption class the
-    * segmented stores' horizon closes.
-    */
-  private def swapAppliedUpTo(fs: org.apache.hadoop.fs.FileSystem,
-                              base: org.apache.hadoop.fs.Path): Long =
-    if (!fs.exists(base)) -1L
-    else fs.listStatus(base).map(_.getPath.getName)
-      .filter(_.startsWith(AppliedUpToPrefix))
-      .map(_.stripPrefix(AppliedUpToPrefix).toLong)
-      .maxOption.getOrElse(-1L)
-
-  /** Write `merged` + the horizon marker to a tmp dir and swap it in
-    * as the new store content — the shared tail of every swap-store
-    * sink, now horizon-stamped.
+  /** Write `merged` + the root horizon marker to a tmp dir and swap it
+    * in as the new store content — the shared tail of every
+    * whole-rewrite ledger sink ([[SegmentedStore.horizon]] reads the
+    * root marker, so these stores share the segmented stores' guard).
     */
   private def swapInMerged(merged: DataFrame, storePath: String,
                            batchId: Long,
@@ -1240,132 +1055,40 @@ object Stream {
     val base = new org.apache.hadoop.fs.Path(storePath)
     val tmp = s"$storePath.merged-$batchId"
     merged.write.mode("overwrite").parquet(tmp)
-    fs.create(new org.apache.hadoop.fs.Path(tmp, AppliedUpToPrefix + batchId),
-      true).close()
-    if (fs.exists(base)) swapStore(fs, base, tmp)
-    else mustRename(fs, new org.apache.hadoop.fs.Path(tmp), base)
+    SegmentedStore.stampHorizon(fs, new org.apache.hadoop.fs.Path(tmp), batchId)
+    if (fs.exists(base)) StoreSwap.swap(fs, base, tmp)
+    else StoreSwap.mustRename(fs, new org.apache.hadoop.fs.Path(tmp), base)
   }
 
-  /** Land `delta` as the NEXT monotonic segment of a batch-keyed
-    * store, stamping `_applied_upto_<batchId>` inside the segment so
-    * the landing and the horizon record commit in one atomic rename.
-    * No-op (false) when the horizon already covers `batchId` — the
-    * replayed-batch case. Monotonic ids (not `seg=<batchId>`) keep
-    * segment order equal to application order even across a
-    * compaction, which the pack stores' media_refs concatenation and
-    * every last-writer-wins read depend on.
+  /** Land `delta` as the next segment of the store at `storePath`
+    * ([[SegmentedStore.land]] — a `batchId` makes it a batch-keyed
+    * landing: stamped with the applied horizon, a no-op when the
+    * horizon already covers it), then fold the store through
+    * `resolved` once it holds `compactEvery` segments.
     */
-  private def landBatchSegment(delta: DataFrame, storePath: String,
-                               batchId: Long,
-                               fs: org.apache.hadoop.fs.FileSystem,
-                               partitionCol: Option[String] = None): Boolean = {
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    if (appliedUpTo(fs, base) >= batchId) return false
-    val segId = segmentIdsAt(fs, base).lastOption.getOrElse(-1L) + 1L
-    landSegment(delta, storePath, segId, fs, partitionCol,
-      marker = Some(AppliedUpToPrefix + batchId))
-  }
-
-  /** Land `delta` as `seg=<segId>` of a segmented store (build in a
-    * dot-prefixed temp dir, one atomic rename — the landing IS the
-    * applied marker). Returns false when the segment already exists
-    * (replayed batch → no-op). Refuses a root holding a PLAIN
-    * (pre-segment) layout — landing beside it would corrupt partition
-    * discovery with mixed directory depths; adopt an old store by
-    * rewriting it into `seg=<id>` form offline first (the same guard
-    * IndexStore.saveSegment applies).
-    */
-  private def landSegment(delta: DataFrame, storePath: String,
-                          segId: Long,
-                          fs: org.apache.hadoop.fs.FileSystem,
-                          partitionCol: Option[String] = None,
-                          marker: Option[String] = None): Boolean = {
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    val seg = new org.apache.hadoop.fs.Path(storePath, s"seg=$segId")
-    if (fs.exists(seg)) return false
-    if (fs.exists(base))
-      require(fs.listStatus(base).forall { st =>
-        val n = st.getPath.getName
-        n.startsWith("seg=") || n.startsWith(".") || n.startsWith("_")
-      }, s"$storePath holds a plain (pre-segment) layout; rewrite it " +
-        "into seg=<id> form before landing segments")
-    val tmp = new org.apache.hadoop.fs.Path(storePath, s".seg-tmp-$segId")
-    if (fs.exists(tmp)) fs.delete(tmp, true) // dead-build leftover
-    partitionCol match {
-      case Some(c) => delta.repartition(col(c))
-        .write.mode("overwrite").partitionBy(c).parquet(tmp.toString)
-      case None => delta.write.mode("overwrite").parquet(tmp.toString)
-    }
-    // an EMPTY delta must not land: partitionBy writes no partition
-    // dirs for an empty frame (a data-less segment then fails schema
-    // inference on every later whole-store read — a replay-loop
-    // brick), and a plain write of one emits a single zero-row file
-    // (harmless but junk that accumulates one segment per idle
-    // batch). Checking the WRITTEN tmp — file presence, then a
-    // limit-1 read of the one tiny output — costs no re-execution of
-    // the delta plan. Skipping is replay-safe: the caller's recompute
-    // is deterministic, so a replayed empty batch skips again.
-    val wroteRows = hasDataFiles(fs, tmp) &&
-      !delta.sparkSession.read.parquet(tmp.toString).isEmpty
-    if (!wroteRows) { fs.delete(tmp, true); return false }
-    marker.foreach(m => fs.create(new org.apache.hadoop.fs.Path(tmp, m), true).close())
-    mustRename(fs, tmp, seg)
-    true
-  }
-
-  /** Shared crash-safe segment fold: write `resolved` as the single
-    * `seg=<max>` of a fresh root (optionally partitioned), then the
-    * two-rename swap. No-op below two segments — every compaction
-    * (set / pack / embed) is this routine plus its own resolve step.
-    */
-  private def foldSegments(spark: SparkSession, storePath: String,
-                           resolved: => DataFrame,
+  private def landThenFold(delta: DataFrame, storePath: String, batchId: Option[Long],
                            partitionCol: Option[String] = None,
-                           force: Boolean = false): Unit = {
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = segmentIdsAt(fs, base)
-    // `force` folds a ONE-segment store too — the takedown loop's
-    // pending-tombstones case (r13's compactSegments generalization):
-    // the fold is what makes deleted rows leave disk
-    if (segs.isEmpty || (segs.size < 2 && !force)) return
-    // the applied horizon must survive the fold: segment ids are
-    // monotonic, NOT batch ids, so without re-stamping the max marker
-    // the post-fold fallback would misread the horizon
-    val carried = markerUpTo(fs, base)
-    val tmpRoot = storePath + ".compacting"
-    if (fs.exists(new org.apache.hadoop.fs.Path(tmpRoot)))
-      fs.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
-    val out = s"$tmpRoot/seg=${segs.max}"
-    partitionCol match {
-      case Some(c) => resolved.repartition(col(c))
-        .write.mode("overwrite").partitionBy(c).parquet(out)
-      case None => resolved.write.mode("overwrite").parquet(out)
-    }
-    carried.foreach(u => fs.create(new org.apache.hadoop.fs.Path(
-      out, AppliedUpToPrefix + u), true).close())
-    // takedown epoch + corpus-epoch stamp survive the swap (r15):
-    // both are root-level marker files that would otherwise vanish
-    // with the replaced root
-    graft.sources.Tombstones.carryEpoch(spark, storePath, tmpRoot)
-    val stamp = new org.apache.hadoop.fs.Path(base, CorpusEpochStamp)
-    if (fs.exists(stamp)) {
-      val in = fs.open(stamp)
-      val bytes = try in.readAllBytes() finally in.close()
-      val o = fs.create(
-        new org.apache.hadoop.fs.Path(tmpRoot, CorpusEpochStamp), true)
-      try o.write(bytes) finally o.close()
-    }
-    swapStore(fs, base, tmpRoot)
+                           compactEvery: Int = CompactEvery)
+                          (resolved: => DataFrame): Unit = {
+    val spark = delta.sparkSession
+    SegmentedStore.land(spark, storePath, SegmentedStore.listing(spark, storePath).nextSeg,
+      partitionCol.isDefined, batchId)(writeParquet(delta, partitionCol))
+    if (SegmentedStore.listing(spark, storePath).segs.size >= compactEvery)
+      foldTo(spark, storePath, partitionCol)(resolved)
   }
 
-  /** Fold a segmented SET store (rows are facts, no merge semantics —
-    * the md5/fingerprint/semantic screens) into one `seg=<max>`.
+  /** [[SegmentedStore.fold]] of a store whose resolved content is
+    * `resolved`, written as parquet (partitioned by `partitionCol`).
     */
-  private def compactSetStore(spark: SparkSession, storePath: String,
-                              partitionCol: Option[String] = None): Unit =
-    foldSegments(spark, storePath,
-      spark.read.parquet(storePath).drop("seg"), partitionCol)
+  private def foldTo(spark: SparkSession, storePath: String,
+                     partitionCol: Option[String])(resolved: => DataFrame): Unit =
+    SegmentedStore.fold(spark, storePath)(writeParquet(resolved, partitionCol)(_))
+
+  private def writeParquet(df: DataFrame, partitionCol: Option[String])(dir: String): Unit =
+    partitionCol match {
+      case Some(c) => df.repartition(col(c)).write.mode("overwrite").partitionBy(c).parquet(dir)
+      case None => df.write.mode("overwrite").parquet(dir)
+    }
 
   /** Read a [[interleaveMaintenance]] pack store with its pack-granular
     * merge applied: rows of the same pack_id across segments fold —
@@ -1396,13 +1119,13 @@ object Stream {
         "n_tokens", "first_doc", "last_doc", "media_refs")
   }
 
-  /** Fold every segment of a pack store into one (`seg=<max>`) via the
-    * crash-safe two-rename swap — bounds the per-read merge width the
-    * same way [[graft.sources.IndexStore.compactSegments]] does for
-    * the index. No-op below two segments.
+  /** Fold every segment of a pack store into one
+    * ([[graft.sources.SegmentedStore.fold]]) — bounds the per-read
+    * merge width the same way [[graft.sources.IndexStore.compactSegments]]
+    * does for the index. No-op below two segments.
     */
   def compactPackStore(spark: SparkSession, storePath: String): Unit =
-    foldSegments(spark, storePath, loadPackStore(spark, storePath))
+    foldTo(spark, storePath, None)(loadPackStore(spark, storePath))
 
   /** Streaming uniform k-sample per source — `sample_k`'s streaming
     * twin: each micro-batch salts doc keys with the same md5 as the
@@ -1426,7 +1149,7 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
+        StoreSwap.recover(fs, basePath)
         val delta = batch.select(col("source"), col("doc_id"),
           md5(concat(lit("sample:"), col("doc_id").cast("string"))).as("h"))
         val all =
@@ -1441,8 +1164,8 @@ object Stream {
           .drop("rk")
         val tmp = s"$storePath.merged-$batchId"
         merged.write.mode("overwrite").parquet(tmp)
-        if (fs.exists(basePath)) swapStore(fs, basePath, tmp)
-        else mustRename(fs, new org.apache.hadoop.fs.Path(tmp), basePath)
+        if (fs.exists(basePath)) StoreSwap.swap(fs, basePath, tmp)
+        else StoreSwap.mustRename(fs, new org.apache.hadoop.fs.Path(tmp), basePath)
         ()
       }
 
@@ -1453,13 +1176,12 @@ object Stream {
     * store, so a document seen last month (or before a restart) still
     * dedups. Per batch: in-batch dedup (first doc_id per fingerprint),
     * one anti-join against the store, survivors land in their own
-    * `batch=<id>` dir, and their fingerprints merge into the store via
-    * the crash-safe swap. Replay-idempotent WITHOUT markers, by
-    * BATCH-GRANULAR REPLACE (the index-merge rule applied to
-    * fingerprints): the store keys every fingerprint by its source
-    * batch, screening ignores the current batch's own rows and the
-    * merge replaces them — so a replayed batch recomputes the identical
-    * survivor set and rewrites the identical store.
+    * `batch=<id>` dir, and their fingerprints land as one batch-keyed
+    * segment of the store ([[graft.sources.SegmentedStore]]).
+    * Replay-idempotent: the store keys every fingerprint by its source
+    * batch and screening ignores the current batch's own rows, so a
+    * replayed batch recomputes the identical survivor set, and its
+    * landing no-ops under the applied horizon.
     */
   def dedupGate(docs: DataFrame, storePath: String,
                 outPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -1469,15 +1191,15 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
-        requireBatchInHorizon(batchId, appliedUpTo(fs, basePath), storePath)
+        StoreSwap.recover(fs, basePath)
+        SegmentedStore.requireInHorizon(spark, storePath, batchId)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("text_md5").orderBy("doc_id")
         val batchCanon = batch.withColumn("text_md5", md5(col("text")))
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
         val prior =
-          if (storeHasData(fs, basePath))
+          if (SegmentedStore.listing(spark, storePath).hasData)
             spark.read.parquet(storePath).filter(col("src_batch") =!= batchId)
           else spark.emptyDataFrame.select(lit("").as("text_md5"), lit(0L).as("src_batch")).limit(0)
         val fresh = batchCanon
@@ -1486,10 +1208,9 @@ object Stream {
         // the md5 set grows with the corpus: land the batch's NEW
         // fingerprints as a delta-sized segment (r11), never a
         // full-store rewrite; compaction bounds the read width
-        landBatchSegment(fresh.select(col("text_md5"),
-          lit(batchId).as("src_batch")), storePath, batchId, fs)
-        if (segmentIdsAt(fs, basePath).size >= 16)
-          compactSetStore(spark, storePath)
+        landThenFold(fresh.select(col("text_md5"),
+          lit(batchId).as("src_batch")), storePath, Some(batchId))(
+          spark.read.parquet(storePath).drop("seg"))
         ()
       }
 
@@ -1505,11 +1226,8 @@ object Stream {
     * pigeonhole band equi-join ([[graft.operators.Dedup.simhashBandsOf]]
     * — the shuffle carries (band, value) keys, never all pairs, so
     * the screen scales with matches, not store × batch), and
-    * surviving fingerprints merge into the store via the crash-safe
-    * swap. Replay-idempotent by the same batch-granular replace as
-    * [[dedupGate]]: fingerprints are keyed by source batch, the
-    * screen ignores the current batch's own stored rows, and the
-    * merge replaces them.
+    * surviving fingerprints land as one batch-keyed segment.
+    * Replay-idempotent like [[dedupGate]].
     */
   def neardupGate(docs: DataFrame, storePath: String, outPath: String,
                   maxHamming: Int = 6): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -1519,8 +1237,8 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
-        requireBatchInHorizon(batchId, appliedUpTo(fs, basePath), storePath)
+        StoreSwap.recover(fs, basePath)
+        SegmentedStore.requireInHorizon(spark, storePath, batchId)
         val Dedup = graft.operators.Dedup
         // in-batch near-dedup: doc_b of every pair has the larger id
         val inDups = Dedup.simhashPairsOf(batch, maxHamming)
@@ -1528,7 +1246,7 @@ object Stream {
         val survivorsFp = Dedup.simhashDf(batch)
           .join(inDups, Seq("doc_id"), "left_anti")
         val prior =
-          if (storeHasData(fs, basePath))
+          if (SegmentedStore.listing(spark, storePath).hasData)
             spark.read.parquet(storePath).filter(col("src_batch") =!= batchId)
           else spark.emptyDataFrame.select(lit(0L).as("doc_id"),
             lit(0L).as("simhash"), lit(0L).as("src_batch")).limit(0)
@@ -1543,10 +1261,9 @@ object Stream {
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         // fingerprint set grows with the corpus: delta-sized segment
         // landing + compaction (r11), never a full-store rewrite
-        landBatchSegment(freshFp.select(col("doc_id"), col("simhash"),
-          lit(batchId).as("src_batch")), storePath, batchId, fs)
-        if (segmentIdsAt(fs, basePath).size >= 16)
-          compactSetStore(spark, storePath)
+        landThenFold(freshFp.select(col("doc_id"), col("simhash"),
+          lit(batchId).as("src_batch")), storePath, Some(batchId))(
+          spark.read.parquet(storePath).drop("seg"))
         ()
       }
 
@@ -1559,10 +1276,10 @@ object Stream {
     * screened against ONLY their bucket of the saved vector store by
     * exact cosine ≥ `threshold` (the [[knnServe]] read shape:
     * bucket-keyed join, other buckets' payloads never read), and
-    * surviving vectors merged into the bucket-partitioned store via
-    * the crash-safe swap. A semantic duplicate of a vector accepted
-    * before a restart is still dropped. Replay-idempotent by
-    * batch-granular replace, like its two siblings.
+    * surviving vectors land as one bucket-partitioned, batch-keyed
+    * segment. A semantic duplicate of a vector accepted before a
+    * restart is still dropped. Replay-idempotent like its two
+    * siblings.
     */
   def semdedupGate(vecs: DataFrame, centroidPath: String, storePath: String,
                    outPath: String, threshold: Double = 0.95)
@@ -1574,8 +1291,8 @@ object Stream {
         val Sim = graft.operators.Similarity
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
-        requireBatchInHorizon(batchId, appliedUpTo(fs, basePath), storePath)
+        StoreSwap.recover(fs, basePath)
+        SegmentedStore.requireInHorizon(spark, storePath, batchId)
         val cent = spark.read.parquet(centroidPath)
         val a = Sim.ivfAssignTo(Sim.withNormOf(batch), cent)
           .select(col("vec_id"), col("embedding"), col("nm"), col("bucket"))
@@ -1587,7 +1304,7 @@ object Stream {
           .select(col("y.vec_id").as("vec_id")).distinct()
         val surv = a.join(inDups, Seq("vec_id"), "left_anti")
         val prior =
-          if (storeHasData(fs, basePath))
+          if (SegmentedStore.listing(spark, storePath).hasData)
             spark.read.parquet(storePath).filter(col("src_batch") =!= batchId)
               .select(col("vec_id"), col("embedding"), col("nm"),
                 col("bucket").cast("long").as("bucket"), col("src_batch"))
@@ -1606,10 +1323,9 @@ object Stream {
         // the semantic fingerprint set grows with the corpus: land the
         // batch's fresh vectors as a bucket-partitioned delta segment
         // (r11), never a full-store rewrite
-        landBatchSegment(fresh.withColumn("src_batch", lit(batchId)),
-          storePath, batchId, fs, partitionCol = Some("bucket"))
-        if (segmentIdsAt(fs, basePath).size >= 16)
-          compactSetStore(spark, storePath, partitionCol = Some("bucket"))
+        landThenFold(fresh.withColumn("src_batch", lit(batchId)),
+            storePath, Some(batchId), Some("bucket"))(
+          spark.read.parquet(storePath).drop("seg"))
         ()
       }
 
@@ -1623,10 +1339,10 @@ object Stream {
     * language/domain, before quality metrics move. The store holds one
     * (term, src_batch) row per first sighting; the screen is one
     * left_anti join on term (shuffle keyed by term, bounded by the
-    * batch vocabulary, never the corpus). Replay-idempotent by
-    * batch-granular replace: screening ignores the current batch's own
-    * stored rows, the merge replaces them, and the report lands in its
-    * own `batch=<id>` dir.
+    * batch vocabulary, never the corpus). Replay-idempotent like
+    * [[dedupGate]]: screening ignores the current batch's own stored
+    * rows, the landing no-ops under the applied horizon, and the
+    * report lands in its own `batch=<id>` dir.
     */
   def vocabDriftGate(docs: DataFrame, storePath: String, outPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -1636,13 +1352,13 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
-        requireBatchInHorizon(batchId, appliedUpTo(fs, basePath), storePath)
+        StoreSwap.recover(fs, basePath)
+        SegmentedStore.requireInHorizon(spark, storePath, batchId)
         val bt = batch
           .select(explode(graft.functions.TextFns.tokens(col("text"))).as("term"))
           .groupBy("term").agg(count(lit(1)).as("freq"))
         val prior =
-          if (storeHasData(fs, basePath))
+          if (SegmentedStore.listing(spark, storePath).hasData)
             spark.read.parquet(storePath).filter(col("src_batch") =!= batchId)
           else spark.emptyDataFrame
             .select(lit("").as("term"), lit(0L).as("src_batch")).limit(0)
@@ -1661,10 +1377,9 @@ object Stream {
         report.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         // the vocabulary set grows with the corpus (heavy-tail): land
         // only the batch's NOVEL terms as a delta segment (r11)
-        landBatchSegment(novel.select(col("term"), lit(batchId).as("src_batch")),
-          storePath, batchId, fs)
-        if (segmentIdsAt(fs, basePath).size >= 16)
-          compactSetStore(spark, storePath)
+        landThenFold(novel.select(col("term"), lit(batchId).as("src_batch")),
+            storePath, Some(batchId))(
+          spark.read.parquet(storePath).drop("seg"))
         ()
       }
 
@@ -1689,8 +1404,8 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
-        requireBatchInHorizon(batchId, swapAppliedUpTo(fs, basePath), storePath)
+        StoreSwap.recover(fs, basePath)
+        SegmentedStore.requireInHorizon(spark, storePath, batchId)
         val bt = batch
           .select(col("source"),
             size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("t"))
@@ -1733,10 +1448,10 @@ object Stream {
     * arithmetic definition. The ledger is vocab × langs + |langs|
     * rows (tiny, model-sized — never corpus-sized); the only
     * corpus-scaled stage is the batch's own token rollup.
-    * Replay-idempotent by the same batch-granular replace as the
-    * other store-backed gates: a replayed batch's ledger rows are
-    * dropped before scoring, so it is re-scored by the same
-    * prior-model state and re-merged without double counting.
+    * Replay-idempotent like the other segmented gates: a replayed
+    * batch's ledger rows are dropped before scoring, so it is
+    * re-scored by the same prior-model state, and its landing no-ops
+    * under the applied horizon.
     */
   def nbRouterGate(docs: DataFrame, storePath: String, outPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -1746,10 +1461,10 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
-        requireBatchInHorizon(batchId, appliedUpTo(fs, basePath), storePath)
+        StoreSwap.recover(fs, basePath)
+        SegmentedStore.requireInHorizon(spark, storePath, batchId)
         val prior =
-          if (storeHasData(fs, basePath))
+          if (SegmentedStore.listing(spark, storePath).hasData)
             spark.read.parquet(storePath).filter(col("src_batch") =!= batchId)
           else spark.emptyDataFrame.select(lit("").as("kind"),
             lit("").as("term"), lit("").as("lang"), lit(0L).as("c"),
@@ -1777,10 +1492,9 @@ object Stream {
         // rows (consumers re-aggregate): land the batch's rows as a
         // delta segment (r11) — the model is vocab-sized and the old
         // path rewrote all of it every batch
-        landBatchSegment(btl.unionByName(bdl).withColumn("src_batch", lit(batchId)),
-          storePath, batchId, fs)
-        if (segmentIdsAt(fs, basePath).size >= 16)
-          compactSetStore(spark, storePath)
+        landThenFold(btl.unionByName(bdl).withColumn("src_batch", lit(batchId)),
+            storePath, Some(batchId))(
+          spark.read.parquet(storePath).drop("seg"))
         ()
       }
 
@@ -1801,10 +1515,9 @@ object Stream {
     * is a TRUE distinct-doc count: a doc replayed by the source or
     * split across micro-batches can never inflate a sentence's reach
     * (the r7 ledger summed per-batch countDistincts and relied on a
-    * documented no-recurrence assumption). Replay-idempotent by the
-    * same batch-granular replace as the other store-backed gates:
-    * a replayed batch's own rows are dropped before the anti-join, so
-    * pairs keep their original attribution.
+    * documented no-recurrence assumption). Replay-idempotent like the
+    * other segmented gates: a replayed batch's own rows are dropped
+    * before the anti-join, so pairs keep their original attribution.
     */
   def boilerplateGate(docs: DataFrame, storePath: String, outPath: String,
                       minDocs: Long = 2)
@@ -1815,13 +1528,13 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
-        requireBatchInHorizon(batchId, appliedUpTo(fs, basePath), storePath)
+        StoreSwap.recover(fs, basePath)
+        SegmentedStore.requireInHorizon(spark, storePath, batchId)
         val sents = graft.operators.TextAnalysis.sentencesOf(batch)
           .withColumn("sh", md5(col("sent")))
         val pairs = sents.select(col("sh"), col("doc_id")).distinct()
         val prior =
-          if (storeHasData(fs, basePath)) {
+          if (SegmentedStore.listing(spark, storePath).hasData) {
             val saved = spark.read.parquet(storePath)
             // the ledger format changed from per-batch (sh, n_docs,
             // src_batch) counts to distinct (sh, doc_id, src_batch)
@@ -1860,10 +1573,9 @@ object Stream {
         scrubbed.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         // the sentence-pair ledger grows with the corpus: land only
         // the batch's FRESH pairs as a delta segment (r11)
-        landBatchSegment(fresh.withColumn("src_batch", lit(batchId)),
-          storePath, batchId, fs)
-        if (segmentIdsAt(fs, basePath).size >= 16)
-          compactSetStore(spark, storePath)
+        landThenFold(fresh.withColumn("src_batch", lit(batchId)),
+            storePath, Some(batchId))(
+          spark.read.parquet(storePath).drop("seg"))
         ()
       }
 
@@ -1895,10 +1607,10 @@ object Stream {
         val md5Base = new org.apache.hadoop.fs.Path(md5StorePath)
         val fpBase = new org.apache.hadoop.fs.Path(fpStorePath)
         val fs = md5Base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, md5Base)
-        recoverStore(fs, fpBase)
-        requireBatchInHorizon(batchId, appliedUpTo(fs, md5Base), md5StorePath)
-        requireBatchInHorizon(batchId, appliedUpTo(fs, fpBase), fpStorePath)
+        StoreSwap.recover(fs, md5Base)
+        StoreSwap.recover(fs, fpBase)
+        SegmentedStore.requireInHorizon(spark, md5StorePath, batchId)
+        SegmentedStore.requireInHorizon(spark, fpStorePath, batchId)
         val Dedup = graft.operators.Dedup
         val nIn = batch.count()
         // stage 1: quality rules (shared code with qualityGate)
@@ -1913,7 +1625,7 @@ object Stream {
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
         val md5Prior =
-          if (storeHasData(fs, md5Base))
+          if (SegmentedStore.listing(spark, md5StorePath).hasData)
             spark.read.parquet(md5StorePath).filter(col("src_batch") =!= batchId)
           else spark.emptyDataFrame.select(lit("").as("text_md5"),
             lit(0L).as("src_batch")).limit(0)
@@ -1926,7 +1638,7 @@ object Stream {
         val survivorsFp = Dedup.simhashDf(exactFresh)
           .join(inDups, Seq("doc_id"), "left_anti")
         val fpPrior =
-          if (storeHasData(fs, fpBase))
+          if (SegmentedStore.listing(spark, fpStorePath).hasData)
             spark.read.parquet(fpStorePath).filter(col("src_batch") =!= batchId)
           else spark.emptyDataFrame.select(lit(0L).as("doc_id"),
             lit(0L).as("simhash"), lit(0L).as("src_batch")).limit(0)
@@ -1955,17 +1667,13 @@ object Stream {
         // column still keys replay exclusion in the prior reads (a
         // crash between the two landings replays with one store
         // already holding this batch's rows), and periodic compaction
-        // bounds the file count
-        landBatchSegment(exactFresh.select(col("text_md5"),
-          lit(batchId).as("src_batch")), md5StorePath, batchId, fs)
-        landBatchSegment(freshFp.select(col("doc_id"), col("simhash"),
-          lit(batchId).as("src_batch")), fpStorePath, batchId, fs)
-        // each store triggers on its OWN count: a crash between the
-        // two folds must not let the second store outrun the bound
-        if (segmentIdsAt(fs, md5Base).size >= 16)
-          compactSetStore(spark, md5StorePath)
-        if (segmentIdsAt(fs, fpBase).size >= 16)
-          compactSetStore(spark, fpStorePath)
+        // bounds the file count (each store on its OWN count)
+        landThenFold(exactFresh.select(col("text_md5"),
+            lit(batchId).as("src_batch")), md5StorePath, Some(batchId))(
+          spark.read.parquet(md5StorePath).drop("seg"))
+        landThenFold(freshFp.select(col("doc_id"), col("simhash"),
+            lit(batchId).as("src_batch")), fpStorePath, Some(batchId))(
+          spark.read.parquet(fpStorePath).drop("seg"))
         q.unpersist()
         exactFresh.unpersist()
         freshFp.unpersist()
@@ -1996,8 +1704,8 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
-        requireBatchInHorizon(batchId, swapAppliedUpTo(fs, basePath), storePath)
+        StoreSwap.recover(fs, basePath)
+        SegmentedStore.requireInHorizon(spark, storePath, batchId)
         val cnt = batch
           .select(explode(graft.functions.TextFns.tokens(col("text"))).as("term"))
           .groupBy("term").agg(count(lit(1)).as("tf"))
@@ -2152,7 +1860,7 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
+        StoreSwap.recover(fs, basePath)
         val scored = graft.operators.Pipeline.esKeysOf(batch)
           .withColumn("src_batch", lit(batchId))
         val prior =
@@ -2164,8 +1872,8 @@ object Stream {
           .limit(k)
         val tmp = s"$storePath.merged-$batchId"
         merged.write.mode("overwrite").parquet(tmp)
-        if (fs.exists(basePath)) swapStore(fs, basePath, tmp)
-        else mustRename(fs, new org.apache.hadoop.fs.Path(tmp), basePath)
+        if (fs.exists(basePath)) StoreSwap.swap(fs, basePath, tmp)
+        else StoreSwap.mustRename(fs, new org.apache.hadoop.fs.Path(tmp), basePath)
         ()
       }
 
@@ -2202,8 +1910,8 @@ object Stream {
         val spark = batch.sparkSession
         val basePath = new org.apache.hadoop.fs.Path(storePath)
         val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverStore(fs, basePath)
-        requireBatchInHorizon(batchId, swapAppliedUpTo(fs, basePath), storePath)
+        StoreSwap.recover(fs, basePath)
+        SegmentedStore.requireInHorizon(spark, storePath, batchId)
         val bt = batch
           .select(expr("unix_micros(ts) div 86400000000").as("day"))
           .groupBy("day").agg(count(lit(1)).as("n_events"))

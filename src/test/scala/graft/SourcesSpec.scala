@@ -1148,7 +1148,7 @@ class SourcesSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     val listed = rows(IndexStore.load(spark, path))
-    val l = IndexStore.rootListing(spark, path)
+    val l = sources.SegmentedStore.listing(spark, path)
     // lands between a reader's listing and its reads: doc 0 re-lands
     // with different terms, doc 9 is new
     assert(IndexStore.saveSegment(Index.invertedIndexOf(

@@ -519,6 +519,34 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     } finally q.stop()
   }
 
+  test("stream_embed_index: a takedown in a multi-segment store drops every version of the vector") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft-embed-td").toString
+    val (centPath, storePath) = (s"$base/centroids", s"$base/store")
+    graft.operators.Similarity.saveCentroids(
+      Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("vec_id", "embedding"),
+      centPath)
+    val in = MemoryStream[(Long, Array[Float])]
+    val q = Stream.embedIndexMaintenance(
+      in.toDF().toDF("vec_id", "embedding"), centPath, storePath).start()
+    try {
+      in.addData((100L, Array(0.9f, 0.1f)), (101L, Array(0.1f, 0.8f)))
+      q.processAllAvailable()
+      // vec 100 re-embedded: two versions, in two segments
+      in.addData((100L, Array(0.05f, 0.9f)), (102L, Array(1f, 0.2f)))
+      q.processAllAvailable()
+    } finally q.stop()
+    def ids(): Set[Long] =
+      Stream.loadEmbedStore(spark, storePath).select("vec_id").as[Long].collect().toSet
+    assert(ids() === Set(100L, 101L, 102L))
+    sources.Tombstones.append(spark, storePath, Seq(100L, 102L), key = "vec_id")
+    assert(ids() === Set(101L), "a takedown must supersede every version of a vector")
+    Stream.compactEmbedStore(spark, storePath)
+    assert(!new java.io.File(s"$storePath/_tombstones").exists())
+    assert(spark.read.parquet(storePath).select("vec_id").as[Long].collect().toSet === Set(101L))
+  }
+
   test("stream_knn: query batches served from the saved bucket-pruned store") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -1540,6 +1568,25 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     assert(segsOf(store) === Seq("seg=0", "seg=1"))
     assert(spark.read.parquet(out).select("vec_id").collect()
       .map(_.getLong(0)).toSet === Set(100L, 102L))
+
+    // ---- index store: a whitespace-only FIRST batch has no postings;
+    //      landed, its data-less segment failed schema inference on
+    //      every later load and lookup
+    val idxStore = s"$base/index"
+    val in3 = MemoryStream[(Long, String)]
+    val q3 = Stream.indexMaintenance(in3.toDF().toDF("doc_id", "text"), idxStore,
+        nBuckets = 4)
+      .option("checkpointLocation", s"$base/ckpt3").start()
+    try {
+      in3.addData((0L, "   ")); q3.processAllAvailable()
+      assert(graft.sources.IndexStore.segmentIds(spark, idxStore).isEmpty)
+      in3.addData((1L, "alpha beta"), (2L, "beta")); q3.processAllAvailable()
+    } finally q3.stop()
+    assert(graft.sources.IndexStore.segmentIds(spark, idxStore) === Seq(0L))
+    assert(graft.sources.IndexStore.load(spark, idxStore).select("doc_id").distinct()
+      .collect().map(_.getLong(0)).toSet === Set(1L, 2L))
+    assert(graft.sources.IndexStore.lookup(spark, idxStore, "beta", nBuckets = 4)
+      .count() === 2L)
   }
 
   test("stream_interleave: streamed sequence assembly equals the batch packer, restart-safe") {
@@ -1932,6 +1979,28 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     // indistinguishable from stale — conservative refusal
     fs.delete(new org.apache.hadoop.fs.Path(packP, "_corpus_epoch"), false)
     assert(!graft.streaming.Stream.packFresh(spark, packP, cp))
+    // a streamed pack store stamps each landing; folding its segments
+    // must CARRY the stamp, or the fold alone would make it stale
+    implicit val ctx = spark.sqlContext
+    val streamed = s"$base/streamed"
+    val in = MemoryStream[(Long, String)]
+    val q = graft.streaming.Stream.packMaintenance(in.toDF().toDF("doc_id", "text"),
+        streamed, budget = 4L, corpusPath = Some(cp))
+      .option("checkpointLocation", s"$base/ckpt").start()
+    try {
+      in.addData((1L, "gamma delta")); q.processAllAvailable()
+      in.addData((2L, "epsilon zeta eta")); q.processAllAvailable()
+    } finally q.stop()
+    def nSegs(): Int = fs.listStatus(new org.apache.hadoop.fs.Path(streamed))
+      .count(_.getPath.getName.startsWith("seg="))
+    assert(nSegs() === 2)
+    graft.streaming.Stream.compactChunkStore(spark, streamed)
+    assert(nSegs() === 1)
+    assert(graft.streaming.Stream.packFresh(spark, streamed, cp),
+      "the fold must carry the corpus-epoch stamp")
+    assert(graft.streaming.Stream.loadChunkStore(spark, streamed,
+      corpusPath = Some(cp)).agg(org.apache.spark.sql.functions.sum("n_tokens"))
+      .head.getLong(0) === 5L)
   }
 
   test("sq8 quantized dense serving: ADC shortlist + exact rerank vs raw serving; staleness and takedowns") {
