@@ -498,6 +498,13 @@ object Index {
     */
   val ProfileCap = 384
 
+  /** Per-task dot budget of the profile rung's kNN: a cell of m
+    * members splits its queries into ⌈m²/ProfileTaskDots⌉ slices (at
+    * most m), so a cell of ≤ 4096 members runs as one task and a
+    * fatter one spreads over tasks of about this many dots each.
+    */
+  private[graft] val ProfileTaskDots: Long = 4096L * 4096L
+
   /** The DENSE-REGIME candidate rung of [[tfidfCosineGuardedOf]] (r13):
     * when the vocabulary is degenerate, similarity is a PROFILE
     * property — near-proportional tf-idf weights over the COMMON terms
@@ -518,26 +525,28 @@ object Index {
     * every textual generator reads ≈ 0.
     *
     * Scale shape: one broadcast [[ProfileDims]]-term dictionary, a
-    * vocab-profile rollup, a narrow broadcast-centroid assignment, a
-    * cid-keyed pair join whose per-pair work is one codegen'd 32-dim
-    * dot, and a per-doc top-cap window — so the candidate relation
+    * vocab-profile rollup, a narrow broadcast-centroid assignment, and
+    * one primitive-array kNN kernel per (cell, query slice) whose
+    * per-pair work is one 32-dim dot — so the candidate relation
     * handed to the term-keyed rescoring is ≤ [[ProfileProbes]]·
     * [[ProfileCap]]·N however dense the corpus ([[ProfileCap]]'s
-    * scaladoc prices the cap).
+    * scaladoc prices the cap), and no task computes much more than
+    * `taskDots` ([[ProfileTaskDots]]) dots however fat the cell.
     * All arithmetic is the bitwise cross-engine float→double fold
     * ([[graft.functions.VectorFns.dot]] ↔ OracleSql.dot), so both
     * engines assign identical cells and identical kNN ranks.
     *
-    * CONTRACT (r15/r16): the returned relation is normalized
-    * (doc_a < doc_b) but MAY CONTAIN DUPLICATES — a pair co-probed in
-    * several cells emits once per cell (and the fat-cell block path
-    * emits both union-kNN directions). Callers must `.distinct()`
-    * after unioning it with their other candidate rungs; the ≤
-    * [[ProfileProbes]]·[[ProfileCap]]·N bound holds for the DISTINCT'd
-    * relation.
+    * CONTRACT: the returned relation is normalized (doc_a < doc_b)
+    * but MAY CONTAIN DUPLICATES — a pair repeats once per shared probed
+    * cell, and at most once more per cell when that cell's queries
+    * span several slices (each endpoint's slice emits it). Callers
+    * must `.distinct()` after unioning it with their other candidate
+    * rungs; the ≤ [[ProfileProbes]]·[[ProfileCap]]·N bound holds for
+    * the DISTINCT'd relation, which does not depend on `taskDots`.
     */
   private[graft] def profileIvfCandidatesOf(w: DataFrame,
-                                            cap: Int = ProfileCap): DataFrame = {
+                                            cap: Int = ProfileCap,
+                                            taskDots: Long = ProfileTaskDots): DataFrame = {
     import graft.functions.VectorFns
     val dWin = Window.orderBy(col("df").desc, col("term"))
     val topIdx = w.groupBy("term").agg(max(col("df")).as("df"))
@@ -575,37 +584,35 @@ object Index {
             sqrt(VectorFns.dot(ce, ce)) + lit(1e-12)))).as("ns"),
         lit(r.getLong(0)).as("cid"))
     }.toSeq
-    // union-kNN sparsification (r14; r15 spread the fat-cell compute):
-    // inside each probed cell, each doc keeps only its
-    // top-[[ProfileCap]] most profile-similar neighbors (sim = the
-    // bitwise float→double cosine fold both engines replay; ties by
-    // doc id — a total order, so both engines keep identical sets),
-    // and a pair survives when EITHER endpoint keeps the other. The
-    // declarative twin (co-probe join + distinct + window) was
+    // union-kNN sparsification (r14): inside each probed cell, each doc
+    // keeps only its top-[[ProfileCap]] most profile-similar neighbors
+    // (sim = the bitwise float→double cosine fold both engines replay;
+    // ties by doc id — a total order, so both engines keep identical
+    // sets), and a pair survives when EITHER endpoint keeps the other.
+    // The declarative twin (co-probe join + distinct + window) was
     // measured 12× slower at sf0.1 because it shuffles the quadratic
-    // relation twice; instead the kNN runs as primitive-array kernels
-    // over grouped membership rows, in two size regimes:
+    // relation twice; instead the kNN runs as a primitive-array kernel
+    // over grouped membership rows, ONE path for every cell size —
+    // query-side sharding (Odyssey, VLDB 2023: replicate only the data
+    // side, schedule the queries):
     //
-    //  - cells ≤ `spark.graft.knnCellBlock` members (default 4096):
-    //    ONE flatMapGroups task per cell — ≤ blockSize² dots, bounded
-    //    memory (one cell's ids + ProfileDims floats per group).
-    //  - FAT cells (the r14 verdict's one `weak`: a 100×-degenerate
-    //    34k-member cell ran ~10⁹ dots in ONE task, and a bigger one
-    //    is a multi-hour task): the cell splits into ⌈m/blockSize⌉
-    //    doc_id-ordered blocks; every UNORDERED block pair (bi ≤ bj)
-    //    is its own task computing both directions' per-doc
-    //    top-[[cap]] PARTIALS (block-nested-loop kNN), and a per-doc
-    //    window merges partials to the global top-cap. Any globally
-    //    kept neighbor is in its own block's top-cap, so the merged
-    //    set is EXACTLY the one-task result (same sims, same
-    //    (sim desc, id asc) total order — the oracle is unchanged).
-    //    Costs: compute ≤ blockSize² dots per task however fat the
-    //    cell; shuffle = rows replicated ⌈m/blockSize⌉× (the standard
-    //    block-nested-loop replication) + ≤ nb·cap partials per doc.
+    //  - a cell of m members splits its QUERIES into
+    //    ns = min(m, max(1, ⌈m²/taskDots⌉)) slices; a member's slice is
+    //    a pure function of its doc_id (pmod(xxhash64(doc_id), ns));
+    //  - each (cell, slice) group is ONE task that holds the WHOLE cell
+    //    as its data side (every member is exploded to all ns slices of
+    //    its cell, flagged as a query in its own) and computes each of
+    //    its queries' EXACT top-cap in one place — no partials, no
+    //    merge, so the relation is slice-invariant and the oracle's
+    //    per-(cid, doc) top-cap replays it.
+    //
+    // Costs: ≤ [[ProfileTaskDots]] dots per task in expectation (the
+    // slice hash balances queries) however fat the cell; the data side
+    // is replicated ns× (r15 measured replicating BOTH sides, block
+    // pairs, as a loss); memory is one cell's ids + ProfileDims floats
+    // per group. A cell of ≤ 4096 members is one slice.
     val spark = w.sparkSession
     import spark.implicits._
-    val blockSize = spark.conf.get("spark.graft.knnCellBlock", "4096").toInt
-    require(blockSize > 0, "spark.graft.knnCellBlock must be positive")
     if (centRows.isEmpty)
       // empty corpus: no cells, no candidates (schema preserved)
       return prof.select(col("doc_id").as("doc_a"),
@@ -613,31 +620,37 @@ object Index {
     val m0 = prof.select(col("doc_id"), col("emb"),
         explode(slice(sort_array(array(simCols: _*)), 1, ProfileProbes)).as("sc"))
       .select(col("sc.cid").as("cid"), col("doc_id"), col("emb"))
-    val csize = m0.groupBy("cid").agg(count(lit(1)).as("csz"))
-    val withSz = m0.join(broadcast(csize), "cid") // |cells| rows: broadcast
+    val slices = m0.groupBy("cid").agg(count(lit(1)).as("csz"))
+      .select(col("cid"), expr(
+        s"least(csz, greatest(1L, (csz * csz + ${taskDots - 1}L) div ${taskDots}L))").as("ns"))
+    val members = m0.join(broadcast(slices), "cid") // |cells| rows: broadcast
+      .select(col("cid"), col("doc_id"), col("emb"),
+        pmod(xxhash64(col("doc_id")), col("ns")).as("own"),
+        explode(sequence(lit(0L), col("ns") - 1)).as("slice"))
+      .select(col("cid"), col("slice"), col("doc_id"), col("emb"),
+        (col("slice") === col("own")).as("query"))
+      .as[(Long, Long, Long, Array[Float], Boolean)]
     def dotf(a: Array[Float], b: Array[Float]): Double = {
       var s = 0.0; var k = 0
       val n = math.min(a.length, b.length)
       while (k < n) { s += a(k).toDouble * b(k).toDouble; k += 1 }
       s
     }
-    // per-query bounded-heap kNN of `qs` against `ds`: the heap's root
-    // is the WORST kept neighbor under (sim desc, id asc); `same`
-    // skips the self pair. Primitive parallel-array heap (r15): the
-    // boxed PriorityQueue[(Double, Long)] allocated a tuple per
-    // CANDIDATE (25M at sf0.1) — measured 5.1s for a kernel whose
-    // arithmetic is ~0.8G flops; the sift loops below keep the kept
-    // set bit-identical (same sims, same strict total order).
-    def knnPartial(qs: Array[(Long, Array[Float])],
-                   ds: Array[(Long, Array[Float])],
-                   same: Boolean): Iterator[(Long, Array[Long], Array[Double])] = {
-      val qn = qs.map(q => math.sqrt(dotf(q._2, q._2)))
-      val dn = if (same) qn else ds.map(d => math.sqrt(dotf(d._2, d._2)))
+    // per-query bounded-heap kNN of the members at indices `qs` against
+    // the whole `cell`, the self pair skipped by id: the heap's root is
+    // the WORST kept neighbor under (sim desc, id asc). Primitive
+    // parallel-array heap (r15): the boxed PriorityQueue[(Double, Long)]
+    // allocated a tuple per CANDIDATE (25M at sf0.1) — measured 5.1s
+    // for a kernel whose arithmetic is ~0.8G flops; the sift loops below
+    // keep the kept set bit-identical (same sims, same strict total
+    // order). Yields (query id, kept neighbor ids).
+    def knn(cell: Array[(Long, Array[Float])], qs: Array[Int]): Iterator[(Long, Array[Long])] = {
+      val dn = cell.map(d => math.sqrt(dotf(d._2, d._2)))
       // worse(a, b): a ranks strictly below b under (sim desc, id asc)
       @inline def worse(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
         s1 < s2 || (s1 == s2 && i1 > i2)
-      qs.indices.iterator.map { i =>
-        val qe = qs(i)._2; val qid = qs(i)._1; val qnn = qn(i)
+      qs.iterator.map { i =>
+        val qe = cell(i)._2; val qid = cell(i)._1; val qnn = dn(i)
         val hs = new Array[Double](cap)
         val hid = new Array[Long](cap)
         var n = 0
@@ -666,58 +679,56 @@ object Index {
           }
         }
         var j = 0
-        while (j < ds.length) {
-          if (!(same && j == i)) {
-            val s = dotf(qe, ds(j)._2) / (qnn * dn(j) + 1e-12)
+        while (j < cell.length) {
+          val id = cell(j)._1
+          if (id != qid) {
+            val s = dotf(qe, cell(j)._2) / (qnn * dn(j) + 1e-12)
             if (n < cap) {
-              hs(n) = s; hid(n) = ds(j)._1; n += 1; siftUp(n - 1)
-            } else if (worse(hs(0), hid(0), s, ds(j)._1)) {
-              hs(0) = s; hid(0) = ds(j)._1; siftDown()
+              hs(n) = s; hid(n) = id; n += 1; siftUp(n - 1)
+            } else if (worse(hs(0), hid(0), s, id)) {
+              hs(0) = s; hid(0) = id; siftDown()
             }
           }
           j += 1
         }
-        // ONE object row per query — (qid, kept ids, kept sims) — not
-        // one per kept PAIR (r15): the per-pair tuple stream paid the
-        // object→Tungsten encoder 7.7M times at sf0.1; the array row
-        // pays it once per query and a codegen'd explode unpacks it.
-        (qid, java.util.Arrays.copyOf(hid, n), java.util.Arrays.copyOf(hs, n))
+        (qid, java.util.Arrays.copyOf(hid, n))
       }
     }
-    // Per-cell LOCAL dedup before emission (r16, guide §2.3 "shuffle
+    // Per-group LOCAL dedup before emission (r16, guide §2.3 "shuffle
     // fewer bytes"): union-kNN emits a pair from BOTH endpoints' kept
     // sets, and every caller re-dedupes the union — the callers'
     // distinct was measured re-aggregating 7.7M oriented rows (~3.5s
     // of `tfidf_cosine_guarded` at sf0.1) of which roughly half are
-    // the both-direction twins. Each small-path task holds its WHOLE
-    // cell's kept sets, so the surviving normalized pair set
-    // {(lo, hi) : hi ∈ kept(lo) ∨ lo ∈ kept(hi)} is computable
-    // locally: pack each normalized pair as (loRank<<32 | hiRank)
-    // over the cell's id-sorted member ranks (m ≤ blockSize < 2³¹),
-    // sort the packed array, emit each pair once grouped by lo —
-    // primitive-array work only (the r15 kernel discipline).
-    // Cross-CELL duplicates still exist; callers must still distinct
-    // (operator contract below).
-    val small = withSz.filter(col("csz") <= blockSize)
-      .select(col("cid"), col("doc_id"), col("emb"))
-      .as[(Long, Long, Array[Float])]
-      .groupByKey(_._1)
+    // the both-direction twins. A group holds its queries' kept sets,
+    // so it packs each normalized pair as (loRank<<32 | hiRank) over
+    // the WHOLE cell's id-sorted member ranks (m < 2³¹), sorts the
+    // packed array and emits each pair once, grouped by lo, in ONE
+    // object row per lo (the r15 kernel discipline: primitive arrays,
+    // and a codegen'd explode instead of the object→Tungsten encoder
+    // per pair). A pair whose endpoints query in different slices of
+    // the cell is emitted by both slices; cross-CELL duplicates exist
+    // too: callers must still distinct (operator contract above). No
+    // global distinct here: every caller unions this relation with its
+    // other rungs and distincts the union, and an inner distinct was
+    // measured as a second full exchange+agg of the pair stream (~4.6s
+    // at sf0.1).
+    members.groupByKey(r => (r._1, r._2))
       .flatMapGroups { (_, it) =>
         val rows = it.toArray
         val m = rows.length
-        val sortedIds = rows.map(_._2)
+        val sortedIds = rows.map(_._3)
         java.util.Arrays.sort(sortedIds)
-        if (m - 1 <= cap) {
-          // every in-cell neighbor survives the cap: the kept set is
-          // the whole cell — emit each unordered pair exactly once,
-          // already normalized (lo < hi by id)
+        val qs = rows.indices.filter(rows(_)._5).toArray
+        if (qs.length == m && m - 1 <= cap) {
+          // the group queries its whole cell and every in-cell neighbor
+          // survives the cap: the kept set is the whole cell — emit each
+          // unordered pair exactly once, already normalized (lo < hi)
           (0 until m - 1).iterator.map { k =>
             (sortedIds(k), java.util.Arrays.copyOfRange(sortedIds, k + 1, m))
           }
         } else {
-          val members = rows.map(r => (r._2, r._3))
           val packed = new scala.collection.mutable.ArrayBuilder.ofLong
-          knnPartial(members, members, same = true).foreach { case (qid, nids, _) =>
+          knn(rows.map(r => (r._3, r._4)), qs).foreach { case (qid, nids) =>
             val qr = java.util.Arrays.binarySearch(sortedIds, qid).toLong
             var j = 0
             while (j < nids.length) {
@@ -747,59 +758,6 @@ object Index {
         }
       }.toDF("doc_a", "nbrs")
       .select(col("doc_a"), explode(col("nbrs")).as("doc_b"))
-    val wBlk = Window.partitionBy("cid").orderBy("doc_id")
-    val repl = withSz.filter(col("csz") > blockSize)
-      .withColumn("bid",
-        ((row_number().over(wBlk) - 1) / lit(blockSize)).cast("long"))
-      .select(col("cid"), col("doc_id"), col("emb"), col("bid"),
-        explode(expr(
-          s"sequence(0L, (csz + ${blockSize - 1}) div $blockSize - 1)")).as("pb"))
-      .select(col("cid"), col("doc_id"), col("emb"), col("bid"),
-        least(col("bid"), col("pb")).as("bi"),
-        greatest(col("bid"), col("pb")).as("bj"))
-      .as[(Long, Long, Array[Float], Long, Long, Long)]
-    val partials = repl.groupByKey(r => (r._1, r._5, r._6))
-      .flatMapGroups { (key: (Long, Long, Long), it: Iterator[(Long, Long, Array[Float], Long, Long, Long)]) =>
-        val (cid, bi, bj) = key
-        val rows = it.toArray // ≤ 2·blockSize members per group
-        val a = rows.filter(_._4 == bi).map(r => (r._2, r._3))
-        val ps = if (bi == bj) knnPartial(a, a, same = true)
-        else {
-          val b = rows.filter(_._4 == bj).map(r => (r._2, r._3))
-          knnPartial(a, b, same = false) ++ knnPartial(b, a, same = false)
-        }
-        ps.map(t => (cid, t._1, t._2, t._3))
-      }.toDF("cid", "qid", "nids", "sims")
-      .select(col("cid"), col("qid"),
-        explode(arrays_zip(col("nids"), col("sims"))).as("z"))
-      .select(col("cid"), col("qid"),
-        col("z.nids").as("nid"), col("z.sims").as("sim"))
-    // merge partials PER CELL (r16 fix): the window was partitioned by
-    // qid alone, so a query co-probing several fat cells merged all
-    // its cells' partials into ONE top-cap — and a neighbor sharing
-    // k > 1 fat cells contributed k duplicate rows that ate the
-    // rk ≤ cap budget (a crafted 4-shared-fat-cell corpus kept 3
-    // copies of one neighbor instead of the top 3 neighbors). The
-    // declared contract is "merged ≡ the per-cell one-task result":
-    // keyed by (cid, qid) each cell's merge sees exactly one partial
-    // row per (q, n) — blk(q)×blk(n) is a single group — so row_number
-    // ranks distinct neighbors, identically to the small path.
-    val wMerge = Window.partitionBy("cid", "qid")
-      .orderBy(col("sim").desc, col("nid"))
-    val fat = partials
-      .withColumn("rk", row_number().over(wMerge))
-      .filter(col("rk") <= cap)
-      .select(col("qid").as("doc_a"), col("nid").as("doc_b"))
-    // normalized but NOT globally distinct'd (r15/r16): every caller
-    // unions this relation with the textual rungs and distincts the
-    // union — an inner global distinct would be a second full
-    // exchange+agg of the pair stream (measured ~4.6s at sf0.1)
-    // deduping rows the outer distinct dedupes again. The small path
-    // is per-cell-unique (dedup above); the fat path and CROSS-cell
-    // co-probes still emit duplicates.
-    small.unionByName(fat)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
   }
 
   /** Coverage floor below which [[tfidfBlockingCoverage]] declares the

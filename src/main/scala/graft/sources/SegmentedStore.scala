@@ -43,7 +43,8 @@ import org.apache.spark.sql.functions._
   *    marker, the takedown epoch and the corpus-epoch stamp carried,
   *    store-specific side tables written by the caller, then replaces
   *    the root through the [[StoreSwap]] two-rename. The `_tombstones`
-  *    tree does not travel: a fold purges what it resolved away.
+  *    tree does not travel: a fold purges what it resolved away. Like
+  *    an empty delta, an empty resolved content never folds.
   */
 private[graft] object SegmentedStore {
   private val SegPrefix = "seg="
@@ -258,6 +259,9 @@ private[graft] object SegmentedStore {
     * takedown epoch and the corpus-epoch stamp are carried, and the
     * [[StoreSwap]] two-rename replaces the root. Runs when there are
     * two or more segments, or tombstones to purge; otherwise a no-op.
+    * A `write` that emits no data file (every row resolved away under
+    * a partitioned write) folds nothing: the store keeps its segments
+    * and tombstones, which still resolve it to empty.
     */
   def fold(spark: SparkSession, path: String)(write: String => Unit,
            sideTables: (String, String) => Unit = (_, _) => ()): Unit = {
@@ -269,6 +273,10 @@ private[graft] object SegmentedStore {
     if (fs.exists(new Path(tmpRoot))) fs.delete(new Path(tmpRoot), true)
     val dataDir = l.segs.lastOption.fold(tmpRoot)(dir(tmpRoot, _))
     write(dataDir)
+    // everything resolved away (land's empty-delta rule): a data-less
+    // fold would fail schema inference on every later read, while the
+    // unfolded store still resolves to empty through its dead keys
+    if (!hasDataFiles(fs, new Path(dataDir))) { fs.delete(new Path(tmpRoot), true); return }
     // segment ids are not batch ids: without the max marker the
     // folded store's horizon would fall back to the wrong number
     segmentMarkers(fs, path, l.segs).maxOption.foreach(stampHorizon(fs, new Path(dataDir), _))

@@ -2597,18 +2597,40 @@ class OperatorsSpec extends SparkSpec {
       s"top-20 must be the cosine-1.0 profile pairs, got ${g.map(_.getDouble(2)).min}")
     assert(g.forall(r => r.getLong(0) / 2 === r.getLong(1) / 2),
       "every guarded pair must be a same-profile pair")
-    // the FAT-CELL block path (r15 — spreads a degenerate cell's
-    // Θ(n_c²) dot pass across block-pair tasks instead of one task
-    // per cell) must be row-identical to the in-task path: same sims,
-    // same (sim desc, id asc) keep order, merged partials ≡ one-pass
-    val want = g.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    spark.conf.set("spark.graft.knnCellBlock", "8")
-    try {
-      val blocked = Index.tfidfCosineGuardedOf(docs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(blocked === want,
-        "block-partitioned fat-cell kNN must equal the in-task path")
-    } finally spark.conf.unset("spark.graft.knnCellBlock")
+    // query slices (one kernel per (cell, query slice), each holding
+    // the whole cell as data) must not change the rung's pair set:
+    // one slice per cell, a few queries per slice, one query per slice
+    assertSliceInvariant(weightsOf(docs), cap = Index.ProfileCap, fewDots = 256L)
+  }
+
+  /** The tf-idf weighted frame [[Index.tfidfCosineGuardedOf]] feeds its
+    * profile rung.
+    */
+  private def weightsOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val base = Index.tokenStreamOf(docs).groupBy("doc_id", "term")
+      .agg(count(lit(1)).cast("double").as("tf"))
+    val nDf = docs.agg(count(lit(1)).cast("double").as("n"))
+    val dfT = base.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
+    base.join(dfT, "term").crossJoin(broadcast(nDf))
+      .filter(col("df") < col("n"))
+      .select(col("doc_id"), col("term"), col("df"), col("n"),
+        (col("tf") * log(col("n") / col("df"))).as("w"))
+  }
+
+  /** The profile rung's DISTINCT pair set is the same at the default
+    * dot budget (one slice per cell), at `fewDots` (a few queries per
+    * slice) and at a budget of 1 (one slice per member).
+    */
+  private def assertSliceInvariant(w: org.apache.spark.sql.DataFrame, cap: Int,
+                                   fewDots: Long): Unit = {
+    def pairs(taskDots: Long): Set[(Long, Long)] =
+      Index.profileIvfCandidatesOf(w, cap = cap, taskDots = taskDots).distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = pairs(Index.ProfileTaskDots)
+    assert(want.nonEmpty)
+    Seq(fewDots, 1L).foreach { d =>
+      assert(pairs(d) === want, s"the rung's pair set changed at taskDots = $d")
+    }
   }
 
   test("profile rung: per-cell dedup emits the normalized union-kNN pair set") {
@@ -2621,33 +2643,18 @@ class OperatorsSpec extends SparkSpec {
       (i.toLong, (0 until 8).flatMap(j =>
         Seq.fill((i + j) % 5)(s"v$j")).mkString(" "))
     }
-    val docsDf = rows.toDF("doc_id", "text")
-    val base = Index.tokenStreamOf(docsDf).groupBy("doc_id", "term")
-      .agg(count(lit(1)).cast("double").as("tf"))
-    val nDf = docsDf.agg(count(lit(1)).cast("double").as("n"))
-    val dfT = base.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val w = base.join(dfT, "term").crossJoin(broadcast(nDf))
-      .filter(col("df") < col("n"))
-      .select(col("doc_id"), col("term"), col("df"), col("n"),
-        (col("tf") * log(col("n") / col("df"))).as("w"))
+    val w = weightsOf(rows.toDF("doc_id", "text"))
     val raw = Index.profileIvfCandidatesOf(w, cap = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(raw.nonEmpty && raw.forall { case (a, b) => a < b },
       "rung rows must be normalized doc_a < doc_b")
-    // the r16 small path dedupes per cell, so a pair may repeat at
+    // one slice per cell dedupes per cell, so a pair may repeat at
     // most once per SHARED probed cell — never once per kept direction
     val worstDup = raw.groupBy(identity).map(_._2.length).max
     assert(worstDup <= Index.ProfileProbes,
       s"a pair repeated $worstDup times — more than the co-probe bound")
-    // semantics: the DISTINCT'd relation must equal the fat-cell block
-    // path's (both-direction emission + window merge, distinct'd)
-    val want = {
-      spark.conf.set("spark.graft.knnCellBlock", "8")
-      try Index.profileIvfCandidatesOf(w, cap = 3).distinct().collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally spark.conf.unset("spark.graft.knnCellBlock")
-    }
-    assert(raw.toSet === want,
-      "small-path deduped relation must equal the fat-path relation as a set")
+    // semantics: the DISTINCT'd relation does not depend on how a
+    // cell's queries are sliced
+    assertSliceInvariant(w, cap = 3, fewDots = 48L)
   }
 }

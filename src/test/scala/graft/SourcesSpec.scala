@@ -714,6 +714,31 @@ class SourcesSpec extends SparkSpec {
     assert(again === r1)
   }
 
+  test("index store: a fold whose every doc is taken down keeps the store readable as empty") {
+    import spark.implicits._
+    val path = tmpDir("graft-idxfoldempty") + "/index"
+    val seg0 = Seq((0L, "spark key order"), (1L, "key order")).toDF("doc_id", "text")
+    val seg1 = Seq((2L, "slow spark"), (1L, "key order again")).toDF("doc_id", "text")
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(seg0), path, 0L, nBuckets = 4))
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(seg1), path, 1L, nBuckets = 4))
+    IndexStore.delete(spark, path, Seq(0L, 1L, 2L))
+    // the resolved content is empty: the partitioned rewrite emits no
+    // data file, so the fold must not swap a data-less root in
+    IndexStore.compactSegments(spark, path)
+    assert(IndexStore.load(spark, path).count() === 0L)
+    assert(IndexStore.lookup(spark, path, "spark", nBuckets = 4).count() === 0L)
+    // the store still takes landings, and the next fold reads them
+    val seg2 = Seq((3L, "spark again")).toDF("doc_id", "text")
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(seg2), path, 2L, nBuckets = 4))
+    IndexStore.compactSegments(spark, path)
+    assert(IndexStore.segmentIds(spark, path) === Seq(2L))
+    assert(!new java.io.File(s"$path/_tombstones").exists())
+    assert(IndexStore.lookup(spark, path, "spark", nBuckets = 4)
+      .select("doc_id").collect().map(_.getLong(0)).toSeq === Seq(3L))
+    assert(IndexStore.load(spark, path).select("doc_id").distinct()
+      .collect().map(_.getLong(0)).toSeq === Seq(3L))
+  }
+
   test("corpus store: lang-partitioned layout prunes single-language reads") {
     val dir = tmpDir("graft-corpus") + "/corpus"
     val docs = sources.Tables.documents(spark, sfDir)

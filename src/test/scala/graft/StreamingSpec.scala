@@ -547,6 +547,40 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     assert(spark.read.parquet(storePath).select("vec_id").as[Long].collect().toSet === Set(101L))
   }
 
+  test("stream_embed_index: a fold whose every vector is taken down keeps the store readable as empty") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft-embed-foldempty").toString
+    val (centPath, storePath) = (s"$base/centroids", s"$base/store")
+    graft.operators.Similarity.saveCentroids(
+      Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("vec_id", "embedding"),
+      centPath)
+    def ids(): Set[Long] =
+      Stream.loadEmbedStore(spark, storePath).select("vec_id").as[Long].collect().toSet
+    val in = MemoryStream[(Long, Array[Float])]
+    val q = Stream.embedIndexMaintenance(
+      in.toDF().toDF("vec_id", "embedding"), centPath, storePath).start()
+    try {
+      in.addData((100L, Array(0.9f, 0.1f)), (101L, Array(0.1f, 0.8f)))
+      q.processAllAvailable()
+      in.addData((102L, Array(1f, 0.2f)))
+      q.processAllAvailable()
+      sources.Tombstones.append(spark, storePath, Seq(100L, 101L, 102L), key = "vec_id")
+      // the bucket-partitioned rewrite of an empty content emits no data
+      // file: the fold must not swap a data-less segment in
+      Stream.compactEmbedStore(spark, storePath)
+      assert(ids() === Set.empty[Long])
+      // the store still takes landings, and the next fold reads them
+      in.addData((103L, Array(0.2f, 0.9f)))
+      q.processAllAvailable()
+      assert(ids() === Set(103L))
+    } finally q.stop()
+    Stream.compactEmbedStore(spark, storePath)
+    assert(!new java.io.File(s"$storePath/_tombstones").exists())
+    assert(ids() === Set(103L))
+    assert(spark.read.parquet(storePath).select("vec_id").as[Long].collect().toSet === Set(103L))
+  }
+
   test("stream_knn: query batches served from the saved bucket-pruned store") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -9,7 +9,10 @@ changed file, the added and removed lines that hold code: blank lines
 and comment-only lines (`//` lines, and every line inside a `/* ... */`
 block) are not counted. Comment state is tracked over each whole file,
 so a diff line is classified by the file it belongs to, not by its
-text alone. The last lines give the totals for src/main and src/test.
+text alone. The totals for src/main and src/test follow, then the
+`spark.graft.*` conf keys (knobs) that src/main code lines spell as
+string literals, counted at both revisions, with the keys gained and
+lost.
 """
 import re
 import subprocess
@@ -17,6 +20,7 @@ import sys
 
 ROOTS = ("src/main", "src/test")
 HUNK = re.compile(r"^@@ -(\d+)(?:,(\d+))? \+(\d+)(?:,(\d+))? @@")
+KNOB = re.compile(r'"(spark\.graft\.[A-Za-z0-9_.]+)"')
 
 
 def git(*args):
@@ -106,6 +110,26 @@ def main(argv):
         print(f"{path}: +{plus} -{minus}")
     for root, (plus, minus) in totals.items():
         print(f"{root} total: +{plus} -{minus} (net {plus - minus:+d})")
+    old, new = knobs(base), knobs(head)
+    print(f"src/main conf keys: {len(old)} -> {len(new)}"
+          + "".join(f" +{k}" for k in sorted(new - old))
+          + "".join(f" -{k}" for k in sorted(old - new)))
+
+
+def knobs(rev):
+    """The `spark.graft.*` keys quoted on src/main code lines at `rev`."""
+    if rev is None:
+        paths = git("ls-files", "--cached", "--others", "--exclude-standard",
+                    "--", ROOTS[0]).splitlines()
+    else:
+        paths = git("ls-tree", "-r", "--name-only", rev, "--",
+                    ROOTS[0]).splitlines()
+    keys = set()
+    for path in paths:
+        lines = source(rev, path)
+        for n in code_lines(lines):
+            keys.update(KNOB.findall(lines[n - 1]))
+    return keys
 
 
 if __name__ == "__main__":
