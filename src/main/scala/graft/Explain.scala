@@ -102,8 +102,9 @@ object Explain {
     // (a parquet scan here means a branch re-derived the distinct)
     "basket_lift" -> Rule(required = Seq("BroadcastHashJoin"),
       forbidden = Seq("Scan parquet")),
-    // the trainer's final plan reads only checkpointed vocab state (the
-    // corpus was scanned exactly once, into the round-0 checkpoint)
+    // the merge table is a local relation of the merges the trainer
+    // collected; the corpus was scanned exactly once, into the word-table
+    // checkpoint, so the final plan must not scan parquet
     "bpe_train" -> Rule(forbidden = Seq("Scan parquet")),
     // assembly packs via broadcast offsets; no corpus-wide window
     "media_interleave" -> Rule(required = Seq("BroadcastHashJoin")),

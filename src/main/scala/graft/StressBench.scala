@@ -1,52 +1,44 @@
 package graft
 
 /** Rounds-vs-time curve for the BPE trainer (SURVEY §6; r10 VERDICT
-  * item 2): times `bpe_train` at production round counts via the
-  * [[graft.operators.TextAnalysis.BpeRoundsConfKey]] knob. Usage:
-  * `runMain graft.BpeStress [rounds,rounds,...]` (default 8,64,256);
-  * dirs via SPARK_GRAFT_STRESS_DIRS (default sf0.1).
+  * item 2): times [[graft.operators.TextAnalysis.bpeTrainerOf]] at
+  * production merge counts. Usage:
+  * `runMain graft.BpeStress [rounds,rounds,...] [window] [sliceCap]`
+  * (default 8,64,256; window and slice cap default to the trainer's
+  * `BpeWindow` and `BpeSliceCap` — smaller ones force many
+  * super-rounds or the batched fallback); dirs via
+  * SPARK_GRAFT_STRESS_DIRS (default sf0.1).
   */
 object BpeStress {
   def main(args: Array[String]): Unit = {
     val rounds =
       if (args.nonEmpty) args(0).split(',').toSeq.map(_.toInt)
       else Seq(8, 64, 256)
+    val window = args.lift(1).map(_.toInt).getOrElse(operators.TextAnalysis.BpeWindow)
+    val cap = args.lift(2).map(_.toInt).getOrElse(operators.TextAnalysis.BpeSliceCap)
     val dirs = sys.env.getOrElse("SPARK_GRAFT_STRESS_DIRS",
       "/root/testdata/sf0.1").split(',').toSeq
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.entry(spark).count() // warm codegen/readers/shuffle
-    // optional 2nd arg: trainer path (hot | batched) for A/B curves;
-    // 3rd/4th: window and slice-cap overrides (multi-super-round and
-    // fallback measurements at production shapes)
-    args.drop(1).headOption.foreach(t =>
-      spark.conf.set(operators.TextAnalysis.BpeTrainerConfKey, t))
-    args.drop(2).headOption.foreach(w =>
-      spark.conf.set(operators.TextAnalysis.BpeWindowConfKey, w))
-    args.drop(3).headOption.foreach(c =>
-      spark.conf.set(operators.TextAnalysis.BpeSliceCapConfKey, c))
     for (dir <- dirs; r <- rounds) {
-      spark.conf.set(operators.TextAnalysis.BpeRoundsConfKey, r.toString)
       // `zipf:<n>` = the shared Zipfian synthetic (20k-term vocab) —
       // the sf corpora's 31-word vocabulary exhausts all pair
       // structure at ~89 merges, far too small to exercise a
       // production merge count
       val t0 = System.nanoTime()
       val merges = operators.TextAnalysis
-        .bpeTrainOf(StressData.docsOf(spark, dir))
+        .bpeTrainerOf(StressData.docsOf(spark, dir), r, window, cap)._1
         .queryExecution.toRdd.count()
       val t = (System.nanoTime() - t0) / 1e9
       val scans = operators.TextAnalysis.lastBpeScans
       val mps = if (scans > 0) merges.toDouble / scans else merges.toDouble
-      val trainer = spark.conf
-        .getOption(operators.TextAnalysis.BpeTrainerConfKey).getOrElse("hot")
       val sup = operators.TextAnalysis.lastBpeSuperRounds
       val fb = operators.TextAnalysis.lastBpeFellBack
-      println(f"BPESTRESS dir=$dir%-24s trainer=$trainer%-8s rounds=$r%-6d " +
-        f"merges=$merges%-6d scans=$scans%-5d superrounds=$sup%-5d " +
-        f"fellback=$fb%-5s merges/scan=$mps%7.1f $t%8.2fs")
+      println(f"BPESTRESS dir=$dir%-24s window=$window%-6d cap=$cap%-8d " +
+        f"rounds=$r%-6d merges=$merges%-6d scans=$scans%-5d " +
+        f"superrounds=$sup%-5d fellback=$fb%-5s merges/scan=$mps%7.1f $t%8.2fs")
     }
-    spark.conf.unset(operators.TextAnalysis.BpeRoundsConfKey)
     spark.stop()
   }
 }

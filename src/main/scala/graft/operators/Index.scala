@@ -537,9 +537,9 @@ object Index {
     * engines assign identical cells and identical kNN ranks.
     *
     * CONTRACT: the returned relation is normalized (doc_a < doc_b)
-    * but MAY CONTAIN DUPLICATES — a pair repeats once per shared probed
-    * cell, and at most once more per cell when that cell's queries
-    * span several slices (each endpoint's slice emits it). Callers
+    * but MAY CONTAIN DUPLICATES — a pair repeats at most twice per
+    * shared probed cell (once per endpoint that keeps the other),
+    * however the cell's queries are sliced. Callers
     * must `.distinct()` after unioning it with their other candidate
     * rungs; the ≤ [[ProfileProbes]]·[[ProfileCap]]·N bound holds for
     * the DISTINCT'd relation, which does not depend on `taskDots`.
@@ -694,70 +694,36 @@ object Index {
         (qid, java.util.Arrays.copyOf(hid, n))
       }
     }
-    // Per-group LOCAL dedup before emission (r16, guide §2.3 "shuffle
-    // fewer bytes"): union-kNN emits a pair from BOTH endpoints' kept
-    // sets, and every caller re-dedupes the union — the callers'
-    // distinct was measured re-aggregating 7.7M oriented rows (~3.5s
-    // of `tfidf_cosine_guarded` at sf0.1) of which roughly half are
-    // the both-direction twins. A group holds its queries' kept sets,
-    // so it packs each normalized pair as (loRank<<32 | hiRank) over
-    // the WHOLE cell's id-sorted member ranks (m < 2³¹), sorts the
-    // packed array and emits each pair once, grouped by lo, in ONE
-    // object row per lo (the r15 kernel discipline: primitive arrays,
-    // and a codegen'd explode instead of the object→Tungsten encoder
-    // per pair). A pair whose endpoints query in different slices of
-    // the cell is emitted by both slices; cross-CELL duplicates exist
-    // too: callers must still distinct (operator contract above). No
-    // global distinct here: every caller unions this relation with its
-    // other rungs and distincts the union, and an inner distinct was
-    // measured as a second full exchange+agg of the pair stream (~4.6s
-    // at sf0.1).
+    // Each group emits its queries' kept sets as (query, kept ids) rows,
+    // normalized to doc_a < doc_b after a codegen'd explode (the r15
+    // kernel discipline: primitive arrays out of the kernel, no
+    // object→Tungsten encoder per pair). A pair kept by both endpoints
+    // is emitted twice per shared cell; the callers' distinct over the
+    // rung union removes the twins (the exchange into it carries the
+    // same records either way: its map-side partial aggregate drops
+    // them). No global distinct here: every caller unions this relation
+    // with its other rungs and distincts the union, and an inner
+    // distinct was measured as a second full exchange+agg of the pair
+    // stream (~4.6s at sf0.1).
     members.groupByKey(r => (r._1, r._2))
       .flatMapGroups { (_, it) =>
         val rows = it.toArray
         val m = rows.length
-        val sortedIds = rows.map(_._3)
-        java.util.Arrays.sort(sortedIds)
         val qs = rows.indices.filter(rows(_)._5).toArray
         if (qs.length == m && m - 1 <= cap) {
           // the group queries its whole cell and every in-cell neighbor
           // survives the cap: the kept set is the whole cell — emit each
           // unordered pair exactly once, already normalized (lo < hi)
+          val sortedIds = rows.map(_._3)
+          java.util.Arrays.sort(sortedIds)
           (0 until m - 1).iterator.map { k =>
             (sortedIds(k), java.util.Arrays.copyOfRange(sortedIds, k + 1, m))
           }
-        } else {
-          val packed = new scala.collection.mutable.ArrayBuilder.ofLong
-          knn(rows.map(r => (r._3, r._4)), qs).foreach { case (qid, nids) =>
-            val qr = java.util.Arrays.binarySearch(sortedIds, qid).toLong
-            var j = 0
-            while (j < nids.length) {
-              val nr = java.util.Arrays.binarySearch(sortedIds, nids(j)).toLong
-              packed += (if (qr < nr) (qr << 32) | nr else (nr << 32) | qr)
-              j += 1
-            }
-          }
-          val arr = packed.result()
-          java.util.Arrays.sort(arr)
-          // sorted packed pairs: duplicates adjacent, groups share lo
-          new Iterator[(Long, Array[Long])] {
-            private var k = 0
-            def hasNext: Boolean = k < arr.length
-            def next(): (Long, Array[Long]) = {
-              val lo = (arr(k) >>> 32).toInt
-              val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-              var prev = -1L
-              while (k < arr.length && (arr(k) >>> 32).toInt == lo) {
-                if (arr(k) != prev)
-                  buf += sortedIds((arr(k) & 0xffffffffL).toInt)
-                prev = arr(k); k += 1
-              }
-              (sortedIds(lo), buf.result())
-            }
-          }
-        }
+        } else knn(rows.map(r => (r._3, r._4)), qs)
       }.toDF("doc_a", "nbrs")
       .select(col("doc_a"), explode(col("nbrs")).as("doc_b"))
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
   }
 
   /** Coverage floor below which [[tfidfBlockingCoverage]] declares the

@@ -931,195 +931,105 @@ object TextAnalysis {
 
   /** Number of BPE merge rounds [[bpeTrain]] runs AT THE GATE — fixed
     * so the DuckDB oracle (a chained CTE replaying the same rounds)
-    * and the Spark loop always agree on the trained table's shape. */
+    * and the Spark trainer always agree on the trained table's shape. */
   val BpeRounds = 8
 
-  /** Merge-count knob (r10 VERDICT item 2): `spark.graft.bpeRounds`
-    * overrides [[BpeRounds]] for production-scale training runs — a
-    * real tokenizer is ~30k merges. The GATE keys always run at the
-    * default: the oracle's chained-CTE replay is pinned to 8, and the
-    * ≤8-merge path keeps the measured-optimal one-merge-per-scan
-    * loop. ABOVE the gate count the trainer switches to BATCHED
-    * merges (r11 VERDICT item 2): each corpus-table scan accepts the
-    * longest provably-sequence-equivalent prefix of the top
-    * candidates (symbol-disjoint, strictly dominating every pair
-    * that an earlier accepted merge could create — see
-    * [[compatibleBatch]]), so merges-per-scan ≫ 1 and a ~30k-merge
-    * tokenizer pays thousands of scans, not 30k job floors. Batched
-    * output is IDENTICAL to the one-at-a-time trainer
-    * (reference-trainer-exact spec at 1k+ merges).
+  /** Merge-count knob: `spark.graft.bpeRounds` overrides [[BpeRounds]]
+    * for production-scale training runs — a real tokenizer is ~30k
+    * merges. The GATE keys always run at the default, because the
+    * oracle's chained-CTE replay is pinned to 8. Every merge count runs
+    * the one trainer, [[bpeTrainerOf]]. A value that is not an integer
+    * ≥ 1 is rejected with an IllegalArgumentException naming the key.
     */
   val BpeRoundsConfKey = "spark.graft.bpeRounds"
 
-  /** Max merges accepted per scan in the batched trainer. */
+  /** Max merges accepted per scan in the batched overflow fallback. */
   val BpeBatchMax = 256
 
-  /** Trainer-path knob for ABOVE-gate merge counts:
-    * `spark.graft.bpeTrainer` = `hot` (default — the incremental
-    * hot-slice trainer, [[bpeHotSliceLoop]]) or `batched` (the r12
-    * per-scan batched loop, kept as the hot path's overflow fallback
-    * and for A/B measurement). The ≤[[BpeRounds]] gate path is always
-    * the sequential loop regardless of this knob.
-    */
-  val BpeTrainerConfKey = "spark.graft.bpeTrainer"
-
-  /** Candidate-window size for the hot-slice trainer: the top-W
+  /** Candidate-window size of [[bpeTrainerOf]]: the top-W
     * (freq DESC, l, r) pair candidates pulled driver-side per
     * super-round. Selection inside a super-round is provably exact
     * only while the running argmax stays STRICTLY above the first
     * un-windowed frequency, so a bigger window buys longer exact
     * local runs at the cost of a bigger slice predicate.
     */
-  val BpeWindowConfKey = "spark.graft.bpeWindow"
-  val BpeWindowDefault = 4096
+  val BpeWindow = 4096
 
-  /** Max word rows the hot-slice trainer may pull driver-side per
+  /** Max word rows [[bpeTrainerOf]] may pull driver-side per
     * super-round (the words containing ≥1 window pair). Overflow
-    * falls back to the distributed batched loop for the remaining
+    * falls back to the distributed batched core for the remaining
     * merges — the cap is what keeps the driver's memory bounded when
     * a window pair is near-universal across a huge vocabulary.
     */
-  val BpeSliceCapConfKey = "spark.graft.bpeSliceCap"
-  val BpeSliceCapDefault = 1000000
+  val BpeSliceCap = 1000000
 
   private def bpeRoundCount(spark: SparkSession): Int =
-    spark.conf.getOption(BpeRoundsConfKey).map(_.toInt).getOrElse(BpeRounds)
+    spark.conf.getOption(BpeRoundsConfKey).fold(BpeRounds) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"$BpeRoundsConfKey must be an integer >= 1, got '$v'"))
+    }
 
   /** ITERATED BPE tokenizer training — the merge loop [[bpeMerges]]
-    * only computes round 1 of: [[BpeRounds]] deterministic rounds,
-    * each = one vocab-bounded adjacent-pair rollup, a TakeOrdered
-    * argmax (ties broken (freq DESC, l, r) on both engines), and a
-    * broadcast of the winning merge applied to every word via a
-    * greedy left-to-right `aggregate` fold over its symbol array —
-    * the Lloyd-iteration shape the engine already uses for
-    * `knn_ivf_trained` (broadcast model, re-score, repeat). State
-    * between rounds is the (symbols, count) WORD table — bounded by
-    * |vocab|, never by corpus size, which is what makes tokenizer
-    * training feasible at 100 TB: the corpus is touched once (the
-    * initial term rollup); every round after that runs on the
-    * checkpointed vocab frame. Output: one row per round —
-    * (round, l, r, merged, freq) — the ordered merge table a BPE
-    * tokenizer IS.
+    * only computes round 1 of: [[BpeRounds]] deterministic merges
+    * (`spark.graft.bpeRounds` above the gate), each the (freq DESC,
+    * l, r) argmax over adjacent symbol pairs (ties broken in code-point
+    * order on both engines), applied to every word by a greedy
+    * left-to-right rewrite. State between merges is the (symbols,
+    * count) WORD table — bounded by |vocab|, never by corpus size,
+    * which is what makes tokenizer training feasible at 100 TB: the
+    * corpus is touched once (the initial term rollup). Output: one row
+    * per merge — (round, l, r, merged, freq) — the ordered merge table
+    * a BPE tokenizer IS.
     */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
     bpeTrainOf(Tables.documents(spark, dir))
 
   def bpeTrainOf(docs: DataFrame): DataFrame =
-    bpeLoopOf(docs)._1
-      .reduce(_.unionByName(_))
-      .select(col("round"), col("l"), col("r"),
-        concat(col("l"), col("r")).as("merged"), col("freq"))
-      .orderBy("round")
+    bpeTrainerOf(docs, bpeRoundCount(docs.sparkSession))._1
 
-  /** The shared trainer loop: returns (per-round winner frames, the
-    * final (term, syms, cnt) word table after all [[BpeRounds]]
-    * merges — i.e. the trained tokenizer APPLIED to the vocab, which
-    * [[bpeFertility]] evaluates).
-    */
-  private def bpeLoopOf(docs: DataFrame): (Seq[DataFrame], DataFrame) = {
-    val nRounds = bpeRoundCount(docs.sparkSession)
-    val words0 = Index.tokenStreamOf(docs)
-      .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      .select(col("term"), split(col("term"), "").as("syms"), col("cnt"))
-      .localCheckpoint() // vocab-bounded; every round reads this, not the corpus
-    if (nRounds <= BpeRounds) bpeSequentialLoop(words0, nRounds)
-    else docs.sparkSession.conf.getOption(BpeTrainerConfKey)
-      .getOrElse("hot") match {
-        case "batched" => bpeBatchedLoop(words0, nRounds)
-        case _ => bpeHotSliceLoop(words0, nRounds)
-      }
-  }
-
-  /** The gate-count trainer: one merge per scan, the shape the DuckDB
-    * oracle replays CTE-by-CTE. Kept verbatim for ≤ [[BpeRounds]].
-    */
-  private def bpeSequentialLoop(words0: DataFrame,
-                                nRounds: Int): (Seq[DataFrame], DataFrame) = {
-    var words = words0
-    val rounds = (1 to nRounds).map { round =>
-      val win = words
-        .select(col("cnt"), explode(when(size(col("syms")) >= 2,
-          arrays_zip(slice(col("syms"), lit(1), size(col("syms")) - 1),
-            slice(col("syms"), lit(2), size(col("syms")) - 1)))
-          .otherwise(array().cast("array<struct<`0`:string,`1`:string>>"))).as("p"))
-        .groupBy(col("p.0").as("l"), col("p.1").as("r"))
-        .agg(sum(col("cnt")).as("freq"))
-        .orderBy(col("freq").desc, col("l"), col("r")).limit(1)
-        .select(lit(round.toLong).as("round"), col("l"), col("r"), col("freq"))
-        .localCheckpoint() // 1 row; keeps each round's lineage flat
-        // (measured: skipping this and letting the broadcast re-derive
-        // the argmax per consumer is 4x SLOWER at sf0.1 — 14.6s encode)
-      // greedy left-to-right merge: after a merge the fold continues
-      // AFTER the merged token (the merged symbol can't immediately
-      // re-match its own left half), which is standard BPE apply order.
-      // LEFT join on true (not a cross join) so a degenerate round with
-      // NO adjacent pairs left (win empty) leaves words unchanged —
-      // null l/r makes the fold's match condition NULL, so every symbol
-      // takes the append branch — instead of emptying the whole table
-      words = words.join(broadcast(win.select(col("l"), col("r"))), lit(true), "left")
-        .select(col("term"), expr("""aggregate(syms, cast(array() as array<string>),
-            (acc, x) -> case
-              when size(acc) > 0 and element_at(acc, -1) = l and x = r
-              then concat(slice(acc, 1, size(acc) - 1), array(concat(l, r)))
-              else concat(acc, array(x)) end)""").as("syms"),
-          col("cnt"))
-      words = words.localCheckpoint()
-      win
-    }
-    (rounds, words)
-  }
-
-  /** Corpus-table scan count of the most recent [[bpeBatchedLoop]]
-    * run — the denominator of the §6 merges-per-scan curve
+  /** Pair-aggregation scan count of the most recent [[bpeTrainerOf]]
+    * run (1 for the initial pair rollup, plus one per batched-fallback
+    * scan) — the denominator of the §6 merges-per-scan curve
     * ([[graft.BpeStress]] reads it). Diagnostic only; never feeds a
     * query result.
     */
   @volatile private[graft] var lastBpeScans: Int = 0
 
-  /** Super-round count of the most recent [[bpeHotSliceLoop]] run
-    * (one super-round = one window fetch + one slice pull + one
+  /** Super-round count of the most recent [[bpeTrainerOf]] run (one
+    * super-round = one window fetch + one slice pull + one
     * write-back). Diagnostic only, like [[lastBpeScans]].
     */
   @volatile private[graft] var lastBpeSuperRounds: Int = 0
 
-  /** Whether the most recent [[bpeHotSliceLoop]] run overflowed its
-    * slice cap and delegated remaining merges to the batched loop.
+  /** Whether the most recent [[bpeTrainerOf]] run overflowed its slice
+    * cap and delegated the remaining merges to [[bpeBatchedCore]].
     */
   @volatile private[graft] var lastBpeFellBack: Boolean = false
 
-  /** The r12 batched trainer: BATCHED merges, sequence-equivalent to
-    * the one-at-a-time loop. Per corpus-table scan: take the top
-    * [[BpeBatchMax]]+1 pair candidates (one bounded TakeOrdered
-    * collect — the driver-side list a trainer legitimately holds,
-    * like hybridServe's per-batch term list), select the provably
-    * independent prefix ([[compatibleBatch]]), apply ALL of them in
-    * ONE fold pass over the word table via a broadcast map literal,
-    * checkpoint, repeat. Scans needed ≈ merges / batch size instead
-    * of merges, which is what makes a ~30k-merge production tokenizer
-    * affordable: per-scan cost stays word-table-bounded and the job
-    * floor amortizes across the whole batch.
-    */
-  private def bpeBatchedLoop(words0: DataFrame,
-                             totalMerges: Int): (Seq[DataFrame], DataFrame) = {
-    val spark = words0.sparkSession
-    import spark.implicits._
-    lastBpeScans = 0
-    val (got, words) = bpeBatchedCore(words0, totalMerges)
-    val merges = got.zipWithIndex.map { case ((l, r, f), i) =>
-      (i + 1L, l, r, f)
-    }
-    val mergeDf =
-      if (merges.isEmpty)
-        Seq.empty[(Long, String, String, Long)].toDF("round", "l", "r", "freq")
-      else merges.toDF("round", "l", "r", "freq")
-    (Seq(mergeDf), words)
-  }
+  /** A word's adjacent symbol pairs, as an array of (`0`, `1`) structs
+    * over its `syms`; empty below two symbols. */
+  private val bpeAdjacent: Column = when(size(col("syms")) >= 2,
+    arrays_zip(slice(col("syms"), lit(1), size(col("syms")) - 1),
+      slice(col("syms"), lit(2), size(col("syms")) - 1)))
+    .otherwise(array().cast("array<struct<`0`:string,`1`:string>>"))
 
-  /** The batched loop's resumable core: runs up to `totalMerges`
-    * batched merges from the given word table, incrementing
-    * [[lastBpeScans]] per pair re-aggregation WITHOUT resetting it —
-    * so the hot-slice trainer's overflow fallback keeps one honest
-    * scan tally across both paths.
+  /** (l, r, freq): every adjacent symbol pair's count over a
+    * (term, syms, cnt) word table. */
+  private def bpePairCounts(words: DataFrame): DataFrame =
+    words.select(col("cnt"), explode(bpeAdjacent).as("p"))
+      .groupBy(col("p.0").as("l"), col("p.1").as("r"))
+      .agg(sum(col("cnt")).as("freq"))
+
+  /** The trainer's overflow fallback: BATCHED merges,
+    * sequence-equivalent to one-at-a-time BPE, fully distributed. Per
+    * pair re-aggregation (scan): take the top [[BpeBatchMax]]+1 pair
+    * candidates (one bounded TakeOrdered collect), select the provably
+    * independent prefix ([[compatibleBatch]]), apply ALL of them in
+    * ONE fold pass over the word table via a map literal, repeat. It
+    * runs up to `totalMerges` merges from the given word table and
+    * adds one to [[lastBpeScans]] per scan. Measured at 1.4–2.0 merges
+    * per scan where a one-merge step does 1, and no slice is pulled to
+    * the driver, so no vocabulary shape can overflow it.
     */
   private def bpeBatchedCore(words0: DataFrame, totalMerges: Int)
       : (Seq[(String, String, Long)], DataFrame) = {
@@ -1129,13 +1039,7 @@ object TextAnalysis {
     var sinceCheckpoint = 0
     while (merges.size < totalMerges && !exhausted) {
       lastBpeScans += 1
-      val top = words
-        .select(col("cnt"), explode(when(size(col("syms")) >= 2,
-          arrays_zip(slice(col("syms"), lit(1), size(col("syms")) - 1),
-            slice(col("syms"), lit(2), size(col("syms")) - 1)))
-          .otherwise(array().cast("array<struct<`0`:string,`1`:string>>"))).as("p"))
-        .groupBy(col("p.0").as("l"), col("p.1").as("r"))
-        .agg(sum(col("cnt")).as("freq"))
+      val top = bpePairCounts(words)
         .orderBy(col("freq").desc, col("l"), col("r"))
         .limit(BpeBatchMax + 1)
         .collect()
@@ -1233,7 +1137,27 @@ object TextAnalysis {
     if (strict.isEmpty) accepted.take(1).toSeq else strict
   }
 
-  /** The hot-slice trainer's local merge kernel: EXACT sequential BPE
+  /** Code-point order on strings: the order of their UTF-8 bytes,
+    * which is how Spark's `orderBy` and DuckDB's `ORDER BY` compare
+    * strings. `String.compareTo` compares UTF-16 units instead and puts
+    * a supplementary-plane symbol (a surrogate pair, units D800–DFFF)
+    * before one in U+E000–U+FFFF. Here the first differing unit is
+    * ranked with the surrogate range moved above E000–FFFF, so nothing
+    * is allocated per comparison.
+    */
+  private[graft] object CodePointOrder extends Ordering[String] {
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+      if (i == n) Integer.compare(a.length, b.length)
+      else Integer.compare(rank(a.charAt(i)), rank(b.charAt(i)))
+    }
+    private def rank(c: Char): Int =
+      if (c < 0xD800) c else if (c < 0xE000) c + 0x2000 else c - 0x800
+  }
+
+  /** The trainer's local merge kernel: EXACT sequential BPE
     * over the driver-held slice, sound against the un-pulled tail via
     * the window's tail bound. Inputs: `slice` = every word containing
     * ≥1 window pair adjacently (term → (syms, word count)); `window` =
@@ -1256,7 +1180,11 @@ object TextAnalysis {
     *    argmax is exact while its frequency is STRICTLY above
     *    `tailBound`. The very first selection is additionally exact
     *    at equality: the window is a fresh (freq DESC, l, r) prefix,
-    *    so its head precedes every un-windowed tie lexicographically.
+    *    so its head precedes every un-windowed tie in code-point order.
+    *
+    * Ties among tracked pairs break (freq DESC, l, r) in
+    * [[CodePointOrder]], the order the window itself was fetched in
+    * (Spark's `orderBy`) and the order the DuckDB oracle uses.
     *
     * Returns (accepted merges in order, changed term → new syms, net
     * pair deltas) — the write-back payload. Pure Scala so the
@@ -1281,7 +1209,7 @@ object TextAnalysis {
     val deltas = mutable.Map.empty[(String, String), Long]
     val created = mutable.Set.empty[String] // symbols merged this super-round
     implicit val selOrd: Ordering[(Long, String, String)] =
-      Ordering.Tuple3(Ordering[Long].reverse, Ordering[String], Ordering[String])
+      Ordering.Tuple3(Ordering[Long].reverse, CodePointOrder, CodePointOrder)
     val sel = mutable.TreeSet.empty[(Long, String, String)]
     window.foreach { case (l, r, f) => counts((l, r)) = f; sel += ((f, l, r)) }
     // pair → slice terms currently containing it adjacently
@@ -1354,52 +1282,52 @@ object TextAnalysis {
       deltas.toMap.filter(_._2 != 0))
   }
 
-  /** The production trainer (r12 VERDICT item 3): INCREMENTAL
-    * pair-count maintenance. The corpus is touched once (the initial
-    * word rollup, as ever); the (l, r, freq) pair table is aggregated
-    * from the word table ONCE and thereafter maintained by the
-    * merges' own deltas — no per-round re-aggregation. Per
-    * super-round: fetch the top-[[BpeWindowDefault]] candidate window
-    * (one TakeOrdered over the checkpointed pair frame), pull the
-    * words containing ≥1 window pair driver-side (cap-bounded —
-    * [[BpeSliceCapConfKey]]), run the EXACT sequential trainer
-    * locally ([[hotSliceKernel]] — sound against un-pulled pairs via
-    * the window's tail bound), then write back the changed words and
-    * the net pair deltas in one anti-join + union each. Merges per
-    * super-round is bounded only by how far the frequency curve runs
-    * above the window tail — thousands on a Zipfian vocabulary —
-    * vs the batched loop's structural 1.4–2.0 merges per scan.
+  /** The BPE trainer, for every merge count: [[bpeTrain]],
+    * [[bpeVocab]], [[bpeFertility]] and [[bpeEncode]] all run it.
+    * Returns the merge table (round, l, r, merged, freq), in round
+    * order, and the final (term, syms, cnt) word table — the trained
+    * tokenizer APPLIED to the vocab. `window` and `sliceCap` default to
+    * [[BpeWindow]] and [[BpeSliceCap]]; specs and [[graft.BpeStress]]
+    * pass smaller ones to force many super-rounds or the fallback.
+    *
+    * INCREMENTAL pair-count maintenance. The corpus is touched once
+    * (the word rollup); the (l, r, freq) pair table is aggregated from
+    * the word table ONCE and thereafter maintained by the merges' own
+    * deltas — no per-round re-aggregation. Per super-round: fetch the
+    * top-`window` candidate window (one TakeOrdered over the
+    * checkpointed pair frame), pull the words containing ≥1 window
+    * pair driver-side (at most `sliceCap` rows), run the EXACT
+    * sequential trainer locally ([[hotSliceKernel]] — sound against
+    * un-pulled pairs via the window's tail bound), then write back the
+    * changed words and the net pair deltas in one anti-join + union
+    * each. The super-round that reaches the merge count skips the pair
+    * write-back: nothing reads that frame again. Merges per
+    * super-round are bounded only by how far the frequency curve runs
+    * above the window tail — all 8 gate merges in one super-round,
+    * thousands on a Zipfian vocabulary.
     *
     * 100 TB posture: the distributed part of BPE training is the
     * corpus→word-table rollup; everything after is vocab-bounded
     * state, and a production trainer is an in-memory algorithm over
     * exactly this table. The hot slice is the words containing
-    * top-window pairs — cap-bounded driver memory (default 1M rows);
-    * overflow falls back to the fully distributed batched loop for
-    * the remaining merges, so no corpus or vocabulary shape can break
-    * the trainer. Output is merge-for-merge identical to the
-    * one-at-a-time trainer (scalacheck law over random word tables at
-    * windows 1–64 incl. forced fallback, plus the 1k-merge
-    * reference-equality spec).
+    * top-window pairs — cap-bounded driver memory; overflow hands the
+    * remaining merges to the fully distributed [[bpeBatchedCore]], so
+    * no corpus or vocabulary shape can break the trainer. Output is
+    * merge-for-merge identical to one-at-a-time BPE (scalacheck laws
+    * over random word tables at windows 1–64 incl. forced fallback,
+    * plus the reference-trainer specs up to 1k merges).
     */
-  private def bpeHotSliceLoop(words0: DataFrame,
-                              totalMerges: Int): (Seq[DataFrame], DataFrame) = {
-    val spark = words0.sparkSession
+  private[graft] def bpeTrainerOf(docs: DataFrame, totalMerges: Int,
+                                  window: Int = BpeWindow,
+                                  sliceCap: Int = BpeSliceCap): (DataFrame, DataFrame) = {
+    val spark = docs.sparkSession
     import spark.implicits._
-    val w = spark.conf.getOption(BpeWindowConfKey).map(_.toInt)
-      .getOrElse(BpeWindowDefault)
-    val cap = spark.conf.getOption(BpeSliceCapConfKey).map(_.toInt)
-      .getOrElse(BpeSliceCapDefault)
-    var words = words0
+    var words = Index.tokenStreamOf(docs)
+      .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
+      .select(col("term"), split(col("term"), "").as("syms"), col("cnt"))
+      .localCheckpoint() // vocab-bounded; every super-round reads this, not the corpus
     // the ONE full pair aggregation (scan #1); incremental thereafter
-    var pairs = words
-      .select(col("cnt"), explode(when(size(col("syms")) >= 2,
-        arrays_zip(slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1)))
-        .otherwise(array().cast("array<struct<`0`:string,`1`:string>>"))).as("p"))
-      .groupBy(col("p.0").as("l"), col("p.1").as("r"))
-      .agg(sum(col("cnt")).as("freq"))
-      .localCheckpoint()
+    var pairs = bpePairCounts(words).localCheckpoint()
     lastBpeScans = 1
     lastBpeSuperRounds = 0
     lastBpeFellBack = false
@@ -1408,30 +1336,26 @@ object TextAnalysis {
     while (merges.size < totalMerges && !exhausted && !lastBpeFellBack) {
       val top = pairs
         .orderBy(col("freq").desc, col("l"), col("r"))
-        .limit(w + 1)
+        .limit(window + 1)
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
       if (top.isEmpty) exhausted = true
       else {
         lastBpeSuperRounds += 1
-        val window = top.take(w)
-        val tailBound = if (top.size > w) top.last._3 else -1L
+        val win = top.take(window)
+        val tailBound = if (top.size > window) top.last._3 else -1L
         // slice: words containing ≥1 window pair adjacently (map
         // literal is DATA, not code — same shape as the batched fold)
-        val wmap = typedlit(window.map { case (l, r, _) =>
+        val wmap = typedlit(win.map { case (l, r, _) =>
           (l + " " + r) -> true }.toMap)
-        val adj = when(size(col("syms")) >= 2,
-          arrays_zip(slice(col("syms"), lit(1), size(col("syms")) - 1),
-            slice(col("syms"), lit(2), size(col("syms")) - 1)))
-          .otherwise(array().cast("array<struct<`0`:string,`1`:string>>"))
         val sliceRows = words
-          .filter(exists(adj, p => try_element_at(wmap,
+          .filter(exists(bpeAdjacent, p => try_element_at(wmap,
             concat(p.getField("0"), lit(" "), p.getField("1"))).isNotNull))
-          .limit(cap + 1)
+          .limit(sliceCap + 1)
           .collect()
-        if (sliceRows.length > cap) {
+        if (sliceRows.length > sliceCap) {
           // overflow: keep the driver bounded — hand the remaining
-          // merges to the fully distributed batched loop
+          // merges to the fully distributed batched core
           lastBpeFellBack = true
           val (got, w2) = bpeBatchedCore(words, totalMerges - merges.size)
           got.foreach { case (l, r, f) =>
@@ -1443,8 +1367,7 @@ object TextAnalysis {
             r.getString(0) -> (r.getSeq[String](1).toVector, r.getLong(2))
           }.toMap
           val (got, changedSyms, pairDeltas) =
-            hotSliceKernel(sliceMap, window, tailBound,
-              totalMerges - merges.size)
+            hotSliceKernel(sliceMap, win, tailBound, totalMerges - merges.size)
           assert(got.nonEmpty,
             "hotSliceKernel accepted no merge from a non-empty window")
           got.foreach { case (l, r, f) =>
@@ -1458,7 +1381,7 @@ object TextAnalysis {
               .unionByName(changedDf)
               .localCheckpoint()
           }
-          if (pairDeltas.nonEmpty) {
+          if (pairDeltas.nonEmpty && merges.size < totalMerges) {
             val deltaDf = pairDeltas.iterator.map { case ((l, r), d) =>
               (l, r, d) }.toSeq.toDF("l", "r", "freq")
             pairs = pairs.unionByName(deltaDf)
@@ -1469,11 +1392,11 @@ object TextAnalysis {
         }
       }
     }
-    val mergeDf =
-      if (merges.isEmpty)
-        Seq.empty[(Long, String, String, Long)].toDF("round", "l", "r", "freq")
-      else merges.toSeq.toDF("round", "l", "r", "freq")
-    (Seq(mergeDf), words)
+    val table = merges.toSeq.toDF("round", "l", "r", "freq")
+      .select(col("round"), col("l"), col("r"),
+        concat(col("l"), col("r")).as("merged"), col("freq"))
+      .orderBy("round")
+    (table, words)
   }
 
   /** The trained subword vocabulary: every distinct symbol the
@@ -1489,7 +1412,7 @@ object TextAnalysis {
     bpeVocabOf(Tables.documents(spark, dir))
 
   def bpeVocabOf(docs: DataFrame): DataFrame =
-    bpeLoopOf(docs)._2
+    bpeTrainerOf(docs, bpeRoundCount(docs.sparkSession))._2
       .select(explode(col("syms")).as("subword"), col("cnt"))
       .groupBy("subword")
       .agg(sum(col("cnt")).as("n_occurrences"))
@@ -1510,7 +1433,7 @@ object TextAnalysis {
     */
   def bpeFertility(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val sub = bpeLoopOf(docs)._2
+    val sub = bpeTrainerOf(docs, bpeRoundCount(docs.sparkSession))._2
       .select(col("term"), size(col("syms")).cast("long").as("n_sub"))
     Index.tokenStreamOf(docs)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
@@ -1555,7 +1478,7 @@ object TextAnalysis {
     * needs the empty rows).
     */
   private[operators] def bpeEncFrame(docs: DataFrame): DataFrame = {
-    val words = bpeLoopOf(docs)._2
+    val words = bpeTrainerOf(docs, bpeRoundCount(docs.sparkSession))._2
     val vocab = words.select(explode(col("syms")).as("subword")).distinct()
       .withColumn("tid",
         row_number().over(Window.orderBy("subword")).cast("long"))

@@ -320,198 +320,123 @@ class KernelPropertiesSpec extends AnyFunSuite {
     })
   }
 
-  test("compatibleBatch: batched BPE == one-at-a-time BPE on random word tables") {
-    // The sequence-equivalence LAW behind the batched trainer
-    // (operators.TextAnalysis.bpeBatchedLoop): per scan, the accepted
-    // prefix of (freq DESC, l, r)-sorted candidates — symbol-disjoint,
-    // strictly dominating anything a merge could create — applied in
-    // ONE greedy map-lookup fold must reproduce the one-merge-per-
-    // round trainer merge-for-merge, ties and degenerate tails
-    // included. Checked with a PURE local simulator (no Spark) that
-    // mirrors the driver/fold split exactly, against the same
-    // reference trainer the crafted-corpus specs use.
-    type Word = (Vector[String], Long)
-    def pairCounts(words: Seq[Word]): Map[(String, String), Long] = {
-      val pc = scala.collection.mutable.Map[(String, String), Long]()
-      words.foreach { case (syms, c) =>
-        syms.zip(syms.drop(1)).foreach(p => pc(p) = pc.getOrElse(p, 0L) + c)
+  // -- BPE trainer laws ----------------------------------------------------
+
+  import BpeReference.{Word, applyMerges, pairCounts, ranked}
+
+  /** The batched core ([[operators.TextAnalysis.compatibleBatch]] per
+    * scan, one greedy map-lookup fold per batch), mirrored locally. */
+  private def batched(words0: Seq[Word], k: Int): Seq[(String, String, Long)] = {
+    var words = words0
+    val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
+    var done = false
+    while (out.size < k && !done) {
+      val top = ranked(pairCounts(words)).take(operators.TextAnalysis.BpeBatchMax + 1)
+      if (top.isEmpty) done = true
+      else {
+        val batch = operators.TextAnalysis.compatibleBatch(top, k - out.size)
+        out ++= batch
+        words = applyMerges(words,
+          batch.map { case (l, r, _) => (l, r) -> (l + r) }.toMap)
       }
-      pc.toMap
     }
-    def applyMerges(words: Seq[Word], mp: Map[(String, String), String]): Seq[Word] =
-      words.map { case (syms, c) =>
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        syms.foreach { x =>
-          if (out.nonEmpty && mp.contains((out.last, x)))
-            out(out.length - 1) = mp((out.last, x))
-          else out += x
-        }
-        (out.toVector, c)
-      }
-    def sequential(words0: Seq[Word], k: Int): Seq[(String, String, Long)] = {
-      var words = words0
-      val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-      var done = false
-      while (out.size < k && !done) {
-        val pc = pairCounts(words)
-        if (pc.isEmpty) done = true
-        else {
-          val ((l, r), f) = pc.toSeq.sortBy { case ((a, b), n) => (-n, a, b) }.head
-          out += ((l, r, f))
-          words = applyMerges(words, Map((l, r) -> (l + r)))
-        }
-      }
-      out.toSeq
-    }
-    def batched(words0: Seq[Word], k: Int): Seq[(String, String, Long)] = {
-      var words = words0
-      val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-      var done = false
-      while (out.size < k && !done) {
-        val top = pairCounts(words).toSeq
-          .map { case ((l, r), f) => (l, r, f) }
-          .sortBy { case (l, r, f) => (-f, l, r) }
-          .take(operators.TextAnalysis.BpeBatchMax + 1)
-        if (top.isEmpty) done = true
-        else {
-          val batch = operators.TextAnalysis.compatibleBatch(top, k - out.size)
-          out ++= batch
-          words = applyMerges(words,
-            batch.map { case (l, r, _) => (l, r) -> (l + r) }.toMap)
-        }
-      }
-      out.toSeq
-    }
+    out.toSeq
+  }
+
+  // symbol alphabets: ASCII plus one symbol at U+FF01 (≥ U+E000) and one
+  // supplementary-plane symbol (a surrogate pair), whose UTF-16 order
+  // and code-point order disagree
+  private val bpeSyms = Seq("a", "b", "c", "d", "e", "f", "\uFF01", "\uD83D\uDE00")
+  private val bpeRunSyms = Seq("a", "b", "c", "\uFF01", "\uD83D\uDE00")
+  private val genBpeTable: Gen[Seq[Word]] = {
     val genWord = for {
       len <- Gen.choose(1, 10)
-      cs <- Gen.listOfN(len, Gen.oneOf("abcdef".toSeq))
+      cs <- Gen.listOfN(len, Gen.oneOf(bpeSyms))
       cnt <- Gen.choose(1L, 9L)
-    } yield (cs.map(_.toString).toVector, cnt)
-    val genTable = Gen.choose(3, 20).flatMap(n => Gen.listOfN(n, genWord))
+    } yield (cs.toVector, cnt)
+    Gen.choose(3, 20).flatMap(n => Gen.listOfN(n, genWord))
       .map(_.groupBy(_._1).map { case (syms, g) => (syms, g.map(_._2).sum) }.toSeq)
-    check(Prop.forAll(genTable, Gen.choose(1, 25)) { (table, k) =>
-      batched(table, k) == sequential(table, k)
-    })
-
-    // Deterministic regression tables for the SELF-MERGE creation case
-    // the uniform generator only hits ~0.05% of the time: a self-merge
-    // (a,a)→aa on runs of ≥3 identical symbols CREATES (aa,a)/(aa,aa)
-    // pairs with counts up to ⌊f/2⌋, which must dominate-truncate any
-    // later same-batch candidate at or below that count.
-    def W(s: String, c: Long): Word = (s.split(" ").toVector, c)
-    val regressionTables: Seq[Seq[Word]] = Seq(
-      // freq(a,a)=18; created (aa,a)=9 > freq(c,d)=5 — the batch must
-      // NOT commit (c,d) ahead of (aa,a)
-      Seq(W("a a a", 9), W("c d", 5)),
-      // created count exactly EQUAL to the competitor: ⌊16/2⌋=8=(c,d)
-      Seq(W("a a a", 8), W("c d", 8)),
-      // runs of 4: (a,a)=12, created (aa,aa)=4 vs (c,d)=3
-      Seq(W("a a a a", 4), W("c d", 3)),
-      // two self-merges in one window
-      Seq(W("a a a", 6), W("b b b", 5), W("c d", 4)),
-      // odd/even mixed runs with boundary symbols
-      Seq(W("x a a a a a y", 5), W("c d", 4), W("e f", 2)),
-      // self-merge output chains: aa then (aa,a) then (aaa,*)
-      Seq(W("a a a a a a a", 3), W("c d", 2))
-    )
-    for (table <- regressionTables; k <- 1 to 6) {
-      assert(batched(table, k) == sequential(table, k),
-        s"self-merge regression: table=$table k=$k " +
-          s"batched=${batched(table, k)} sequential=${sequential(table, k)}")
-    }
-
-    // and a generator BIASED toward runs of identical symbols, where
-    // the uniform-letters generator almost never lands
+  }
+  // BIASED toward runs of identical symbols (self-merge creation
+  // chains), where the uniform generator almost never lands
+  private val genBpeRunTable: Gen[Seq[Word]] = {
     val genRunWord = for {
       nRuns <- Gen.choose(1, 4)
       runs <- Gen.listOfN(nRuns, for {
-        c <- Gen.oneOf("abc".toSeq)
+        c <- Gen.oneOf(bpeRunSyms)
         len <- Gen.choose(1, 7)
-      } yield List.fill(len)(c.toString))
+      } yield List.fill(len)(c))
       cnt <- Gen.choose(1L, 9L)
     } yield (runs.flatten.toVector, cnt)
-    val genRunTable = Gen.choose(2, 12).flatMap(n => Gen.listOfN(n, genRunWord))
+    Gen.choose(2, 12).flatMap(n => Gen.listOfN(n, genRunWord))
       .map(_.groupBy(_._1).map { case (syms, g) => (syms, g.map(_._2).sum) }.toSeq)
-    check(Prop.forAll(genRunTable, Gen.choose(1, 25)) { (table, k) =>
-      batched(table, k) == sequential(table, k)
+  }
+  // deterministic tables for the SELF-MERGE creation case the uniform
+  // generator only hits ~0.05% of the time: a self-merge (a,a)→aa on
+  // runs of ≥3 identical symbols CREATES (aa,a)/(aa,aa) pairs with
+  // counts up to ⌊f/2⌋, which must dominate-truncate any later
+  // same-batch candidate at or below that count
+  private def W(s: String, c: Long): Word = (s.split(" ").toVector, c)
+  private val selfMergeTables: Seq[Seq[Word]] = Seq(
+    // freq(a,a)=18; created (aa,a)=9 > freq(c,d)=5 — the batch must
+    // NOT commit (c,d) ahead of (aa,a)
+    Seq(W("a a a", 9), W("c d", 5)),
+    // created count exactly EQUAL to the competitor: ⌊16/2⌋=8=(c,d)
+    Seq(W("a a a", 8), W("c d", 8)),
+    // runs of 4: (a,a)=12, created (aa,aa)=4 vs (c,d)=3
+    Seq(W("a a a a", 4), W("c d", 3)),
+    // two self-merges in one window
+    Seq(W("a a a", 6), W("b b b", 5), W("c d", 4)),
+    // odd/even mixed runs with boundary symbols
+    Seq(W("x a a a a a y", 5), W("c d", 4), W("e f", 2)),
+    // self-merge output chains: aa then (aa,a) then (aaa,*)
+    Seq(W("a a a a a a a", 3), W("c d", 2))
+  )
+
+  test("compatibleBatch: batched BPE == one-at-a-time BPE on random word tables") {
+    // The sequence-equivalence LAW behind the trainer's overflow
+    // fallback (operators.TextAnalysis.bpeBatchedCore): per scan, the
+    // accepted prefix of (freq DESC, l, r)-sorted candidates —
+    // symbol-disjoint, strictly dominating anything a merge could
+    // create — applied in ONE greedy map-lookup fold must reproduce
+    // the one-merge-per-round trainer merge-for-merge, ties and
+    // degenerate tails included. Checked with a PURE local simulator
+    // (no Spark) that mirrors the driver/fold split exactly, against
+    // the reference trainer the crafted-corpus specs use.
+    check(Prop.forAll(genBpeTable, Gen.choose(1, 25)) { (table, k) =>
+      batched(table, k) == BpeReference.train(table, k)
+    })
+    for (table <- selfMergeTables; k <- 1 to 6) {
+      assert(batched(table, k) == BpeReference.train(table, k),
+        s"self-merge regression: table=$table k=$k " +
+          s"batched=${batched(table, k)} sequential=${BpeReference.train(table, k)}")
+    }
+    check(Prop.forAll(genBpeRunTable, Gen.choose(1, 25)) { (table, k) =>
+      batched(table, k) == BpeReference.train(table, k)
     })
   }
 
   test("hotSliceKernel: hot-slice trainer == one-at-a-time BPE across windows, caps, and fallback") {
-    // The sequence-equivalence LAW behind the incremental hot-slice
-    // trainer (operators.TextAnalysis.bpeHotSliceLoop): per
-    // super-round, pull the top-W candidate window + every word
-    // containing a window pair, run EXACT sequential BPE locally
-    // (sound against un-pulled pairs via the window's tail bound —
-    // un-windowed counts only ever DECREASE, created pairs involve a
-    // just-merged symbol and are tracked exactly), write back words
-    // and pair deltas. The simulator below mirrors the cluster
-    // orchestration exactly — including the INCREMENTAL pair frame
-    // (base + deltas, never re-aggregated) and the slice-cap fallback
-    // to the batched loop — so a delta bug cannot hide behind a
-    // recount.
-    type Word = (Vector[String], Long)
-    def pairCounts(words: Seq[Word]): Map[(String, String), Long] = {
-      val pc = scala.collection.mutable.Map[(String, String), Long]()
-      words.foreach { case (syms, c) =>
-        syms.zip(syms.drop(1)).foreach(p => pc(p) = pc.getOrElse(p, 0L) + c)
-      }
-      pc.toMap
-    }
-    def applyMerges(words: Seq[Word], mp: Map[(String, String), String]): Seq[Word] =
-      words.map { case (syms, c) =>
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        syms.foreach { x =>
-          if (out.nonEmpty && mp.contains((out.last, x)))
-            out(out.length - 1) = mp((out.last, x))
-          else out += x
-        }
-        (out.toVector, c)
-      }
-    def sequential(words0: Seq[Word], k: Int): Seq[(String, String, Long)] = {
-      var words = words0
-      val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-      var done = false
-      while (out.size < k && !done) {
-        val pc = pairCounts(words)
-        if (pc.isEmpty) done = true
-        else {
-          val ((l, r), f) = pc.toSeq.sortBy { case ((a, b), n) => (-n, a, b) }.head
-          out += ((l, r, f))
-          words = applyMerges(words, Map((l, r) -> (l + r)))
-        }
-      }
-      out.toSeq
-    }
-    def batched(words0: Seq[Word], k: Int): Seq[(String, String, Long)] = {
-      var words = words0
-      val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-      var done = false
-      while (out.size < k && !done) {
-        val top = pairCounts(words).toSeq
-          .map { case ((l, r), f) => (l, r, f) }
-          .sortBy { case (l, r, f) => (-f, l, r) }
-          .take(operators.TextAnalysis.BpeBatchMax + 1)
-        if (top.isEmpty) done = true
-        else {
-          val batch = operators.TextAnalysis.compatibleBatch(top, k - out.size)
-          out ++= batch
-          words = applyMerges(words,
-            batch.map { case (l, r, _) => (l, r) -> (l + r) }.toMap)
-        }
-      }
-      out.toSeq
-    }
+    // The sequence-equivalence LAW behind the BPE trainer
+    // (operators.TextAnalysis.bpeTrainerOf): per super-round, pull the
+    // top-W candidate window + every word containing a window pair,
+    // run EXACT sequential BPE locally (sound against un-pulled pairs
+    // via the window's tail bound — un-windowed counts only ever
+    // DECREASE, created pairs involve a just-merged symbol and are
+    // tracked exactly), write back words and pair deltas. The
+    // simulator below mirrors the cluster orchestration exactly —
+    // including the INCREMENTAL pair frame (base + deltas, never
+    // re-aggregated) and the slice-cap fallback to the batched core —
+    // so a delta bug cannot hide behind a recount.
     def hot(words0: Seq[Word], k: Int, w: Int, cap: Int): Seq[(String, String, Long)] = {
       var words: Map[String, Word] =
-        words0.map(t => (t._1.mkString(""), t)).toMap
+        words0.map(t => (t._1.mkString(""), t)).toMap
       var pairs: Map[(String, String), Long] = pairCounts(words.values.toSeq)
       val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
       var exhausted = false
       var fell = false
       while (out.size < k && !exhausted && !fell) {
-        val top = pairs.toSeq.map { case ((l, r), f) => (l, r, f) }
-          .sortBy { case (l, r, f) => (-f, l, r) }.take(w + 1)
+        val top = ranked(pairs).take(w + 1)
         if (top.isEmpty) exhausted = true
         else {
           val window = top.take(w)
@@ -535,52 +460,26 @@ class KernelPropertiesSpec extends AnyFunSuite {
       }
       out.toSeq
     }
-    val genWord = for {
-      len <- Gen.choose(1, 10)
-      cs <- Gen.listOfN(len, Gen.oneOf("abcdef".toSeq))
-      cnt <- Gen.choose(1L, 9L)
-    } yield (cs.map(_.toString).toVector, cnt)
-    val genTable = Gen.choose(3, 20).flatMap(n => Gen.listOfN(n, genWord))
-      .map(_.groupBy(_._1).map { case (syms, g) => (syms, g.map(_._2).sum) }.toSeq)
     // windows down to 1 force the tail-bound stop on nearly every
     // merge (max super-round churn); 64 usually holds every live pair
-    check(Prop.forAll(genTable, Gen.choose(1, 25), Gen.oneOf(1, 2, 3, 8, 64)) {
-      (table, k, w) => hot(table, k, w, Int.MaxValue) == sequential(table, k)
+    check(Prop.forAll(genBpeTable, Gen.choose(1, 25), Gen.oneOf(1, 2, 3, 8, 64)) {
+      (table, k, w) => hot(table, k, w, Int.MaxValue) == BpeReference.train(table, k)
     })
     // forced slice-cap fallback mid-run (cap 0 falls back on round 1;
     // small caps fall back once the slice grows past them)
-    check(Prop.forAll(genTable, Gen.choose(1, 25), Gen.oneOf(0, 1, 3)) {
-      (table, k, cap) => hot(table, k, 4, cap) == sequential(table, k)
+    check(Prop.forAll(genBpeTable, Gen.choose(1, 25), Gen.oneOf(0, 1, 3)) {
+      (table, k, cap) => hot(table, k, 4, cap) == BpeReference.train(table, k)
     })
     // runs of identical symbols: self-merge creation chains
     // ((a,a)→aa, then (aa,a)/(aa,aa)) under tight windows
-    val genRunWord = for {
-      nRuns <- Gen.choose(1, 4)
-      runs <- Gen.listOfN(nRuns, for {
-        c <- Gen.oneOf("abc".toSeq)
-        len <- Gen.choose(1, 7)
-      } yield List.fill(len)(c.toString))
-      cnt <- Gen.choose(1L, 9L)
-    } yield (runs.flatten.toVector, cnt)
-    val genRunTable = Gen.choose(2, 12).flatMap(n => Gen.listOfN(n, genRunWord))
-      .map(_.groupBy(_._1).map { case (syms, g) => (syms, g.map(_._2).sum) }.toSeq)
-    check(Prop.forAll(genRunTable, Gen.choose(1, 25), Gen.oneOf(1, 2, 8)) {
-      (table, k, w) => hot(table, k, w, Int.MaxValue) == sequential(table, k)
+    check(Prop.forAll(genBpeRunTable, Gen.choose(1, 25), Gen.oneOf(1, 2, 8)) {
+      (table, k, w) => hot(table, k, w, Int.MaxValue) == BpeReference.train(table, k)
     })
     // the deterministic self-merge regression tables, at every window
-    def W(s: String, c: Long): Word = (s.split(" ").toVector, c)
-    val regressionTables: Seq[Seq[Word]] = Seq(
-      Seq(W("a a a", 9), W("c d", 5)),
-      Seq(W("a a a", 8), W("c d", 8)),
-      Seq(W("a a a a", 4), W("c d", 3)),
-      Seq(W("a a a", 6), W("b b b", 5), W("c d", 4)),
-      Seq(W("x a a a a a y", 5), W("c d", 4), W("e f", 2)),
-      Seq(W("a a a a a a a", 3), W("c d", 2))
-    )
-    for (table <- regressionTables; k <- 1 to 6; w <- Seq(1, 2, 8)) {
-      assert(hot(table, k, w, Int.MaxValue) == sequential(table, k),
+    for (table <- selfMergeTables; k <- 1 to 6; w <- Seq(1, 2, 8)) {
+      assert(hot(table, k, w, Int.MaxValue) == BpeReference.train(table, k),
         s"hot-slice regression: table=$table k=$k w=$w " +
-          s"hot=${hot(table, k, w, Int.MaxValue)} sequential=${sequential(table, k)}")
+          s"hot=${hot(table, k, w, Int.MaxValue)} sequential=${BpeReference.train(table, k)}")
     }
   }
 }

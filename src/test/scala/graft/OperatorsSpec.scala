@@ -1875,35 +1875,10 @@ class OperatorsSpec extends SparkSpec {
     // crafted so the first rounds are hand-checkable and the greedy
     // overlap case fires: merging (a,a) inside "aaa" must yield
     // [aa, a] (scan continues AFTER the merged token), never [a, aa]
-    val docs = Seq(
-      (0L, "aaa aaa bcbc zq zq zq zq"),
-      (1L, "aaa bcbc bcbc frost frost garden"),
-      (2L, "garden frost zq aaa")).toDF("doc_id", "text")
-    // reference trainer: plain Scala, same (freq DESC, l, r) argmax
-    def refBpe(counts: Map[String, Long], k: Int): Seq[(Long, String, String, String, Long)] = {
-      var words = counts.toSeq.map { case (w, c) => (w.map(_.toString).toVector, c) }
-      (1 to k).map { r =>
-        val pc = scala.collection.mutable.Map[(String, String), Long]()
-        words.foreach { case (syms, c) =>
-          syms.zip(syms.drop(1)).foreach(p => pc(p) = pc.getOrElse(p, 0L) + c)
-        }
-        val ((l, rr), f) = pc.toSeq.sortBy { case ((a, b), n) => (-n, a, b) }.head
-        words = words.map { case (syms, c) =>
-          val out = scala.collection.mutable.ArrayBuffer[String]()
-          syms.foreach { x =>
-            if (out.nonEmpty && out.last == l && x == rr) out(out.length - 1) = l + rr
-            else out += x
-          }
-          (out.toVector, c)
-        }
-        (r.toLong, l, rr, l + rr, f)
-      }
-    }
-    val counts = Seq("aaa aaa bcbc zq zq zq zq", "aaa bcbc bcbc frost frost garden",
-        "garden frost zq aaa")
-      .flatMap(_.split("\\s+")).groupBy(identity)
-      .map { case (w, g) => w -> g.size.toLong }
-    val want = refBpe(counts, operators.TextAnalysis.BpeRounds)
+    val texts = Seq("aaa aaa bcbc zq zq zq zq", "aaa bcbc bcbc frost frost garden",
+      "garden frost zq aaa")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val want = BpeReference.trainTexts(texts, operators.TextAnalysis.BpeRounds)
     val got = operators.TextAnalysis.bpeTrainOf(docs).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
       .toSeq
@@ -1930,31 +1905,7 @@ class OperatorsSpec extends SparkSpec {
       (i.toLong, Seq.fill(i + 2)(w).mkString(" "))
     }
     val docs = texts.toDF("doc_id", "text")
-    def refBpe(counts: Map[String, Long], k: Int): Seq[(Long, String, String, String, Long)] = {
-      var words = counts.toSeq.map { case (w, c) => (w.map(_.toString).toVector, c) }
-      (1 to k).flatMap { r =>
-        val pc = scala.collection.mutable.Map[(String, String), Long]()
-        words.foreach { case (syms, c) =>
-          syms.zip(syms.drop(1)).foreach(p => pc(p) = pc.getOrElse(p, 0L) + c)
-        }
-        if (pc.isEmpty) None
-        else {
-          val ((l, rr), f) = pc.toSeq.sortBy { case ((a, b), n) => (-n, a, b) }.head
-          words = words.map { case (syms, c) =>
-            val out = scala.collection.mutable.ArrayBuffer[String]()
-            syms.foreach { x =>
-              if (out.nonEmpty && out.last == l && x == rr) out(out.length - 1) = l + rr
-              else out += x
-            }
-            (out.toVector, c)
-          }
-          Some((r.toLong, l, rr, l + rr, f))
-        }
-      }
-    }
-    val counts = texts.flatMap(_._2.split("\\s+")).groupBy(identity)
-      .map { case (w, g) => w -> g.size.toLong }
-    val want = refBpe(counts, 64)
+    val want = BpeReference.trainTexts(texts.map(_._2), 64)
     assert(want.length === 64, s"crafted corpus exhausted at ${want.length} merges")
     spark.conf.set(operators.TextAnalysis.BpeRoundsConfKey, "64")
     try {
@@ -1965,16 +1916,14 @@ class OperatorsSpec extends SparkSpec {
     } finally spark.conf.unset(operators.TextAnalysis.BpeRoundsConfKey)
   }
 
-  test("bpe_train: batched trainer is reference-exact at 1000 merges") {
+  test("bpe_train: hot-slice trainer is reference-exact at 1000 merges") {
     import spark.implicits._
     // enough distinct pair structure for 1000+ non-degenerate merges:
     // 100 words of 21 chars each over PER-WORD-DISJOINT character
-    // ranges (2000 available merges, zero cross-word sharing — the
-    // shape that lets the batcher accept large symbol-disjoint
-    // batches), at 17 distinct frequency levels so ties exercise the
-    // lexicographic argmax. The >gate path batches merges per scan;
-    // the output must be IDENTICAL to the one-at-a-time reference,
-    // ties included.
+    // ranges (2000 available merges, zero cross-word sharing), at 17
+    // distinct frequency levels so ties exercise the (l, r) tie-break.
+    // The trainer runs many merges per super-round; the output must be
+    // IDENTICAL to the one-at-a-time reference, ties included.
     val vocabWords = (0 until 100).map { i =>
       (0 until 21).map(j => (0x4E00 + i * 21 + j).toChar).mkString
     }
@@ -1982,31 +1931,7 @@ class OperatorsSpec extends SparkSpec {
       (i.toLong, Seq.fill(i % 17 + 2)(w).mkString(" "))
     }
     val docs = texts.toDF("doc_id", "text")
-    def refBpe(counts: Map[String, Long], k: Int): Seq[(Long, String, String, String, Long)] = {
-      var words = counts.toSeq.map { case (w, c) => (w.map(_.toString).toVector, c) }
-      (1 to k).flatMap { r =>
-        val pc = scala.collection.mutable.Map[(String, String), Long]()
-        words.foreach { case (syms, c) =>
-          syms.zip(syms.drop(1)).foreach(p => pc(p) = pc.getOrElse(p, 0L) + c)
-        }
-        if (pc.isEmpty) None
-        else {
-          val ((l, rr), f) = pc.toSeq.sortBy { case ((a, b), n) => (-n, a, b) }.head
-          words = words.map { case (syms, c) =>
-            val out = scala.collection.mutable.ArrayBuffer[String]()
-            syms.foreach { x =>
-              if (out.nonEmpty && out.last == l && x == rr) out(out.length - 1) = l + rr
-              else out += x
-            }
-            (out.toVector, c)
-          }
-          Some((r.toLong, l, rr, l + rr, f))
-        }
-      }
-    }
-    val counts = texts.flatMap(_._2.split("\\s+")).groupBy(identity)
-      .map { case (w, g) => w -> g.size.toLong }
-    val want = refBpe(counts, 1000)
+    val want = BpeReference.trainTexts(texts.map(_._2), 1000)
     assert(want.length === 1000, s"crafted corpus exhausted at ${want.length} merges")
     spark.conf.set(operators.TextAnalysis.BpeRoundsConfKey, "1000")
     try {
@@ -2017,17 +1942,17 @@ class OperatorsSpec extends SparkSpec {
     } finally spark.conf.unset(operators.TextAnalysis.BpeRoundsConfKey)
   }
 
-  test("bpe_train: hot-slice trainer matches reference under tight windows, cap fallback, and the batched knob") {
+  test("bpe_train: hot-slice trainer matches reference under a tight window and the cap fallback") {
     import spark.implicits._
     // Same crafted-corpus family as the 1000-merge spec (disjoint
     // per-word character ranges, 17 frequency levels for ties), small
     // enough that the tight-window variant's many super-rounds stay
-    // cheap. Exercises the three >gate cluster paths the default
-    // config doesn't: (a) bpeWindow=3 — the tail bound stops nearly
-    // every local run, so the trainer crosses MANY super-rounds and
-    // the incremental pair frame carries deltas across write-backs;
-    // (b) bpeSliceCap=1 — round-1 overflow delegates to the batched
-    // loop mid-flight; (c) trainer=batched — the r12 path stays live.
+    // cheap. Exercises the two trainer paths the default window and
+    // cap don't: (a) window = 3 — the tail bound stops nearly every
+    // local run, so the trainer crosses MANY super-rounds and the
+    // incremental pair frame carries deltas across write-backs;
+    // (b) sliceCap = 1 — round-1 overflow hands every merge to the
+    // batched core.
     val vocabWords = (0 until 24).map { i =>
       (0 until 9).map(j => (0x4E00 + i * 9 + j).toChar).mkString
     }
@@ -2035,55 +1960,65 @@ class OperatorsSpec extends SparkSpec {
       (i.toLong, Seq.fill(i % 17 + 2)(w).mkString(" "))
     }
     val docs = texts.toDF("doc_id", "text")
-    def refBpe(counts: Map[String, Long], k: Int): Seq[(Long, String, String, String, Long)] = {
-      var words = counts.toSeq.map { case (w, c) => (w.map(_.toString).toVector, c) }
-      (1 to k).flatMap { r =>
-        val pc = scala.collection.mutable.Map[(String, String), Long]()
-        words.foreach { case (syms, c) =>
-          syms.zip(syms.drop(1)).foreach(p => pc(p) = pc.getOrElse(p, 0L) + c)
-        }
-        if (pc.isEmpty) None
-        else {
-          val ((l, rr), f) = pc.toSeq.sortBy { case ((a, b), n) => (-n, a, b) }.head
-          words = words.map { case (syms, c) =>
-            val out = scala.collection.mutable.ArrayBuffer[String]()
-            syms.foreach { x =>
-              if (out.nonEmpty && out.last == l && x == rr) out(out.length - 1) = l + rr
-              else out += x
-            }
-            (out.toVector, c)
-          }
-          Some((r.toLong, l, rr, l + rr, f))
-        }
-      }
-    }
-    val counts = texts.flatMap(_._2.split("\\s+")).groupBy(identity)
-      .map { case (w, g) => w -> g.size.toLong }
-    val want = refBpe(counts, 48)
+    val want = BpeReference.trainTexts(texts.map(_._2), 48)
     assert(want.length === 48, s"crafted corpus exhausted at ${want.length} merges")
-    val configs = Seq(
-      "window=3" -> Map(operators.TextAnalysis.BpeWindowConfKey -> "3"),
-      "cap=1 fallback" -> Map(operators.TextAnalysis.BpeSliceCapConfKey -> "1"),
-      "batched" -> Map(operators.TextAnalysis.BpeTrainerConfKey -> "batched"))
-    spark.conf.set(operators.TextAnalysis.BpeRoundsConfKey, "48")
-    try {
-      configs.foreach { case (label, conf) =>
-        conf.foreach { case (k, v) => spark.conf.set(k, v) }
-        try {
-          val got = operators.TextAnalysis.bpeTrainOf(docs).collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-              r.getString(3), r.getLong(4)))
-            .toSeq.sortBy(_._1)
-          assert(got === want, s"trainer config '$label' diverged from reference")
-          if (label == "cap=1 fallback")
-            assert(operators.TextAnalysis.lastBpeFellBack,
-              "cap=1 run did not exercise the fallback path")
-          if (label == "window=3")
-            assert(operators.TextAnalysis.lastBpeSuperRounds > 5,
-              s"window=3 run crossed only ${operators.TextAnalysis.lastBpeSuperRounds} super-rounds")
-        } finally conf.keys.foreach(spark.conf.unset)
-      }
-    } finally spark.conf.unset(operators.TextAnalysis.BpeRoundsConfKey)
+    Seq("window=3" -> ((3, operators.TextAnalysis.BpeSliceCap)),
+        "cap=1 fallback" -> ((operators.TextAnalysis.BpeWindow, 1))).foreach {
+      case (label, (window, sliceCap)) =>
+        val got = operators.TextAnalysis.bpeTrainerOf(docs, 48, window, sliceCap)._1
+          .collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+            r.getString(3), r.getLong(4)))
+          .toSeq
+        assert(got === want, s"trainer config '$label' diverged from reference")
+        if (label == "cap=1 fallback")
+          assert(operators.TextAnalysis.lastBpeFellBack,
+            "cap=1 run did not exercise the fallback path")
+        if (label == "window=3")
+          assert(operators.TextAnalysis.lastBpeSuperRounds > 5,
+            s"window=3 run crossed only ${operators.TextAnalysis.lastBpeSuperRounds} super-rounds")
+    }
+  }
+
+  test("bpe_train: frequency ties break in code-point order at every merge count") {
+    import spark.implicits._
+    // (！, x) and (😀, x) tie at 5. Spark's orderBy and DuckDB compare
+    // strings by UTF-8 bytes: U+FF01 sorts before U+1F600, although its
+    // UTF-16 unit (FF01) sorts after the surrogate D83D. The reference
+    // splits by code point, so 😀 stays one symbol as in Spark.
+    val texts = Seq.fill(5)("！x") ++ Seq.fill(5)("😀x")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val want = BpeReference.trainTexts(texts, 64)
+    assert(want.map(_._4) === Seq("！x", "😀x"))
+    Seq("2", "8", "9", "64").foreach { k =>
+      spark.conf.set(operators.TextAnalysis.BpeRoundsConfKey, k)
+      try {
+        val got = operators.TextAnalysis.bpeTrainOf(docs).collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+            r.getString(3), r.getLong(4)))
+          .toSeq
+        assert(got === want.take(k.toInt), s"bpeRounds=$k")
+      } finally spark.conf.unset(operators.TextAnalysis.BpeRoundsConfKey)
+    }
+  }
+
+  test("bpe_train: a bpeRounds value below 1 or not an integer is rejected, naming the key") {
+    import spark.implicits._
+    val docs = Seq((0L, "ab ab abc")).toDF("doc_id", "text")
+    Seq("0", "-3", "1.5", "eight").foreach { v =>
+      spark.conf.set(operators.TextAnalysis.BpeRoundsConfKey, v)
+      try {
+        Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+            operators.TextAnalysis.bpeTrainOf,
+            operators.TextAnalysis.bpeVocabOf, operators.TextAnalysis.bpeEncodeOf)
+          .foreach { f =>
+            val e = intercept[IllegalArgumentException](f(docs).collect())
+            assert(e.getMessage.contains(operators.TextAnalysis.BpeRoundsConfKey),
+              s"bpeRounds=$v: ${e.getMessage}")
+          }
+      } finally spark.conf.unset(operators.TextAnalysis.BpeRoundsConfKey)
+    }
   }
 
   test("bpe_fertility: trained tokenizer compresses — 1 <= fertility < chars/word") {
@@ -2633,7 +2568,7 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("profile rung: per-cell dedup emits the normalized union-kNN pair set") {
+  test("profile rung: emits the normalized union-kNN pair set, each pair at most twice per shared cell") {
     import spark.implicits._
     // 60 docs over a tiny shared vocabulary; term v_j is ABSENT when
     // (i + j) % 5 == 0 so every term's df < n (idf weights exist).
@@ -2648,10 +2583,10 @@ class OperatorsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(raw.nonEmpty && raw.forall { case (a, b) => a < b },
       "rung rows must be normalized doc_a < doc_b")
-    // one slice per cell dedupes per cell, so a pair may repeat at
-    // most once per SHARED probed cell — never once per kept direction
+    // each endpoint that keeps the other emits the pair once, so a pair
+    // repeats at most twice per SHARED probed cell
     val worstDup = raw.groupBy(identity).map(_._2.length).max
-    assert(worstDup <= Index.ProfileProbes,
+    assert(worstDup <= 2 * Index.ProfileProbes,
       s"a pair repeated $worstDup times — more than the co-probe bound")
     // semantics: the DISTINCT'd relation does not depend on how a
     // cell's queries are sliced
