@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   *    which Spark only reads as a long via this legacy conf;
   *  - shuffle partitions sized to the local core count (the 100 TB
   *    deployment overrides this per-cluster; AQE coalesces down);
-  *  - UTC so date/timestamp formatting matches the DuckDB oracle.
+  *  - UTC so date/timestamp formatting matches the DuckDB oracle;
+  *  - local sessions only: partition directories listed on the driver
+  *    (no listing job, see [[builder]]).
   */
 object GraftSession {
   /** The semantic confs every graft plan assumes, master-agnostic. */
@@ -39,6 +41,14 @@ object GraftSession {
       // (Tables.RespreadTables) to engage all threads; cluster
       // sessions (clusterBuilder) never set this
       .config("spark.graft.parallelizeScans", "true")
+      // the driver lists partition directories itself, however many:
+      // past the default threshold (32) a read lists them in a Spark
+      // job, one task per directory, and a 64-bucket index segment
+      // paid one such job per read. Under local[N] those tasks run in
+      // this JVM against the same filesystem, so the job is pure
+      // scheduling overhead. Cluster sessions keep Spark's default,
+      // where executors list a remote store in parallel.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       .config("spark.ui.enabled", "false")
 
   /** Builder for spark-submit onto a REAL cluster: the same semantic

@@ -28,7 +28,7 @@ object CorpusStore {
       .parquet(path)
 
   def load(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.parquet(path)
+    val raw = ParquetFooters.read(spark, Seq(path))
     // takedowns anti-join out at read time ([[Tombstones]] — the same
     // contract as IndexStore postings: deletion is live at the next
     // read without rewriting a 100 TB layout, and [[foldTombstones]]

@@ -185,12 +185,12 @@ object IndexStore {
     */
   private def carryMeta(spark: SparkSession, fromPath: String,
                         toPath: String, survivorsPath: String): Unit = {
-    val meta = spark.read.parquet(
-      new org.apache.hadoop.fs.Path(fromPath, MetaDir).toString)
+    val meta = ParquetFooters.read(spark,
+      Seq(new org.apache.hadoop.fs.Path(fromPath, MetaDir).toString))
     val id = Seq("doc_id", "title").find(meta.columns.contains).getOrElse(
       throw new IllegalStateException(
         s"_meta at $fromPath has neither a doc_id nor a title column"))
-    val survivors = spark.read.parquet(survivorsPath)
+    val survivors = ParquetFooters.read(spark, Seq(survivorsPath))
       .select(col(id)).distinct()
     saveMeta(meta.join(survivors, Seq(id), "left_semi"), toPath)
   }
@@ -384,7 +384,7 @@ object IndexStore {
       .parquet(new org.apache.hadoop.fs.Path(tmp, "dl").toString)
     // derive the scalars from the just-written dl table (column-pruned
     // re-read) instead of executing the dl plan a second time
-    spark.read.parquet(new org.apache.hadoop.fs.Path(tmp, "dl").toString)
+    ParquetFooters.read(spark, Seq(new org.apache.hadoop.fs.Path(tmp, "dl").toString))
       .agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
       .coalesce(1).write.mode("overwrite")
       .parquet(new org.apache.hadoop.fs.Path(tmp, "corpus").toString)
@@ -413,7 +413,7 @@ object IndexStore {
         "IndexStore.saveStats(spark, path) after building the index " +
         "(compaction refreshes it automatically)")
     val base = new org.apache.hadoop.fs.Path(path, StatsDir).toString
-    (spark.read.parquet(s"$base/dl"), spark.read.parquet(s"$base/corpus"))
+    (ParquetFooters.read(spark, Seq(s"$base/dl")), ParquetFooters.read(spark, Seq(s"$base/corpus")))
   }
 
   // ---- fielded-search metadata (_meta side table) -----------------------
@@ -478,8 +478,8 @@ object IndexStore {
       s"index at $path has no $MetaDir side table — fielded (lang:/" +
         "source:) queries need IndexStore.saveMeta(meta, path) run " +
         "beside the index build (compaction carries it forward)")
-    val raw = spark.read.parquet(
-      new org.apache.hadoop.fs.Path(path, MetaDir).toString)
+    val raw = ParquetFooters.read(spark,
+      Seq(new org.apache.hadoop.fs.Path(path, MetaDir).toString))
     Tombstones.setOf(spark, path) match {
       case Some(t) if raw.columns.contains("doc_id") =>
         raw.join(t, Seq("doc_id"), "left_anti")
@@ -562,7 +562,7 @@ object IndexStore {
       s"index at $path has no $FuzzyDir side table — run " +
         "IndexStore.saveFuzzy(spark, path) beside the index build " +
         "(compaction carries it forward)")
-    spark.read.parquet(new org.apache.hadoop.fs.Path(path, FuzzyDir).toString)
+    ParquetFooters.read(spark, Seq(new org.apache.hadoop.fs.Path(path, FuzzyDir).toString))
   }
 
   /** Dictionary terms within levenshtein `d` of `t`, via the
@@ -657,18 +657,20 @@ object IndexStore {
 
   /** A PINNED serving snapshot of one index (r14 — the serving
     * latency floor): every per-query `lookup`/`searchIndex`/
-    * `searchRankedIndex` call re-resolves the index relation —
-    * `spark.read.parquet` lists the bucket directories and reads
-    * footers again, a driver-side cost that grows with the store and
-    * was the measured ~0.3s p50 floor on the 500k-doc store.
+    * `searchRankedIndex` call re-resolves the index relation — it
+    * lists the bucket directories and reads footers again, a
+    * driver-side cost that grows with the store and was the measured
+    * ~0.3s p50 floor on the 500k-doc store.
     *
     * What a handle resolves ONCE:
-    *  - at [[open]], driver-side: the store [[fingerprint]], then one
+    *  - at [[open]], on the driver and with no job: the store
+    *    [[fingerprint]], then one
     *    [[SegmentedStore.Listing]] that fixes the segment set both the
     *    `raw` relation (its file listing) and the plan of the
     *    [[deadKeysOf dead-key set]] (over those segments' manifests
     *    and the tombstone files listed then) read, then the `_stats`
-    *    pair, `_meta` and `_fuzzy`;
+    *    pair, `_meta` and `_fuzzy` — every schema from a footer read
+    *    on the driver ([[ParquetFooters]]);
     *  - at the first query, one job: the dead-key set, materialized
     *    by `localCheckpoint` into [[idx]] — the held rows every later
     *    query anti-joins, so no query re-reads a `_docs` manifest or
@@ -729,10 +731,12 @@ object IndexStore {
   }
 
   /** Resolve a serving snapshot (see [[OpenIndex]] for what it holds).
-    * Listings + side-table reads; nothing is computed until a query
-    * runs (the only jobs here are the parquet reader's own listing and
-    * footer reads) — the dead-key set is planned here and materialized
-    * by the first query.
+    * `open` runs no job: the listings and the footer reads that fix
+    * each relation's schema run on the driver ([[ParquetFooters]];
+    * local sessions list partition directories on the driver too, see
+    * [[graft.GraftSession]]), and nothing is computed until a query
+    * runs — the dead-key set is planned here and materialized by the
+    * first query.
     * `withMeta = false` skips the `_meta` resolution — the per-query
     * wrappers ([[openOnce]]) pass it when the query has no field
     * leaf, so field-less queries never pay that listing (sessions keep
@@ -855,11 +859,11 @@ object IndexStore {
     if (metaSrc.nonEmpty) {
       val frames = metaSrc.map {
         case (p, isDelta) =>
-          val m = spark.read.parquet(
-            new org.apache.hadoop.fs.Path(p, MetaDir).toString)
+          val m = ParquetFooters.read(spark,
+            Seq(new org.apache.hadoop.fs.Path(p, MetaDir).toString))
           if (isDelta) m else m.join(updated, Seq("doc_id"), "left_anti")
       }
-      val survivors = spark.read.parquet(outPath)
+      val survivors = ParquetFooters.read(spark, Seq(outPath))
         .select(col("doc_id")).distinct()
       saveMeta(frames.reduce(_.unionByName(_, allowMissingColumns = true))
         .join(survivors, Seq("doc_id"), "left_semi"), outPath)
@@ -885,6 +889,19 @@ object IndexStore {
     * underscore-prefixed so parquet data listings skip it.
     */
   private val DocsManifest = "_docs"
+
+  /** Write the `_docs` manifest of the segment just written at `dir`
+    * from a column-pruned scan of that segment's own files, not from
+    * a second run of the plan that produced them (for a landing that
+    * plan is the whole invert). A write that emitted no data file gets
+    * no manifest: [[SegmentedStore.land]] then drops it as empty.
+    */
+  private def writeManifest(spark: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (SegmentedStore.hasDataFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+      ParquetFooters.read(spark, Seq(dir)).select(col("doc_id")).distinct().coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/$DocsManifest")
+  }
 
   /** Segment ids present at `path` (empty for a plain single layout). */
   def segmentIds(spark: SparkSession, path: String): Seq[Long] =
@@ -915,8 +932,7 @@ object IndexStore {
       // store can never silently accept lookups with any bucket count
       if (savedBuckets(spark, path).isEmpty) writeBuckets(spark, path, nBuckets)
       save(delta, tmp, nBuckets)
-      delta.select(col("doc_id")).distinct().coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/$DocsManifest")
+      writeManifest(spark, tmp)
     }
     // incremental stats refresh (r15 — the landed-after-stats doc
     // drop): when the store carries `_stats`, fold the just-landed
@@ -927,7 +943,7 @@ object IndexStore {
     // behind — [[statsFresh]] reads false and the ranked path's left
     // join still serves the segment's docs (drift, never a drop).
     if (landed && hasStats(spark, path)) {
-      val landed0 = spark.read.parquet(SegmentedStore.dir(path, segId))
+      val landed0 = ParquetFooters.read(spark, Seq(SegmentedStore.dir(path, segId)))
       val fields = // fielded segment: body-field lengths, like saveStats
         if (landed0.columns.contains("field"))
           landed0.filter(col("field") === "body")
@@ -954,12 +970,7 @@ object IndexStore {
       dir => save(load(spark, path).drop("term_bucket"), dir, nb),
       (root, data) => {
         writeBuckets(spark, root, nb)
-        if (data != root)
-          // the manifest from the JUST-WRITTEN segment (a column-pruned
-          // scan of the fold's own output), not a second run of the
-          // resolving plan
-          spark.read.parquet(data).select(col("doc_id")).distinct().coalesce(1)
-            .write.mode("overwrite").parquet(s"$data/$DocsManifest")
+        if (data != root) writeManifest(spark, data)
         if (hasStats(spark, path)) saveStats(spark, root)
         // `_meta` cannot be derived from postings: carried, filtered to
         // the survivors so a takedown'd doc's metadata leaves with it

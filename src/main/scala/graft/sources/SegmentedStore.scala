@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -95,12 +95,13 @@ private[graft] object SegmentedStore {
     * `/_docs` reads that entry of each segment instead). With the root
     * as basePath each row carries its segment as a `seg` column, typed
     * long like [[deadKeys]]' so anti-join keys compare without a cast.
-    * A never-segmented store reads its root.
+    * A never-segmented store reads its root. The schema comes from one
+    * footer read on the driver ([[ParquetFooters]]), so building the
+    * relation runs no job.
     */
   def read(spark: SparkSession, path: String, l: Listing, sub: String = ""): DataFrame =
-    if (l.segs.isEmpty) spark.read.parquet(path)
-    else spark.read.option("basePath", path)
-      .parquet(l.segs.map(dir(path, _) + sub): _*)
+    if (l.segs.isEmpty) ParquetFooters.read(spark, Seq(path))
+    else ParquetFooters.read(spark, l.segs.map(dir(path, _) + sub), options = Map("basePath" -> path))
       .withColumn("seg", col("seg").cast("long"))
 
   /** The DEAD-KEY set of the store at `path` — the keys of every row a
@@ -197,20 +198,23 @@ private[graft] object SegmentedStore {
 
   // ---- landing ----------------------------------------------------------
 
-  /** True when `dir` holds at least one visible data FILE at any depth:
-    * files under an underscore- or dot-prefixed entry (markers,
-    * manifests, `_SUCCESS`, checksums) don't count.
+  /** The visible data FILES at or below `dir`, listed lazily: files
+    * under an underscore- or dot-prefixed entry (markers, manifests,
+    * `_SUCCESS`, checksums) don't count. `dir` itself may be a file or
+    * a hidden entry such as `_docs`; only what lies below it is
+    * filtered. Empty when `dir` does not exist.
     */
-  def hasDataFiles(fs: FileSystem, dir: Path): Boolean = {
-    if (!fs.exists(dir)) return false
-    val root = fs.makeQualified(dir).toUri.getPath
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val rel = it.next().getPath.toUri.getPath.stripPrefix(root)
-      if (rel.split("/").filter(_.nonEmpty).forall(visible)) return true
+  def dataFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+    if (!fs.exists(dir)) Iterator.empty
+    else {
+      val root = fs.makeQualified(dir).toUri.getPath
+      val it = fs.listFiles(dir, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus).filter(st =>
+        st.getPath.toUri.getPath.stripPrefix(root).split("/").filter(_.nonEmpty).forall(visible))
     }
-    false
-  }
+
+  /** True when `dir` holds at least one visible data file ([[dataFiles]]). */
+  def hasDataFiles(fs: FileSystem, dir: Path): Boolean = dataFiles(fs, dir).hasNext
 
   /** Land segment `segId` of the store at `path`: `write` builds it in
     * the temp dir it is handed, then one atomic rename publishes it.
@@ -242,7 +246,7 @@ private[graft] object SegmentedStore {
     // skipping is replay-safe: the caller's recompute is
     // deterministic, so a replayed empty batch skips again
     val wroteRows = hasDataFiles(fs, tmp) &&
-      (partitioned || !spark.read.parquet(tmp.toString).isEmpty)
+      (partitioned || !ParquetFooters.read(spark, Seq(tmp.toString)).isEmpty)
     if (!wroteRows) { fs.delete(tmp, true); return false }
     batch.foreach(stampHorizon(fs, tmp, _))
     StoreSwap.mustRename(fs, tmp, seg)

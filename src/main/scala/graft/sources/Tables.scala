@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Parquet table loaders for the TPC-H-ish test schema.
+/** Parquet table loaders for the TPC-H-ish test schema. The schema
+  * is read from the table's footer on the driver ([[ParquetFooters]]),
+  * so a load submits no job.
   *
   * At cluster scale these reads are plain columnar scans: Catalyst
   * pushes filters/projections into the parquet reader, so operators
@@ -31,7 +33,7 @@ object Tables {
     Set("orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = ParquetFooters.read(spark, Seq(s"$dir/$name.parquet"))
     if (RespreadTables(name) &&
         spark.conf.get("spark.graft.parallelizeScans", "false").toBoolean)
       df.repartition(spark.sparkContext.defaultParallelism)

@@ -215,10 +215,9 @@ object Tombstones {
       // mergeSchema: landings under different key names must surface
       // BOTH columns (footer-of-first-file inference would silently
       // null out the other file's ids); the tree is O(landings)-sized,
-      // so the footer merge is driver-cheap
-      val raw = spark.read.option("recursiveFileLookup", "true")
-        .option("mergeSchema", "true")
-        .parquet(dirOf(path).toString)
+      // so the footer merge runs on the driver
+      val raw = ParquetFooters.read(spark, Seq(dirOf(path).toString), mergeSchema = true,
+        options = Map("recursiveFileLookup" -> "true"))
       // normalize the key column at read (r15): a store can accumulate
       // landings under BOTH names — pre-r14 landings stored doc_id, and
       // a caller appending with the default key to a vec_id-keyed store

@@ -1,0 +1,101 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** Source-text lints over `src/main/scala`: patterns the compiler
+  * accepts but the engine must not ship. No SparkSession.
+  *
+  *  - `UTF8String.compareTo`: in Spark 4.1 it checks a system property
+  *    and an environment variable on every call (and throws under
+  *    `SPARK_TESTING`) before delegating to `binaryCompare`. In a
+  *    per-row kernel that check dominated the profile, so kernels call
+  *    `binaryCompare` directly.
+  */
+class SourceLintSpec extends AnyFunSuite {
+  import SourceLintSpec._
+
+  test("lint: no .compareTo( on a UTF8String receiver in src/main/scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root; no $root here")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+    assert(files.nonEmpty)
+    val hits = files.flatMap(f => utf8CompareTo(read(f)).map(n => s"$f:$n"))
+    assert(hits.isEmpty, "UTF8String.compareTo (use binaryCompare) at: " + hits.mkString(", "))
+  }
+
+  test("lint: the UTF8String.compareTo detector flags typed receivers, not strings") {
+    val flagged = Seq(
+      "val c = sa.getUTF8String(0).compareTo(sb.getUTF8String(0))",
+      "UTF8String.fromString(t).compareTo(u)",
+      "def f(a: UTF8String, b: UTF8String) =\n  a.compareTo(b)",
+      "val u = row.getUTF8String(1)\nif (u.compareTo(v) < 0) 1")
+    flagged.foreach(src => assert(utf8CompareTo(src).nonEmpty, src))
+    assert(utf8CompareTo("val x = 1\nval c = s.getUTF8String(0).compareTo(t)") === Seq(2))
+    val clean = Seq(
+      "val c = sa.getUTF8String(0).binaryCompare(sb.getUTF8String(0))",
+      "val c = \"a\".compareTo(\"b\")",
+      "def f(a: String, b: String) = a.compareTo(b)",
+      "// u.getUTF8String(0).compareTo(v) in a comment",
+      "java.lang.Long.valueOf(x).compareTo(y)")
+    clean.foreach(src => assert(utf8CompareTo(src).isEmpty, src))
+  }
+}
+
+object SourceLintSpec {
+  private def read(f: Path): String = new String(Files.readAllBytes(f), "UTF-8")
+
+  private val Ident = "[A-Za-z_][A-Za-z0-9_]*"
+  /** `name: UTF8String` (parameters, typed vals) anywhere in the file. */
+  private val Typed = raw"($Ident)\s*:\s*UTF8String\b".r
+  /** `val name = ...getUTF8String(` / `UTF8String.fromString(` etc. */
+  private val Bound = raw"\b(?:val|var)\s+($Ident)\s*=\s*[^\n;]*(?:getUTF8String\(|UTF8String\.from\w*\()".r
+
+  /** 1-based line numbers of `.compareTo(` calls whose receiver is a
+    * UTF8String: a `getUTF8String(...)` or `UTF8String.from*(...)`
+    * call, or a name the file declares as one (typed, or bound from
+    * such a call). Comment lines are skipped. A textual check: a
+    * receiver whose type is only inferred across files is missed.
+    */
+  def utf8CompareTo(src: String): Seq[Int] = {
+    val names = (Typed.findAllMatchIn(src) ++ Bound.findAllMatchIn(src)).map(_.group(1)).toSet
+    src.split("\n", -1).toSeq.zipWithIndex.flatMap { case (line, i) =>
+      val t = line.trim
+      if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) Nil
+      else {
+        val hit = raw"\.compareTo\(".r.findAllMatchIn(line).exists { m =>
+          receiverHead(line.substring(0, m.start)) match {
+            case Some(h) => h == "getUTF8String" || h.startsWith("from") &&
+              line.substring(0, m.start).contains("UTF8String.") || names(h)
+            case None => false
+          }
+        }
+        if (hit) Seq(i + 1) else Nil
+      }
+    }
+  }
+
+  /** The last name of the receiver expression that ends `before`: a
+    * trailing balanced `(...)` is skipped, so `a.getUTF8String(0)`
+    * yields `getUTF8String` and `u` yields `u`.
+    */
+  private def receiverHead(before: String): Option[String] = {
+    var j = before.length - 1
+    if (j >= 0 && before(j) == ')') {
+      var depth = 0
+      var done = false
+      while (j >= 0 && !done) {
+        if (before(j) == ')') depth += 1
+        else if (before(j) == '(') { depth -= 1; if (depth == 0) done = true }
+        j -= 1
+      }
+    }
+    val end = j + 1
+    while (j >= 0 && (before(j).isLetterOrDigit || before(j) == '_')) j -= 1
+    if (end > j + 1) Some(before.substring(j + 1, end)) else None
+  }
+}

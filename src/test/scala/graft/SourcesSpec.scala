@@ -1288,4 +1288,128 @@ class SourcesSpec extends SparkSpec {
     assert(got.columns.toSeq === Seq("vec_id"))
     assert(got.collect().map(_.getLong(0)).toSet === Set(1L, 2L))
   }
+
+  /** The jobs `body` submits from this thread, counted by a listener
+    * over a job-local tag. A marker job run afterwards flushes the
+    * listener's queue, which delivers in order: once the marker's
+    * start is seen, every job of `body` has been counted.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (tag, marker) = ("graft.spec.counted", "graft.spec.marker")
+    val count = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty(marker) != null) flushed.countDown()
+          else if (p.getProperty(tag) != null) count.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(tag, "1")
+      val out = try body finally sc.setLocalProperty(tag, null)
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never flushed")
+      (out, count.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** A 64-bucket store whose segments each span more partition
+    * directories than Spark's parallel-listing threshold (32): doc i
+    * holds words w(5i)..w(5i+79), so every segment writes well over
+    * 32 buckets.
+    */
+  private def wideDocs(ids: Seq[Long], shift: Int = 0) = {
+    import spark.implicits._
+    ids.map(i => (i, (0 until 80).map(k => s"w${5 * i + k + shift}").mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
+  test("index store: open and reopenIfStale run no job; each segment's _docs is its postings' doc set") {
+    import spark.implicits._
+    val path = tmpDir("graft-jobless") + "/index"
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(wideDocs(0L to 5L)), path, 0L))
+    // doc 1 re-lands with other words; doc 9 is new
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(wideDocs(Seq(1L, 9L), shift = 7)), path, 1L))
+    assert(IndexStore.deleteBatch(Seq(2L).toDF("doc_id"), path, 0L))
+    IndexStore.saveStats(spark, path)
+    IndexStore.saveMeta((0L to 9L).map(i => (i, if (i % 2 == 0) "en" else "de"))
+      .toDF("doc_id", "lang"), path)
+    IndexStore.saveFuzzy(spark, path)
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(path, "seg=0"))
+      .count(_.getPath.getName.startsWith("term_bucket=")) > 32)
+
+    val (oi, openJobs) = jobsOf(IndexStore.open(spark, path))
+    assert(openJobs === 0, "open must resolve every relation on the driver")
+    assert(oi.stats.isDefined && oi.meta.isDefined && oi.fuzzy.isDefined && oi.deadKeys.isDefined)
+    def served(h: IndexStore.OpenIndex, q: String): Set[Long] =
+      operators.Query.searchIndexOn(h, q).collect().map(_.getLong(0)).toSet
+    // doc 1's first version and taken-down doc 2 held w10
+    assert(served(oi, "w10") === Set(0L))
+    assert(served(oi, "w12") === Set(0L, 1L))
+    assert(served(oi, "w100 AND NOT w131") === Set(5L))
+
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(wideDocs(Seq(3L, 11L), shift = 3)), path, 2L))
+    val (oi2, reopenJobs) = jobsOf(IndexStore.reopenIfStale(oi))
+    assert(!(oi2 eq oi), "a landing must make the handle stale")
+    assert(reopenJobs === 0, "reopenIfStale must resolve every relation on the driver")
+    // doc 3's first version held w15; its second does not
+    assert(served(oi2, "w15") === Set(0L, 1L))
+    assert(served(oi2, "w135") === Set(11L))
+
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    val manifests = (0 to 2).map { seg =>
+      val m = spark.read.parquet(s"$path/seg=$seg/_docs")
+      assert(m.columns.toSeq === Seq("doc_id"))
+      assert(m.count() === ids(m).size.toLong, s"seg=$seg manifest holds duplicates")
+      assert(ids(m) === ids(spark.read.parquet(s"$path/seg=$seg")),
+        s"seg=$seg manifest must equal its postings' doc set")
+      ids(m)
+    }
+    assert(manifests === Seq((0L to 5L).toSet, Set(1L, 9L), Set(3L, 11L)))
+  }
+
+  test("parquet footers: driver-resolved schemas equal Spark's inference; a data-less read fails loudly") {
+    import spark.implicits._
+    import sources.ParquetFooters
+    val path = tmpDir("graft-footers") + "/index"
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(wideDocs(0L to 3L)), path, 0L))
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(wideDocs(Seq(1L), shift = 2)), path, 1L))
+    sources.Tombstones.append(spark, path, Seq(1L), key = "vec_id")
+    assert(IndexStore.deleteBatch(Seq(2L).toDF("doc_id"), path, 0L))
+    IndexStore.saveStats(spark, path)
+    IndexStore.saveMeta(Seq((0L, "en", "web")).toDF("doc_id", "lang", "source"), path)
+    IndexStore.saveFuzzy(spark, path)
+    val segs = Seq(s"$path/seg=0", s"$path/seg=1")
+    Seq(segs, segs.map(_ + "/_docs"), Seq(s"$path/_stats/dl"), Seq(s"$path/_stats/corpus"),
+        Seq(s"$path/_meta"), Seq(s"$path/_fuzzy")).foreach { ps =>
+      val want = spark.read.option("basePath", path).parquet(ps: _*)
+      val got = ParquetFooters.read(spark, ps, options = Map("basePath" -> path))
+      assert(got.schema === want.schema, ps.mkString(","))
+      assert(got.collect().map(_.toString).sorted === want.collect().map(_.toString).sorted)
+    }
+    // the tombstone tree merges every footer: both key columns surface
+    // (in file order, which neither listing fixes)
+    val tombs = s"$path/_tombstones"
+    val merged = ParquetFooters.read(spark, Seq(tombs), mergeSchema = true,
+      options = Map("recursiveFileLookup" -> "true"))
+    assert(merged.schema.fields.sortBy(_.name).toSeq === spark.read
+      .option("recursiveFileLookup", "true").option("mergeSchema", "true").parquet(tombs)
+      .schema.fields.sortBy(_.name).toSeq)
+    assert(merged.columns.toSet === Set("vec_id", "doc_id"))
+    // the table layer, TIMESTAMP(NANOS) events included
+    sources.Tables.all.foreach { t =>
+      assert(sources.Tables.load(spark, sfDir, t).schema ===
+        spark.read.parquet(s"$sfDir/$t.parquet").schema, t)
+    }
+    val empty = tmpDir("graft-footers-empty")
+    Files.createDirectories(java.nio.file.Paths.get(empty, "_docs"))
+    intercept[org.apache.spark.sql.AnalysisException](ParquetFooters.read(spark, Seq(empty)))
+  }
 }
