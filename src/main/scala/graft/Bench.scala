@@ -35,30 +35,9 @@ object Bench {
       }
       if (times.contains(-1.0)) -1.0 else times.min
     }
-    // The Folds family is timed again in production (plain partial-agg)
-    // mode — the 100 TB aggregation shape — reported as "<key>#prod"
-    // next to its bitwise gate twin. The gate numbers stay the
-    // oracle-comparable ones; these show what dropping the
-    // deterministic sorted folds buys. Each twin runs IMMEDIATELY
-    // after its gate key (r11 VERDICT item 4): the old tail-position
-    // block read ~2x its isolated time from late-session GC/run
-    // position and needed manual adjudication every round — adjacent
-    // runs share the same session phase, so gate-vs-prod deltas are
-    // attributable to the fold path alone.
-    val gateBuf = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    val prodBuf = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        gateBuf += name -> time(fn)
-        if (operators.Folds.ProdTwinKeys.contains(name)) {
-          spark.conf.set(operators.Folds.ConfKey, "false")
-          prodBuf += s"$name#prod" -> time(fn)
-          spark.conf.set(operators.Folds.ConfKey, "true")
-        }
-      }
-    val results = gateBuf.toSeq
-    val prodResults = prodBuf.toSeq
+      .map { case (name, fn) => name -> time(fn) }
     // Serving regression entries (r12 VERDICT item 8): the serving
     // percentiles used to be one-shot §6 prose — as `serve:*` keys in
     // the same per-key map, bench_diff flags serving regressions the
@@ -69,8 +48,8 @@ object Bench {
     // p50/p95 per shape land as seconds beside the
     // serve:index_build / serve:stats_build / serve:meta_build
     // deploy costs and the
-    // bucket-pruning violation count. Informational like the #prod
-    // twins — never in "total". Skipped on SPARK_GRAFT_ONLY subset
+    // bucket-pruning violation count. Informational — never in
+    // "total". Skipped on SPARK_GRAFT_ONLY subset
     // runs (no index build for a two-key iteration loop).
     val serveBuf = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     if (only.isEmpty) try {
@@ -187,12 +166,12 @@ object Bench {
       // results then carried an ambiguous failure point
       case _: Throwable => serveBuf += "serve:error" -> -1.0
     }
-    val all = results ++ prodResults ++ serveBuf.toSeq
+    val all = results ++ serveBuf.toSeq
     val qs = all.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errs = all.collect { case (k, -1.0) => "\"" + k + "\"" }.mkString("[", ",", "]")
     // total = the gate queries only, so round-over-round totals stay
-    // comparable; the #prod twins are informational.
+    // comparable; the serve:* entries are informational.
     val total = results.map(_._2).filter(_ >= 0).sum
     // run context, so a regression traces to a machine shape and a
     // commit: the session's cores and shuffle partitions, and the

@@ -23,6 +23,9 @@ object Explain {
   final case class Rule(required: Seq[String] = Nil, forbidden: Seq[String] = Nil,
                         forbiddenRegex: Seq[String] = Nil)
 
+  private val ExactPercentile = "(?<!approx_)percentile\\("
+  private val NoFoldBuffer = Seq("collect_list")
+
   /** Invariants for the most expensive / most shuffle-prone queries.
     * Every rule also forbids `CartesianProduct` (a non-broadcast
     * cartesian is never intended anywhere in the engine — the declared
@@ -82,7 +85,6 @@ object Explain {
     "neardup_apply" -> Rule(forbidden = Seq("bit_count(")),
     "dedup_provenance" -> Rule(forbidden = Seq("bit_count(")),
     "neardup_triangles" -> Rule(),
-    "neardup_pagerank" -> Rule(),
     "pipeline_clean" -> Rule(),
     "cooccur_pmi" -> Rule(),
     // both branches of the bounded bucket-pair switch (see ngram_jaccard)
@@ -91,7 +93,6 @@ object Explain {
     "knn_ivf" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
     "knn_graph" -> Rule(),
     "bm25_topk" -> Rule(required = Seq("BroadcastHashJoin")),
-    "mlt_topk" -> Rule(required = Seq("BroadcastHashJoin")),
     // both ranker legs must be TakeOrdered-bounded before the rank
     // window (the hybrid_search discipline — no unpartitioned window
     // over an unbounded candidate relation)
@@ -126,7 +127,6 @@ object Explain {
     "q22_idle_customers" -> Rule(required = Seq("PushedFilters: [IsNotNull(o_orderdate)")),
     // embedding ops: centroid table broadcast, candidates in-bucket only
     "semantic_dedup" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
-    "embedding_outliers" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
     "q15_top_supplier" -> Rule(required = Seq("PushedFilters: [IsNotNull(l_shipdate)")),
     "q19_disjunctive" -> Rule(required = Seq("BroadcastHashJoin")),
     // session-2 TPC-H flavors: two-role nation join broadcasts both
@@ -139,7 +139,6 @@ object Explain {
     "q12_ship_delay" -> Rule(),
     // vector-store occupancy: centroid table broadcast, never shuffled
     "ivf_bucket_stats" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
-    "events_twap" -> Rule(),
     // session-2 additions: vocab/ranking stats broadcast; the Jaccard
     // histogram inherits the pair join's no-cartesian obligation
     "oov_rate" -> Rule(required = Seq("BroadcastHashJoin")),
@@ -155,8 +154,6 @@ object Explain {
       required = Seq("ReadSchema: struct<doc_id:bigint,text:string,lang:string,source:string>"),
       forbidden = Seq("Join")),
     "shard_assign" -> Rule(),
-    "mix_temperature" -> Rule(),
-    "source_length_quartiles" -> Rule(),
     "ann_probe_curve" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
     "q11_important_parts" -> Rule(required = Seq("BroadcastHashJoin")),
     "q9_profit" -> Rule(required = Seq("BroadcastHashJoin")),
@@ -189,7 +186,6 @@ object Explain {
     "boilerplate_scrub" -> Rule(
       required = Seq("ReadSchema: struct<doc_id:bigint,text:string>")),
     "bigram_lm_kn" -> Rule(), // vocab-sized sides: no pinned broadcast
-    "orders_abc_class" -> Rule(),
     "events_burstiness" -> Rule(),
     "events_forecast_eval" -> Rule(),
     "quality_ppl_corr" -> Rule(),
@@ -227,7 +223,6 @@ object Explain {
     "ranker_eval" -> Rule(required = Seq("BroadcastHashJoin")),
     "events_stl" -> Rule(),
     "events_stl_anomaly" -> Rule(),
-    "epoch_shuffle" -> Rule(),
     // the levenshtein sweep must stream the aggregated vocabulary
     // against the BROADCAST query side, never the token stream
     "spell_correct" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
@@ -238,7 +233,6 @@ object Explain {
     "events_holt_winters" -> Rule(),
     "events_forecast_compare" -> Rule(),
     "media_containment" -> Rule(),
-    "ppl_bucket_mix" -> Rule(),
     // one-pass contract (r11 item 5): the corpus rollup materializes
     // once up front; the emitted plan must re-read NO file at all
     "cms_error_curve" -> Rule(forbidden = Seq("FileScan")),
@@ -251,7 +245,6 @@ object Explain {
     "query_slop" -> Rule(),
     "events_mad" -> Rule(),
     "funnel_latency" -> Rule(),
-    "revenue_gini" -> Rule(),
     "events_cusum" -> Rule(),
     "hapax_ratio" -> Rule(),
     "prf_expand" -> Rule(),
@@ -264,21 +257,18 @@ object Explain {
     // (k, centroid) table; cluster reports broadcast the graph-bounded
     // cluster frame into the corpus join; the bridge self-join stays
     // key-partitioned
-    "ivf_elbow" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
     "ivf_label_purity" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
     "dedup_keep_best" -> Rule(),
     "cluster_source_purity" -> Rule(),
     "revenue_bridge" -> Rule(),
     "events_dow_profile" -> Rule(),
     "tokenizer_fertility" -> Rule(),
-    "char_entropy" -> Rule(),
     "retention_curve" -> Rule(),
     "query_boost" -> Rule(required = Seq("BroadcastHashJoin")),
     // session-5 additions: the DSIR bucket-LM table broadcasts into
     // the per-doc join; curriculum boundaries and zorder maxima are
     // 1-row broadcast frames (never a shuffled cross)
     "dsir_weights" -> Rule(required = Seq("BroadcastHashJoin")),
-    "curriculum_order" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
     "zorder_layout" -> Rule(required = Seq("BroadcastNestedLoopJoin")),
     // hybrid fusion: both legs candidate-bounded (TakeOrdered heaps),
     // the dense leg's 1-row query vector broadcast
@@ -303,7 +293,34 @@ object Explain {
     // the no-cartesian obligation still applies
     "mmr_rerank" -> Rule(),
     "kcenter_select" -> Rule(),
-    "attribution_first_touch" -> Rule())
+    "attribution_first_touch" -> Rule(),
+    // global ranks run range-partitioned: rangeRank's `__bk` buckets,
+    // never one unpartitioned window over the whole frame
+    "revenue_gini" -> Rule(required = Seq("__bk")),
+    "revenue_pareto" -> Rule(required = Seq("__bk")),
+    "rfm_segments" -> Rule(required = Seq("__bk")),
+    "rfm_migration" -> Rule(required = Seq("__bk")),
+    "orders_abc_class" -> Rule(required = Seq("__bk")),
+    "epoch_shuffle" -> Rule(required = Seq("__bk")),
+    "ppl_bucket_mix" -> Rule(required = Seq("__bk")),
+    // exact quartiles without an exact `percentile`, which keeps a
+    // group's value→count map in one aggregation buffer: a rank lookup
+    // (the 1-row boundary frame broadcast) and a per-source histogram
+    "curriculum_order" -> Rule(required = Seq("BroadcastNestedLoopJoin", "__bk"),
+      forbiddenRegex = Seq(ExactPercentile)),
+    "source_length_quartiles" -> Rule(forbiddenRegex = Seq(ExactPercentile)),
+    // double sums are plain partial aggregations: no group-sized
+    // collect_list fold buffer (the ANN keys' dimension-bounded vector
+    // rebuilds — knn_ivf_trained, knn_pq, knn_ivf_pq, ivf_retrain —
+    // keep theirs)
+    "mlt_topk" -> Rule(required = Seq("BroadcastHashJoin"), forbidden = NoFoldBuffer),
+    "embedding_outliers" -> Rule(required = Seq("BroadcastNestedLoopJoin"),
+      forbidden = NoFoldBuffer),
+    "ivf_elbow" -> Rule(required = Seq("BroadcastNestedLoopJoin"), forbidden = NoFoldBuffer)) ++
+    Seq("embedding_stats", "embedding_pca", "qlm_topk", "neardup_pagerank", "source_kl",
+      "zipf_fit", "perplexity_doc", "term_entropy", "keyword_textrank", "mix_temperature",
+      "events_twap", "hashing_vectorize", "char_entropy")
+      .map(_ -> Rule(forbidden = NoFoldBuffer))
 
   /** Saved-index retrieval invariants: the lookup paths must prune
     * term buckets AT PLANNING TIME (PartitionFilters, not a post-scan

@@ -506,10 +506,8 @@ object CosineRecallStress {
 
 /** Scale-stress runner behind SURVEY §6's 10× study: times a set of
   * keys against two data dirs (sf0.1 and the `tools/make_stress10x.py`
-  * clone corpus) under BOTH fold modes — the gate's bitwise
-  * deterministic folds and the production plain partial-agg path — so
-  * each key's cost can be attributed to its input measure rather than
-  * the fold kernels. Shares Bench's honest-materialization contract
+  * clone corpus), so each key's cost can be attributed to its input
+  * measure. Shares Bench's honest-materialization contract
   * (`queryExecution.toRdd`, min-of-2).
   *
   * Usage: `runMain graft.StressBench [key,key,...]` (defaults to the
@@ -524,26 +522,19 @@ object StressBench {
                "doc_lang_mismatch", "simhash_pairs")
     val dirs = sys.env.getOrElse("SPARK_GRAFT_STRESS_DIRS",
       "/root/testdata/sf0.1,/tmp/stress10x").split(',').toSeq
-    // fold-mode filter (default both): heavyweight single-key runs
-    // (e.g. the spill-bound ngram_jaccard 100x) pick one mode so the
-    // shuffle footprint isn't paid twice in one session
-    val modes = sys.env.getOrElse("SPARK_GRAFT_STRESS_FOLDS", "true,false")
-      .split(',').toSeq
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.entry(spark).count() // warm codegen/readers/shuffle
-    for (dir <- dirs; mode <- modes) {
-      spark.conf.set(operators.Folds.ConfKey, mode)
+    for (dir <- dirs) {
       keys.foreach { k =>
         val t = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
           SparkEntry.queries(k)(spark, dir).queryExecution.toRdd.count()
           (System.nanoTime() - t0) / 1e9
         }.min
-        println(f"STRESS dir=$dir%-24s folds=$mode%-5s $k%-20s $t%8.2fs")
+        println(f"STRESS dir=$dir%-24s $k%-20s $t%8.2fs")
       }
     }
-    spark.conf.set(operators.Folds.ConfKey, "true")
     spark.stop()
   }
 }

@@ -12,17 +12,8 @@ object Verify {
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_FOLDS=prod: dump the production-path twins (plain
-    // partial-agg sums / rangeRank instead of the gate's bitwise
-    // folds) for the SAME oracle compare — the artifact that shows the
-    // 100 TB aggregation shape is oracle-green, not only spec-equal to
-    // the gate path. The driver never sets it, so its runs gate the
-    // bitwise contract unchanged.
-    val prodMode = sys.env.get("SPARK_GRAFT_FOLDS").contains("prod")
-    if (prodMode) spark.conf.set(operators.Folds.ConfKey, "false")
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .filter { case (name, _) => !prodMode || operators.Folds.ProdTwinKeys.contains(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -42,11 +33,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // prod mode dumps only the twin keys, so only their oracles land in
-    // the json — check_oracle.py then gates exactly what was dumped
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .filter { case (k, _) => !prodMode || operators.Folds.ProdTwinKeys.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -774,89 +774,56 @@ object Analytics {
     * marketing rollup. Monetary sums run in DECIMAL so the aggregate
     * is addition-order-free (a double sum would be partial-agg-order
     * dependent); every ntile orders by a rounded/exact key with a
-    * custkey tie-break (total order). The windows run over the
-    * per-customer AGGREGATE frame, |customers| rows; at 100 TB the
-    * quartile boundaries come from an approx-quantile sketch and a
-    * broadcast threshold compare replaces the global ntile (same
-    * output contract).
+    * custkey tie-break (total order). The three NTILE(4) scores come
+    * from ONE [[GraftOps.rangeRankMulti]] call over the per-customer
+    * AGGREGATE frame plus the [[ntileFromRank]] arithmetic: the exact
+    * ntile, with no unpartitioned window at any cardinality.
     */
   def rfmSegments(spark: SparkSession, dir: String): DataFrame =
     rfmSegmentsOf(Tables.orders(spark, dir))
 
   def rfmSegmentsOf(o: DataFrame): DataFrame =
-    rfmFromCustRaw(
+    rfmFromCust(
       o.groupBy(col("o_custkey"))
         .agg(max(col("o_orderdate")).as("lastd"),
           count(lit(1)).as("frequency"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).as("mdec")),
-      materialized = false)
+          sum(col("o_totalprice").cast("decimal(18,2)")).as("mdec"))
+        .localCheckpoint())
+      .orderBy("o_custkey")
 
-  /** RFM scoring off a prepared (o_custkey, lastd, frequency, mdec)
-    * rollup — split out so [[rfmMigration]] can feed BOTH halves from
-    * one combined scan+rollup pass. `materialized = true` means the
-    * caller already checkpointed the rollup's parent (row-local
-    * filters on top are fine), so production mode skips its own.
+  /** RFM scoring off a MATERIALIZED (o_custkey, lastd, frequency, mdec)
+    * rollup (a checkpoint, optionally under row-local filters) — split
+    * out so [[rfmMigration]] can feed BOTH halves from one combined
+    * scan+rollup pass. ONE [[GraftOps.rangeRankMulti]] call ranks all
+    * three scores off a single cut-point aggregate, which also counts
+    * the customers and finds the horizon (max over per-customer lasts
+    * = the global max): recency ascending is last order date
+    * descending, so the ranks need no horizon and the order frame is
+    * scanned once. (Three chained single-pass calls paid the
+    * checkpoint+sample floor three times per half — the 6.4s
+    * rfm_migration finding.) The pass values are row-local arithmetic
+    * over the checkpoint, so the rank adds no second one.
     */
-  private def rfmFromCustRaw(custRaw: DataFrame,
-                             materialized: Boolean): DataFrame = {
-    // production materializes the |customers|-row rollup once: the
-    // horizon max, the count and the rank passes all read it (gate
-    // mode keeps the pure plan). The horizon derives from the rollup
-    // itself — max over per-customer lasts = global max — so no
-    // second scan of the order frame in either mode.
-    val custBase =
-      if (Folds.bitwise(custRaw) || materialized) custRaw
-      else custRaw.localCheckpoint()
-    val maxD = custBase.agg(max(col("lastd")).as("maxd"))
-    val cust = custBase
-      .crossJoin(broadcast(maxD))
+  private def rfmFromCust(custBase: DataFrame): DataFrame = {
+    def score(rank: String): Column = ntileFromRank(4, col(rank), col("nn")).cast("long")
+    GraftOps.rangeRankMulti(custBase.withColumn("monetary", col("mdec").cast("double")),
+        Seq("__rnr" -> -datediff(col("lastd"), lit("1970-01-01")),
+          "__rnf" -> -col("frequency"), "__rnm" -> -col("monetary")),
+        col("o_custkey"), materialized = true,
+        totals = Seq(count(lit(1)).as("nn"), max(col("lastd")).as("maxd")))
       .select(col("o_custkey"),
         datediff(col("maxd"), col("lastd")).cast("long").as("recency_days"),
-        col("frequency"),
-        col("mdec").cast("double").as("monetary"))
-    // gate = three global NTILE windows; production = ONE
-    // [[GraftOps.rangeRankMulti]] call ranking all three scores off a
-    // single checkpoint + cut-point sample (identical scores —
-    // FoldsSpec asserts exact equality; no unpartitioned window at
-    // any cardinality; three chained single-pass calls paid the
-    // checkpoint+sample floor three times per half — the
-    // rfm_migration#prod 6.4s finding)
-    val scored = if (Folds.bitwise(cust)) {
-      def score(c: String, asc: Boolean): Column =
-        ntile(4).over(Window.orderBy(
-          (if (asc) col(c).asc else col(c).desc), col("o_custkey"))).cast("long")
-      cust
-        .withColumn("r_score", score("recency_days", asc = true))
-        .withColumn("f_score", score("frequency", asc = false))
-        .withColumn("m_score", score("monetary", asc = false))
-    } else {
-      // custBase is already materialized and cust is row-local
-      // arithmetic on top of it, so the count and the rank passes
-      // need no further checkpoint
-      val n = custBase.agg(count(lit(1)).as("nn"))
-      GraftOps.rangeRankMulti(cust.crossJoin(broadcast(n)),
-          Seq("__rnr" -> col("recency_days"), "__rnf" -> -col("frequency"),
-            "__rnm" -> -col("monetary")), col("o_custkey"), materialized = true)
-        .withColumn("r_score", ntileFromRank(4, col("__rnr"), col("nn")).cast("long"))
-        .withColumn("f_score", ntileFromRank(4, col("__rnf"), col("nn")).cast("long"))
-        .withColumn("m_score", ntileFromRank(4, col("__rnm"), col("nn")).cast("long"))
-        .drop("__rnr", "__rnf", "__rnm", "nn")
-    }
-    scored
-      .withColumn("segment",
-        concat(col("r_score"), col("f_score"), col("m_score")))
-      .select(col("o_custkey"), col("recency_days"), col("frequency"),
-        round(col("monetary"), 2).as("monetary"),
-        col("r_score"), col("f_score"), col("m_score"), col("segment"))
-      .orderBy("o_custkey")
+        col("frequency"), round(col("monetary"), 2).as("monetary"),
+        score("__rnr").as("r_score"), score("__rnf").as("f_score"),
+        score("__rnm").as("m_score"))
+      .withColumn("segment", concat(col("r_score"), col("f_score"), col("m_score")))
   }
 
   /** RFM segment migration — the longitudinal read [[rfmSegments]]'
     * snapshot cannot give: the order history splits at the rank-based
     * lower-median DISTINCT order date, each half gets its own full
     * RFM segmentation (recency relative to that half's horizon, via
-    * the shared [[rfmSegmentsOf]] — gate/production switch
-    * inherited), and the output is the (segment_from → segment_to)
+    * the shared [[rfmFromCust]] scoring), and the output is the (segment_from → segment_to)
     * customer transition matrix with 'new'/'churned' absorbing states
     * — the churn-risk flow chart a retention team reads. The
     * date-median window is calendar-bounded; everything else is the
@@ -871,28 +838,26 @@ object Analytics {
       .crossJoin(broadcast(nn))
       .filter(col("rn") === expr("(n + 1) div 2"))
       .select(col("d").as("split"))
-    // production mode materializes the 1-row split point once — both
-    // halves' rollups otherwise re-run its distinct-date lineage
-    val spM = if (Folds.bitwise(o)) sp else sp.localCheckpoint()
-    val oo = o.crossJoin(broadcast(spM))
+    // the 1-row split point materializes once — both halves' rollups
+    // otherwise re-run its distinct-date lineage
+    val oo = o.crossJoin(broadcast(sp.localCheckpoint()))
     // ONE scan+shuffle computes both halves' per-customer rollups
     // (grouped by (custkey, half) — a customer active in both halves
-    // yields two rows); production checkpoints the combined frame so
-    // the two scoring passes share the materialization instead of
-    // each re-running a filtered scan (the rfm_migration#prod 6.4s
-    // finding: six rank passes × their own scan+sample floors)
+    // yields two rows), checkpointed so the two scoring passes share
+    // the materialization instead of each re-running a filtered scan
+    // (the 6.4s rfm_migration finding: six rank passes × their own
+    // scan+sample floors)
     val rawBoth = oo
       .groupBy(col("o_custkey"),
         (col("o_orderdate") <= col("split")).as("__in_a"))
       .agg(max(col("o_orderdate")).as("lastd"),
         count(lit(1)).as("frequency"),
         sum(col("o_totalprice").cast("decimal(18,2)")).as("mdec"))
-    val prod = !Folds.bitwise(o)
-    val rawM = if (prod) rawBoth.localCheckpoint() else rawBoth
+      .localCheckpoint()
     def halfCust(inA: Boolean): DataFrame =
-      rawM.filter(col("__in_a") === inA).drop("__in_a")
-    val a = rfmFromCustRaw(halfCust(inA = true), materialized = prod)
-    val b = rfmFromCustRaw(halfCust(inA = false), materialized = prod)
+      rawBoth.filter(col("__in_a") === inA).drop("__in_a")
+    val a = rfmFromCust(halfCust(inA = true))
+    val b = rfmFromCust(halfCust(inA = false))
     a.select(col("o_custkey"), col("segment").as("sfrom"))
       .join(b.select(col("o_custkey"), col("segment").as("sto")),
         Seq("o_custkey"), "full_outer")
@@ -912,27 +877,16 @@ object Analytics {
     * where a bigint accumulator would wrap. Ties in x are
     * rank-order-free (equal values contribute the same Σi·x under any
     * permutation), so the custkey tie-break is for determinism of the
-    * plan, not the answer. The rank is the one |customers|-bounded
-    * global window shared with [[revenuePareto]]'s ntile; at extreme
-    * cardinality both switch to range-partitioned ranking
-    * (`range_boundaries` is the sampler that builds the cut points).
+    * plan, not the answer. The rank is [[GraftOps.rangeRank]]'s
+    * range-partitioned two-phase rank, shared with [[revenuePareto]]'s
+    * ntile: exactly the global (x, custkey) row_number, with no
+    * unpartitioned window.
     */
   def revenueGini(spark: SparkSession, dir: String): DataFrame = {
     val cust = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")).as("x"))
-    // Gate mode ranks with the one global window (|customers| rows);
-    // production mode (the 100 TB shape, spark.graft.bitwiseFolds=false)
-    // replaces it with [[GraftOps.rangeRank]]'s range-partitioned
-    // two-phase rank — EXACTLY the same rn (FoldsSpec asserts exact
-    // output equality), no unpartitioned window anywhere.
-    val ranked = if (Folds.bitwise(cust)) {
-      cust.withColumn("rn",
-        row_number().over(Window.orderBy(col("x"), col("o_custkey"))).cast("long"))
-    } else {
-      GraftOps.rangeRank(cust, col("x"), col("o_custkey"))
-    }
-    ranked
+    GraftOps.rangeRank(cust, col("x"), col("o_custkey"))
       .agg(count(lit(1)).as("n_customers"),
         sum(col("x")).as("total_cents"),
         sum((col("rn") * col("x")).cast("decimal(38,0)")).as("w"))
@@ -995,8 +949,8 @@ object Analytics {
 
   /** SQL NTILE(k) recomputed from a global 1-based rank `rn` over `n`
     * rows — the first `n % k` tiles get one extra row, exactly the
-    * Spark/DuckDB NTILE contract. Lets the production paths derive
-    * tiles from [[GraftOps.rangeRank]] instead of a global window.
+    * Spark/DuckDB NTILE contract. Derives tiles from
+    * [[GraftOps.rangeRank]] instead of a global window.
     */
   private def ntileFromRank(k: Int, rn: Column, n: Column): Column = {
     // floor() keeps the divisions integral (exact for ranks < 2^53 —
@@ -1013,31 +967,20 @@ object Analytics {
     * share and the cumulative share — "the top 10% of customers carry
     * X% of revenue". Sums are DECIMAL (addition-order-free); the
     * cumulative window runs over the 10-row decile frame, never
-    * customers. Gate mode tiles with the |customers|-bounded NTILE
-    * window; production mode derives the same tiles from
-    * [[GraftOps.rangeRank]] + [[ntileFromRank]].
+    * customers. The deciles are the NTILE(10) derived from
+    * [[GraftOps.rangeRank]] on the negated spend + [[ntileFromRank]]:
+    * no unpartitioned window, and the customer count and the revenue
+    * total come from the rank's own cut-point aggregate.
     */
   def revenuePareto(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("m"))
-    // gate = the global NTILE window; production = rangeRank on the
-    // negated key + the NTILE arithmetic (identical deciles, no
-    // unpartitioned window) — FoldsSpec asserts exact equality
-    val cust = if (Folds.bitwise(base)) {
-      base.withColumn("decile",
-        ntile(10).over(Window.orderBy(col("m").desc, col("o_custkey"))).cast("long"))
-    } else {
-      val n = base.agg(count(lit(1)).as("nn"))
-      GraftOps.rangeRank(base, -col("m"), col("o_custkey"))
-        .crossJoin(broadcast(n))
-        .withColumn("decile", ntileFromRank(10, col("rn"), col("nn")).cast("long"))
-        .drop("rn", "nn")
-    }
-    val tot = cust.agg(sum(col("m")).cast("double").as("total"))
-    cust.groupBy("decile")
+    GraftOps.rangeRank(base, -col("m"), col("o_custkey"),
+        totals = Seq(count(lit(1)).as("nn"), sum(col("m")).cast("double").as("total")))
+      .withColumn("decile", ntileFromRank(10, col("rn"), col("nn")).cast("long"))
+      .groupBy("decile", "total")
       .agg(count(lit(1)).as("n_customers"), sum(col("m")).as("rev"))
-      .crossJoin(broadcast(tot))
       .select(col("decile"), col("n_customers"),
         (col("rev").cast("double") / col("total")).as("share0"))
       .withColumn("cum0",
@@ -1055,10 +998,10 @@ object Analytics {
     * revenue), B (to 90%) or C. The class test is INTEGER — cum·10 ≤
     * total·7 on exact cents — so no boundary can flip on one engine
     * only; the one double division per class row is display-only.
-    * The rank+prefix window runs on the |parts| rollup, the same
-    * frame family as [[revenuePareto]] (and at extreme cardinality
-    * the same [[GraftOps.rangeRank]] + [[GraftOps.runningTotal]]
-    * two-phase shapes replace both the rank and the prefix sum).
+    * The rank and the prefix sum run on the |parts| rollup, the same
+    * frame family as [[revenuePareto]], as the two-phase
+    * [[GraftOps.rangeRank]] + [[GraftOps.runningTotal]] shapes — no
+    * unpartitioned window.
     */
   def ordersAbcClass(spark: SparkSession, dir: String): DataFrame = {
     // price(18,2) × (1−disc)(18,2) is EXACT at scale 4, so ×10⁴ is an
@@ -1069,34 +1012,22 @@ object Analytics {
       .agg(sum((col("l_extendedprice").cast("decimal(18,2)") *
           (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")) *
           10000).cast("decimal(38,0)")).cast("decimal(38,0)").as("cents"))
-    val tot = pr.agg(sum(col("cents")).cast("decimal(38,0)").as("total"))
-    // gate = one global rank+prefix window over the |parts| rollup;
-    // production = rangeRank for the global rank, then runningTotal
-    // over 1024-rank blocks for the prefix sum (blocks are
-    // non-decreasing in rank — runningTotal's contract) — identical
-    // cum, no unpartitioned window (FoldsSpec asserts equality)
-    val cum = if (Folds.bitwise(pr)) {
-      val w = Window.orderBy(col("cents").desc, col("l_partkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      pr.withColumn("cum", sum(col("cents")).over(w).cast("decimal(38,0)"))
-    } else {
-      GraftOps.runningTotal(
-          GraftOps.rangeRank(pr, -col("cents"), col("l_partkey")),
-          order = col("rn"), value = col("cents"),
-          bucket = expr("(rn - 1) div 1024"))
-        .withColumn("cum", col("running").cast("decimal(38,0)"))
-        .drop("rn", "running")
-    }
-    cum
-      .crossJoin(broadcast(tot))
+    // rangeRank for the global rank (its cut-point aggregate also
+    // sums the total), then runningTotal over 1024-rank blocks for the
+    // prefix sum (blocks are non-decreasing in rank — runningTotal's
+    // contract)
+    GraftOps.runningTotal(
+        GraftOps.rangeRank(pr, -col("cents"), col("l_partkey"),
+          totals = Seq(sum(col("cents")).cast("decimal(38,0)").as("total"))),
+        order = col("rn"), value = col("cents"),
+        bucket = expr("(rn - 1) div 1024"))
       .withColumn("abc_class",
-        when(col("cum") * 10 <= col("total") * 7, lit("A"))
-          .when(col("cum") * 10 <= col("total") * 9, lit("B"))
+        when(col("running") * 10 <= col("total") * 7, lit("A"))
+          .when(col("running") * 10 <= col("total") * 9, lit("B"))
           .otherwise(lit("C")))
-      .groupBy("abc_class")
+      .groupBy("abc_class", "total")
       .agg(count(lit(1)).as("n_parts"),
         sum(col("cents")).cast("decimal(38,0)").as("class_rev_e4"))
-      .crossJoin(broadcast(tot))
       // emitted class_rev_e4 is BIGINT (fits at every gate SF); the
       // share division still runs off the exact decimal operands
       .select(col("abc_class"), col("n_parts"),
@@ -1435,8 +1366,8 @@ object Analytics {
     * [[eventsForecastEval]] (positive skill_hw_vs_holt = the seasonal
     * register beats plain trend smoothing). All three error streams
     * read the PUBLISHED rounded forecast columns (each already
-    * certified bitwise by its own gate key); error sums route through
-    * [[Folds]] keyed by day.
+    * certified bitwise by its own gate key); error sums are plain
+    * partial-agg sums.
     */
   def eventsForecastCompare(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy("day")
@@ -1453,9 +1384,8 @@ object Analytics {
         abs(col("n_events") - col("cprev")).cast("double").as("en"))
     // a <8-day series leaves no overlap days: n = 0 must publish null
     // MAEs (NaN compares unequal to itself across engines)
-    Folds.groupSums(j, Nil, col("day"),
-        Seq("seh" -> col("eh"), "sew" -> col("ew"), "sen" -> col("en")),
-        Seq(count(lit(1)).cast("double").as("n")))
+    j.agg(sum(col("eh")).as("seh"), sum(col("ew")).as("sew"), sum(col("en")).as("sen"),
+        count(lit(1)).cast("double").as("n"))
       .select(col("n").cast("long").as("n_forecasts"),
         when(col("n") > 0, round(col("seh") / col("n"), 6)).as("mae_holt"),
         when(col("n") > 0, round(col("sew") / col("n"), 6)).as("mae_hw"),
@@ -1473,8 +1403,8 @@ object Analytics {
     * carry-forward baseline. Reports MAE for both, MAPE, and the
     * skill score 1 − MAE_holt/MAE_naive (>0 = the model beats
     * persistence — the Hyndman forecasting-textbook acceptance bar).
-    * Error sums route through [[Folds]] keyed by day; everything else
-    * is the Holt fold already certified bitwise by its own key.
+    * Error sums are plain partial-agg sums; everything else is the
+    * Holt fold already certified bitwise by its own key.
     */
   def eventsForecastEval(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy("day")
@@ -1487,9 +1417,8 @@ object Analytics {
         abs(col("n_events") - col("cprev")).cast("double").as("en"),
         (abs(col("n_events").cast("double") - col("fprev")) /
           col("n_events").cast("double")).as("ph"))
-    Folds.groupSums(j, Nil, col("day"),
-        Seq("seh" -> col("eh"), "sen" -> col("en"), "sph" -> col("ph")),
-        Seq(count(lit(1)).cast("double").as("n")))
+    j.agg(sum(col("eh")).as("seh"), sum(col("en")).as("sen"), sum(col("ph")).as("sph"),
+        count(lit(1)).cast("double").as("n"))
       .select(col("n").cast("long").as("n_forecasts"),
         round(col("seh") / col("n"), 6).as("mae_holt"),
         round(col("sen") / col("n"), 6).as("mae_naive"),
@@ -1611,9 +1540,8 @@ object Analytics {
     * register or the plain Holt model deserves the series
     * ([[eventsForecastCompare]] measures the same question
     * empirically). Inputs are the published 6dp STL columns (already
-    * bitwise cross-engine); variances use the n·Σx² − (Σx)² form with
-    * sums folded day-ordered through [[Folds]], so every double is
-    * shared IEEE work. Null when the deseasonalized variance is zero
+    * bitwise cross-engine); variances use the n·Σx² − (Σx)² form over
+    * plain partial-agg sums, rounded to 6dp on output. Null when the deseasonalized variance is zero
     * (a constant series has no strength to measure).
     */
   def eventsSeasonalStrength(spark: SparkSession, dir: String): DataFrame =
@@ -1625,10 +1553,9 @@ object Analytics {
     val core = eventsStlOf(daily).filter(col("resid").isNotNull)
       .select(col("day"), col("resid").as("r"),
         (col("seasonal") + col("resid")).as("z"))
-    Folds.groupSums(core, Nil, col("day"),
-        Seq("sr" -> col("r"), "sr2" -> (col("r") * col("r")),
-          "sz" -> col("z"), "sz2" -> (col("z") * col("z"))),
-        Seq(count(lit(1)).cast("double").as("n")))
+    core.agg(sum(col("r")).as("sr"), sum(col("r") * col("r")).as("sr2"),
+        sum(col("z")).as("sz"), sum(col("z") * col("z")).as("sz2"),
+        count(lit(1)).cast("double").as("n"))
       .select(col("n").cast("long").as("n_days"),
         when(col("n") > 0, round(
           (col("n") * col("sr2") - col("sr") * col("sr")) /
@@ -2478,10 +2405,8 @@ object Analytics {
     * integral the OHLC bars can't give you: each observation weighted
     * by how long it HELD (interval to the next event), so a value
     * that sat all afternoon counts accordingly. One lead window over
-    * the per-(day,type) sort; the Σ value·dt numerator routes through
-    * [[Folds]] (event-id-ordered fold under the gate's bitwise
-    * contract, plain partial-agg sum in production mode), the Σ dt
-    * denominator is an exact integer sum.
+    * the per-(day,type) sort; the Σ value·dt numerator is a plain
+    * partial-agg sum, the Σ dt denominator an exact integer sum.
     */
   def eventsTwap(spark: SparkSession, dir: String): DataFrame = {
     val df = eventsUs(spark, dir)
@@ -2491,9 +2416,9 @@ object Analytics {
     val iv = df
       .withColumn("dt", lead(col("ts_us"), 1).over(w) - col("ts_us"))
       .filter(col("dt").isNotNull)
-    Folds.groupSums(iv, keys = Seq("day", "event_type"), ord = col("event_id"),
-        sums = Seq("num" -> (col("value") * col("dt").cast("double"))),
-        extra = Seq(count(lit(1)).as("n_intervals"), sum(col("dt")).as("den")))
+    iv.groupBy("day", "event_type")
+      .agg(sum(col("value") * col("dt").cast("double")).as("num"),
+        count(lit(1)).as("n_intervals"), sum(col("dt")).as("den"))
       .select(col("day"), col("event_type"), col("n_intervals"),
         round(col("num") / col("den").cast("double"), 6).as("twap"))
       .orderBy("day", "event_type")

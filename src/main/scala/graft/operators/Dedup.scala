@@ -113,8 +113,7 @@ object Dedup {
 
   /** Buckets above this many members take [[boundedBucketPairs]]'
     * self-join fallback instead of the in-buffer combination
-    * expansion. Plan-construction-time conf (like [[Folds.ConfKey]]),
-    * so specs can force the fallback at tiny scale. */
+    * expansion. Plan-construction-time conf, so specs can force the fallback at tiny scale. */
   val MaxBucketConfKey = "spark.graft.maxBucket"
   private def maxBucketOf(df: DataFrame): Int =
     df.sparkSession.conf.get(MaxBucketConfKey, "4096").toInt
@@ -1046,10 +1045,8 @@ object Dedup {
   /** PageRank (2 fixed iterations, d=0.85) over the symmetric simhash
     * near-dup graph — ranks the HUB duplicates a triage pass should
     * look at first. Iteration = one edge-keyed shuffle: each node
-    * sends pr/degree along its edges, receivers sum contributions via
-    * [[Folds]]: SORTED BY SENDER under the gate's bitwise contract
-    * (a plain grouped sum would not be bitwise cross-engine), the
-    * plain partial-agg sum in production mode. Teleport mass (1-d)/N needs
+    * sends pr/degree along its edges, receivers sum contributions as
+    * a plain partial-agg sum. Teleport mass (1-d)/N needs
     * no dangling handling: the symmetric [[cappedSym]] graph has no
     * zero-degree nodes.
     */
@@ -1060,7 +1057,7 @@ object Dedup {
     val d = 0.85
     // literal 0.15, NOT 1.0 - d: the Scala expression folds to
     // 0.15000000000000002 (one ulp off the double the oracle's 0.15
-    // literal denotes) and the bitwise contract would fail whenever a
+    // literal denotes), and the oracle compare would fail whenever a
     // pr lands within an ulp of a round(_, 6) boundary
     val teleport = 0.15
     // the capped edge list feeds degree + both iterations (5 plan
@@ -1076,7 +1073,7 @@ object Dedup {
     def iterate(pr: DataFrame): DataFrame = {
       val contrib = sym.join(pr, "a").join(deg, "a")
         .select(col("b").as("node"), col("a"), (col("pr") / col("deg")).as("c"))
-      Folds.groupSums(contrib, Seq("node"), col("a"), Seq("csum" -> col("c")))
+      contrib.groupBy("node").agg(sum(col("c")).as("csum"))
         .crossJoin(broadcast(nDf))
         .select(col("node").as("a"),
           (lit(teleport) / col("n") + lit(d) * col("csum")).as("pr"))

@@ -164,42 +164,51 @@ object GraftOps {
     * replacement for `row_number().over(Window.orderBy(value, tie))`:
     * a partial-agg quantile sketch (approx_percentile — no window, no
     * sample pass) picks ≤31 range cut points, every row buckets by
-    * value against the broadcast cuts, buckets rank locally in
-    * parallel, and broadcast per-bucket counts shift the local ranks
-    * global. The result is EXACTLY the global rank no matter where
-    * the cuts land: bucket assignment is a monotone function of the
-    * value alone (double-cast compare — the cast is monotone and ties
-    * co-bucket), so (value, tie) order is preserved across buckets;
-    * cut placement only affects bucket BALANCE, which the sketch
-    * makes near-even. The only serial stage is the ≤32-row offset
-    * scan. The input lineage is localCheckpoint'd once so the three
-    * downstream consumers (cuts, offsets, final rank) don't recompute
-    * the caller's plan.
+    * value against the cuts, buckets rank locally in parallel, and
+    * per-bucket counts shift the local ranks global. The result is
+    * EXACTLY the global rank no matter where the cuts land: bucket
+    * assignment is a monotone function of the value alone (double-cast
+    * compare — the cast is monotone and ties co-bucket), so (value,
+    * tie) order is preserved across buckets; cut placement only
+    * affects bucket BALANCE, which the sketch makes near-even. The
+    * input lineage is localCheckpoint'd once so the cut-point, count
+    * and rank passes don't recompute the caller's plan.
     *
     * Output: the input columns + `rn` (1-based global rank by
     * (value ASC, tie ASC); any existing `rn` column is replaced). For
-    * a descending rank pass the negated value.
+    * a descending rank pass the negated value. `materialized` and
+    * `totals` are [[rangeRankMulti]]'s.
     */
-  def rangeRank(df: DataFrame, value: Column, tie: Column): DataFrame =
-    rangeRankMulti(df, Seq("rn" -> value), tie)
+  def rangeRank(df: DataFrame, value: Column, tie: Column, materialized: Boolean = false,
+                totals: Seq[Column] = Nil): DataFrame =
+    rangeRankMulti(df, Seq("rn" -> value), tie, materialized, totals)
 
-  /** N [[rangeRank]] passes amortized over ONE input materialization
-    * and ONE cut-point sample pass: all pass values project onto the
-    * same localCheckpoint'd frame, one aggregate computes every
-    * pass's approx_percentile sketch together (a single partial-agg
-    * scan instead of one per pass), and each pass then pays only its
-    * inherent per-bucket rank window plus a tiny offset rollup. Six
-    * chained single-pass calls on the same frame pay the
-    * checkpoint+sample floor six times (the `rfm_migration#prod`
-    * 6.4s finding); this shape pays it once per frame.
+  /** N [[rangeRank]] passes amortized over ONE input materialization:
+    * all pass values project onto the same localCheckpoint'd frame,
+    * ONE aggregate computes every pass's approx_percentile cut points
+    * (and the caller's `totals`), ONE rollup counts every pass's rows per
+    * bucket (≤32·N rows), and each pass then pays only its inherent
+    * per-bucket rank window. Both small results come to the driver,
+    * so the cut points and bucket offsets enter the rank plan as
+    * literals: every consumer of the ranked frame sees the same cuts
+    * and offsets, and none re-runs their jobs. Six chained
+    * single-pass calls on the same frame pay the checkpoint+sample
+    * floor six times (the 6.4s `rfm_migration` finding); this shape
+    * pays it once per frame.
     *
     * Output: the input columns + one 1-based global-rank column per
     * `(name, value)` pass (rank by (value ASC, tie ASC) — negate the
     * value for descending), each bitwise-identical to the equivalent
-    * single [[rangeRank]] pass.
+    * single [[rangeRank]] pass. `totals` are aliased aggregates over
+    * the whole input frame (a row count, a sum, a max); the cut-point
+    * aggregate computes them in the same scan and each lands as a
+    * constant column under its alias, so a caller that needs n for an
+    * NTILE or a quantile position, or a grand total, runs no job of
+    * its own for it.
     */
   def rangeRankMulti(df: DataFrame, passes: Seq[(String, Column)],
-                     tie: Column, materialized: Boolean = false): DataFrame = {
+                     tie: Column, materialized: Boolean = false,
+                     totals: Seq[Column] = Nil): DataFrame = {
     val vi = passes.indices
     val proj = vi.foldLeft(df.withColumn("__t", tie)) { (d, i) =>
       d.withColumn(s"__v$i", passes(i)._2)
@@ -207,12 +216,12 @@ object GraftOps {
     // `materialized = true`: the caller already localCheckpoint'd the
     // frame (the pass projections are cheap row-local arithmetic), so
     // a second materialization here would only add a pass. The flag is
-    // VERIFIED, not trusted: the cut-point sketch below and the final
+    // VERIFIED, not trusted: the bucket counts below and the final
     // rank evaluate the input subtree in separate jobs, so a
-    // non-materialized (or nondeterministic) parent could produce
-    // DIFFERENT bucket bounds between them — silently wrong ranks. If
-    // any leaf of the claimed-materialized plan is not an in-memory
-    // scan, checkpoint anyway.
+    // non-materialized (or nondeterministic) parent could count
+    // DIFFERENT rows per bucket than the rank then sees — silently
+    // wrong ranks. If any leaf of the claimed-materialized plan is not
+    // an in-memory scan, checkpoint anyway.
     val leavesMaterialized = proj.queryExecution.logical.collectLeaves().forall {
       case _: org.apache.spark.sql.execution.LogicalRDD => true
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
@@ -220,53 +229,36 @@ object GraftOps {
     }
     val b = if (materialized && leavesMaterialized) proj else proj.localCheckpoint()
     val fracs = (1 to 31).map(k => k / 32.0).mkString("array(", ", ", ")")
-    val bounds = b.agg(
-      expr(s"approx_percentile(cast(__v0 as double), $fracs, 1000)").as("__bs0"),
-      vi.drop(1).map(i =>
-        expr(s"approx_percentile(cast(__v$i as double), $fracs, 1000)").as(s"__bs$i")): _*)
-    val bucketed = vi.foldLeft(b.crossJoin(broadcast(bounds))) { (d, i) =>
-        d.withColumn(s"__bk$i",
-          size(filter(array_distinct(col(s"__bs$i")),
-            x => col(s"__v$i").cast("double") > x)).cast("long"))
-      }.drop(vi.map(i => s"__bs$i"): _*)
-    // one job computes every pass's per-bucket offsets (explode to
-    // (pass, bucket) rows, ≤32·N groups) and materializes the tiny
-    // table; N separate rollups would each pay a full scheduling
-    // round. Single-pass calls keep the direct rollup — the explode
-    // and extra materialization would only add jobs there.
-    val offAll =
-      if (vi.size == 1) None
-      else Some(bucketed
-        .select(explode(array(vi.map(i =>
-          struct(lit(i).as("__p"), col(s"__bk$i").as("__bk"))): _*)).as("__e"))
-        .groupBy(col("__e.__p").as("__p"), col("__e.__bk").as("__bk"))
-        .agg(count(lit(1)).as("__c"))
-        .withColumn("__off", coalesce(
-          sum(col("__c")).over(
-            Window.partitionBy("__p").orderBy("__bk")
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("__p"), col("__bk"), col("__off"))
-        .localCheckpoint())
+    val aggs = vi.map(i =>
+      expr(s"approx_percentile(cast(__v$i as double), $fracs, 1000)")) ++ totals
+    val stats = b.agg(aggs.head, aggs.tail: _*).head()
+    // bucket = how many distinct cut points lie below the value (an
+    // empty frame has no cuts): codegen'd compares against literals
+    val bucketed = vi.foldLeft(b) { (d, i) =>
+      val cuts = Option(stats.getSeq[Double](i)).getOrElse(Nil).distinct
+      d.withColumn(s"__bk$i", cuts.foldLeft(lit(0L)) { (acc, c) =>
+        acc + when(col(s"__v$i").cast("double") > c, 1L).otherwise(0L) })
+    }
+    // one job counts every pass's rows per bucket (explode to
+    // (pass, bucket) rows, ≤32·N groups); the driver turns the counts
+    // into each bucket's offset = the rows in lower buckets
+    val counts = bucketed
+      .select(explode(array(vi.map(i =>
+        struct(lit(i).as("p"), col(s"__bk$i").as("bk"))): _*)).as("e"))
+      .groupBy(col("e.p"), col("e.bk")).count()
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     vi.foldLeft(bucketed) { (d, i) =>
-        val offsets = offAll match {
-          case Some(oa) => oa.filter(col("__p") === i)
-            .select(col("__bk").as(s"__bk$i"), col("__off"))
-          case None =>
-            bucketed.groupBy(s"__bk$i").agg(count(lit(1)).as("__c"))
-              .withColumn("__off", coalesce(
-                sum(col("__c")).over(
-                  Window.orderBy(s"__bk$i").rowsBetween(Window.unboundedPreceding, -1)),
-                lit(0L)))
-              .select(col(s"__bk$i"), col("__off"))
-        }
-        d.join(broadcast(offsets), s"__bk$i")
-          .withColumn(passes(i)._1,
-            (col("__off") + row_number().over(
-              Window.partitionBy(s"__bk$i").orderBy(col(s"__v$i"), col("__t")))).cast("long"))
-          .drop("__off")
+        val perBucket = counts.filter(_._1 == i).map(c => c._2 -> c._3).sortBy(_._1)
+        val offsets = perBucket.map(_._1).zip(perBucket.scanLeft(0L)(_ + _._2)).toMap
+        d.withColumn(passes(i)._1,
+          (typedLit(offsets).apply(col(s"__bk$i")) + row_number().over(
+            Window.partitionBy(s"__bk$i").orderBy(col(s"__v$i"), col("__t")))).cast("long"))
       }
       .drop(vi.flatMap(i => Seq(s"__bk$i", s"__v$i")) :+ "__t": _*)
+      .select(col("*") +: totals.indices.map { j =>
+        val f = stats.schema(vi.size + j)
+        lit(stats.get(vi.size + j)).cast(f.dataType).as(f.name)
+      }: _*)
   }
 
   /** Distributed running total: prefix sums of `value` over the TOTAL

@@ -245,9 +245,7 @@ object Index {
     * coordination — each row maps independently at scan speed, and
     * the result feeds the same dense-vector kernels as real
     * embeddings. Emitted exploded as (doc_id, dim, w) rows; the
-    * per-(doc, dim) collision sums route through [[Folds]]
-    * (term-sorted folds under the gate's bitwise contract, plain
-    * partial-agg sums in production).
+    * per-(doc, dim) collision sums are plain partial-agg sums.
     */
   def hashingVectorize(spark: SparkSession, dir: String): DataFrame = {
     val base = tokenStream(spark, dir)
@@ -259,7 +257,8 @@ object Index {
       .select(col("doc_id"), col("term"), (col("rh") % 16).as("dim"),
         (col("tf").cast("double") * log(col("n") / col("df")) *
           when(expr("(rh div 16) % 2") === 0, 1.0).otherwise(-1.0)).as("sw"))
-    Folds.groupSums(w, Seq("doc_id", "dim"), col("term"), Seq("wsum" -> col("sw")))
+    w.groupBy("doc_id", "dim")
+      .agg(sum(col("sw")).as("wsum"))
       .select(col("doc_id"), col("dim"), round(col("wsum"), 6).as("w"))
       .orderBy("doc_id", "dim")
   }
@@ -1157,9 +1156,9 @@ object Index {
     *
     * Scale shape: w is bounded by the query terms' posting lists (never
     * the corpus); UB is a |terms|-row broadcast; seed selection is a
-    * bounded TakeOrdered heap; θ is a 1-row broadcast. Sums fold in
-    * sorted term order through [[Folds.groupSums]] so the multi-term
-    * double addition is cross-engine deterministic.
+    * bounded TakeOrdered heap; θ is a 1-row broadcast. Sums are
+    * plain partial-agg sums over ≤ |terms| doubles per doc, rounded
+    * to 4dp.
     */
   private def wandFrames(docs: DataFrame, terms: Seq[String], k: Int):
       (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -1167,12 +1166,12 @@ object Index {
     // final scoring (three consumers of the same posting-bounded frame)
     val w = bm25WeightsOf(docs, terms).localCheckpoint()
     val ub = w.groupBy("term").agg(max(col("w")).as("ubt"))
-    val docUb = Folds.groupSums(w.join(broadcast(ub), "term"),
-        Seq("doc_id"), col("term"), Seq("ub" -> col("ubt")))
+    val docUb = w.join(broadcast(ub), "term").groupBy("doc_id")
+      .agg(sum(col("ubt")).as("ub"))
       .select(col("doc_id"), round(col("ub"), 4).as("ub"))
     val seed = docUb.orderBy(col("ub").desc, col("doc_id")).limit(k)
-    val theta = Folds.groupSums(w.join(seed.select("doc_id"), "doc_id"),
-        Seq("doc_id"), col("term"), Seq("s" -> col("w")))
+    val theta = w.join(seed.select("doc_id"), "doc_id").groupBy("doc_id")
+      .agg(sum(col("w")).as("s"))
       .select(round(col("s"), 4).as("score"))
       .agg(min(col("score")).as("theta"))
     val pruned = docUb.crossJoin(broadcast(theta))
@@ -1182,8 +1181,8 @@ object Index {
 
   def wandTopkOf(docs: DataFrame, terms: Seq[String], k: Int = 20): DataFrame = {
     val (w, _, _, pruned) = wandFrames(docs, terms, k)
-    Folds.groupSums(w.join(pruned, "doc_id"),
-        Seq("doc_id"), col("term"), Seq("s" -> col("w")))
+    w.join(pruned, "doc_id").groupBy("doc_id")
+      .agg(sum(col("w")).as("s"))
       .select(col("doc_id"), round(col("s"), 4).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -1202,9 +1201,8 @@ object Index {
     * graded pseudo-qrel (the BM25 top-20 with grade 21−rank — so the
     * bm25 row is the fixed point ndcg=1, mrr=1 that validates the
     * metric pipeline, and the other rows price each cheaper ranker's
-    * agreement with it). DCG sums fold in rank order through
-    * [[Folds.groupSums]] (10 doubles — addition order must be pinned
-    * cross-engine); every ranker list and the qrel are bounded
+    * agreement with it). DCG sums are plain partial-agg sums over
+    * 10 doubles; every ranker list and the qrel are bounded
     * TakeOrdered frames.
     *
     * All three rankers (and the qrel's 4th run) evaluate off ONE
@@ -1238,12 +1236,11 @@ object Index {
       .withColumn("rt", row_number().over(wS).cast("long"))
       .select(col("doc_id"), (lit(21L) - col("rt")).as("rel"))
       .localCheckpoint() // read by idcg + all three ranker joins
-    val idcg = Folds.groupSums(
-      truth.orderBy(col("rel").desc).limit(10)
+    val idcg = truth.orderBy(col("rel").desc).limit(10)
         .withColumn("i", row_number().over(Window.orderBy(col("rel").desc)).cast("long"))
         .withColumn("g", col("rel").cast("double") /
-          (log(col("i").cast("double") + 1.0) / log(lit(2.0)))),
-      Seq(), col("i"), Seq("idcg" -> col("g")))
+          (log(col("i").cast("double") + 1.0) / log(lit(2.0))))
+      .agg(sum(col("g")).as("idcg"))
     def ranked(df: DataFrame): DataFrame =
       df.withColumn("ri", row_number().over(wS).cast("long"))
         .select("doc_id", "ri")
@@ -1256,10 +1253,9 @@ object Index {
           .select(lit(nm).as("ranker"), col("ri"),
             coalesce(col("rel"), lit(0L)).cast("double").as("rel"))
       }.reduce(_ unionByName _)
-    val dcg = Folds.groupSums(
-      m.withColumn("g", col("rel") /
-        (log(col("ri").cast("double") + 1.0) / log(lit(2.0)))),
-      Seq("ranker"), col("ri"), Seq("dcg" -> col("g")))
+    val dcg = m.withColumn("g", col("rel") /
+        (log(col("ri").cast("double") + 1.0) / log(lit(2.0)))).groupBy("ranker")
+      .agg(sum(col("g")).as("dcg"))
     val mrr = m.groupBy("ranker")
       .agg(min(when(col("rel") > 0, col("ri"))).as("fr"))
     dcg.join(mrr, "ranker").crossJoin(broadcast(idcg))
@@ -1290,9 +1286,7 @@ object Index {
     * ties at the background score); a missing term still contributes
     * its smoothed background mass via the left join's tf=0 branch.
     * Collection stats (cf, |C|) are 1-to-few-row broadcast aggregates;
-    * the per-doc sum routes through [[Folds]] (term-sorted fold under
-    * the gate's bitwise contract, plain partial-agg sum in
-    * production mode).
+    * the per-doc sum is a plain partial-agg sum.
     */
   def qlmTopkOf(docs: DataFrame, qterms: Seq[String], k: Int = 20): DataFrame = {
     val base = tfBaseOf(docs)
@@ -1321,7 +1315,8 @@ object Index {
       .withColumn("w",
         log((coalesce(col("tf"), lit(0.0)) + lit(mu) * col("cf") / col("c")) /
           (col("dl") + lit(mu))))
-    Folds.groupSums(scored, Seq("doc_id"), col("term"), Seq("wsum" -> col("w")))
+    scored.groupBy("doc_id")
+      .agg(sum(col("w")).as("wsum"))
       .select(col("doc_id"), round(col("wsum"), 4).as("score"))
   }
 
@@ -1460,9 +1455,8 @@ object Index {
     * terms), top-10 per target. Cost is bounded by the expanded
     * query (≤ targets × 5 posting lists joined term-keyed), never
     * doc × doc — the related-documents surface at any corpus size.
-    * The multi-term score sum routes through [[Folds]] (term-sorted
-    * under the gate's bitwise contract — a 5-term plain sum would be
-    * association-order-sensitive — plain partial agg in production).
+    * The multi-term score sum is a plain partial-agg sum over ≤ 5
+    * doubles, rounded to 4dp.
     */
   def mltTopk(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -1480,8 +1474,8 @@ object Index {
       .filter(col("doc_id") =!= col("target_doc"))
     val wr = Window.partitionBy("target_doc")
       .orderBy(col("score").desc, col("doc_id"))
-    Folds.groupSums(cand, Seq("target_doc", "doc_id"), col("term"),
-        Seq("s" -> col("w")))
+    cand.groupBy("target_doc", "doc_id")
+      .agg(sum(col("w")).as("s"))
       .withColumn("score", round(col("s"), 4))
       .withColumn("rk", row_number().over(wr).cast("long"))
       .filter(col("rk") <= 10)

@@ -626,19 +626,17 @@ object Pipeline {
     * share and the epoch multiplier a 1M-token budget implies
     * (epochs > 1 = the tail source repeats). τ = 1/2 is deliberate:
     * `sqrt` is IEEE-correctly-rounded on BOTH engines (a general `pow`
-    * is not), and the weight normalizer routes through [[Folds]] so
-    * the gate's source-ordered fold is bitwise while production mode
-    * keeps the plain constant-buffer sum. One |sources|-row rollup +
-    * a 1-row broadcast — nothing here scales with the corpus.
+    * is not), and the weight normalizer is a plain constant-buffer
+    * sum. One |sources|-row rollup + a 1-row broadcast — nothing here
+    * scales with the corpus.
     */
   def mixTemperature(spark: SparkSession, dir: String): DataFrame = {
     val perSrc = Tables.documents(spark, dir)
       .select(col("source"), size(TextFns.tokens(col("text"))).cast("long").as("t"))
       .groupBy("source").agg(sum(col("t")).as("n_tokens"))
       .withColumn("w", sqrt(col("n_tokens").cast("double")))
-    val tot = Folds.groupSums(perSrc, keys = Nil, ord = col("source"),
-      sums = Seq("wtot" -> col("w")),
-      extra = Seq(sum(col("n_tokens")).cast("double").as("ttot")))
+    val tot = perSrc.agg(sum(col("w")).as("wtot"),
+      sum(col("n_tokens")).cast("double").as("ttot"))
     perSrc.crossJoin(broadcast(tot))
       .select(col("source"), col("n_tokens"),
         round(col("n_tokens").cast("double") / col("ttot"), 6).as("raw_share"),
@@ -654,59 +652,45 @@ object Pipeline {
     * so the doubles match bit-for-bit on integer lengths). The
     * distribution shape a corpus QA pass reads before setting length
     * filters: a source whose q75 is tiny is boilerplate; one whose
-    * q25 is huge needs chunking first. Under the gate's bitwise
-    * contract Spark's exact `percentile` runs (per-GROUP value
-    * buffers — fine at |source| granularity until a source spans
-    * billions of docs); production mode ([[Folds]] switch) computes
-    * the SAME interpolated quantile distributively off a per-source
-    * VALUE HISTOGRAM: group by (source, n_chars) — the frame is
-    * bounded by distinct lengths per source, never by docs — then a
-    * source-partitioned cumulative count locates the two bracketing
-    * values of each (n−1)·q rank and one line of exact double
-    * arithmetic interpolates. Rank positions and fractions are
+    * q25 is huge needs chunking first. Spark's exact `percentile`
+    * keeps each group's value→count map in one in-memory aggregation
+    * buffer; instead the SAME interpolated quantile comes off a
+    * per-source VALUE HISTOGRAM: group by (source, n_chars) — the
+    * frame is bounded by distinct lengths per source, never by docs —
+    * then a source-partitioned cumulative count locates the two
+    * bracketing values of each (n−1)·q rank and one line of exact
+    * double arithmetic interpolates. Rank positions and fractions are
     * quarter-integers (exact binary doubles on integer lengths), so
-    * production output is bitwise-equal to the gate's and both pass
-    * the same quantile_cont oracle at every SF — an approx sketch
-    * here could never match, since it returns a data value while the
-    * oracle interpolates (the r9 sf0.1 PRODPATH find).
+    * the output is bitwise-equal to the exact percentile and passes
+    * the quantile_cont oracle at every SF — an approx sketch here
+    * could never match, since it returns a data value while the
+    * oracle interpolates (the r9 sf0.1 find).
     */
   def sourceLengthQuartiles(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    if (Folds.bitwise(docs)) {
-      docs
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          expr("percentile(n_chars, array(0.25D, 0.5D, 0.75D))").as("qs"))
-        .select(col("source"), col("n_docs"),
-          round(col("qs").getItem(0).cast("double"), 6).as("q25"),
-          round(col("qs").getItem(1).cast("double"), 6).as("q50"),
-          round(col("qs").getItem(2).cast("double"), 6).as("q75"))
-        .orderBy("source")
-    } else {
-      val hist = docs.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("c"))
-      val cum = hist.withColumn("cum",
-        sum(col("c")).over(Window.partitionBy("source").orderBy("n_chars")))
-      val tot = cum.groupBy("source").agg(max(col("cum")).as("nn"))
-      cum.join(broadcast(tot), "source")
-        .withColumn("q", explode(array(lit(0.25d), lit(0.5d), lit(0.75d))))
-        // 0-based fractional rank p = (n-1)·q; bracketing 1-based ranks
-        // floor(p)+1 and ceil(p)+1; value at rank r = min length whose
-        // cumulative count reaches r
-        .withColumn("p", (col("nn") - 1).cast("double") * col("q"))
-        .groupBy("source", "q")
-        .agg(first(col("nn")).as("nn"), first(col("p")).as("p"),
-          min(when(col("cum") >= floor(col("p")) + 1, col("n_chars"))).as("vlo"),
-          min(when(col("cum") >= ceil(col("p")) + 1, col("n_chars"))).as("vhi"))
-        .withColumn("v", round(col("vlo").cast("double") +
-          (col("p") - floor(col("p")).cast("double")) *
-            (col("vhi") - col("vlo")).cast("double"), 6))
-        .groupBy("source")
-        .agg(first(col("nn")).as("n_docs"),
-          max(when(col("q") === 0.25d, col("v"))).as("q25"),
-          max(when(col("q") === 0.5d, col("v"))).as("q50"),
-          max(when(col("q") === 0.75d, col("v"))).as("q75"))
-        .orderBy("source")
-    }
+    val hist = Tables.documents(spark, dir)
+      .groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("c"))
+    val cum = hist.withColumn("cum",
+      sum(col("c")).over(Window.partitionBy("source").orderBy("n_chars")))
+    val tot = cum.groupBy("source").agg(max(col("cum")).as("nn"))
+    cum.join(broadcast(tot), "source")
+      .withColumn("q", explode(array(lit(0.25d), lit(0.5d), lit(0.75d))))
+      // 0-based fractional rank p = (n-1)·q; bracketing 1-based ranks
+      // floor(p)+1 and ceil(p)+1; value at rank r = min length whose
+      // cumulative count reaches r
+      .withColumn("p", (col("nn") - 1).cast("double") * col("q"))
+      .groupBy("source", "q")
+      .agg(first(col("nn")).as("nn"), first(col("p")).as("p"),
+        min(when(col("cum") >= floor(col("p")) + 1, col("n_chars"))).as("vlo"),
+        min(when(col("cum") >= ceil(col("p")) + 1, col("n_chars"))).as("vhi"))
+      .withColumn("v", round(col("vlo").cast("double") +
+        (col("p") - floor(col("p")).cast("double")) *
+          (col("vhi") - col("vlo")).cast("double"), 6))
+      .groupBy("source")
+      .agg(first(col("nn")).as("n_docs"),
+        max(when(col("q") === 0.25d, col("v"))).as("q25"),
+        max(when(col("q") === 0.5d, col("v"))).as("q50"),
+        max(when(col("q") === 0.75d, col("v"))).as("q75"))
+      .orderBy("source")
   }
 
   // -- DSIR importance resampling (Xie et al. 2023, "Data Selection
@@ -758,8 +742,8 @@ object Pipeline {
 
   /** Score (doc_id, text) docs against an LLR table:
     * (doc_id, n_tokens, dsir_logweight, keep). The per-doc fold is
-    * bounded at [[DsirBuckets]] entries, so the sorted fold is NOT a
-    * [[Folds]] hazard; it only pins the double addition order to
+    * bounded at [[DsirBuckets]] entries, so the sorted fold holds no
+    * corpus-sized buffer; it only pins the double addition order to
     * bucket-ascending on both engines. Zero-token docs are absent
     * (no feature mass to score).
     */
@@ -794,13 +778,13 @@ object Pipeline {
     * mod P (order-structured, and epochs differ only by a rotation),
     * while md5's avalanche makes the permutations independent — the
     * salt discipline [[trainTestSplit]]'s 100-bucket split doesn't
-    * need but a full shuffle ORDER does. Under the gate's bitwise
-    * contract the per-epoch position is a rank window; production
-    * mode replaces it with ONE global [[GraftOps.rangeRank]] over the
-    * collision-free composite key epoch·2⁶⁰ + h (h < 2⁶⁰), then
-    * subtracts the epoch's offset — the [[revenuePareto]] discipline,
-    * no per-epoch unpartitioned window at any corpus size. FoldsSpec
-    * asserts the two modes agree exactly.
+    * need but a full shuffle ORDER does. The per-epoch position is
+    * ONE global [[GraftOps.rangeRank]] over the collision-free
+    * composite key epoch·2⁶⁰ + h (h < 2⁶⁰) minus the epoch's offset
+    * epoch·|docs| — the [[Analytics.revenuePareto]] discipline, no
+    * per-epoch unpartitioned window at any corpus size. The rank's
+    * cut-point aggregate counts the nEpochs·|docs| keyed rows, so
+    * |docs| needs no count job of its own.
     */
   def epochShuffle(spark: SparkSession, dir: String): DataFrame =
     epochShuffleOf(Tables.documents(spark, dir), nEpochs = 3)
@@ -813,19 +797,10 @@ object Pipeline {
           lit("ep:"), col("epoch").cast("string"),
           lit(":"), col("doc_id").cast("string"))), 1, 15), 16, 10)
         .cast("long"))
-    val pos =
-      if (Folds.bitwise(keyed))
-        keyed.withColumn("pos", row_number().over(
-          Window.partitionBy("epoch").orderBy(col("h"), col("doc_id"))).cast("long"))
-      else {
-        val nd = docs.agg(count(lit(1)).as("nd"))
-        GraftOps.rangeRank(keyed,
-            col("epoch") * lit(1L << 60) + col("h"), col("doc_id"))
-          .crossJoin(broadcast(nd))
-          .withColumn("pos", col("rn") - col("epoch") * col("nd"))
-          .drop("rn", "nd")
-      }
-    pos.select(col("epoch"), col("pos"), col("doc_id"))
+    GraftOps.rangeRank(keyed, col("epoch") * lit(1L << 60) + col("h"), col("doc_id"),
+        totals = Seq(count(lit(1)).as("n")))
+      .select(col("epoch"), expr(s"rn - epoch * (n div $nEpochs)").as("pos"),
+        col("doc_id"))
       .orderBy("epoch", "pos")
   }
 
@@ -836,18 +811,16 @@ object Pipeline {
     * curriculum scheduler consumes: doc/token counts plus the
     * difficulty envelope of each stage.
     *
-    * Scale shape: under the gate's bitwise contract the quartile
-    * boundaries use Spark's exact `percentile` (one global group —
-    * every value in one aggregation buffer, the same declared hazard
-    * as [[sourceLengthQuartiles]]); in production mode
-    * (`spark.graft.bitwiseFolds=false`, the [[Folds]] switch) the
-    * SAME interpolated boundaries come from [[GraftOps.rangeRank]]:
+    * Scale shape: Spark's exact `percentile` would hold every distinct
+    * difficulty (≈ every doc: the proxy is continuous) in one global
+    * aggregation buffer, so the exact interpolated boundaries come
+    * from [[GraftOps.rangeRank]] instead:
     * the distributed exact rank locates the two bracketing difficulty
     * values of each (n−1)·q position (a 6-row filter on the ranked
-    * frame) and one line of double arithmetic interpolates — the
-    * EXACT quantile_cont formula (vlo + f·(vhi−vlo)) at ANY
-    * cardinality with no global aggregation buffer and no
-    * unpartitioned window. (An
+    * frame, n from the rank's own cut-point aggregate) and one line
+    * of double arithmetic interpolates — the EXACT quantile_cont
+    * formula (vlo + f·(vhi−vlo)) at ANY cardinality with no global
+    * aggregation buffer and no unpartitioned window. (An
     * approx_percentile sketch held exact parity only while its rank
     * error was < 1 — the r9 `source_length_quartiles` find, preempted
     * here; difficulty is continuous, so the value-histogram variant
@@ -863,30 +836,23 @@ object Pipeline {
       .filter(col("n_tokens") > 0)
       .withColumn("difficulty",
         col("ntc").cast("double") / col("n_tokens").cast("double"))
-    val qs =
-      if (Folds.bitwise(d))
-        d.agg(expr("percentile(difficulty, array(0.25D, 0.5D, 0.75D))").as("qs"))
-      else {
-        val ranked = GraftOps.rangeRank(
-          d.select(col("difficulty").as("v")), col("v"), col("v"))
-        val n = d.agg(count(lit(1)).as("nn"))
-        // for q in {¼, ½, ¾}: p = (n−1)q (0-based); boundary =
-        // v[floor(p)] + (p − floor(p))·(v[ceil(p)] − v[floor(p)])
-        ranked.crossJoin(broadcast(n))
-          .withColumn("q", explode(array(lit(0.25d), lit(0.5d), lit(0.75d))))
-          .withColumn("p", (col("nn") - 1).cast("double") * col("q"))
-          .filter(col("rn") === floor(col("p")) + 1 || col("rn") === ceil(col("p")) + 1)
-          .groupBy("q")
-          .agg(first(col("p")).as("p"),
-            min(when(col("rn") === floor(col("p")) + 1, col("v"))).as("vlo"),
-            min(when(col("rn") === ceil(col("p")) + 1, col("v"))).as("vhi"))
-          .withColumn("b", col("vlo") +
-            (col("p") - floor(col("p")).cast("double")) * (col("vhi") - col("vlo")))
-          .agg(array(
-            min(when(col("q") === 0.25d, col("b"))),
-            min(when(col("q") === 0.5d, col("b"))),
-            min(when(col("q") === 0.75d, col("b")))).as("qs"))
-      }
+    // for q in {¼, ½, ¾}: p = (n−1)q (0-based); boundary =
+    // v[floor(p)] + (p − floor(p))·(v[ceil(p)] − v[floor(p)])
+    val qs = GraftOps.rangeRank(d.select(col("difficulty").as("v")), col("v"), col("v"),
+        totals = Seq(count(lit(1)).as("nn")))
+      .withColumn("q", explode(array(lit(0.25d), lit(0.5d), lit(0.75d))))
+      .withColumn("p", (col("nn") - 1).cast("double") * col("q"))
+      .filter(col("rn") === floor(col("p")) + 1 || col("rn") === ceil(col("p")) + 1)
+      .groupBy("q")
+      .agg(first(col("p")).as("p"),
+        min(when(col("rn") === floor(col("p")) + 1, col("v"))).as("vlo"),
+        min(when(col("rn") === ceil(col("p")) + 1, col("v"))).as("vhi"))
+      .withColumn("b", col("vlo") +
+        (col("p") - floor(col("p")).cast("double")) * (col("vhi") - col("vlo")))
+      .agg(array(
+        min(when(col("q") === 0.25d, col("b"))),
+        min(when(col("q") === 0.5d, col("b"))),
+        min(when(col("q") === 0.75d, col("b")))).as("qs"))
     d.crossJoin(broadcast(qs))
       .withColumn("stage",
         when(col("difficulty") <= col("qs").getItem(0), "0_intro")

@@ -229,25 +229,19 @@ object Similarity {
   /** IVF with one deterministic Lloyd refinement: assign to the seed
     * centroids, recompute each bucket's centroid as the dimension-wise
     * mean of its members, re-assign every vector to the nearest
-    * TRAINED centroid, then search as in [[knnIvf]]. The mean is
-    * folded over the (vec_id, value)-sorted member list so the
-    * floating-point addition order is fixed (a plain avg() would be
-    * partial-agg-order-dependent and break cross-engine parity), and
-    * the result is truncated to float — one exact rounding both
-    * engines share. The dim-wise mean routes through [[Folds]]:
-    * production mode (`spark.graft.bitwiseFolds=false`) IS the plain
-    * partial-aggregated sum a real k-iteration Lloyd run uses
-    * (bitwise reproducibility is a gate constraint, not a training
-    * requirement). At 100 TB: the refinement is one extra
-    * (bucket, dim)-keyed shuffle of narrow rows per iteration.
+    * TRAINED centroid, then search as in [[knnIvf]]. The dim-wise
+    * mean is the plain partial-aggregated sum a real k-iteration Lloyd
+    * run uses, truncated to float — the truncation absorbs the
+    * addition-order drift of the double sum. At 100 TB: the
+    * refinement is one extra (bucket, dim)-keyed shuffle of narrow
+    * rows per iteration.
     */
   def ivfTrainedAssign(e: DataFrame): DataFrame = {
     val asg = ivfAssign(e)
     val contrib = asg.select(col("bucket"), col("vec_id"),
       posexplode(col("embedding")).as(Seq("j", "v")))
-    val dims = Folds.groupSums(contrib, Seq("bucket", "j"), col("vec_id"),
-        Seq("sv" -> col("v").cast("double")),
-        Seq(count(lit(1)).as("cnt")))
+    val dims = contrib.groupBy("bucket", "j")
+      .agg(sum(col("v").cast("double")).as("sv"), count(lit(1)).as("cnt"))
       .select(col("bucket"), col("j"),
         (col("sv") / col("cnt")).cast("float").as("c"))
     val cents = dims.groupBy("bucket")
@@ -502,12 +496,10 @@ object Similarity {
     * move (cosine between old seed centroid and the assigned-mass
     * mean; ≈ 1 = the quantizer has converged for that cell, low =
     * the seed sits far from its mass and recall is paying for it).
-    * The per-(bucket, dim) sums route through [[Folds]] — vec_id-
-    * sorted folds under the gate's bitwise contract, plain partial
-    * aggregation in production — and the new-centroid assembly /
-    * cosine are the deterministic left-to-right double kernels
-    * ([[graft.functions.VectorFns.dotD]]), so the doubles match the
-    * oracle bitwise. One narrow posexplode + one (16·d)-group rollup;
+    * The per-(bucket, dim) sums are plain partial aggregations, and
+    * the new-centroid assembly / cosine are the deterministic
+    * left-to-right double kernels ([[graft.functions.VectorFns.dotD]]).
+    * One narrow posexplode + one (16·d)-group rollup;
     * at billions of vectors this is the cheap part of a retrain —
     * the expensive decision it informs is re-bucketing the store.
     */
@@ -518,8 +510,8 @@ object Similarity {
         posexplode(col("embedding")).as(Seq("dim", "x")))
       .select(col("vec_id"), col("bucket"), col("dim").cast("long").as("dim"),
         col("x").cast("double").as("x"))
-    val sums = Folds.groupSums(ex, Seq("bucket", "dim"), col("vec_id"),
-      Seq("s" -> col("x")), Seq(count(lit(1)).as("nv")))
+    val sums = ex.groupBy("bucket", "dim")
+      .agg(sum(col("x")).as("s"), count(lit(1)).as("nv"))
     val newc = sums
       .groupBy("bucket")
       .agg(max(col("nv")).as("n_vecs"),
@@ -540,18 +532,17 @@ object Similarity {
     * max — the drift/degenerate-dimension check run before trusting a
     * new embedding batch (a collapsed dimension shows std ≈ 0, a
     * scale bug shows in min/max). One narrow posexplode + one
-    * dim-keyed shuffle of 16 rows. Sums route through [[Folds]]:
-    * vec_id-sorted folds under the gate's bitwise contract, plain
-    * partial-agg sums in production mode; min/max are order-free.
+    * dim-keyed shuffle of 16 rows. Sums are plain partial-agg sums;
+    * min/max are order-free.
     */
   def embeddingStats(spark: SparkSession, dir: String): DataFrame = {
     val ex = Tables.embeddings(spark, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
       .select(col("vec_id"), col("dim").cast("long").as("dim"),
         col("x").cast("double").as("x"))
-    Folds.groupSums(ex, Seq("dim"), col("vec_id"),
-        Seq("s" -> col("x"), "s2" -> (col("x") * col("x"))),
-        Seq(count(lit(1)).as("n"), min(col("x")).as("mn"), max(col("x")).as("mx")))
+    ex.groupBy("dim")
+      .agg(sum(col("x")).as("s"), sum(col("x") * col("x")).as("s2"),
+        count(lit(1)).as("n"), min(col("x")).as("mn"), max(col("x")).as("mx"))
       .withColumn("mean", col("s") / col("n"))
       .select(col("dim"), col("n"),
         round(col("mean"), 6).as("mean"),
@@ -568,14 +559,11 @@ object Similarity {
     * is the anisotropy/collapse signature embedding QA looks for.
     * Shape: one narrow posexplode, one (i, j)-keyed covariance rollup
     * (d² cells — tiny), then two iterations of a d-row matrix-vector
-    * product; every floating sum routes through [[Folds]] (fixed
-    * vec_id / j / i key order under the gate's bitwise contract,
-    * plain partial-agg sums in production mode).
+    * product; every floating sum is a plain partial-agg sum.
     * Starting vector = all ones (normalized on the first
     * multiply). Runs over a DETERMINISTIC 1/8 sample (vec_id % 8 = 0)
     * — the sample estimator is how production computes PCA at scale,
-    * and it keeps the d²-pair stream (sample × d² rows) bounded while
-    * the bitwise sorted folds stay affordable.
+    * and it keeps the d²-pair stream (sample × d² rows) bounded.
     */
   def embeddingPca(spark: SparkSession, dir: String): DataFrame = {
     val ex = Tables.embeddings(spark, dir)
@@ -586,8 +574,9 @@ object Similarity {
     val nDf = Tables.embeddings(spark, dir)
       .filter(col("vec_id") % 8 === 0)
       .agg(count(lit(1)).cast("double").as("n"))
-    // per-dim mean, vec_id-ordered sum via Folds
-    val mu = Folds.groupSums(ex, Seq("dim"), col("vec_id"), Seq("sx" -> col("x")))
+    // per-dim mean
+    val mu = ex.groupBy("dim")
+      .agg(sum(col("x")).as("sx"))
       .crossJoin(broadcast(nDf))
       .select(col("dim"), (col("sx") / col("n")).as("mu"))
     val cx = ex.join(broadcast(mu), "dim")
@@ -596,16 +585,17 @@ object Similarity {
     val pr = cx.as("a").join(cx.as("b"), Seq("vec_id"))
       .select(col("vec_id"), col("a.dim").as("i"), col("b.dim").as("j"),
         (col("a.c") * col("b.c")).as("p"))
-    val cov = Folds.groupSums(pr, Seq("i", "j"), col("vec_id"), Seq("sp" -> col("p")))
+    val cov = pr.groupBy("i", "j")
+      .agg(sum(col("p")).as("sp"))
       .crossJoin(broadcast(nDf))
       .select(col("i"), col("j"), (col("sp") / col("n")).as("cv"))
       .localCheckpoint() // feeds both iterations
     def iterate(v: DataFrame): DataFrame = {
       val prod = cov.join(v, cov("j") === v("dim"))
         .select(col("i"), col("j"), (col("cv") * col("v")).as("t"))
-      val av = Folds.groupSums(prod, Seq("i"), col("j"), Seq("w" -> col("t")))
+      val av = prod.groupBy("i").agg(sum(col("t")).as("w"))
         .select(col("i").as("dim"), col("w"))
-      val nrm = Folds.groupSums(av, Nil, col("dim"), Seq("ss" -> (col("w") * col("w"))))
+      val nrm = av.agg(sum(col("w") * col("w")).as("ss"))
         .select(sqrt(col("ss")).as("nm"))
       av.crossJoin(broadcast(nrm)).select(col("dim"), (col("w") / col("nm")).as("v"))
     }
@@ -690,9 +680,7 @@ object Similarity {
     * cluster's mean (mis-embedded rows, wrong-modality payloads,
     * garbage inputs — the rows an embedding-QA pass quarantines
     * before training). One broadcast assignment + a 16-row stats
-    * frame; the mean/std sums route through [[Folds]] (vec_id-sorted
-    * under the gate's bitwise contract — the cross-engine threshold
-    * compare is then exact — plain partial-agg in production mode).
+    * frame; the mean/std sums are plain partial-agg sums.
     */
   def embeddingOutliers(spark: SparkSession, dir: String): DataFrame = {
     val en = withNorm(Tables.embeddings(spark, dir))
@@ -705,9 +693,9 @@ object Similarity {
       .withColumn("crn", row_number().over(w))
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("cid").as("bucket"), col("ccos"))
-    val stats = Folds.groupSums(a, Seq("bucket"), col("vec_id"),
-        Seq("s" -> col("ccos"), "s2" -> (col("ccos") * col("ccos"))),
-        Seq(count(lit(1)).as("n")))
+    val stats = a.groupBy("bucket")
+      .agg(sum(col("ccos")).as("s"), sum(col("ccos") * col("ccos")).as("s2"),
+        count(lit(1)).as("n"))
       .select(col("bucket"), (col("s") / col("n")).as("mu"),
         sqrt(col("s2") / col("n") -
           (col("s") / col("n")) * (col("s") / col("n"))).as("sd"))
@@ -855,18 +843,13 @@ object Similarity {
       .withColumn("dq", l2sq(col("sv"), col("cv")))
       .select(col("vec_id").as("query_id"), col("m"), col("cid").as("code"), col("dq"))
 
-  /** Rank candidate (query, vector) code matches by the ADC table-sum
-    * Σ_m dq(m, code_m) — folded over the m-sorted list so the double
-    * addition order is fixed cross-engine.
-    */
-  /** (query_id, vec_id, adist): the raw ADC table-sum distances via
-    * [[Folds]] — m-sorted fold under the gate's bitwise contract,
-    * plain partial-agg sum in production mode. Shared by the final
+  /** (query_id, vec_id, adist): the raw ADC table-sum distances
+    * Σ_m dq(m, code_m), a plain partial-agg sum. Shared by the final
     * rank and the two-stage shortlist.
     */
   private def adcDistances(matches: DataFrame): DataFrame =
-    Folds.groupSums(matches.filter(col("vec_id") =!= col("query_id")),
-      Seq("query_id", "vec_id"), col("m"), Seq("adist" -> col("dq")))
+    matches.filter(col("vec_id") =!= col("query_id")).groupBy("query_id", "vec_id")
+      .agg(sum(col("dq")).as("adist"))
 
   private def adcRank(matches: DataFrame): DataFrame = {
     val wRank = Window.partitionBy("query_id").orderBy(col("adist").asc, col("vec_id"))
@@ -921,8 +904,8 @@ object Similarity {
     * — the diagnostic read BEFORE re-training the codebook
     * ([[ivfRetrain]]'s decision, one level down). Same shape as
     * encoding itself: codebook broadcast, one narrow argmin per
-    * (vector, subspace), one NSub-row rollup; per-subspace error sums
-    * fold vec_id-ordered through [[Folds]].
+    * (vector, subspace), one NSub-row rollup of per-subspace error
+    * sums.
     */
   def pqDistortion(spark: SparkSession, dir: String): DataFrame = {
     val parts = pqParts(Tables.embeddings(spark, dir))
@@ -932,8 +915,8 @@ object Similarity {
       .withColumn("d", l2sq(col("sv"), col("cv")))
       .withColumn("rn", row_number().over(wEnc))
       .filter(col("rn") === 1)
-    Folds.groupSums(best, Seq("m"), col("vec_id"), Seq("sse" -> col("d")),
-        Seq(count(lit(1)).as("n_vectors"), max(col("d")).as("mx")))
+    best.groupBy("m")
+      .agg(sum(col("d")).as("sse"), count(lit(1)).as("n_vectors"), max(col("d")).as("mx"))
       .select(col("m").cast("long").as("m"), col("n_vectors"),
         round(col("sse") / col("n_vectors").cast("double"), 6).as("mse"),
         round(col("mx"), 6).as("max_sq_err"))
@@ -1038,10 +1021,8 @@ object Similarity {
     * [[ivfRetrain]] refines it). All four assignment sweeps share ONE
     * pass over the store: the (k, centroid) table is 30 broadcast
     * rows, the per-(k, vec) argmax is a narrow window over ≤16
-    * candidates, and only the |k|-row inertia rollup shuffles. The
-    * inertia sum routes through [[Folds]] — vec_id-sorted fold under
-    * the gate's bitwise contract, plain partial-agg sum in
-    * production — so the curve is bitwise cross-engine.
+    * candidates, and only the |k|-row inertia rollup shuffles (a
+    * plain partial-agg sum).
     */
   def ivfElbow(spark: SparkSession, dir: String): DataFrame = {
     val en = withNorm(Tables.embeddings(spark, dir))
@@ -1060,8 +1041,8 @@ object Similarity {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("k"), col("vec_id"), (lit(1.0) - col("ccos")).as("d"))
-    Folds.groupSums(asg, Seq("k"), col("vec_id"),
-        Seq("in0" -> col("d")), Seq(count(lit(1)).as("n_vecs")))
+    asg.groupBy("k")
+      .agg(sum(col("d")).as("in0"), count(lit(1)).as("n_vecs"))
       .select(col("k"), col("n_vecs"),
         round(col("in0"), 6).as("inertia"),
         round(col("in0") / col("n_vecs").cast("double"), 6).as("avg_dist"))
@@ -1106,9 +1087,7 @@ object Similarity {
     * builds the 16 sum-vectors (broadcast), then a narrow per-vector
     * pass computes a(i) (own cluster, self-excluded) and b(i) (min
     * over other clusters) and s = (b−a)/max(a,b); the per-dim and
-    * per-bucket sums route through [[Folds]] (vec_id-ordered folds
-    * under the gate's bitwise contract, plain partial aggs in
-    * production). At 100 TB this is exactly two input-scaled passes
+    * per-bucket sums are plain partial aggs. At 100 TB this is exactly two input-scaled passes
     * — assignment and scoring — plus a k×dim broadcast.
     */
   def ivfSilhouette(spark: SparkSession, dir: String): DataFrame = {
@@ -1117,8 +1096,8 @@ object Similarity {
         transform(col("embedding"), v => v.cast("double") / col("nm")).as("u"))
     val contrib = asg.select(col("bucket"), col("vec_id"),
       posexplode(col("u")).as(Seq("j", "v")))
-    val svec = Folds.groupSums(contrib, Seq("bucket", "j"), col("vec_id"),
-        Seq("su" -> col("v")))
+    val svec = contrib.groupBy("bucket", "j")
+      .agg(sum(col("v")).as("su"))
       .groupBy("bucket")
       .agg(sort_array(collect_list(struct(col("j"), col("su")))).as("js"))
       .select(col("bucket").as("cb"),
@@ -1138,8 +1117,8 @@ object Similarity {
       .withColumn("s",
         when(col("n_own") === 1 || greatest(col("a"), col("b")) <= 0.0, lit(0.0))
           .otherwise((col("b") - col("a")) / greatest(col("a"), col("b"))))
-    Folds.groupSums(scored, Seq("bucket"), col("vec_id"), Seq("ssum" -> col("s")),
-        Seq(count(lit(1)).as("n_vecs")))
+    scored.groupBy("bucket")
+      .agg(sum(col("s")).as("ssum"), count(lit(1)).as("n_vecs"))
       .select(col("bucket"), col("n_vecs"),
         round(col("ssum") / col("n_vecs").cast("double"), 6).as("mean_silhouette"))
       .orderBy("bucket")

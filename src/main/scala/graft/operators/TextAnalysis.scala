@@ -70,8 +70,7 @@ object TextAnalysis {
     * from the mix (the "is this source weird" check behind data-mix
     * decisions, the distributional sibling of `sampling_weights`).
     * All probabilities are exact-integer ratios; the per-source sum
-    * routes through [[Folds]] (term-sorted fold under the gate's
-    * bitwise contract, plain partial-agg sum in production mode).
+    * is a plain partial-agg sum.
     */
   def sourceKl(spark: SparkSession, dir: String): DataFrame = {
     val st = Tables.documents(spark, dir)
@@ -86,7 +85,8 @@ object TextAnalysis {
       .withColumn("ps", col("n").cast("double") / col("tot").cast("double"))
       .withColumn("contrib",
         col("ps") * log(col("ps") / (col("cn").cast("double") / col("ct"))))
-    Folds.groupSums(contrib, Seq("source"), col("term"), Seq("klsum" -> col("contrib")))
+    contrib.groupBy("source")
+      .agg(sum(col("contrib")).as("klsum"))
       .select(col("source"), round(col("klsum"), 6).as("kl"))
       .orderBy("source")
   }
@@ -130,9 +130,8 @@ object TextAnalysis {
     * score(d,l) = ln π_l + Σ_t tf·ln(c_tl + 1) − dl_V·ln(tot_l + |V|):
     * zero-count (term, lang) cells contribute tf·ln(1) = 0, so the
     * join touches ONLY observed model rows — no vocab×lang dense
-    * frame ever materializes. The per-(doc, lang) log-sum folds in
-    * term order through [[Folds.groupSums]] (bitwise under the gate,
-    * plain partial-agg in production); the argmax reads the ROUNDED
+    * frame ever materializes. The per-(doc, lang) log-sum is a plain
+    * partial-agg sum; the argmax reads the ROUNDED
     * score with lang tie-break, [[langId]]'s determinism discipline.
     */
   def nbLangid(spark: SparkSession, dir: String): DataFrame =
@@ -157,7 +156,7 @@ object TextAnalysis {
     * token counts plus (lang, nd) doc priors — the shared core of the
     * batch holdout eval and [[graft.streaming.Stream.nbRouterGate]]'s
     * prequential scoring against its counts ledger. Same add-one
-    * identity, same term-ordered [[Folds]] log-sum, same
+    * identity, same partial-agg log-sum, same
     * rounded-score/lang-tie-break argmax as documented on
     * [[nbLangid]].
     */
@@ -177,10 +176,8 @@ object TextAnalysis {
     // are dropped (the standard vocabulary-restricted NB contract)
     val dv = tf.join(broadcast(vocab), "term")
       .groupBy("doc_id").agg(sum(col("tf")).as("dv"))
-    val part1 = Folds.groupSums(
-      tf.join(broadcast(ctl), "term"),
-      Seq("doc_id", "lang"), col("term"),
-      Seq("p1" -> (col("tf").cast("double") * log(col("c").cast("double") + 1.0))))
+    val part1 = tf.join(broadcast(ctl), "term").groupBy("doc_id", "lang")
+      .agg(sum(col("tf").cast("double") * log(col("c").cast("double") + 1.0)).as("p1"))
     val langs = totl.join(broadcast(prior), "lang").crossJoin(broadcast(vDf))
       .select(col("lang").as("l"), col("lnp"),
         log((col("tot") + col("v")).cast("double")).as("lnt"))
@@ -291,9 +288,8 @@ object TextAnalysis {
     * slices a gzip pass would collapse, high entropy flags
     * base64/binary junk ([[termEntropy]] is the token-level per-doc
     * sibling). Counts are one (source, char) integer rollup; the
-    * entropy fold runs over the ≤|alphabet| per-source term list
-    * through [[Folds]] (char-sorted under the gate's bitwise
-    * contract, plain sum in production).
+    * entropy sum runs over the ≤|alphabet| per-source terms as a
+    * plain partial-agg sum.
     */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
     val cc = Tables.documents(spark, dir)
@@ -307,8 +303,9 @@ object TextAnalysis {
       .select(col("source"), col("ch"),
         ((-col("p")) * log(col("p")) / log(lit(2.0))).as("x"),
         col("t"), col("nd"))
-    Folds.groupSums(terms, Seq("source"), col("ch"), Seq("h" -> col("x")),
-        Seq(max(col("t")).as("n_chars"), max(col("nd")).as("n_distinct")))
+    terms.groupBy("source")
+      .agg(sum(col("x")).as("h"), max(col("t")).as("n_chars"),
+        max(col("nd")).as("n_distinct"))
       .select(col("source"), col("n_chars"), col("n_distinct"),
         round(col("h"), 6).as("entropy_bits"))
       .orderBy("source")
@@ -342,17 +339,15 @@ object TextAnalysis {
   // ---- term_entropy ----------------------------------------------------
 
   /** Per-document Shannon entropy of the term distribution,
-    * H = ln(n) - Σ tf·ln(tf) / n, summed via [[Folds]]: count-sorted
-    * fold under the gate's bitwise contract (identical doubles
-    * cross-engine — an agg-ordered sum would not be), plain
-    * partial-agg sum in production mode.
+    * H = ln(n) - Σ tf·ln(tf) / n, a plain partial-agg sum rounded
+    * to 6dp on output.
     */
   def termEntropy(spark: SparkSession, dir: String): DataFrame =
     Index.tokenStream(spark, dir)
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .transform(tf => Folds.groupSums(tf, Seq("doc_id"), col("tf"),
-        Seq("slog" -> (col("tf").cast("double") * log(col("tf").cast("double")))),
-        Seq(sum(col("tf")).cast("double").as("n"))))
+      .groupBy("doc_id")
+      .agg(sum(col("tf").cast("double") * log(col("tf").cast("double"))).as("slog"),
+        sum(col("tf")).cast("double").as("n"))
       .select(col("doc_id"),
         round(log(col("n")) - col("slog") / col("n"), 6).as("entropy"))
       .orderBy("doc_id")
@@ -661,8 +656,8 @@ object TextAnalysis {
     * cell contributes p(s,l)·ln(c·n / (c_s·c_l)) where every factor
     * inside the log is an exact integer product, so the only
     * engine-sensitive step is the log itself (shared libm contract,
-    * same as every entropy key) and the cell sum routes through
-    * [[Folds]] under the gate's bitwise ordering. Shape: one
+    * same as every entropy key) and the cell sum is a plain
+    * partial-agg sum. Shape: one
     * (source, lang) rollup — cells number |sources|×|langs|, so the
     * marginals and the fold are driver-trivial at any corpus size.
     */
@@ -685,9 +680,8 @@ object TextAnalysis {
           log((col("c").cast("double") * col("n").cast("double")) /
             (col("cs").cast("double") * col("cl").cast("double")))).as("x"),
         col("n_sources"), col("n_langs"), col("n_cells"))
-    Folds.groupSums(terms, Nil, col("k"), Seq("mi" -> col("x")),
-        Seq(max(col("n_sources")).as("n_sources"), max(col("n_langs")).as("n_langs"),
-          max(col("n_cells")).as("n_cells")))
+    terms.agg(sum(col("x")).as("mi"), max(col("n_sources")).as("n_sources"),
+        max(col("n_langs")).as("n_langs"), max(col("n_cells")).as("n_cells"))
       .select(col("n_sources"), col("n_langs"), col("n_cells"),
         round(col("mi"), 6).as("mi_nats"))
   }
@@ -854,9 +848,8 @@ object TextAnalysis {
   /** Zipf's-law fit: least-squares slope/intercept of ln(freq) against
     * ln(rank) over the top-100 terms — the corpus-law summary statistic
     * (a healthy natural corpus slopes ≈ -1; synthetic or boilerplate-
-    * heavy corpora flatten). The regression sums route through
-    * [[Folds]] (RANK-SORTED folds under the gate's bitwise contract,
-    * plain partial-agg sums in production mode); the window runs over
+    * heavy corpora flatten). The regression sums are plain
+    * partial-agg sums; the window runs over
     * the aggregated vocabulary, never the token stream.
     */
   def zipfFit(spark: SparkSession, dir: String): DataFrame = {
@@ -870,10 +863,9 @@ object TextAnalysis {
         row_number().over(Window.orderBy(col("f").desc, col("term"))).cast("long"))
       .select(col("rk"), log(col("rk").cast("double")).as("x"),
         log(col("f").cast("double")).as("y"))
-    Folds.groupSums(pts, Nil, col("rk"),
-        Seq("sx" -> col("x"), "sy" -> col("y"),
-          "sxx" -> (col("x") * col("x")), "sxy" -> (col("x") * col("y"))),
-        Seq(count(lit(1)).cast("double").as("n")))
+    pts.agg(sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+        sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"),
+        count(lit(1)).cast("double").as("n"))
       .select(col("n"), col("sx"), col("sy"),
         ((col("n") * col("sxy") - col("sx") * col("sy")) /
           (col("n") * col("sxx") - col("sx") * col("sx"))).as("sl"))
@@ -1562,9 +1554,8 @@ object TextAnalysis {
     * score perplexity-based quality filters threshold on (an external
     * LM would ship its table the same way). The LM is built once
     * (one (w1,w2) partial-agg shuffle) and joined back to the doc
-    * bigram stream; per-doc log-prob sums route through [[Folds]]
-    * (value-sorted fold under the gate's bitwise contract, plain
-    * partial-agg sum in production mode). At 100 TB the model table is
+    * bigram stream; per-doc log-prob sums are plain partial-agg
+    * sums. At 100 TB the model table is
     * vocab-bounded — broadcast or shuffle-joined by (w1,w2), never
     * corpus-sized state.
     */
@@ -1590,8 +1581,8 @@ object TextAnalysis {
         log((col("c12") + 1L).cast("double") /
           (col("c1").cast("double") + col("v"))).as("lp"))
     val joined = docBg.join(scored, Seq("w1", "w2"))
-    Folds.groupSums(joined, Seq("doc_id"), col("lp"), Seq("lpsum" -> col("lp")),
-        Seq(count(lit(1)).cast("double").as("nbg")))
+    joined.groupBy("doc_id")
+      .agg(sum(col("lp")).as("lpsum"), count(lit(1)).cast("double").as("nbg"))
       .select(col("doc_id"), col("nbg").cast("long").as("n_bigrams"),
         round(-col("lpsum") / col("nbg"), 6).as("avg_nll"),
         round(exp(-col("lpsum") / col("nbg")), 4).as("ppl"))
@@ -1609,10 +1600,10 @@ object TextAnalysis {
     * (ppl, doc_id)) — pure selection like [[Analytics.eventsMad]]'s
     * lower median, no interpolated percentile whose last-ulp behavior
     * differs by engine. Docs too short to score (< 2 tokens) land in
-    * an explicit unscored bucket rather than vanishing. Under the
-    * gate's bitwise contract the cutoff ranks come from a global rank
-    * window; production mode swaps in [[GraftOps.rangeRank]]
-    * (the [[Analytics.revenuePareto]] discipline). The rollup is
+    * an explicit unscored bucket rather than vanishing. The cutoff
+    * ranks come from [[GraftOps.rangeRank]] (the
+    * [[Analytics.revenuePareto]] discipline), whose cut-point
+    * aggregate also counts the scored docs. The rollup is
     * |sources| × 4 rows; token shares are exact-integer ratios.
     */
   def pplBucketMix(spark: SparkSession, dir: String): DataFrame = {
@@ -1625,16 +1616,11 @@ object TextAnalysis {
       .join(perplexityDocOf(docs).select(col("doc_id"), col("ppl")),
         Seq("doc_id"), "left")
       .localCheckpoint()
-    val scored = sp.filter(col("ppl").isNotNull)
-    val nn = scored.agg(count(lit(1)).as("n"))
-    val ranked =
-      if (Folds.bitwise(sp))
-        scored.withColumn("rn", row_number().over(
-          Window.orderBy(col("ppl"), col("doc_id"))).cast("long"))
-      else GraftOps.rangeRank(scored, col("ppl"), col("doc_id"))
+    // a row-local filter over the checkpoint: the rank needs no second one
+    val ranked = GraftOps.rangeRank(sp.filter(col("ppl").isNotNull), col("ppl"),
+      col("doc_id"), materialized = true, totals = Seq(count(lit(1)).as("n")))
     def cutoff(kExpr: String, out: String): DataFrame =
-      ranked.crossJoin(broadcast(nn))
-        .filter(col("rn") === expr(kExpr)).select(col("ppl").as(out))
+      ranked.filter(col("rn") === expr(kExpr)).select(col("ppl").as(out))
     val t1 = cutoff("(n + 2) div 3", "t1")
     val t2 = cutoff("(2 * n + 2) div 3", "t2")
     val bucketed = sp.crossJoin(broadcast(t1)).crossJoin(broadcast(t2))
@@ -1664,9 +1650,7 @@ object TextAnalysis {
     * expensive part is the one windowed self-join that builds edge
     * counts, shared shape with [[Index.cooccurPmi]]. Damping constants
     * are literal 0.15/0.85 on BOTH engines (1.0 − 0.85 ≠ 0.15 in
-    * doubles); per-node sums route through [[Folds]] (sender-sorted
-    * folds under the gate's bitwise contract, plain partial-agg sums
-    * in production mode).
+    * doubles); per-node sums are plain partial-agg sums.
     */
   def keywordTextrank(spark: SparkSession, dir: String): DataFrame = {
     val tok = Tables.documents(spark, dir)
@@ -1686,7 +1670,7 @@ object TextAnalysis {
         .join(broadcast(s.withColumnRenamed("term", "v")), "v")
         .select(col("u"), col("v"),
           (col("w").cast("double") / col("wdeg").cast("double") * col("score")).as("c"))
-      Folds.groupSums(contrib, Seq("u"), col("v"), Seq("csum" -> col("c")))
+      contrib.groupBy("u").agg(sum(col("c")).as("csum"))
         .select(col("u").as("term"),
           (lit(0.15) + lit(0.85) * col("csum")).as("score"))
     }
@@ -1876,19 +1860,17 @@ object TextAnalysis {
     * the cheap filter and the expensive LM agree on what "low
     * quality" means (they should anti-correlate: high quality, low
     * ppl). Inputs are the two keys' own (rounded, cross-engine
-    * deterministic) outputs; the five moment sums route through
-    * [[Folds]] keyed by doc_id. One narrow join on doc_id.
+    * deterministic) outputs; the five moment sums are plain
+    * partial-agg sums. One narrow join on doc_id.
     */
   def qualityPplCorr(spark: SparkSession, dir: String): DataFrame = {
     val q = qualityScore(spark, dir).select(col("doc_id"), col("quality").as("x"))
     val p = perplexityDocOf(Tables.documents(spark, dir))
       .select(col("doc_id"), col("ppl").as("y"))
     val j = q.join(p, "doc_id")
-    Folds.groupSums(j, Nil, col("doc_id"),
-        Seq("sx" -> col("x"), "sy" -> col("y"),
-          "sxx" -> (col("x") * col("x")), "syy" -> (col("y") * col("y")),
-          "sxy" -> (col("x") * col("y"))),
-        Seq(count(lit(1)).cast("double").as("n")))
+    j.agg(sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+        sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"),
+        sum(col("x") * col("y")).as("sxy"), count(lit(1)).cast("double").as("n"))
       .select(col("n").cast("long").as("n_docs"),
         // zero variance on either side leaves r undefined: emit null,
         // never NaN (NaN != NaN would break the gate compare; oracle

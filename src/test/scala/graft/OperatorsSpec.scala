@@ -1159,26 +1159,25 @@ class OperatorsSpec extends SparkSpec {
     st.sliding(2).foreach { case Array(a, b) =>
       assert(a.getDouble(4) <= b.getDouble(4) + 1e-9)
     }
-    // production (approx_percentile) boundaries: still a 4-stage
-    // partition of the same corpus, stage counts within the sketch's
-    // rank error of the exact quartile split (eps = 1/accuracy)
-    spark.conf.set(operators.Folds.ConfKey, "false")
-    try {
-      val prod = operators.Pipeline.curriculumOrder(spark, sfDir).collect()
-      assert(prod.length === 4)
-      assert(prod.map(_.getLong(1)).sum === nTok)
-      val n = st.map(_.getLong(1)).sum.toDouble
-      st.zip(prod).foreach { case (a, b) =>
-        assert(a.getString(0) === b.getString(0))
-        assert(math.abs(a.getLong(1) - b.getLong(1)) <= math.max(1.0, n / 10000.0) * 4,
-          s"stage ${a.getString(0)}: ${a.getLong(1)} vs ${b.getLong(1)}")
-      }
-      val plan = operators.Pipeline.curriculumOrder(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("approx_percentile"))
-      assert("(?<!approx_)percentile\\(".r.findFirstIn(plan).isEmpty,
-        "exact percentile still in the production plan")
-    } finally spark.conf.set(operators.Folds.ConfKey, "true")
+    // the rank-lookup boundaries are EXACT: every stage count equals
+    // the split at the R-7 interpolated quartiles of the sorted
+    // difficulties (the quantile_cont convention)
+    val xs = sources.Tables.documents(spark, sfDir)
+      .select(size(graft.functions.TextFns.tokens(col("text"))).as("nt"),
+        length(regexp_replace(col("text"), "\\s", "")).as("ntc"))
+      .filter(col("nt") > 0)
+      .select((col("ntc").cast("double") / col("nt").cast("double")).as("d"))
+      .collect().map(_.getDouble(0)).sorted
+    def quartile(p: Double): Double = {
+      val h = (xs.length - 1) * p
+      val lo = math.floor(h).toInt
+      val hi = math.min(lo + 1, xs.length - 1)
+      xs(lo) + (h - lo) * (xs(hi) - xs(lo))
+    }
+    val bounds = Seq(0.25, 0.5, 0.75).map(quartile) :+ Double.PositiveInfinity
+    val want = bounds.indices.map { i =>
+      xs.count(x => x <= bounds(i) && (i == 0 || x > bounds(i - 1))).toLong }
+    assert(st.map(_.getLong(1)).toSeq === want)
   }
 
   test("zorder_layout: partitions cover the table and bound BOTH key spans") {
@@ -1499,30 +1498,24 @@ class OperatorsSpec extends SparkSpec {
       .select("source", "n_chars").collect()
       .groupBy(_.getString(0))
       .map { case (s, rs) => s -> rs.map(_.getLong(1)).sorted }
-    val gate = operators.Pipeline.sourceLengthQuartiles(spark, sfDir).collect()
-    spark.conf.set(operators.Folds.ConfKey, "false")
-    try {
-      val prod = operators.Pipeline.sourceLengthQuartiles(spark, sfDir).collect()
-      assert(prod.nonEmpty)
-      // production's value-histogram path is EXACT: every quartile must
-      // equal the R-7 interpolation over the sorted lengths, and the
-      // whole row must be bitwise-equal to the gate's exact-percentile
-      // output (the oracle compares both modes to one quantile_cont)
-      assert(prod.map(_.toString).sorted.toSeq === gate.map(_.toString).sorted.toSeq)
-      prod.foreach { r =>
-        val xs = lens(r.getString(0))
-        val n = xs.length
-        assert(r.getLong(1) === n.toLong)
-        Seq(0.25 -> r.getDouble(2), 0.5 -> r.getDouble(3), 0.75 -> r.getDouble(4))
-          .foreach { case (p, q) =>
-            val h = (n - 1) * p
-            val lo = math.floor(h).toInt
-            val hi = math.min(lo + 1, n - 1)
-            val want = xs(lo) + (h - lo) * (xs(hi) - xs(lo))
-            assert(q === math.rint(want * 1e6) / 1e6, s"${r.getString(0)} p=$p")
-          }
-      }
-    } finally spark.conf.set(operators.Folds.ConfKey, "true")
+    val got = operators.Pipeline.sourceLengthQuartiles(spark, sfDir).collect()
+    // the value-histogram path is EXACT: one row per source, and every
+    // quartile equals the R-7 interpolation over the sorted lengths
+    // (the quantile_cont convention the oracle uses)
+    assert(got.map(_.getString(0)).toSet === lens.keySet)
+    got.foreach { r =>
+      val xs = lens(r.getString(0))
+      val n = xs.length
+      assert(r.getLong(1) === n.toLong)
+      Seq(0.25 -> r.getDouble(2), 0.5 -> r.getDouble(3), 0.75 -> r.getDouble(4))
+        .foreach { case (p, q) =>
+          val h = (n - 1) * p
+          val lo = math.floor(h).toInt
+          val hi = math.min(lo + 1, n - 1)
+          val want = xs(lo) + (h - lo) * (xs(hi) - xs(lo))
+          assert(q === math.rint(want * 1e6) / 1e6, s"${r.getString(0)} p=$p")
+        }
+    }
   }
 
   test("bigram_lm_kn: probabilities recompute from raw counts; mass under 1") {

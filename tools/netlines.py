@@ -84,10 +84,20 @@ def changed(base, head, path):
     return removed, added
 
 
+def is_commit(rev):
+    return subprocess.run(("git", "rev-parse", "--verify", "--quiet",
+                           rev + "^{commit}"), capture_output=True).returncode == 0
+
+
 def main(argv):
-    if len(argv) not in (2, 3):
+    # an option or an unknown revision would reach `git diff` as an
+    # argument and die there with a traceback: print the usage instead
+    if len(argv) not in (2, 3) or any(a.startswith("-") for a in argv[1:]):
         sys.exit(__doc__)
     base, head = argv[1], (argv[2] if len(argv) == 3 else None)
+    for rev in (base, head):
+        if rev is not None and not is_commit(rev):
+            sys.exit(f"unknown revision: {rev}\n{__doc__}")
     names = ["diff", "--name-only", base] + ([head] if head else []) + ["--"]
     files = set(git(*(names + list(ROOTS))).splitlines())
     untracked = set()
