@@ -64,6 +64,29 @@ class FoldsSpec extends SparkSpec {
     }
   }
 
+  /** The keys whose floating sums once went through a collect_list
+    * fold buffer (the PQ family shares adcDistances — knn_pq and
+    * knn_ivf_pq cover it).
+    */
+  val foldKeys = Seq("embedding_stats", "embedding_pca", "qlm_topk",
+    "neardup_pagerank", "source_kl", "zipf_fit", "perplexity_doc",
+    "term_entropy", "keyword_textrank", "knn_ivf_trained",
+    "knn_pq", "knn_ivf_pq", "embedding_outliers", "mlt_topk",
+    "mix_temperature", "events_twap", "hashing_vectorize",
+    "ivf_elbow", "ivf_retrain", "char_entropy")
+
+  test("production mode plans have no collect_list buffer") {
+    // the ANN keys keep one DIMENSION-bounded collect_list: the
+    // centroid/codebook vector reassembly (d rows -> one array<float>,
+    // never corpus-sized) — only the corpus-sized fold buffers must go
+    val vectorRebuildKeys = Set("knn_ivf_trained", "knn_pq", "knn_ivf_pq",
+      "ivf_retrain")
+    foldKeys.filterNot(vectorRebuildKeys).foreach { key =>
+      val plan = SparkEntry.queries(key)(spark, sfDir).queryExecution.executedPlan.toString
+      assert(!plan.contains("collect_list"), s"$key production plan still folds a list")
+    }
+  }
+
   /** RFM segment codes from three global NTILE(4) windows. */
   private def refRfm(o: DataFrame): DataFrame = {
     val c = o.groupBy("o_custkey")
