@@ -84,10 +84,8 @@ object Cli {
       val k = rest.headOption.map(_.toInt).getOrElse(10)
       if (IndexStore.isIndex(spark, input)) {
         // a saved index serves ranked queries without touching any
-        // corpus: bucket-pruned leaf fetch + the persisted stats side
-        // table (built lazily here on first use — a one-time index
-        // pass, after which every query is leaf-bounded)
-        if (!IndexStore.hasStats(spark, input)) IndexStore.saveStats(spark, input)
+        // corpus: bucket-pruned leaf fetch + the document lengths its
+        // `_docs` manifests carry
         val nBuckets = IndexStore.buckets(spark, input)
           .getOrElse(IndexStore.DefaultBuckets)
         val idCol = Seq("title", "doc_id")

@@ -322,12 +322,18 @@ object Explain {
       "events_twap", "hashing_vectorize", "char_entropy")
       .map(_ -> Rule(forbidden = NoFoldBuffer))
 
+  /** The retired BM25 side table's directory: document lengths live
+    * in the `_docs` manifests, and no index plan may read it again.
+    */
+  val RetiredStats = "_stats"
+
   /** Saved-index retrieval invariants: the lookup paths must prune
     * term buckets AT PLANNING TIME (PartitionFilters, not a post-scan
     * filter) and the query grammar's prefix leaf must push its
     * StartsWith into the parquet scan — the reads that keep a saved
     * 100 TB index query at ≤ |terms|/nBuckets of the index. Audited
-    * by [[auditIndex]] over a small index saved from sfDir.
+    * by [[auditIndex]] over a small index saved from sfDir, which also
+    * forbids [[RetiredStats]] in every one of these plans.
     */
   val IndexAuditRules: Map[String, Rule] = Map(
     "index_lookup" -> Rule(required = Seq("PartitionFilters", "term_bucket")),
@@ -344,8 +350,9 @@ object Explain {
       required = Seq("PartitionFilters", "term_bucket"),
       forbidden = Seq("Generate", "documents")),
     // the index-served BM25 path: on the default (single-pass) branch
-    // the leaf fetch is bucket-pruned at planning time and the corpus
-    // NEVER appears; on the FORCED MaxScore branch (maxscoreRows=0)
+    // the leaf fetch is bucket-pruned at planning time, the corpus
+    // NEVER appears, and n/avgdl are literals, so no nested-loop
+    // (cross) join either; on the FORCED MaxScore branch (maxscoreRows=0)
     // the fetch runs once inside a per-query localCheckpoint — pruning
     // is pinned on the fetch subtree (`searchranked_fetch`) and the
     // ladder's final plan must carry NO index scan at all
@@ -353,7 +360,7 @@ object Explain {
     // the layout)
     "searchranked_index" -> Rule(
       required = Seq("PartitionFilters", "term_bucket"),
-      forbidden = Seq("documents")),
+      forbidden = Seq("documents", "BroadcastNestedLoopJoin")),
     "searchranked_ladder" -> Rule(
       forbidden = Seq("documents", "term_bucket")),
     "searchranked_fetch" -> Rule(
@@ -422,7 +429,6 @@ object Explain {
       .toString + "/index"
     sources.IndexStore.save(operators.Index.invertedIndex(spark, sfDir), idx,
       nBuckets = 8)
-    sources.IndexStore.saveStats(spark, idx)
     sources.IndexStore.saveMeta(sources.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "source"), idx)
     val plans = Map(
@@ -452,7 +458,8 @@ object Explain {
         operators.Query.searchIndex(spark, idx,
           "lang:en AND (spark OR query)", nBuckets = 8))
     IndexAuditRules.toSeq.sortBy(_._1).flatMap { case (name, rule) =>
-      applyRule(name, rule, plans(name).queryExecution.executedPlan.toString)
+      applyRule(name, rule.copy(forbidden = rule.forbidden :+ RetiredStats),
+        plans(name).queryExecution.executedPlan.toString)
     }
   }
 

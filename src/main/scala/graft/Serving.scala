@@ -76,10 +76,10 @@ object Serving {
       if (safeLangs.isEmpty) Array("term", "bool", "phrase", "ranked")
       else Array("term", "bool", "phrase", "ranked", "fielded", "fuzzy")
     // prepared = the serving-session shape (r13 verdict item 7): ONE
-    // IndexStore.open pins the store's file listing, the `_stats`/
-    // `_meta`/`_fuzzy` side tables and the plan of the dead-key set
-    // (superseded segment versions + takedowns), which the first query
-    // materializes once; every query plans against the held frames
+    // IndexStore.open pins the store's file listing, its `_docs`
+    // manifests, the `_meta`/`_fuzzy` side tables and the plan of the
+    // dead-key set (superseded segment versions + takedowns), which the
+    // first query holds once; every query plans against the held frames
     // (`*On` variants) instead of re-listing the store and re-reading
     // the `_docs` manifests and tombstones — the per-query planning
     // floor. Results are parity-specced identical; only latency may

@@ -108,13 +108,8 @@ object IndexScaleStress {
     sources.IndexStore.save(operators.Index.invertedIndex(spark, dir), idxPath,
       nBuckets = 64)
     println(f"IDXSTRESS dir=$dir%-20s build ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    // the ranked serving leg needs the stats side table — one index
-    // pass at deploy time, priced here like the build
-    val tS = System.nanoTime()
-    sources.IndexStore.saveStats(spark, idxPath)
-    println(f"IDXSTRESS dir=$dir%-20s stats ${(System.nanoTime() - tS) / 1e9}%8.2fs")
-    // fielded-search metadata: deploy-time cost priced like the stats
-    // table, and the fielded audit rule below needs the side table.
+    // fielded-search metadata: deploy-time cost priced like the build,
+    // and the fielded audit rule below needs the side table.
     // Guarded on column presence (the zipf:<n> synthetic corpora carry
     // only doc_id/text): a field-less corpus simply runs the 4-shape
     // mix, it must not kill the whole stress run before measurement.

@@ -566,18 +566,20 @@ object Query {
     *   - tf: the stored per-posting `tf` column of the fetched rows;
     *   - df: a per-term row count over the SAME fetch — a bucket-pruned
     *     term fetch returns the term's COMPLETE posting list, so df
-    *     needs no side table and is exact even between stats refreshes
-    *     (tombstones/segment versions resolve in the fetch);
-    *   - dl / n / avgdl: the persisted doc-count-sized
-    *     [[graft.sources.IndexStore.saveStats]] side table (dl involves
-    *     terms not in the query — the one statistic a leaf fetch cannot
-    *     supply). Between refreshes they are snapshot values (scores
-    *     drift like any serving engine between index refreshes; a
-    *     deleted doc still vanishes, because matching/tf are live).
+    *     needs no side table (tombstones/segment versions resolve in
+    *     the fetch);
+    *   - dl: each layout's `_docs` manifest carries its documents'
+    *     lengths (dl involves terms not in the query — the one
+    *     statistic a leaf fetch cannot supply), resolved through the
+    *     same dead-key set as the postings
+    *     ([[graft.sources.IndexStore.OpenIndex.dl]]); n and avgdl are
+    *     one aggregate over those live rows, planned as literals. All
+    *     three are exact at every snapshot — after landings, re-landed
+    *     updates, takedowns and folds alike — with no refresh step.
     *
     * Per query the read is ≤ |query terms|/nBuckets of the index plus
-    * one column-pruned pass of the doc-count-sized dl table; no corpus
-    * scan anywhere. Score semantics (BM25 k1=1.2 b=0.75, boosts, ties,
+    * one column-pruned pass of the doc-count-sized manifests; no
+    * corpus scan anywhere. Score semantics (BM25 k1=1.2 b=0.75, boosts, ties,
     * rounding) are [[searchRanked]]'s exactly — parity-specced row for
     * row on the gate corpora. `n` counts INDEXED docs (a zero-token doc
     * never enters the index; corpora with empty docs shift the corpus
@@ -602,8 +604,7 @@ object Query {
     * term's near-zero idf puts its only-fat docs under θ, so the
     * posting-list tail never reaches the dl join.
     *
-    * The ladder engages ADAPTIVELY (jobless gate: |positive terms| ·
-    * indexed-docs vs `spark.graft.maxscoreRows`, default 10M): below
+    * The ladder engages ADAPTIVELY (gate: |positive terms| · n vs `spark.graft.maxscoreRows`, default 10M): below
     * the crossover the single-pass scoring wins on stage latency and
     * the plan is r13's exactly — measured on the 500k fat-df store,
     * the always-on ladder REGRESSED ranked p50 1.38s → 3.3s because
@@ -680,28 +681,29 @@ object Query {
     val terms = positiveTerms(ast)
     val boosts = boostWeights(ast)
     require(terms.nonEmpty, s"query has no positive terms to rank by: $query")
-    require(oi.stats.nonEmpty,
-      s"index at ${oi.path} has no _stats side table — run " +
-        "IndexStore.saveStats(spark, path) after building the index " +
-        "(compaction refreshes it automatically)")
+    // n and avgdl: the handle's live corpus scalars, planned as
+    // literals (collected once per handle; a store whose manifests
+    // carry no dl fails here, naming the upgrade)
+    val (n, avgdl) = oi.corpus
     // LADDER GATE (measured, r14): the ladder's extra stages (fetch
     // checkpoint, bound pass, seed scoring, θ broadcast) carry ~1.5s+
     // of fixed stage latency on a local session, while the single-pass
     // tail they prune (dl join + aggregation + TakeOrdered over the
     // matched posting rows) stays sub-second until posting lists reach
     // tens of millions of rows — the always-on ladder REGRESSED the
-    // 500k-store ranked p50 1.38s → 3.3s. The gate is jobless: the
-    // upper bound |positive terms| · indexed-docs (n off the handle's
-    // already-collected stats row) against `spark.graft.maxscoreRows`
-    // (default 10M). Below it the plan is the r13 single pass over the
-    // bucket-pruned layout, exactly; at or above it the fetch
-    // materializes ONCE (localCheckpoint) and the bound-prune-rescore
-    // ladder runs over the pinned rows (pruning audited on the fetch
-    // subtree — `searchranked_fetch`; the ladder's final plan carries
-    // no index scan). Both branches rank identically (parity specs
-    // force the gate both ways); [[searchRankedIndexStats]] always
-    // prices the ladder's scored-vs-candidates split.
-    val ladder = terms.size.toLong * math.max(oi.nDocs, 0L) >= oi.spark.conf
+    // 500k-store ranked p50 1.38s → 3.3s. The gate adds no job (n
+    // comes with the handle's corpus scalars): the upper bound
+    // |positive terms| · n against
+    // `spark.graft.maxscoreRows` (default 10M). Below it the plan is
+    // the r13 single pass over the bucket-pruned layout, exactly; at or
+    // above it the fetch materializes ONCE (localCheckpoint) and the
+    // bound-prune-rescore ladder runs over the pinned rows (pruning
+    // audited on the fetch subtree — `searchranked_fetch`; the
+    // ladder's final plan carries no index scan). Both branches rank
+    // identically (parity specs force the gate both ways);
+    // [[searchRankedIndexStats]] always prices the ladder's
+    // scored-vs-candidates split.
+    val ladder = terms.size.toLong * n.toLong >= oi.spark.conf
       .get("spark.graft.maxscoreRows", "10000000").toLong
     val postings0 = leafPostingsOn(oi, ast)
     val postings = if (ladder) postings0.localCheckpoint() else postings0
@@ -709,7 +711,6 @@ object Query {
     // a document without its terms (`x OR NOT y`); a NOT-less ranked
     // query never scans beyond its terms' buckets
     val matches = matchesOf(postings, ast, id, oi.universe, oi.meta.orNull)
-    val (dl, corpus) = oi.stats.get
     // over a FIELDED index, ranking scores the BODY field's tf only
     // (title rows would double-count the title tokens; per-field
     // weighting — BM25F — is a different model)
@@ -717,50 +718,30 @@ object Query {
     val ranked = (if (postings.columns.contains("field"))
         ranked0.filter(col("field") === "body") else ranked0)
       .select(col(id), col("term"), col("tf").cast("double").as("tf"))
-    // df AND the bound's maxtf ride the same complete-list fetch —
-    // both exact even between stats refreshes
+    // df AND the bound's maxtf ride the same complete-list fetch
     val tstats = ranked.groupBy("term").agg(
       count(lit(1)).cast("double").as("df"), max(col("tf")).as("maxtf"))
     val boostCol = boosts.foldLeft(lit(1.0)) { case (acc, (t, bw)) =>
       when(col("term") === t, lit(bw)).otherwise(acc)
     }
-    // idf CLAMPED at 0 (r15): with FRESH stats idf is provably
-    // positive (df ≤ n ⇒ the log argument > 1), so the clamp is an
-    // identity and oracle/corpus parity is untouched — but a STALE n
-    // snapshot can sit below a live df (docs landed after the stats
-    // refresh), turning idf negative, and a negative term weight
-    // INVERTS the MaxScore bound (ub < score ⇒ cand can prune
-    // everything ⇒ empty results). Clamped, an over-common term
-    // contributes 0 until the refresh — drift semantics, and the
-    // bound stays a bound.
-    val idfCol = greatest(
-      log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0), lit(0.0))
-    val ub = tstats.crossJoin(broadcast(corpus))
-      .select(col("term"), col("df"),
-        (boostCol * idfCol * (col("maxtf") * (k1 + 1.0)) /
-          (col("maxtf") + lit(k1) * lit(1.0 - b))).as("ubt"))
+    // n counts the same live docs df does, so df ≤ n and idf > 0: a
+    // term weight is never negative and UB stays a bound
+    val idfCol = log((lit(n) - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
+    val ub = tstats.select(col("term"), col("df"),
+      (boostCol * idfCol * (col("maxtf") * (k1 + 1.0)) /
+        (col("maxtf") + lit(k1) * lit(1.0 - b))).as("ubt"))
     val rankedM = ranked.join(matches, Seq(id), "left_semi")
     val docUb = rankedM.join(broadcast(ub.select("term", "ubt")), "term")
       .groupBy(id).agg(round(sum(col("ubt")), 4).as("ub"))
-    // dl joins LEFT with an avgdl fallback (r15 — the stats-staleness
-    // doc DROP): the dl table is a snapshot, so a doc whose segment
-    // landed after the last stats refresh matches term/bool/phrase
-    // serving yet had NO dl row — the old inner join silently dropped
-    // it from ranked results, which is stronger than the documented
-    // score-drift contract. Now it scores with dl = avgdl (drift,
-    // exactly like the contract's n/avgdl drift) until the refresh;
-    // [[graft.sources.IndexStore.saveSegment]]'s incremental stats
-    // fold makes the fallback a crash-window-only path, and
-    // [[graft.sources.IndexStore.statsFresh]] is the loud signal.
+    // every scored doc has a live dl row: both sides resolve through
+    // the handle's one dead-key set
     def scored(sel: DataFrame): DataFrame =
       rankedM.join(sel, Seq(id), "left_semi")
         .join(broadcast(tstats.select("term", "df")), "term")
-        .join(dl, Seq(id), "left")
-        .crossJoin(broadcast(corpus))
+        .join(oi.dl, Seq(id))
         .withColumn("w", boostCol * idfCol *
           (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * coalesce(col("dl"), col("avgdl")) / col("avgdl"))))
+          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))))
         .groupBy(id).agg(round(sum(col("w")), 4).as("score"))
     val seed = docUb.orderBy(col("ub").desc, col(id)).limit(k).select(id)
     val theta = scored(seed).agg(min(col("score")).as("theta"))

@@ -51,6 +51,10 @@ object IndexStore {
     * results are unchanged. The codec is a codegen'd kernel pair
     * ([[graft.functions.PostingsFns]]), so the whole-corpus write
     * path stays inside whole-stage codegen.
+    *
+    * Every layout written here carries its `_docs` manifest (see
+    * [[DocsManifest]]): plain roots, [[compact]]/[[merge]] outputs,
+    * segments and fold outputs alike.
     */
   def save(index: DataFrame, path: String, nBuckets: Int = DefaultBuckets): Unit = {
     val encoded =
@@ -69,9 +73,54 @@ object IndexStore {
       .write.mode("overwrite")
       .partitionBy("term_bucket")
       .parquet(path)
+    val spark = index.sparkSession
+    writeDocs(spark, path, s"$path/$DocsManifest")
     // persist the layout's bucket count AFTER the (overwriting) data
     // write, so lookups validate against the truth, not a stale marker
-    writeBuckets(index.sparkSession, path, nBuckets)
+    writeBuckets(spark, path, nBuckets)
+  }
+
+  /** Per-layout manifest: one `(id, dl)` row per document the layout
+    * (re)wrote — underscore-prefixed, so parquet data listings skip it.
+    * `id` is `doc_id`, or `title` for a title-keyed index. `dl` is the
+    * document's length, the sum of its postings' `tf`; on a fielded
+    * index only the body field counts (ranking scores body tf, and
+    * title rows would overcount every titled doc), and a doc with no
+    * body postings has a null dl. The ids are the layout's versions
+    * for the dead-key resolution ([[SegmentedStore.deadKeys]]); the
+    * lengths are BM25's dl, n and avgdl ([[OpenIndex.dl]]), kept with
+    * the postings that name the document like Lucene's per-segment
+    * norms.
+    */
+  private val DocsManifest = "_docs"
+
+  /** Write the manifest of the layout at `dir` into `dest` from a
+    * column-pruned scan of the layout's own files, not from a second
+    * run of the plan that produced them (for a landing that plan is
+    * the whole invert). A layout with no data file gets no manifest
+    * ([[SegmentedStore.land]] then drops it as empty), and so does one
+    * with no id column.
+    */
+  private def writeDocs(spark: SparkSession, dir: String, dest: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (SegmentedStore.hasDataFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)) {
+      val layout = ParquetFooters.read(spark, Seq(dir))
+      Seq("doc_id", "title").find(layout.columns.contains).foreach { id =>
+        val tf = if (layout.columns.contains("field")) when(col("field") === "body", col("tf"))
+                 else col("tf")
+        layout.groupBy(col(id)).agg(sum(tf).cast("double").as("dl"))
+          .coalesce(1).write.mode("overwrite").parquet(dest)
+      }
+    }
+  }
+
+  /** Whether the manifest at `docs` exists and carries `dl` (one
+    * footer read, no job).
+    */
+  private def hasDl(spark: SparkSession, docs: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(docs)
+    SegmentedStore.hasDataFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p) &&
+      ParquetFooters.read(spark, Seq(docs)).columns.contains("dl")
   }
 
   private def writeBuckets(spark: SparkSession, path: String, nBuckets: Int): Unit = {
@@ -160,16 +209,12 @@ object IndexStore {
     * full index pass; the bucket layout is INHERITED from the source
     * index's persisted `_nbuckets` marker unless the caller overrides
     * it (a fixed default would silently re-bucket an 8-bucket index
-    * to 64 and break every existing lookup's bucket count). When the
-    * source index carries a [[StatsDir]] side table, the rewrite
-    * refreshes it from the compacted output — the stats-refresh-rides-
-    * compaction contract of the ranked serving path.
+    * to 64 and break every existing lookup's bucket count).
     */
   def compact(spark: SparkSession, path: String, outPath: String,
               nBuckets: Option[Int] = None): Unit = {
     save(load(spark, path).drop("term_bucket"), outPath,
       nBuckets.orElse(savedBuckets(spark, path)).getOrElse(DefaultBuckets))
-    if (hasStats(spark, path)) saveStats(spark, outPath)
     if (hasMeta(spark, path)) carryMeta(spark, path, outPath, outPath)
     // the fuzzy dictionary rebuilds from the compacted output (terms
     // whose last postings folded away leave the dictionary here)
@@ -195,84 +240,30 @@ object IndexStore {
     saveMeta(meta.join(survivors, Seq(id), "left_semi"), toPath)
   }
 
-  // ---- BM25 serving statistics (_stats side table) ---------------------
-  //
-  // The ranked serving path (Query.searchRankedIndex) needs three
-  // corpus statistics the per-term posting fetch cannot supply: the
-  // per-document length dl (it involves terms NOT in the query), and
-  // the corpus scalars n / avgdl. Rebuilding them from the raw corpus
-  // per query is the plan you'd never run at 100 TB (the r12 verdict's
-  // one `weak`); instead they persist as a doc-count-sized side table
-  // inside the index directory — underscore-prefixed, so parquet data
-  // listings skip it and it rides the streaming stores' rename swaps
-  // with the index. df needs NO side table: a bucket-pruned term fetch
-  // returns the term's COMPLETE posting list, so df is a count over
-  // rows already read.
-  //
-  // Staleness contract: [[saveStats]] snapshots the RESOLVED index
-  // (segments last-writer-wins, tombstones anti-joined). Deletes and
-  // segment landings between refreshes leave n/avgdl at their
-  // snapshot values — absolute scores drift slightly, exactly like a
-  // production engine serving between index refreshes — but staleness
-  // can never resurrect a doc (matching and tf ride the live posting
-  // fetch) and can never DROP one either (r15): a doc with no dl row
-  // yet scores through the ranked path's LEFT join with dl = avgdl,
-  // and [[saveSegment]] folds each landed segment's real lengths in
-  // incrementally ([[refreshStatsWith]]), so the fallback is a
-  // crash-window-only path. [[statsFresh]] is the jobless loud
-  // signal; compaction ([[compact]] / [[compactSegments]]) refreshes
-  // in place.
-
-  /** Underscore-prefixed stats directory inside an index. */
-  private val StatsDir = "_stats"
-
-  /** Provenance stamp inside [[StatsDir]]: the content fingerprint the
-    * stats snapshot was computed against (see [[statsFresh]]).
-    */
-  private val StatsProvenance = "_provenance"
-
-  /** Whether the index at `path` carries a persisted stats table. */
-  def hasStats(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, StatsDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   // ---- staleness probes (r15) ------------------------------------------
   //
-  // Serving loops hold pinned snapshots ([[OpenIndex]], the stats
-  // side table) while maintenance loops land segments and takedowns
-  // behind them. These probes make "did the store move?" a jobless
-  // driver-side question — one or two directory listings — so a
-  // refresh loop can notice a landing and re-open/re-refresh instead
-  // of either polling with jobs or serving stale state blindly.
+  // Serving loops hold pinned snapshots ([[OpenIndex]]) while
+  // maintenance loops land segments and takedowns behind them. These
+  // probes make "did the store move?" a jobless driver-side question —
+  // a few directory listings — so a refresh loop can notice a landing
+  // and re-open instead of either polling with jobs or serving stale
+  // state blindly.
 
-  /** A listing-derived fingerprint of the index CONTENT at `path`:
-    * the top-level visible entries (segment dirs, bucket dirs, data
-    * files — sufficient because segments land and fold by atomic
-    * RENAME, never in-place edits) plus the tombstone tree's file
-    * names. Flips on every segment landing, takedown landing/replay,
-    * and compaction swap. Side tables are deliberately EXCLUDED: this
-    * is the provenance key [[saveStats]] stamps, and a stats refresh
-    * must not invalidate itself.
+  /** A listing-derived fingerprint of the store at `path`, the
+    * serving-snapshot key [[open]] captures: the top-level visible
+    * entries (segment dirs, bucket dirs, data files — sufficient
+    * because segments land and fold by atomic RENAME, never in-place
+    * edits), the tombstone tree's file names and the `_meta`/`_fuzzy`
+    * side tables' file names. Flips on every segment landing, takedown
+    * landing/replay, compaction swap and side-table refresh.
     */
-  def contentFingerprint(spark: SparkSession, path: String): String = {
+  def fingerprint(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return "absent"
     val top = fs.listStatus(p).map(_.getPath.getName)
       .filter(n => !n.startsWith(".") && !n.startsWith("_")).sorted
-    top.mkString(",") + "|" + Tombstones.treeFingerprint(spark, path)
-  }
-
-  /** [[contentFingerprint]] plus the side tables' file names — the
-    * full serving-snapshot key [[open]] captures: a stats/meta/fuzzy
-    * refresh flips it too, so [[reopenIfStale]] picks up refreshed
-    * side tables, not just data landings.
-    */
-  def fingerprint(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val side = Seq(StatsDir, MetaDir, FuzzyDir).map { d =>
+    val side = Seq(MetaDir, FuzzyDir).map { d =>
       val sp = new org.apache.hadoop.fs.Path(p, d)
       if (!fs.exists(sp)) ""
       else {
@@ -282,26 +273,7 @@ object IndexStore {
         names.sorted.mkString(",")
       }
     }
-    contentFingerprint(spark, path) + "||" + side.mkString("|")
-  }
-
-  /** Whether the `_stats` snapshot still matches the index content it
-    * was computed against (provenance stamp vs live fingerprint).
-    * False after any landing/takedown/fold since the last refresh —
-    * the loud signal that ranked scores are riding the drift contract
-    * (and new docs the avgdl fallback) until a refresh. Also false
-    * for a pre-provenance stats table (unverifiable — refresh it).
-    * Jobless: one file read + one listing.
-    */
-  def statsFresh(spark: SparkSession, path: String): Boolean = {
-    if (!hasStats(spark, path)) return false
-    val p = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(path, StatsDir), StatsProvenance)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val in = fs.open(p)
-    val stamped = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    stamped == contentFingerprint(spark, path)
+    top.mkString(",") + "|" + Tombstones.treeFingerprint(spark, path) + "||" + side.mkString("|")
   }
 
   /** Whether the store moved since `oi` was opened — segments,
@@ -316,104 +288,41 @@ object IndexStore {
   /** Re-open the handle iff the store moved ([[stale]]); the common
     * serving-loop refresh idiom. The returned handle serves the new
     * state (landed segments visible, takedowns anti-joined, refreshed
-    * side tables picked up).
+    * side tables picked up); the replaced handle's held rows are
+    * released ([[OpenIndex.release]]).
     */
   def reopenIfStale(oi: OpenIndex): OpenIndex =
-    if (stale(oi)) open(oi.spark, oi.path, oi.nBuckets) else oi
+    if (!stale(oi)) oi
+    else { oi.release(); open(oi.spark, oi.path, oi.nBuckets) }
 
-  /** Build (or refresh) the serving-stats side table at `path` from
-    * the index's own resolved content: `dl` (one row per indexed doc:
-    * its total token count = sum of its terms' tf) and `corpus` (one
-    * row: n = indexed doc count, avgdl). One index pass — the cost a
-    * serving deployment pays once per refresh, not per query. Written
-    * into a dot-prefixed temp dir then atomically renamed over
-    * [[StatsDir]], so readers never see a half-written table.
+  /** Give every layout of the index at `path` a `_docs` manifest that
+    * carries `dl` ([[DocsManifest]]) — the upgrade for a store written
+    * before manifests held document lengths: segments whose `_docs`
+    * holds ids only, or a plain root with no `_docs` at all. Ranked
+    * serving refuses such a store and names this call. Each such
+    * layout's manifest is rebuilt from a column-pruned scan of its own
+    * files into a dot-prefixed temp dir and renamed over the old one,
+    * newest segment first: a crash part-way leaves the oldest segment
+    * (whose footer fixes the manifests' read schema) unconverted, so
+    * the store is still refused, never half-served. On a store this
+    * version wrote every manifest already carries `dl`, and the call
+    * is listings and footer reads only — no job. A handle opened
+    * before the upgrade keeps its old manifests: [[open]] a new one.
     */
   def saveStats(spark: SparkSession, path: String): Unit = {
-    val idx0 = load(spark, path)
-    // a FIELDED index (r15, field-tagged postings) measures doc length
-    // over the BODY field — the ranked path scores body tf, and title
-    // rows would overcount every titled doc's length
-    val idx =
-      if (idx0.columns.contains("field")) idx0.filter(col("field") === "body")
-      else idx0
-    val id = Seq("title", "doc_id").find(idx.columns.contains).getOrElse(
-      throw new IllegalArgumentException(
-        s"index at $path has neither a doc_id nor a title column"))
-    landStats(spark, path,
-      idx.groupBy(col(id)).agg(sum(col("tf")).cast("double").as("dl")))
-  }
-
-  /** Fold a delta's doc lengths into the existing `_stats` table
-    * WITHOUT re-reading the index — O(|delta| + |dl|), vs
-    * [[saveStats]]' full index pass: the base dl table anti-joins the
-    * delta's doc set (a re-crawled doc's new length replaces its old
-    * row — the [[merge]] rule applied to lengths), the delta rows
-    * union in, and n/avgdl recompute from the merged table. Same
-    * atomic tmp-dir + rename landing. `deltaDl` is (id, dl) rows;
-    * [[saveSegment]] derives it from the just-landed segment when the
-    * store carries stats, so a doc landed after the last full
-    * [[saveStats]] scores with its REAL length instead of riding the
-    * avgdl fallback. dl is the smallest table in the store (two
-    * values per doc), so the per-landing rewrite is priced like the
-    * compaction's `_meta` carry, not like an index pass.
-    */
-  def refreshStatsWith(spark: SparkSession, path: String,
-                       deltaDl: DataFrame): Unit = {
-    val (dl0, _) = loadStats(spark, path)
-    val id = dl0.columns.filter(_ != "dl").head
-    require(deltaDl.columns.contains(id) && deltaDl.columns.contains("dl"),
-      s"delta dl frame needs ($id, dl) columns; got " +
-        deltaDl.columns.mkString("(", ", ", ")"))
-    val delta = deltaDl.select(col(id), col("dl").cast("double").as("dl"))
-    landStats(spark, path,
-      dl0.join(delta.select(col(id)), Seq(id), "left_anti").unionByName(delta))
-  }
-
-  /** Shared landing tail of [[saveStats]]/[[refreshStatsWith]]: write
-    * the dl frame + scalars + the provenance stamp into a dot-prefixed
-    * tmp dir, then one atomic rename over [[StatsDir]].
-    */
-  private def landStats(spark: SparkSession, path: String,
-                        dl: DataFrame): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path, s".$StatsDir-tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    dl.write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(tmp, "dl").toString)
-    // derive the scalars from the just-written dl table (column-pruned
-    // re-read) instead of executing the dl plan a second time
-    ParquetFooters.read(spark, Seq(new org.apache.hadoop.fs.Path(tmp, "dl").toString))
-      .agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(tmp, "corpus").toString)
-    // provenance stamp (r15): the index CONTENT fingerprint these
-    // stats were computed against — [[statsFresh]] compares it to the
-    // live layout so a serving loop can see "a landing/takedown
-    // happened since the stats snapshot" without running a job
-    val prov = fs.create(
-      new org.apache.hadoop.fs.Path(tmp, StatsProvenance), true)
-    try prov.write(contentFingerprint(spark, path).getBytes("UTF-8"))
-    finally prov.close()
-    val dest = new org.apache.hadoop.fs.Path(path, StatsDir)
-    if (fs.exists(dest)) fs.delete(dest, true)
-    StoreSwap.mustRename(fs, tmp, dest)
-  }
-
-  /** The persisted serving stats of the index at `path`: the
-    * doc-length frame (id, dl) and the one-row corpus scalars
-    * (n, avgdl). Fails loudly when absent — a ranked serving path
-    * silently falling back to a per-query corpus rebuild is exactly
-    * the 100 TB plan this table exists to prevent.
-    */
-  def loadStats(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    require(hasStats(spark, path),
-      s"index at $path has no $StatsDir side table — run " +
-        "IndexStore.saveStats(spark, path) after building the index " +
-        "(compaction refreshes it automatically)")
-    val base = new org.apache.hadoop.fs.Path(path, StatsDir).toString
-    (ParquetFooters.read(spark, Seq(s"$base/dl")), ParquetFooters.read(spark, Seq(s"$base/corpus")))
+    val l = SegmentedStore.listing(spark, path)
+    val layouts = if (l.segs.isEmpty) Seq(path) else l.segs.reverse.map(SegmentedStore.dir(path, _))
+    layouts.filterNot(dir => hasDl(spark, s"$dir/$DocsManifest")).foreach { dir =>
+      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val tmp = new org.apache.hadoop.fs.Path(dir, s".$DocsManifest-tmp")
+      if (fs.exists(tmp)) fs.delete(tmp, true)
+      writeDocs(spark, dir, tmp.toString)
+      if (fs.exists(tmp)) {
+        val dest = new org.apache.hadoop.fs.Path(dir, DocsManifest)
+        if (fs.exists(dest)) fs.delete(dest, true)
+        StoreSwap.mustRename(fs, tmp, dest)
+      }
+    }
   }
 
   // ---- fielded-search metadata (_meta side table) -----------------------
@@ -422,8 +331,8 @@ object IndexStore {
   // the postings layout doesn't carry (a posting row is (term, doc,
   // tf, positions) — replicating lang/source onto every posting would
   // multiply the index by the metadata width). The side table is
-  // doc-count-sized like `_stats`, underscore-prefixed so parquet data
-  // listings skip it, and rides the same crash-safe landing (tmp dir +
+  // doc-count-sized like a `_docs` manifest, underscore-prefixed so
+  // parquet data listings skip it, and lands crash-safe (tmp dir +
   // atomic rename). A fielded leaf then evaluates index-side as one
   // column-pruned doc-keyed scan of `_meta`, intersected with the
   // bucket-pruned term leaves — no corpus anywhere.
@@ -447,7 +356,7 @@ object IndexStore {
     * (id column `doc_id` or `title`, matching the indexed corpus) with
     * the field columns the query grammar exposes (`lang`, `source`, …
     * — any column a [[graft.operators.Query.Field]] leaf names).
-    * Doc-count-sized; same atomic landing as [[saveStats]].
+    * Doc-count-sized; landed in a tmp dir and renamed into place.
     */
   def saveMeta(meta: DataFrame, path: String): Unit = {
     val spark = meta.sparkSession
@@ -538,7 +447,7 @@ object IndexStore {
 
   /** Build + land the `_fuzzy` table from the saved index's distinct
     * terms (one dictionary pass; same atomic tmp-dir + rename landing
-    * as [[saveStats]]/[[saveMeta]]).
+    * as [[saveMeta]]).
     */
   def saveFuzzy(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
@@ -600,7 +509,8 @@ object IndexStore {
     */
   private[graft] def loadListed(spark: SparkSession, path: String,
                                 l: SegmentedStore.Listing): DataFrame =
-    SegmentedStore.live(rawOf(spark, path, l), deadKeysOf(spark, path, l), "doc_id")
+    SegmentedStore.live(rawOf(spark, path, l),
+      SegmentedStore.deadKeys(spark, path, l, "doc_id")(manifestsOf(spark, path, l).get), "doc_id")
 
   /** The index relation at `path` as written, before version and
     * takedown resolution ([[SegmentedStore.read]] of the segments of
@@ -613,14 +523,20 @@ object IndexStore {
     else raw.withColumn("positions", PostingsFns.deltaDecode(col("gaps"))).drop("gaps")
   }
 
-  /** The index's dead-key set: each segment's versions are its `_docs`
-    * manifest, which [[saveSegment]] writes as exactly the segment's
-    * posting doc set.
+  /** The `_docs` manifests of the layouts of `l` as one relation: every
+    * segment's (with its `seg` column, [[SegmentedStore.read]]), or a
+    * plain root's own — None for a plain root written before roots
+    * carried one. With two or more segments these are the versions the
+    * dead-key set resolves ([[SegmentedStore.deadKeys]]).
     */
-  private def deadKeysOf(spark: SparkSession, path: String,
-                         l: SegmentedStore.Listing): Option[DataFrame] =
-    SegmentedStore.deadKeys(spark, path, l, "doc_id")(
-      SegmentedStore.read(spark, path, l, "/" + DocsManifest))
+  private def manifestsOf(spark: SparkSession, path: String,
+                          l: SegmentedStore.Listing): Option[DataFrame] =
+    if (l.segs.nonEmpty) Some(SegmentedStore.read(spark, path, l, "/" + DocsManifest))
+    else {
+      val p = new org.apache.hadoop.fs.Path(path, DocsManifest)
+      if (!SegmentedStore.hasDataFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)) None
+      else Some(ParquetFooters.read(spark, Seq(p.toString)))
+    }
 
   /** Fail loudly when the caller's `nBuckets` is not the one the
     * index was SAVED with — ANY other value (smaller or larger)
@@ -665,23 +581,26 @@ object IndexStore {
     * What a handle resolves ONCE:
     *  - at [[open]], on the driver and with no job: the store
     *    [[fingerprint]], then one
-    *    [[SegmentedStore.Listing]] that fixes the segment set both the
-    *    `raw` relation (its file listing) and the plan of the
-    *    [[deadKeysOf dead-key set]] (over those segments' manifests
-    *    and the tombstone files listed then) read, then the `_stats`
-    *    pair, `_meta` and `_fuzzy` — every schema from a footer read
-    *    on the driver ([[ParquetFooters]]);
-    *  - at the first query, one job: the dead-key set, materialized
-    *    by `localCheckpoint` into [[idx]] — the held rows every later
-    *    query anti-joins, so no query re-reads a `_docs` manifest or
-    *    a tombstone file. A store with at most one segment and no
-    *    tombstones has no set to hold and no join in [[idx]].
+    *    [[SegmentedStore.Listing]] that fixes the segment set the
+    *    `raw` relation (its file listing), the `_docs` manifests
+    *    ([[docs]]) and the plan of the dead-key set
+    *    ([[SegmentedStore.deadKeys]], over those manifests and the
+    *    tombstone files listed then) read, then `_meta` and `_fuzzy` —
+    *    every schema from a footer read on the driver
+    *    ([[ParquetFooters]]);
+    *  - at the first query: the dead-key set, run and held
+    *    ([[org.apache.spark.sql.GraftBridge.persisted]]) — the rows
+    *    every later query anti-joins, so no query re-reads a `_docs`
+    *    manifest or a tombstone file. A store with at most one segment
+    *    and no tombstones has no set to hold and no join in [[idx]];
+    *  - at the first ranked query: the live document lengths
+    *    ([[dl]]), held the same way, and the corpus scalars n and
+    *    avgdl ([[corpus]]), collected once.
     *
-    * The held rows live in the executors' block managers with no
-    * lineage (`localCheckpoint`), for as long as the handle serves:
-    * losing an executor that holds some of them fails every later
-    * query on the handle, and [[stale]] does not report it (the store
-    * did not move). Recover by [[open]]ing a fresh handle.
+    * The held rows keep their lineage: blocks lost with an executor
+    * are recomputed from the manifests and tombstone files the handle
+    * listed at `open`. [[release]] drops them; [[reopenIfStale]]
+    * releases the handle it replaces.
     *
     * What each query still plans for itself: its own bucket-pruned
     * filters over [[idx]] and, only when its AST can match a document
@@ -693,27 +612,42 @@ object IndexStore {
     * frames.
     *
     * Snapshot semantics, stated plainly: segments, tombstones and
-    * stats landed AFTER `open` are not visible through the handle,
-    * queried or not (every listing above is taken at `open`) —
+    * side tables landed AFTER `open` are not visible through the
+    * handle, queried or not (every listing above is taken at `open`) —
     * re-open on refresh ([[reopenIfStale]]). That is the serving
     * deployment's usual snapshot contract (the maintenance loops
     * publish by atomic rename; a handle pins one published state).
-    * The per-query paths keep their read-latest semantics unchanged.
+    * Ranked scores are exact at the pinned snapshot: dl, n and avgdl
+    * resolve through the same dead-key set as the postings. The
+    * per-query paths keep their read-latest semantics unchanged.
     */
   final case class OpenIndex(spark: SparkSession, path: String, nBuckets: Int,
                              raw: DataFrame, deadKeys: Option[DataFrame],
-                             stats: Option[(DataFrame, DataFrame)],
+                             docs: Option[DataFrame],
                              meta: Option[DataFrame],
                              fuzzy: Option[DataFrame] = None,
-                             fp: String = "") {
-    /** The resolved index relation: [[raw]] anti-joined against the
-      * dead-key set, which the first access materializes (the one job
-      * a handle adds, run by its first query, never by [[open]]). A
-      * one-query handle ([[openOnce]]) carries an already-resolved
-      * [[raw]] and no dead-key set, so nothing is materialized.
+                             fp: String = "", hold: Boolean = false) {
+    private val heldRdds =
+      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+
+    /** `df`, held with its lineage when the handle holds its rows
+      * ([[open]], [[org.apache.spark.sql.GraftBridge.persisted]]); a
+      * one-query handle ([[openOnce]]) plans everything inline.
       */
-    lazy val idx: DataFrame =
-      SegmentedStore.live(raw, deadKeys.map(_.localCheckpoint()), "doc_id")
+    private def held(df: DataFrame): DataFrame =
+      if (!hold) df
+      else {
+        val (rows, rdd) = org.apache.spark.sql.GraftBridge.persisted(df)
+        heldRdds.add(rdd)
+        rows
+      }
+
+    private lazy val dead: Option[DataFrame] = deadKeys.map(held)
+
+    /** The resolved index relation: [[raw]] anti-joined against the
+      * dead-key set.
+      */
+    lazy val idx: DataFrame = SegmentedStore.live(raw, dead, "doc_id")
 
     /** The indexed doc set NOT ranges over; its id column follows the
       * indexed corpus (title for tsv, doc_id otherwise).
@@ -722,12 +656,37 @@ object IndexStore {
       idx.select(Seq("doc_id", "title").find(raw.columns.contains).getOrElse("doc_id"))
         .distinct()
 
-    /** Indexed doc count from the `_stats` corpus row (−1 without
-      * stats) — collected once per handle; the ranked path's ladder
-      * gate reads it instead of running a per-query count job.
+    /** The live `(id, dl)` rows: the manifests resolved through the
+      * same dead-key set as [[idx]]. Fails loudly on a store whose
+      * manifests carry no `dl` (written before they did), naming the
+      * upgrade.
       */
-    lazy val nDocs: Long =
-      stats.map(_._2.select(col("n")).head().getDouble(0).toLong).getOrElse(-1L)
+    lazy val dl: DataFrame = {
+      require(docs.exists(_.columns.contains("dl")),
+        s"index at $path has no document lengths in its _docs manifests — " +
+          "run IndexStore.saveStats(spark, path) once to upgrade the store")
+      held(SegmentedStore.live(docs.get, dead, "doc_id"))
+    }
+
+    /** The live corpus scalars `(n, avgdl)` over [[dl]]: n counts the
+      * documents with a body length, avgdl is their mean length.
+      * Collected once per handle, at its first ranked query, by one
+      * job over [[dl]]'s rows (a DataFrame aggregate would add a
+      * shuffle stage) — the ranked path plans them as literals. Lengths
+      * are whole numbers, so the sum is exact in any order.
+      */
+    lazy val corpus: (Double, Double) = {
+      val (n, total) = dl.select(col("dl")).queryExecution.toRdd.aggregate((0L, 0.0))(
+        (acc, r) => if (r.isNullAt(0)) acc else (acc._1 + 1L, acc._2 + r.getDouble(0)),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
+      (n.toDouble, if (n == 0L) 0.0 else total / n)
+    }
+
+    /** Drop the rows this handle holds (a no-op for what it never
+      * materialized). The handle stays usable: later queries recompute
+      * from lineage.
+      */
+    def release(): Unit = heldRdds.forEach(rdd => rdd.unpersist())
   }
 
   /** Resolve a serving snapshot (see [[OpenIndex]] for what it holds).
@@ -735,8 +694,8 @@ object IndexStore {
     * each relation's schema run on the driver ([[ParquetFooters]];
     * local sessions list partition directories on the driver too, see
     * [[graft.GraftSession]]), and nothing is computed until a query
-    * runs — the dead-key set is planned here and materialized by the
-    * first query.
+    * runs — the dead-key set is planned here and held by the first
+    * query.
     * `withMeta = false` skips the `_meta` resolution — the per-query
     * wrappers ([[openOnce]]) pass it when the query has no field
     * leaf, so field-less queries never pay that listing (sessions keep
@@ -750,8 +709,7 @@ object IndexStore {
   /** A handle for ONE query — the per-query ranked wrappers'
     * (`Query.searchRankedIndex` and its siblings). It is read-latest
     * like [[load]]: its [[OpenIndex.idx]] is `load`'s plan, the
-    * dead-key set resolved inline with the query, so it holds nothing
-    * and building it runs no checkpoint job.
+    * dead-key set resolved inline with the query, so it holds nothing.
     */
   private[graft] def openOnce(spark: SparkSession, path: String, nBuckets: Int,
                               withMeta: Boolean): OpenIndex =
@@ -765,13 +723,12 @@ object IndexStore {
     // a landing its fingerprint claims to cover
     val fp = fingerprint(spark, path)
     val l = SegmentedStore.listing(spark, path)
-    val (raw, dead) = (rawOf(spark, path, l), deadKeysOf(spark, path, l))
-    OpenIndex(spark, path, nBuckets,
-      if (hold) raw else SegmentedStore.live(raw, dead, "doc_id"), if (hold) dead else None,
-      if (hasStats(spark, path)) Some(loadStats(spark, path)) else None,
+    val docs = manifestsOf(spark, path, l)
+    OpenIndex(spark, path, nBuckets, rawOf(spark, path, l),
+      SegmentedStore.deadKeys(spark, path, l, "doc_id")(docs.get), docs,
       if (withMeta && hasMeta(spark, path)) Some(loadMeta(spark, path)) else None,
       if (hasFuzzy(spark, path)) Some(loadFuzzy(spark, path)) else None,
-      fp)
+      fp, hold)
   }
 
   /** [[lookup]] against a pinned [[OpenIndex]] snapshot — same plan
@@ -845,15 +802,14 @@ object IndexStore {
       .select(base.columns.map(col): _*)
     save(merged, outPath, nBuckets)
     // side tables travel with the merge (r15 — the r14 verdict's gap
-    // #3: a bare merged index failed loudly on ranked/fielded/fuzzy
-    // serving until the caller re-ran three builders it may not know
-    // exist). Same carries compaction already does: `_stats` and
-    // `_fuzzy` rebuild from the merged output; `_meta` CANNOT be
-    // derived from postings, so it merges doc-granular like the
-    // postings themselves (a doc_id the delta rewrote takes the
-    // delta's metadata row) and is filtered to the output's survivors.
-    if (hasStats(spark, basePath) || hasStats(spark, deltaPath))
-      saveStats(spark, outPath)
+    // #3: a bare merged index failed loudly on fielded/fuzzy serving
+    // until the caller re-ran builders it may not know exist). Same
+    // carries compaction already does: `_fuzzy` rebuilds from the
+    // merged output (ranking needs nothing: [[save]] wrote the output's
+    // `_docs`); `_meta` CANNOT be derived from postings, so it merges
+    // doc-granular like the postings themselves (a doc_id the delta
+    // rewrote takes the delta's metadata row) and is filtered to the
+    // output's survivors.
     val metaSrc = Seq(deltaPath -> true, basePath -> false)
       .filter { case (p, _) => hasMeta(spark, p) }
     if (metaSrc.nonEmpty) {
@@ -882,26 +838,8 @@ object IndexStore {
   // whole-store rewrite is O(|store|) whatever the delta. Documents
   // resolve last-writer-wins through each segment's tiny `_docs`
   // manifest — doc-count-sized, so a bucket-pruned lookup never scans
-  // other buckets to resolve versions ([[deadKeysOf]]). Read
+  // other buckets to resolve versions ([[SegmentedStore.deadKeys]]). Read
   // amplification is |segments| per bucket, which compaction bounds.
-
-  /** Per-segment manifest of the doc_ids the segment (re)wrote —
-    * underscore-prefixed so parquet data listings skip it.
-    */
-  private val DocsManifest = "_docs"
-
-  /** Write the `_docs` manifest of the segment just written at `dir`
-    * from a column-pruned scan of that segment's own files, not from
-    * a second run of the plan that produced them (for a landing that
-    * plan is the whole invert). A write that emitted no data file gets
-    * no manifest: [[SegmentedStore.land]] then drops it as empty.
-    */
-  private def writeManifest(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (SegmentedStore.hasDataFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
-      ParquetFooters.read(spark, Seq(dir)).select(col("doc_id")).distinct().coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/$DocsManifest")
-  }
 
   /** Segment ids present at `path` (empty for a plain single layout). */
   def segmentIds(spark: SparkSession, path: String): Seq[Long] =
@@ -924,7 +862,7 @@ object IndexStore {
       require(saved == nBuckets,
         s"segmented store at $path was created with nBuckets=$saved, " +
           s"not $nBuckets; pass the store's bucket count"))
-    val landed = SegmentedStore.land(spark, path, segId, partitioned = true) { tmp =>
+    SegmentedStore.land(spark, path, segId, partitioned = true) { tmp =>
       // root-level bucket marker so requireBucketsMatch validates the
       // segmented store exactly like a plain one (same value each
       // batch). Written BEFORE the segment rename: any VISIBLE segment
@@ -932,37 +870,17 @@ object IndexStore {
       // store can never silently accept lookups with any bucket count
       if (savedBuckets(spark, path).isEmpty) writeBuckets(spark, path, nBuckets)
       save(delta, tmp, nBuckets)
-      writeManifest(spark, tmp)
     }
-    // incremental stats refresh (r15 — the landed-after-stats doc
-    // drop): when the store carries `_stats`, fold the just-landed
-    // segment's doc lengths in ([[refreshStatsWith]] — O(|delta|+|dl|),
-    // never an index pass), so ranked serving scores new docs with
-    // their real lengths instead of the avgdl fallback. A crash in
-    // this window leaves the segment landed and stats one refresh
-    // behind — [[statsFresh]] reads false and the ranked path's left
-    // join still serves the segment's docs (drift, never a drop).
-    if (landed && hasStats(spark, path)) {
-      val landed0 = ParquetFooters.read(spark, Seq(SegmentedStore.dir(path, segId)))
-      val fields = // fielded segment: body-field lengths, like saveStats
-        if (landed0.columns.contains("field"))
-          landed0.filter(col("field") === "body")
-        else landed0
-      val segIdCol = Seq("title", "doc_id").find(fields.columns.contains)
-        .getOrElse("doc_id")
-      refreshStatsWith(spark, path, fields.groupBy(col(segIdCol))
-        .agg(sum(col("tf")).cast("double").as("dl")))
-    }
-    landed
   }
 
   /** Fold every segment of the store at `path` into one
     * ([[SegmentedStore.fold]]), resolving doc versions and tombstones
     * for real — the bound on segment-count read amplification. A
     * never-segmented store with tombstones folds to a plain root. The
-    * side tables are rebuilt inside the swap: `_stats` and `_fuzzy`
-    * from the fold's output, `_meta` carried and filtered to the
-    * fold's survivors. No-op below two segments without tombstones.
+    * fold's output carries its own `_docs` manifest ([[save]]); the
+    * side tables are rebuilt inside the swap: `_fuzzy` from the fold's
+    * output, `_meta` carried and filtered to the fold's survivors.
+    * No-op below two segments without tombstones.
     */
   def compactSegments(spark: SparkSession, path: String): Unit = {
     val nb = savedBuckets(spark, path).getOrElse(DefaultBuckets)
@@ -970,8 +888,6 @@ object IndexStore {
       dir => save(load(spark, path).drop("term_bucket"), dir, nb),
       (root, data) => {
         writeBuckets(spark, root, nb)
-        if (data != root) writeManifest(spark, data)
-        if (hasStats(spark, path)) saveStats(spark, root)
         // `_meta` cannot be derived from postings: carried, filtered to
         // the survivors so a takedown'd doc's metadata leaves with it
         if (hasMeta(spark, path)) carryMeta(spark, path, root, data)

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *  - '''Layout.''' A store root holds `seg=<id>` directories, one per
   *    landing, each a complete parquet layout of its own (optionally
   *    partitioned inside). Underscore- and dot-prefixed root entries
-  *    are invisible to parquet listings: side tables (`_stats`,
+  *    are invisible to parquet listings: side tables (`_meta`,
   *    `_tombstones`, ...), marker files, and in-flight temp dirs. A
   *    store written whole (never segmented) has its data at the root
   *    instead, and [[land]] refuses to mix the two.

@@ -686,8 +686,7 @@ object Stream {
     * store's resolved content: per-dimension (mn, mx) levels (one
     * tiny agg) and a bucket-partitioned codes table (vec_id, nm of
     * the DEQUANTIZED vector, 1-byte-per-dim code). One store pass at
-    * deploy time — the cost `saveStats` pays for ranked text serving,
-    * paid here for dense serving. Atomic tmp + rename landing;
+    * deploy time for dense serving. Atomic tmp + rename landing;
     * stamped with the store's data fingerprint so a later segment
     * landing/fold makes [[openEmbedStoreQuantized]] fail loudly
     * instead of silently missing the new vectors.

@@ -185,7 +185,7 @@ class QueryReferenceSpec extends SparkSpec {
         all))
 
     // a churned segmented store: doc 2 re-lands with new text, doc 4
-    // is taken down, with the `_fuzzy` probe table and stats in place
+    // is taken down, with the `_fuzzy` probe table in place
     val path = tmpDir("graft-ref") + "/churned"
     val relanded = Seq((2L, "fast spark join near key order queried", "de", "src0", "slow notes"))
     assert(IndexStore.saveSegment(Index.invertedIndexOf(docs), path, 0L, nBuckets = 4))
@@ -193,7 +193,6 @@ class QueryReferenceSpec extends SparkSpec {
     import spark.implicits._
     assert(IndexStore.deleteBatch(Seq(4L).toDF("doc_id"), path, 0L))
     IndexStore.saveMeta(docs.select("doc_id", "lang", "source"), path)
-    IndexStore.saveStats(spark, path)
     IndexStore.saveFuzzy(spark, path)
     val liveRows = rows.filterNot(r => r._1 == 4L || r._1 == 2L) ++ relanded
     val live = refDocs(liveRows)

@@ -245,10 +245,12 @@ class SourcesSpec extends SparkSpec {
       .repartition(col("term_bucket"))
       .sortWithinPartitions("term_bucket", "term")
       .write.partitionBy("term_bucket").parquet(rawPath)
+    // posting files only: the `_docs` manifest beside them is not
+    // part of the codec comparison
     def bytes(p: String): Long = {
       val d = new java.io.File(p)
       def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum
+        if (f.isDirectory) f.listFiles().filterNot(_.getName.startsWith("_")).map(walk).sum
         else if (f.getName.endsWith(".parquet")) f.length() else 0L
       walk(d)
     }
@@ -408,13 +410,27 @@ class SourcesSpec extends SparkSpec {
     val docs = sources.Tables.documents(spark, sfDir)
     val path = tmpDir("graft-idxrank") + "/index"
     IndexStore.save(Index.invertedIndexOf(docs), path, nBuckets = 8)
-    // stats must be built explicitly — serving without them fails loudly
-    val noStats = intercept[IllegalArgumentException] {
-      operators.Query.searchRankedIndex(spark, path, "spark", 20, nBuckets = 8)
-        .collect()
+    // a store written before manifests carried document lengths — a
+    // plain root with no `_docs`, then one whose `_docs` holds ids
+    // only — fails ranked serving loudly, naming the upgrade
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (docsP, idsP) = (new org.apache.hadoop.fs.Path(path, "_docs"),
+      new org.apache.hadoop.fs.Path(path, ".docs-ids"))
+    spark.read.parquet(docsP.toString).select("doc_id").write.parquet(idsP.toString)
+    assert(fs.delete(docsP, true))
+    def legacyFails(): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        operators.Query.searchRankedIndex(spark, path, "spark", 20, nBuckets = 8).collect()
+      }
+      assert(e.getMessage.contains("saveStats"))
+      assert(intercept[IllegalArgumentException](operators.Query.searchRankedIndexOn(
+        IndexStore.open(spark, path, nBuckets = 8), "spark")).getMessage.contains("saveStats"))
     }
-    assert(noStats.getMessage.contains("saveStats"))
+    legacyFails()
+    assert(fs.rename(idsP, docsP))
+    legacyFails()
     IndexStore.saveStats(spark, path)
+    assert(spark.read.parquet(docsP.toString).columns.toSeq === Seq("doc_id", "dl"))
     // parity across the ranked surface: plain, NOT, boost, multi-term,
     // phrase (ranks all phrase words), NEAR — exact row equality
     // including score rounding and tie order
@@ -476,7 +492,6 @@ class SourcesSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val path = tmpDir("graft-idxwand") + "/index"
     IndexStore.save(Index.invertedIndexOf(docs), path, nBuckets = 4)
-    IndexStore.saveStats(spark, path)
     val q = "the OR rare"
     // force the ladder (the adaptive gate would take the single pass
     // at this toy size — the crossover is 10M matched posting rows)
@@ -510,7 +525,6 @@ class SourcesSpec extends SparkSpec {
       operators.Query.searchIndex(spark, path, "lang:en AND spark", nBuckets = 8))
     assert(e.getMessage.contains("saveMeta"))
     IndexStore.saveMeta(docs.select("doc_id", "lang", "source"), path)
-    IndexStore.saveStats(spark, path)
     // parity across fielded shapes: field AND terms, NOT-field, OR
     // composition through a pure field branch
     val queries = Seq(
@@ -611,7 +625,6 @@ class SourcesSpec extends SparkSpec {
     val docs = sources.Tables.documents(spark, sfDir)
     val path = tmpDir("graft-idxopen") + "/index"
     IndexStore.save(Index.invertedIndexOf(docs), path, nBuckets = 8)
-    IndexStore.saveStats(spark, path)
     IndexStore.saveMeta(docs.select("doc_id", "lang", "source"), path)
     // the handle pins the fuzzy dictionary too, so the spask~1 shape
     // below goes through the prepared SymSpell probe leg
@@ -678,7 +691,6 @@ class SourcesSpec extends SparkSpec {
       (3L, "spark spark spark everywhere")).toDF("doc_id", "text")
     assert(IndexStore.saveSegment(Index.invertedIndexOf(seg0), path, 0L, nBuckets = 4))
     assert(IndexStore.saveSegment(Index.invertedIndexOf(seg1), path, 1L, nBuckets = 4))
-    IndexStore.saveStats(spark, path)
     def servedDocs(): (Seq[Long], Seq[Long], Seq[Long]) = (
       IndexStore.lookup(spark, path, "spark", nBuckets = 4)
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq,
@@ -693,16 +705,13 @@ class SourcesSpec extends SparkSpec {
     IndexStore.delete(spark, path, Seq(0L, 2L))
     val (t1, p1, r1) = servedDocs()
     assert(t1 === Seq(3L) && p1 === Seq(1L) && r1 === Seq(1L, 3L))
-    // ranked still works off the PRE-delete stats snapshot (n/avgdl are
-    // refresh-time values; matching and tf are live) — the deleted docs
-    // are gone even though stats were never rebuilt
-    // compaction folds tombstones away AND refreshes the stats table
-    val statsN = () => IndexStore.loadStats(spark, path)._2
-      .collect().head.getDouble(0)
-    assert(statsN() === 4.0)
+    // n counts the live docs at once: the takedown resolves through
+    // the manifests' dead-key set, with no refresh step
+    val liveN = () => IndexStore.open(spark, path, nBuckets = 4).corpus._1
+    assert(liveN() === 2.0)
     IndexStore.compactSegments(spark, path)
     assert(!new java.io.File(s"$path/_tombstones").exists())
-    assert(statsN() === 2.0, "compaction must refresh the stats snapshot")
+    assert(liveN() === 2.0, "the fold's manifest must count the same live docs")
     val (t2, p2, r2) = servedDocs()
     assert(t2 === t1 && p2 === p1 && r2 === r1,
       "serving results must be identical across the compaction")
@@ -799,8 +808,9 @@ class SourcesSpec extends SparkSpec {
     assert(bstats.map(_.getAs[Long]("terms")).sum === 5L)
     assert(bstats.map(_.getAs[Long]("postings")).sum === 6L)
     // `query` given a SAVED INDEX path dispatches to the index-served
-    // BM25 path (building the stats side table on first use) and must
-    // return exactly what the corpus path returns — incl. the score
+    // BM25 path (document lengths from the build's `_docs` manifest)
+    // and must return exactly what the corpus path returns — incl. the
+    // score
     val iq = Cli.run(spark,
         Seq("query", s"$dir/index", "spark AND NOT filter")).collect()
       .map(r => (r.getAs[String]("title"), r.getAs[Double]("score")))
@@ -808,7 +818,7 @@ class SourcesSpec extends SparkSpec {
         Seq("query", s"$dir/docs.tsv", "spark AND NOT filter")).collect()
       .map(r => (r.getAs[String]("title"), r.getAs[Double]("score")))
     assert(iq.toSeq === cq.toSeq && iq.nonEmpty)
-    assert(IndexStore.hasStats(spark, s"$dir/index"))
+    assert(spark.read.parquet(s"$dir/index/_docs").columns.toSeq === Seq("title", "dl"))
     // the build persisted the SymSpell dictionary: `~1` against the
     // index goes through the candidate probe, not the scan fallback
     assert(IndexStore.hasFuzzy(spark, s"$dir/index"))
@@ -950,68 +960,83 @@ class SourcesSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("stats staleness: a doc landed after saveStats serves ranked (never drops); landings refresh dl incrementally") {
+  test("ranked exactness: scores equal the corpus path after landings, takedowns, folds") {
     import spark.implicits._
-    val path = tmpDir("graft-stale") + "/index"
-    val docs1 = Seq((0L, "spark query engine"), (1L, "spark join fast"))
-      .toDF("doc_id", "text")
-    IndexStore.saveSegment(Index.invertedIndexOf(docs1), path, 0L, nBuckets = 4)
+    val path = tmpDir("graft-exact") + "/index"
+    var live = Map.empty[Long, String]
+    def land(seg: Long, docs: (Long, String)*): Unit = {
+      assert(IndexStore.saveSegment(Index.invertedIndexOf(docs.toDF("doc_id", "text")),
+        path, seg, nBuckets = 4))
+      live ++= docs
+    }
+    def scores(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val queries = Seq("spark", "spark OR join", "spark^2 AND NOT slow", "\"key order\" OR query")
+    // no refresh call anywhere: each snapshot's per-query and handle
+    // rankings equal the corpus path over exactly the live docs, row
+    // for row with scores, on the single-pass branch and the forced
+    // MaxScore ladder
+    def exact(stage: String): Unit = {
+      val liveDocs = live.toSeq.toDF("doc_id", "text")
+      val oi = IndexStore.open(spark, path, nBuckets = 4)
+      try Seq("10000000", "0").foreach { maxRows =>
+        spark.conf.set("spark.graft.maxscoreRows", maxRows)
+        try queries.foreach { q =>
+          val want = scores(operators.Query.searchRanked(liveDocs, q, k = 10))
+          assert(want.nonEmpty, s"vacuous exactness for '$q'")
+          assert(scores(operators.Query.searchRankedIndex(spark, path, q, k = 10,
+            nBuckets = 4)) === want, s"$stage, maxscoreRows=$maxRows: per-query '$q'")
+          assert(scores(operators.Query.searchRankedIndexOn(oi, q, k = 10)) === want,
+            s"$stage, maxscoreRows=$maxRows: handle '$q'")
+        } finally spark.conf.unset("spark.graft.maxscoreRows")
+      } finally oi.release()
+    }
+    land(0L, 0L -> "spark query engine", 1L -> "spark join fast", 2L -> "key order spark slow")
+    // a segment written before manifests carried dl is refused until
+    // saveStats rewrites its manifest
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (docsP, idsP) = (new org.apache.hadoop.fs.Path(s"$path/seg=0/_docs"),
+      new org.apache.hadoop.fs.Path(s"$path/seg=0/.docs-ids"))
+    spark.read.parquet(docsP.toString).select("doc_id").write.parquet(idsP.toString)
+    assert(fs.delete(docsP, true) && fs.rename(idsP, docsP))
+    assert(intercept[IllegalArgumentException](operators.Query.searchRankedIndex(spark, path,
+      "spark", k = 10, nBuckets = 4)).getMessage.contains("saveStats"))
     IndexStore.saveStats(spark, path)
-    assert(IndexStore.statsFresh(spark, path))
-    // --- the r14 sharp edge, forced: land a segment while _stats is
-    // held aside so saveSegment's incremental refresh cannot run —
-    // the crash-window state (segment landed, stats one refresh
-    // behind). The doc must STILL appear in ranked results (left
-    // join + avgdl fallback), and statsFresh must read false.
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statsP = new org.apache.hadoop.fs.Path(path, "_stats")
-    val hold = new org.apache.hadoop.fs.Path(path, ".stats-hold")
-    assert(fs.rename(statsP, hold))
-    val docs2 = Seq((2L, "spark spark streaming")).toDF("doc_id", "text")
-    IndexStore.saveSegment(Index.invertedIndexOf(docs2), path, 1L, nBuckets = 4)
-    assert(fs.rename(hold, statsP))
-    assert(!IndexStore.statsFresh(spark, path),
-      "a landing after the stats snapshot must read as stale")
-    val staleGot = operators.Query
-      .searchRankedIndex(spark, path, "spark", k = 10, nBuckets = 4)
-      .collect().map(_.getLong(0))
-    assert(staleGot.contains(2L),
-      "a doc landed after saveStats must never vanish from ranked results")
-    // ...and through the forced MaxScore ladder too
-    spark.conf.set("spark.graft.maxscoreRows", "0")
-    try assert(operators.Query
-        .searchRankedIndex(spark, path, "spark", k = 10, nBuckets = 4)
-        .collect().map(_.getLong(0)).contains(2L))
-    finally spark.conf.unset("spark.graft.maxscoreRows")
-    // --- the incremental refresh closes the drift: after
-    // refreshStatsWith with the landed segment's lengths, scores are
-    // bit-identical to a full saveStats of the resolved index
-    val segDl = spark.read.parquet(s"$path/seg=1")
-      .groupBy(col("doc_id")).agg(sum(col("tf")).cast("double").as("dl"))
-    IndexStore.refreshStatsWith(spark, path, segDl)
-    assert(IndexStore.statsFresh(spark, path))
-    val all = Seq((0L, "spark query engine"), (1L, "spark join fast"),
-      (2L, "spark spark streaming")).toDF("doc_id", "text")
-    val want = operators.Query.searchRanked(all, "spark", k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val got = operators.Query
-      .searchRankedIndex(spark, path, "spark", k = 10, nBuckets = 4)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got === want, "incremental dl refresh must equal the full rebuild")
-    // --- the NORMAL landing path needs no manual step: saveSegment
-    // folds the new segment's lengths in by itself
-    val docs3 = Seq((3L, "spark core")).toDF("doc_id", "text")
-    IndexStore.saveSegment(Index.invertedIndexOf(docs3), path, 2L, nBuckets = 4)
-    assert(IndexStore.statsFresh(spark, path),
-      "saveSegment must refresh _stats incrementally when present")
-    val all4 = all.unionByName(Seq((3L, "spark core")).toDF("doc_id", "text"))
-    val want4 = operators.Query.searchRanked(all4, "spark", k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val got4 = operators.Query
-      .searchRankedIndex(spark, path, "spark", k = 10, nBuckets = 4)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got4 === want4)
+    exact("first landing")
+    // a new doc and a re-landed update of doc 1 with other terms
+    land(1L, 3L -> "spark spark streaming", 1L -> "join key order query words")
+    exact("re-landed update")
+    assert(IndexStore.deleteBatch(Seq(0L).toDF("doc_id"), path, 0L))
+    live -= 0L
+    exact("takedown")
+    IndexStore.compactSegments(spark, path)
+    assert(IndexStore.segmentIds(spark, path).size === 1)
+    assert(!new java.io.File(s"$path/_tombstones").exists())
+    exact("fold")
+  }
+
+  test("held rows keep lineage: a handle serves the same rows after its blocks are lost") {
+    val path = tmpDir("graft-lineage") + "/index"
+    val liveDocs = churnedStore(path)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val oi = IndexStore.open(spark, path, nBuckets = 4)
+    def served(): (Seq[Long], Seq[(Long, Double)]) = (
+      operators.Query.searchIndexOn(oi, "spark OR join").collect().map(_.getLong(0)).sorted.toSeq,
+      operators.Query.searchRankedIndexOn(oi, "spark OR join", k = 10).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    val first = served()
+    assert(first._1.nonEmpty && first._2 === operators.Query
+      .searchRanked(liveDocs, "spark OR join", k = 10).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    // drop every block the handle's queries left behind, as an
+    // executor loss would
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.nonEmpty, "the first queries hold the dead-key set")
+    held.foreach(id => org.apache.spark.SparkEnv.get.blockManager.master.removeRdd(id, true))
+    assert(served() === first)
+    oi.release()
+    assert(served() === first, "a released handle still serves, from lineage")
   }
 
   test("serving handle staleness: landings and takedowns flip stale; reopenIfStale serves the new state") {
@@ -1036,9 +1061,9 @@ class SourcesSpec extends SparkSpec {
     val oi3 = IndexStore.reopenIfStale(oi2)
     assert(operators.Query.searchIndexOn(oi3, "alpha")
       .collect().map(_.getLong(0)).toSet === Set(0L, 2L))
-    // a side-table refresh flips stale too (the handle pins _stats)
-    IndexStore.saveStats(spark, path)
-    assert(IndexStore.stale(oi3), "a stats refresh must flip stale")
+    // a side-table refresh flips stale too (the handle pins _fuzzy)
+    IndexStore.saveFuzzy(spark, path)
+    assert(IndexStore.stale(oi3), "a side-table refresh must flip stale")
   }
 
   /** A 3-segment store with re-landed docs and two takedown batches:
@@ -1067,7 +1092,6 @@ class SourcesSpec extends SparkSpec {
       if (i == 1) IndexStore.deleteBatch(Seq(2L).toDF("doc_id"), path, 0L)
     }
     IndexStore.deleteBatch(Seq(5L, 7L).toDF("doc_id"), path, 1L)
-    IndexStore.saveStats(spark, path)
     val gone = Set(2L, 5L, 7L)
     segs.flatten.reverse.distinctBy(_._1).filterNot(d => gone(d._1))
       .toDF("doc_id", "text")
@@ -1197,14 +1221,12 @@ class SourcesSpec extends SparkSpec {
     val docs2 = Seq((1L, "spark stream"), (2L, "fast stream"))
       .toDF("doc_id", "text") // doc 1 re-crawled
     IndexStore.save(Index.invertedIndexOf(docs1), base, nBuckets = 4)
-    IndexStore.saveStats(spark, base)
     IndexStore.saveMeta(Seq((0L, "en"), (1L, "de")).toDF("doc_id", "lang"), base)
     IndexStore.saveFuzzy(spark, base)
     IndexStore.save(Index.invertedIndexOf(docs2), delta, nBuckets = 4)
     IndexStore.saveMeta(Seq((1L, "fr"), (2L, "en")).toDF("doc_id", "lang"), delta)
     IndexStore.merge(spark, base, delta, out, nBuckets = 4)
-    assert(IndexStore.hasStats(spark, out) && IndexStore.hasMeta(spark, out) &&
-      IndexStore.hasFuzzy(spark, out))
+    assert(IndexStore.hasMeta(spark, out) && IndexStore.hasFuzzy(spark, out))
     // ranked: parity with a fresh build over the merged corpus
     val mergedDocs = Seq((0L, "spark engine"), (1L, "spark stream"),
       (2L, "fast stream")).toDF("doc_id", "text")
@@ -1213,7 +1235,7 @@ class SourcesSpec extends SparkSpec {
     val got = operators.Query
       .searchRankedIndex(spark, out, "spark", k = 10, nBuckets = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got === want, "merged _stats must equal a fresh build's")
+    assert(got === want, "the merged store's ranking must equal a fresh build's")
     // fielded: the re-crawled doc carries the DELTA's metadata row
     assert(operators.Query.searchIndexOn(
         IndexStore.open(spark, out, nBuckets = 4), "lang:fr AND spark")
@@ -1261,12 +1283,10 @@ class SourcesSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"),
       s"fielded leaf fetch not bucket-pruned:\n$plan")
     // ranked serving over a fielded index scores BODY tf only: row
-    // parity with a plain body-only index (incl. dl from saveStats'
-    // body filter)
+    // parity with a plain body-only index (incl. dl from the
+    // manifest's body-only sum)
     val plainPath = tmpDir("graft-fielded") + "/plain"
     IndexStore.save(Index.invertedIndexOf(docs), plainPath, nBuckets = 4)
-    IndexStore.saveStats(spark, path)
-    IndexStore.saveStats(spark, plainPath)
     val wantRanked = operators.Query
       .searchRankedIndex(spark, plainPath, "spark", k = 10, nBuckets = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -1336,7 +1356,8 @@ class SourcesSpec extends SparkSpec {
     // doc 1 re-lands with other words; doc 9 is new
     assert(IndexStore.saveSegment(Index.invertedIndexOf(wideDocs(Seq(1L, 9L), shift = 7)), path, 1L))
     assert(IndexStore.deleteBatch(Seq(2L).toDF("doc_id"), path, 0L))
-    IndexStore.saveStats(spark, path)
+    val (_, statsJobs) = jobsOf(IndexStore.saveStats(spark, path))
+    assert(statsJobs === 0, "saveStats must not rewrite manifests that carry dl")
     IndexStore.saveMeta((0L to 9L).map(i => (i, if (i % 2 == 0) "en" else "de"))
       .toDF("doc_id", "lang"), path)
     IndexStore.saveFuzzy(spark, path)
@@ -1346,7 +1367,7 @@ class SourcesSpec extends SparkSpec {
 
     val (oi, openJobs) = jobsOf(IndexStore.open(spark, path))
     assert(openJobs === 0, "open must resolve every relation on the driver")
-    assert(oi.stats.isDefined && oi.meta.isDefined && oi.fuzzy.isDefined && oi.deadKeys.isDefined)
+    assert(oi.docs.isDefined && oi.meta.isDefined && oi.fuzzy.isDefined && oi.deadKeys.isDefined)
     def served(h: IndexStore.OpenIndex, q: String): Set[Long] =
       operators.Query.searchIndexOn(h, q).collect().map(_.getLong(0)).toSet
     // doc 1's first version and taken-down doc 2 held w10
@@ -1366,7 +1387,9 @@ class SourcesSpec extends SparkSpec {
       df.select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     val manifests = (0 to 2).map { seg =>
       val m = spark.read.parquet(s"$path/seg=$seg/_docs")
-      assert(m.columns.toSeq === Seq("doc_id"))
+      assert(m.columns.toSeq === Seq("doc_id", "dl"))
+      // dl is the doc's length: every wide doc holds 80 words once
+      assert(m.select("dl").distinct().collect().map(_.getDouble(0)).toSeq === Seq(80.0))
       assert(m.count() === ids(m).size.toLong, s"seg=$seg manifest holds duplicates")
       assert(ids(m) === ids(spark.read.parquet(s"$path/seg=$seg")),
         s"seg=$seg manifest must equal its postings' doc set")
@@ -1383,11 +1406,10 @@ class SourcesSpec extends SparkSpec {
     assert(IndexStore.saveSegment(Index.invertedIndexOf(wideDocs(Seq(1L), shift = 2)), path, 1L))
     sources.Tombstones.append(spark, path, Seq(1L), key = "vec_id")
     assert(IndexStore.deleteBatch(Seq(2L).toDF("doc_id"), path, 0L))
-    IndexStore.saveStats(spark, path)
     IndexStore.saveMeta(Seq((0L, "en", "web")).toDF("doc_id", "lang", "source"), path)
     IndexStore.saveFuzzy(spark, path)
     val segs = Seq(s"$path/seg=0", s"$path/seg=1")
-    Seq(segs, segs.map(_ + "/_docs"), Seq(s"$path/_stats/dl"), Seq(s"$path/_stats/corpus"),
+    Seq(segs, segs.map(_ + "/_docs"),
         Seq(s"$path/_meta"), Seq(s"$path/_fuzzy")).foreach { ps =>
       val want = spark.read.option("basePath", path).parquet(ps: _*)
       val got = ParquetFooters.read(spark, ps, options = Map("basePath" -> path))

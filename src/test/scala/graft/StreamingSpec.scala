@@ -277,7 +277,6 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       (2L, "other words here"), (3L, "spark alone")).toDF("doc_id", "text")
     graft.sources.IndexStore.save(
       graft.operators.Index.invertedIndexOf(docs), path, nBuckets = 4)
-    graft.sources.IndexStore.saveStats(spark, path)
     val in = MemoryStream[Long]
     val q = Stream.takedownMaintenance(in.toDF().toDF("doc_id"), path,
       compactEvery = 3).start()
@@ -316,7 +315,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       assert(graft.sources.IndexStore.tombstoneBatchCount(spark, path) === 1)
       // two more batches reach compactEvery=3: the fold drops the
       // postings for real on this PLAIN (never-segmented) store — the
-      // r13 compactSegments generalization — and refreshes stats
+      // r13 compactSegments generalization — and rewrites the manifest
       in.addData(2L)
       q.processAllAvailable()
       in.addData(1L)
@@ -327,9 +326,8 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
         .select("doc_id").collect().map(_.getLong(0)).toSet === Set(3L))
       assert(graft.sources.IndexStore.load(spark, path)
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet === Set(3L))
-      // serving stats refreshed inside the swap: n counts the survivor
-      val (_, corpus) = graft.sources.IndexStore.loadStats(spark, path)
-      assert(corpus.select(col("n")).head().getDouble(0) === 1.0)
+      // the folded root's manifest counts the survivor alone
+      assert(graft.sources.IndexStore.open(spark, path, nBuckets = 4).corpus._1 === 1.0)
       // the ranked path still serves off the folded store
       assert(graft.operators.Query
         .searchRankedIndex(spark, path, "spark", k = 10, nBuckets = 4)
@@ -387,7 +385,6 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     graft.sources.IndexStore.save(
       graft.operators.Index.invertedIndexOf(docs.select("doc_id", "text")),
       idxP, nBuckets = 4)
-    graft.sources.IndexStore.saveStats(spark, idxP)
     graft.operators.Similarity.saveCentroids(
       Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("vec_id", "embedding"),
       centP)
