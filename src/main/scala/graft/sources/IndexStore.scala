@@ -301,7 +301,7 @@ object IndexStore {
     * holds ids only, or a plain root with no `_docs` at all. Ranked
     * serving refuses such a store and names this call. Each such
     * layout's manifest is rebuilt from a column-pruned scan of its own
-    * files into a dot-prefixed temp dir and renamed over the old one,
+    * files and swapped in over the old one ([[StoreSwap.publish]]),
     * newest segment first: a crash part-way leaves the oldest segment
     * (whose footer fixes the manifests' read schema) unconverted, so
     * the store is still refused, never half-served. On a store this
@@ -313,15 +313,9 @@ object IndexStore {
     val l = SegmentedStore.listing(spark, path)
     val layouts = if (l.segs.isEmpty) Seq(path) else l.segs.reverse.map(SegmentedStore.dir(path, _))
     layouts.filterNot(dir => hasDl(spark, s"$dir/$DocsManifest")).foreach { dir =>
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(dir, s".$DocsManifest-tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      writeDocs(spark, dir, tmp.toString)
-      if (fs.exists(tmp)) {
-        val dest = new org.apache.hadoop.fs.Path(dir, DocsManifest)
-        if (fs.exists(dest)) fs.delete(dest, true)
-        StoreSwap.mustRename(fs, tmp, dest)
-      }
+      val dest = new org.apache.hadoop.fs.Path(dir, DocsManifest)
+      StoreSwap.publish(dest.getFileSystem(spark.sparkContext.hadoopConfiguration), dest)(
+        writeDocs(spark, dir, _))
     }
   }
 
@@ -333,7 +327,7 @@ object IndexStore {
   // multiply the index by the metadata width). The side table is
   // doc-count-sized like a `_docs` manifest, underscore-prefixed so
   // parquet data listings skip it, and lands crash-safe (tmp dir +
-  // atomic rename). A fielded leaf then evaluates index-side as one
+  // two-rename swap). A fielded leaf then evaluates index-side as one
   // column-pruned doc-keyed scan of `_meta`, intersected with the
   // bucket-pruned term leaves — no corpus anywhere.
   //
@@ -346,6 +340,19 @@ object IndexStore {
   /** Underscore-prefixed metadata directory inside an index. */
   private val MetaDir = "_meta"
 
+  /** Land side table `name` (`_meta`, `_fuzzy`) of the index at `path`
+    * through [[StoreSwap.publish]], so a copy is always on disk. A
+    * reader planned between the swap's two renames sees no table: a
+    * fielded query fails loudly (`Query.matchesOf`'s require) and a
+    * fuzzy leaf falls back to the levenshtein dictionary scan. The next
+    * landing of the table, or [[compactSegments]], restores the backup.
+    */
+  private def publishSide(spark: SparkSession, path: String, name: String)
+                         (write: String => Unit): Unit = {
+    val dest = new org.apache.hadoop.fs.Path(path, name)
+    StoreSwap.publish(dest.getFileSystem(spark.sparkContext.hadoopConfiguration), dest)(write)
+  }
+
   /** Whether the index at `path` carries a persisted metadata table. */
   def hasMeta(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path, MetaDir)
@@ -356,7 +363,7 @@ object IndexStore {
     * (id column `doc_id` or `title`, matching the indexed corpus) with
     * the field columns the query grammar exposes (`lang`, `source`, …
     * — any column a [[graft.operators.Query.Field]] leaf names).
-    * Doc-count-sized; landed in a tmp dir and renamed into place.
+    * Doc-count-sized; landed crash-safe ([[publishSide]]).
     */
   def saveMeta(meta: DataFrame, path: String): Unit = {
     val spark = meta.sparkSession
@@ -366,14 +373,7 @@ object IndexStore {
           meta.columns.mkString("(", ", ", ")")))
     require(meta.columns.length > 1,
       s"metadata frame carries no field columns beside $id")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path, s".$MetaDir-tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    meta.write.mode("overwrite").parquet(tmp.toString)
-    val dest = new org.apache.hadoop.fs.Path(path, MetaDir)
-    if (fs.exists(dest)) fs.delete(dest, true)
-    StoreSwap.mustRename(fs, tmp, dest)
+    publishSide(spark, path, MetaDir)(meta.write.mode("overwrite").parquet(_))
   }
 
   /** The persisted metadata of the index at `path`, with tombstoned
@@ -446,8 +446,8 @@ object IndexStore {
   }
 
   /** Build + land the `_fuzzy` table from the saved index's distinct
-    * terms (one dictionary pass; same atomic tmp-dir + rename landing
-    * as [[saveMeta]]).
+    * terms (one dictionary pass; the same crash-safe landing as
+    * [[saveMeta]]).
     */
   def saveFuzzy(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
@@ -455,14 +455,7 @@ object IndexStore {
       .flatMap(t => deleteVariants(t, FuzzyMaxEdits).map(v => (v, t)))
       .toDF("variant", "term")
       .repartition(col("variant")).sortWithinPartitions("variant")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path, s".$FuzzyDir-tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    table.write.mode("overwrite").parquet(tmp.toString)
-    val dest = new org.apache.hadoop.fs.Path(path, FuzzyDir)
-    if (fs.exists(dest)) fs.delete(dest, true)
-    StoreSwap.mustRename(fs, tmp, dest)
+    publishSide(spark, path, FuzzyDir)(table.write.mode("overwrite").parquet(_))
   }
 
   /** The persisted fuzzy dictionary; fails loudly when absent. */
@@ -888,6 +881,12 @@ object IndexStore {
       dir => save(load(spark, path).drop("term_bucket"), dir, nb),
       (root, data) => {
         writeBuckets(spark, root, nb)
+        // a side table half-swapped by a crash sits in its backup, which
+        // the root swap below would delete with the old root
+        Seq(MetaDir, FuzzyDir).foreach { d =>
+          val p = new org.apache.hadoop.fs.Path(path, d)
+          StoreSwap.recover(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+        }
         // `_meta` cannot be derived from postings: carried, filtered to
         // the survivors so a takedown'd doc's metadata leaves with it
         if (hasMeta(spark, path)) carryMeta(spark, path, root, data)

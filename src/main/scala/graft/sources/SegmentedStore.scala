@@ -1,14 +1,18 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The one segmented-store lifecycle (LSM-style: O'Neil et al., "The
   * Log-Structured Merge-Tree", 1996), shared by the index store
   * ([[IndexStore.saveSegment]]/[[IndexStore.compactSegments]]), the
-  * streaming embed, chunk-pack, interleave-pack and set stores
-  * ([[graft.streaming.Stream]]) and the corpus store's tombstone fold
+  * streaming embed, chunk-pack and interleave-pack stores, the
+  * batch-keyed ledgers of [[graft.streaming.Stream]] — the fingerprint,
+  * vocabulary, sentence and model-count sets of the gates, and the
+  * source-mix, heavy-hitter and per-day count ledgers of the monitors —
+  * and the corpus store's tombstone fold
   * ([[CorpusStore.foldTombstones]]). This object owns the on-disk
   * format; every other file names it through the members here.
   *
@@ -32,7 +36,8 @@ import org.apache.spark.sql.functions._
   *    on every later read). A batch-keyed landing stamps the applied
   *    horizon marker `_applied_upto_<batchId>` inside the segment
   *    before the rename, so the landing and its horizon commit
-  *    together; [[horizon]]/[[requireInHorizon]] read and guard it.
+  *    together; [[horizon]]/[[requireInHorizon]] read and guard it,
+  *    and [[priorBatches]] reads what the earlier batches landed.
   *  - '''Resolution.''' Keys resolve last-writer-wins across
   *    segments: a row `(key, seg)` is dead iff a newer segment holds
   *    `key` or `key` is tombstoned ([[deadKeys]]); readers anti-join
@@ -166,16 +171,14 @@ private[graft] object SegmentedStore {
   }
 
   /** The store's APPLIED HORIZON: the highest batch id whose landing
-    * committed — the max marker inside any segment, or at the root
-    * (a whole-rewrite store stamps its root, see [[stampHorizon]]).
-    * A segmented store written before the markers falls back to its
-    * max segment id (those ids WERE batch ids). -1 for an absent or
-    * unstamped store.
+    * committed — the max marker inside any segment. A segmented store
+    * written before the markers falls back to its max segment id
+    * (those ids WERE batch ids). -1 for an absent or unstamped store.
     */
   def horizon(spark: SparkSession, path: String): Long = {
-    val (fs, p) = fsOf(spark, path)
+    val (fs, _) = fsOf(spark, path)
     val segs = listing(spark, path).segs
-    (markers(fs, p) ++ segmentMarkers(fs, path, segs)).maxOption.getOrElse(segs.lastOption.getOrElse(-1L))
+    segmentMarkers(fs, path, segs).maxOption.getOrElse(segs.lastOption.getOrElse(-1L))
   }
 
   /** The store's [[horizon]], after failing LOUDLY when `batchId`
@@ -194,6 +197,22 @@ private[graft] object SegmentedStore {
         "over an existing store. Restart from the original checkpoint, " +
         "or point the stream at a fresh store path")
     upto
+  }
+
+  /** What a batch-keyed sink screens or sums batch `batchId` against:
+    * after [[requireInHorizon]], the rows every EARLIER batch landed in
+    * the store at `path` — the rows whose `src_batch` is not `batchId`,
+    * so a replay of the last batch sees the state its first run saw.
+    * Read through [[read]] (schema from a footer, no job), `seg`
+    * dropped. An absent or data-less store reads as no rows of
+    * `schema`, a DDL string of the stored columns.
+    */
+  def priorBatches(spark: SparkSession, path: String, batchId: Long, schema: String): DataFrame = {
+    requireInHorizon(spark, path, batchId)
+    val l = listing(spark, path)
+    if (!l.hasData)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType.fromDDL(schema))
+    else read(spark, path, l).filter(col("src_batch") =!= batchId).drop("seg")
   }
 
   // ---- landing ----------------------------------------------------------

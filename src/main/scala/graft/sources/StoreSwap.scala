@@ -2,12 +2,17 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The crash-safe whole-store replacement: a two-rename swap (base →
-  * backup, replacement → base, drop backup last) so there is never a
-  * moment with zero store copies on disk, plus the recovery step that
-  * repairs a crash between the two renames. [[SegmentedStore.fold]]
-  * (which states the segmented-store protocol) and the whole-rewrite
-  * streaming ledgers ([[graft.streaming.Stream]]) publish through it.
+/** The crash-safe whole-directory replacement: a two-rename swap (base
+  * → backup, replacement → base, drop backup last) so there is never a
+  * moment with zero copies on disk, plus the recovery step that repairs
+  * a crash between the two renames. Three kinds of publish go through
+  * it: [[SegmentedStore.fold]] (which states the segmented-store
+  * protocol) replaces a store root; [[publish]] lands a side table
+  * (`_meta`, `_fuzzy`, a segment's `_docs`, the embed store's `_sq8`);
+  * the bounded reservoirs ([[graft.streaming.Stream]]) replace their
+  * whole k-row store each batch. Between the two renames the base is
+  * absent: a reader planned in that instant finds no directory, and
+  * the next writer's [[recover]] restores the backup.
   * Paths use their OWN filesystem — `FileSystem.get(conf)` would
   * resolve fs.defaultFS and break for object-store paths (where
   * rename is copy+delete: the swap stays CORRECT there — failures
@@ -34,13 +39,29 @@ private[graft] object StoreSwap {
     if (fs.exists(backup)) fs.delete(backup, true) // stale from a completed swap
   }
 
-  /** Two-rename replacement; a crash at any point is repaired by
+  /** Two-rename replacement of `base` by `replacement`, or one rename
+    * when there is no base yet; a crash at any point is repaired by
     * [[recover]] at the next use.
     */
   def swap(fs: FileSystem, base: Path, replacement: String): Unit = {
     val backup = new Path(base.toString + ".backup")
-    mustRename(fs, base, backup)
+    if (fs.exists(base)) mustRename(fs, base, backup)
     mustRename(fs, new Path(replacement), base)
     fs.delete(backup, true)
+  }
+
+  /** Land the side table at `dest`: [[recover]] a half-done earlier
+    * swap, let `write` build the new table in the dot-prefixed temp
+    * dir it is handed (swept first if a dead build left it), then
+    * [[swap]] it in. A `write` that leaves no temp dir publishes
+    * nothing. Between the two renames a reader sees no table at
+    * `dest`, never a partial one.
+    */
+  def publish(fs: FileSystem, dest: Path)(write: String => Unit): Unit = {
+    recover(fs, dest)
+    val tmp = new Path(dest.getParent, s".${dest.getName}-tmp")
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    write(tmp.toString)
+    if (fs.exists(tmp)) swap(fs, dest, tmp.toString)
   }
 }

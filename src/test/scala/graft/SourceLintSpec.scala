@@ -14,18 +14,42 @@ import scala.jdk.CollectionConverters._
   *    `SPARK_TESTING`) before delegating to `binaryCompare`. In a
   *    per-row kernel that check dominated the profile, so kernels call
   *    `binaryCompare` directly.
+  *  - `mustRename(` / `.rename(`: a rename publishes a directory, and
+  *    every publish goes through `SegmentedStore.land`/`fold`,
+  *    `StoreSwap.swap` or the side-table `StoreSwap.publish`, which own
+  *    the crash-safety protocol. Only those two files rename.
   */
 class SourceLintSpec extends AnyFunSuite {
   import SourceLintSpec._
 
   test("lint: no .compareTo( on a UTF8String receiver in src/main/scala") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root; no $root here")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-    assert(files.nonEmpty)
-    val hits = files.flatMap(f => utf8CompareTo(read(f)).map(n => s"$f:$n"))
+    val hits = mainSources.flatMap(f => utf8CompareTo(read(f)).map(n => s"$f:$n"))
     assert(hits.isEmpty, "UTF8String.compareTo (use binaryCompare) at: " + hits.mkString(", "))
+  }
+
+  test("lint: no rename in src/main/scala outside StoreSwap and SegmentedStore") {
+    val owners = Set("StoreSwap.scala", "SegmentedStore.scala")
+    val hits = mainSources.filterNot(f => owners(f.getFileName.toString))
+      .flatMap(f => renameCalls(read(f)).map(n => s"$f:$n"))
+    assert(hits.isEmpty, "rename outside the store protocol (use SegmentedStore.land/fold, " +
+      "StoreSwap.swap or StoreSwap.publish) at: " + hits.mkString(", "))
+  }
+
+  test("lint: the rename detector flags rename calls, not comments or look-alikes") {
+    val flagged = Seq(
+      "StoreSwap.mustRename(fs, tmp, dest)",
+      "if (!fs.rename(from, to)) throw e",
+      "val ok = fs\n  .rename(a, b)",
+      "mustRename(fs, a, b)")
+    flagged.foreach(src => assert(renameCalls(src).nonEmpty, src))
+    assert(renameCalls("val x = 1\nfs.rename(a, b)") === Seq(2))
+    val clean = Seq(
+      "// fs.rename(a, b) in a comment",
+      "  * [[StoreSwap.mustRename]] in a scaladoc, mustRename(fs, a, b)",
+      "df.withColumnRenamed(\"a\", \"b\")",
+      "val renamed = cols.map(rename)",
+      "file.renameTo(other)")
+    clean.foreach(src => assert(renameCalls(src).isEmpty, src))
   }
 
   test("lint: the UTF8String.compareTo detector flags typed receivers, not strings") {
@@ -49,6 +73,32 @@ class SourceLintSpec extends AnyFunSuite {
 object SourceLintSpec {
   private def read(f: Path): String = new String(Files.readAllBytes(f), "UTF-8")
 
+  /** Every `.scala` file under `src/main/scala`, sorted. */
+  private def mainSources: Seq[Path] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root; no $root here")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+    assert(files.nonEmpty)
+    files
+  }
+
+  private val RenameCall = raw"\bmustRename\(|\.rename\(".r
+
+  /** 1-based line numbers of `mustRename(` or `.rename(` calls (a
+    * call chained onto the next line counts too). Comment lines are
+    * skipped.
+    */
+  def renameCalls(src: String): Seq[Int] =
+    src.split("\n", -1).toSeq.zipWithIndex.collect {
+      case (line, i) if !isComment(line) && RenameCall.findFirstIn(line).nonEmpty => i + 1
+    }
+
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+  }
+
   private val Ident = "[A-Za-z_][A-Za-z0-9_]*"
   /** `name: UTF8String` (parameters, typed vals) anywhere in the file. */
   private val Typed = raw"($Ident)\s*:\s*UTF8String\b".r
@@ -64,8 +114,7 @@ object SourceLintSpec {
   def utf8CompareTo(src: String): Seq[Int] = {
     val names = (Typed.findAllMatchIn(src) ++ Bound.findAllMatchIn(src)).map(_.group(1)).toSet
     src.split("\n", -1).toSeq.zipWithIndex.flatMap { case (line, i) =>
-      val t = line.trim
-      if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) Nil
+      if (isComment(line)) Nil
       else {
         val hit = raw"\.compareTo\(".r.findAllMatchIn(line).exists { m =>
           receiverHead(line.substring(0, m.start)) match {

@@ -1398,6 +1398,48 @@ class SourcesSpec extends SparkSpec {
     assert(manifests === Seq((0L to 5L).toSet, Set(1L, 9L), Set(3L, 11L)))
   }
 
+  test("batch-keyed ledger: the prior frame over two segments is built with no job") {
+    import spark.implicits._
+    val store = tmpDir("graft-prior") + "/ledger"
+    Seq(0L, 1L).foreach { b =>
+      assert(sources.SegmentedStore.land(spark, store, b, partitioned = false, Some(b))(
+        Seq((s"h$b", b), (s"g$b", b)).toDF("text_md5", "src_batch").write.parquet(_)))
+    }
+    val schema = "text_md5 STRING, src_batch BIGINT"
+    val (prior, jobs) = jobsOf(sources.SegmentedStore.priorBatches(spark, store, 2L, schema))
+    assert(jobs === 0, "the prior frame must take its schema from a footer, not a job")
+    assert(prior.columns.toSeq === Seq("text_md5", "src_batch"))
+    assert(prior.collect().map(_.getString(0)).toSet === Set("h0", "g0", "h1", "g1"))
+    // a replay of batch 1 screens against batch 0's rows only
+    assert(sources.SegmentedStore.priorBatches(spark, store, 1L, schema)
+      .collect().map(_.getString(0)).toSet === Set("h0", "g0"))
+    val (empty, emptyJobs) = jobsOf(sources.SegmentedStore.priorBatches(
+      spark, tmpDir("graft-prior-absent") + "/ledger", 0L, schema))
+    assert(emptyJobs === 0 && empty.columns.toSeq === Seq("text_md5", "src_batch"))
+    assert(empty.isEmpty)
+  }
+
+  test("index store: a _meta half-swapped by a crash is recovered by the next fold") {
+    val docs = sources.Tables.documents(spark, sfDir)
+    val path = tmpDir("graft-metacrash") + "/index"
+    Seq(0L, 1L).foreach { seg =>
+      assert(IndexStore.saveSegment(
+        Index.invertedIndexOf(docs.filter(col("doc_id") % 2 === seg)), path, seg, nBuckets = 8))
+    }
+    IndexStore.saveMeta(docs.select("doc_id", "lang", "source"), path)
+    def hits(): Seq[Long] = operators.Query.searchIndex(spark, path, "lang:en AND spark", nBuckets = 8)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val before = hits()
+    assert(before.nonEmpty)
+    // the state a crash between the side-table swap's two renames leaves
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(path, "_meta"),
+      new org.apache.hadoop.fs.Path(path, "_meta.backup")))
+    IndexStore.compactSegments(spark, path)
+    assert(IndexStore.segmentIds(spark, path) === Seq(1L))
+    assert(hits() === before)
+  }
+
   test("parquet footers: driver-resolved schemas equal Spark's inference; a data-less read fails loudly") {
     import spark.implicits._
     import sources.ParquetFooters

@@ -1228,6 +1228,43 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     } finally q2.stop()
   }
 
+  test("stream_anomaly: the day ledger lands segments and folds at CompactEvery; the horizon survives the fold") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft-anomfold").toString
+    val (store, out) = (s"$base/ledger", s"$base/out")
+    val n = Stream.CompactEvery + 1
+    // batch b adds 2 events to day 100 + b % 4
+    def events(b: Int): Seq[(Long, java.sql.Timestamp)] = (0 until 2).map(k =>
+      (b.toLong, new java.sql.Timestamp((100L + b % 4) * 86400000L + k * 1000L)))
+    val in = MemoryStream[(Long, java.sql.Timestamp)]
+    val df = in.toDF().toDF("user_id", "ts")
+    val q = Stream.anomalyMonitor(df, store, out)
+      .option("checkpointLocation", s"$base/ckpt1").start()
+    try (0 until n).foreach { b => in.addData(events(b): _*); q.processAllAvailable() }
+    finally q.stop()
+    val last = spark.read.parquet(s"$out/batch=${n - 1}").collect()
+      .map(r => (r.getAs[Long]("day"), r.getAs[Long]("batch_events"), r.getAs[Long]("cum_events")))
+    assert(last.toSeq === Seq((100L, 2L, 10L)))
+    val perDay = spark.read.parquet(store).groupBy("day").sum("n_events").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(perDay === Map(100L -> 10L, 101L -> 8L, 102L -> 8L, 103L -> 8L))
+    // batches 0..15 folded into seg=15 at the 16th landing; batch 16
+    // landed above it, and the fold carried the max horizon marker
+    assert(sources.SegmentedStore.horizon(spark, store) === (n - 1).toLong)
+    assert(sources.SegmentedStore.listing(spark, store).segs === Seq(n - 2L, n - 1L))
+    val in2 = MemoryStream[(Long, java.sql.Timestamp)]
+    val q2 = Stream.anomalyMonitor(in2.toDF().toDF("user_id", "ts"), store, s"$base/out2")
+      .option("checkpointLocation", s"$base/ckpt2").start()
+    val ex = intercept[Throwable] {
+      try { in2.addData(events(0): _*); q2.processAllAvailable() } finally q2.stop()
+    }
+    val msgs = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null).take(8)
+      .map(e => Option(e.getMessage).getOrElse("")).toSeq
+    assert(msgs.exists(_.contains("below the applied horizon")),
+      s"expected the horizon failure, got: $msgs")
+  }
+
   test("stream_vocab_drift: saved vocabulary flags new terms across restart") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -1523,10 +1560,10 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
           (0L to 4L).map(doc).toDF("doc_id", "text"))
         .orderBy("pack_id").collect().map(_.toSeq).toSeq)
 
-    // the whole-rewrite SWAP ledgers carry the same horizon (one
-    // root marker riding each rewrite's swap): a fresh checkpoint
-    // over an existing source-mix ledger would silently REPLACE old
-    // batches' src_batch-keyed rows — it must fail loudly instead
+    // the count ledgers carry the same horizon (one marker riding
+    // each segment's landing): a fresh checkpoint over an existing
+    // source-mix ledger would silently DROP old batches'
+    // src_batch-keyed rows from its sums — it must fail loudly instead
     val mixStore = s"$base/mix"
     val inM = MemoryStream[(Long, String, String)]
     val qm = Stream.sourceMixMonitor(
@@ -1536,7 +1573,7 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       inM.addData((0L, "web", "alpha beta")); qm.processAllAvailable()
       inM.addData((1L, "web", "gamma delta")); qm.processAllAvailable()
     } finally qm.stop()
-    assert(fs.exists(new org.apache.hadoop.fs.Path(mixStore, "_applied_upto_1")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(mixStore, "seg=1/_applied_upto_1")))
     val inM2 = MemoryStream[(Long, String, String)]
     val qm2 = Stream.sourceMixMonitor(
         inM2.toDF().toDF("doc_id", "source", "text"), mixStore, s"$base/mixout2")
