@@ -349,23 +349,12 @@ object Explain {
     "searchindex_phrase" -> Rule(
       required = Seq("PartitionFilters", "term_bucket"),
       forbidden = Seq("Generate", "documents")),
-    // the index-served BM25 path: on the default (single-pass) branch
-    // the leaf fetch is bucket-pruned at planning time, the corpus
-    // NEVER appears, and n/avgdl are literals, so no nested-loop
-    // (cross) join either; on the FORCED MaxScore branch (maxscoreRows=0)
-    // the fetch runs once inside a per-query localCheckpoint — pruning
-    // is pinned on the fetch subtree (`searchranked_fetch`) and the
-    // ladder's final plan must carry NO index scan at all
-    // (`term_bucket` anywhere in it means a ladder pass re-scanned
-    // the layout)
+    // the index-served BM25 path: the leaf fetch is bucket-pruned at
+    // planning time, the corpus NEVER appears, and n/avgdl are
+    // literals, so no nested-loop (cross) join either
     "searchranked_index" -> Rule(
       required = Seq("PartitionFilters", "term_bucket"),
       forbidden = Seq("documents", "BroadcastNestedLoopJoin")),
-    "searchranked_ladder" -> Rule(
-      forbidden = Seq("documents", "term_bucket")),
-    "searchranked_fetch" -> Rule(
-      required = Seq("PartitionFilters", "term_bucket"),
-      forbidden = Seq("documents")),
     // fielded retrieval from the saved index (r14): term leaves still
     // bucket-prune, the lang: leaf reads the doc-keyed `_meta` side
     // table COLUMN-PRUNED to (id, field) — and the corpus never appears
@@ -444,15 +433,6 @@ object Explain {
         operators.Query.searchIndex(spark, idx, "\"key order\"", nBuckets = 8),
       "searchranked_index" ->
         operators.Query.searchRankedIndex(spark, idx, "spark AND join",
-          nBuckets = 8),
-      "searchranked_ladder" -> {
-        spark.conf.set("spark.graft.maxscoreRows", "0")
-        try operators.Query.searchRankedIndex(spark, idx, "spark AND join",
-          nBuckets = 8)
-        finally spark.conf.unset("spark.graft.maxscoreRows")
-      },
-      "searchranked_fetch" ->
-        operators.Query.rankedFetchPlan(spark, idx, "spark AND join",
           nBuckets = 8),
       "searchindex_fielded" ->
         operators.Query.searchIndex(spark, idx,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * postings: single-term lookup, boolean AND through the query
   * grammar, exact phrase, and BM25-ranked top-10 — the ranked leg runs
   * the REAL index-served ranker ([[operators.Query.searchRankedIndex]]:
-  * bucket-pruned leaf fetch + persisted stats side table), not a
+  * bucket-pruned leaf fetch + the manifests' document lengths), not a
   * tf-ordered lookup stand-in (the r12 gap: the measured serving story
   * didn't cover the engine's own headline ranker).
   *
@@ -138,11 +138,9 @@ object Serving {
       df.queryExecution.toRdd.count()
       val dt = (System.nanoTime() - t0) / 1e9
       // pruned = either a planning-time-pruned layout scan
-      // (PartitionFilters — the single-pass branch and every other
-      // shape) or NO layout scan at all (the MaxScore branch reads its
-      // checkpointed fetch; pruning is audited on the fetch subtree —
-      // `searchranked_fetch`). A term_bucket scan WITHOUT
-      // PartitionFilters is the regression this counter exists for.
+      // (PartitionFilters) or NO layout scan at all. A term_bucket scan
+      // WITHOUT PartitionFilters is the regression this counter exists
+      // for.
       // the table-less fuzzy fallback is exempt: its dictionary scan
       // reads every bucket BY CONTRACT (an edit can land in any
       // bucket), so an unpruned term_bucket scan is its correct plan

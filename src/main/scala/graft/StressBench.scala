@@ -247,15 +247,6 @@ object IndexScaleStress {
       "searchranked_index" ->
         operators.Query.searchRankedIndex(spark, idxPath, "spark AND join",
           nBuckets = 64),
-      "searchranked_ladder" -> {
-        spark.conf.set("spark.graft.maxscoreRows", "0")
-        try operators.Query.searchRankedIndex(spark, idxPath, "spark AND join",
-          nBuckets = 64)
-        finally spark.conf.unset("spark.graft.maxscoreRows")
-      },
-      "searchranked_fetch" ->
-        operators.Query.rankedFetchPlan(spark, idxPath, "spark AND join",
-          nBuckets = 64),
       "searchindex_fielded" ->
         operators.Query.searchIndex(spark, idxPath,
           "lang:en AND (spark OR query)", nBuckets = 64))

@@ -1118,8 +1118,9 @@ object Analytics {
     * moments (n, Σc, Σc²) so mean, sample variance and every z are
     * single fixed double expressions — bitwise cross-engine, the same
     * moment trick as [[corrAgg]]. The monitoring query an ingestion
-    * pipeline alerts on. Daily counts are one partial-agg shuffle;
-    * the moment rollup is a broadcast single row.
+    * pipeline alerts on. Over one day, or days that all hold the same
+    * count, z is null and no day flags. Daily counts are one
+    * partial-agg shuffle; the moment rollup is a broadcast single row.
     */
   def eventsAnomaly(spark: SparkSession, dir: String): DataFrame = {
     val daily = eventsUs(spark, dir)
@@ -1129,14 +1130,16 @@ object Analytics {
       sum(col("c") * col("c")).as("sxx"))
     daily.crossJoin(broadcast(m))
       .withColumn("mean", col("sx").cast("double") / col("n"))
-      .withColumn("sd", sqrt(
+      // null below 2 days: the sample variance divides by n - 1
+      .withColumn("sd", when(col("n") > 1L, sqrt(
         (col("n") * col("sxx") - col("sx") * col("sx")).cast("double") /
-          (col("n").cast("double") * (col("n") - 1L).cast("double"))))
+          (col("n").cast("double") * (col("n") - 1L).cast("double")))))
+      // null without spread; a null z never flags
+      .withColumn("z", when(col("sd") > 0.0, (col("c") - col("mean")) / col("sd")))
       .select(col("day"), col("c").as("n_events"),
         round(col("mean"), 4).as("mean"),
-        round((col("c") - col("mean")) / col("sd"), 4).as("z"),
-        when(abs((col("c") - col("mean")) / col("sd")) >= 2.0, 1L)
-          .otherwise(0L).as("is_anomaly"))
+        round(col("z"), 4).as("z"),
+        when(abs(col("z")) >= 2.0, 1L).otherwise(0L).as("is_anomaly"))
       .orderBy("day")
   }
 

@@ -459,17 +459,6 @@ object Query {
     idx.filter(byTerm || leafHit(Nil, ps, scanned)).drop("term_bucket")
   }
 
-  /** The UNCHECKPOINTED leaf-fetch plan of a ranked/boolean query —
-    * the subtree [[rankedIndexFramesOn]] materializes per query. The
-    * plan audit pins bucket pruning HERE (`searchranked_fetch`),
-    * because the executed final plan reads the checkpoint and carries
-    * no index scan to inspect.
-    */
-  private[graft] def rankedFetchPlan(spark: SparkSession, indexPath: String,
-                                     query: String, nBuckets: Int): DataFrame =
-    leafPostingsOn(graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets,
-      withMeta = true), parse(query))
-
   /** [[leafPostings]] against a handle's resolved relation and its
     * pinned `_fuzzy` table.
     */
@@ -586,95 +575,39 @@ object Query {
     * path's n but not the result set, since ranked output requires a
     * positive-term match).
     *
-    * SCORING IS BOUND-PRUNED (r14, MaxScore — Turtle & Flood; the
-    * [[Index.wandTopkOf]] algebra moved onto the serving path): r13
-    * fully scored EVERY matching doc, so one fat-df query term dragged
-    * its whole posting list through the dl join + aggregation + sort
-    * (measured: 383,900 scored rows for `the` on the 500k store). Now
-    * each term carries a score upper bound
-    * `UB(t) = boost·idf(t)·(k1+1)·maxtf/(maxtf + k1(1−b))` — maxtf
-    * rides the SAME full-list leaf fetch df already rides, so no new
-    * side table — and the ladder is wandFrames': exactly score the k
-    * matching docs with the highest Σ UB (a bounded TakeOrdered seed),
-    * take θ = their minimum exact score, then fully score only docs
-    * with Σ UB ≥ θ. Any skipped doc has rounded score ≤ rounded bound
-    * < θ, so the top-k is EXACTLY the unpruned ranking (the parity
-    * specs assert row equality, and [[searchRankedIndexStats]] is the
-    * scored-vs-candidates diagnostic). On a fat+rare query the fat
-    * term's near-zero idf puts its only-fat docs under θ, so the
-    * posting-list tail never reaches the dl join.
-    *
-    * The ladder engages ADAPTIVELY (gate: |positive terms| · n vs `spark.graft.maxscoreRows`, default 10M): below
-    * the crossover the single-pass scoring wins on stage latency and
-    * the plan is r13's exactly — measured on the 500k fat-df store,
-    * the always-on ladder REGRESSED ranked p50 1.38s → 3.3s because
-    * its extra stages cost more than the sub-second tail they prune;
-    * the crossover where candidate mass dominates is the 10⁷⁺-row
-    * posting lists of a truly large store. On the ladder branch the
-    * leaf fetch materializes once per query (localCheckpoint) and the
-    * final plan carries no index scan (`searchranked_fetch` audits
-    * the pruning on the fetch subtree).
+    * Scoring is one pass over the fetch: every matching document's
+    * positive-term postings join their term's df (broadcast) and the
+    * document's live dl, and sum into a rounded score; the top k are
+    * taken last. Its layout scans are bucket-pruned at planning time,
+    * and it carries no corpus scan and no nested-loop join
+    * (`searchranked_index` audits all three).
     */
   def searchRankedIndex(spark: SparkSession, indexPath: String, query: String,
                         k: Int = 20,
                         nBuckets: Int = graft.sources.IndexStore.DefaultBuckets,
-                        id: String = "doc_id"): DataFrame = {
-    val (_, _, _, scoredCand) =
-      rankedIndexFrames(spark, indexPath, query, k, nBuckets, id)
-    scoredCand
+                        id: String = "doc_id"): DataFrame =
+    // a one-query handle ([[graft.sources.IndexStore.openOnce]]):
+    // read-latest, versions and takedowns resolved inline, nothing held
+    rankedScoresOn(graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets,
+        withMeta = fieldLeaves(parse(query)).nonEmpty), query)
       .orderBy(col("score").desc, col(id))
       .limit(k)
-  }
-
-  /** The scored-vs-candidates pruning diagnostic of the index-served
-    * ranked path — [[Index.wandPruneStats]]' contract on the serving
-    * side: matching candidate docs, docs surviving the bound ≥ θ
-    * filter (the only ones the dl join and aggregation ever see), and
-    * θ itself. Run it beside a fat-df workload before trusting the
-    * serving numbers at 100 TB.
-    */
-  def searchRankedIndexStats(spark: SparkSession, indexPath: String,
-                             query: String, k: Int = 20,
-                             nBuckets: Int = graft.sources.IndexStore.DefaultBuckets,
-                             id: String = "doc_id"): DataFrame = {
-    val (docUb, theta, cand, _) =
-      rankedIndexFrames(spark, indexPath, query, k, nBuckets, id)
-    docUb.agg(count(lit(1)).as("n_candidates"))
-      .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_scored"))))
-      .crossJoin(broadcast(theta))
-  }
 
   /** [[searchRankedIndex]] against a pinned serving snapshot — the
-    * MaxScore ladder planned over [[graft.sources.IndexStore.open]]'s
-    * resolved frames (see [[searchIndexOn]] for the snapshot
-    * contract).
+    * same plan over [[graft.sources.IndexStore.open]]'s resolved
+    * frames (see [[searchIndexOn]] for the snapshot contract).
     */
   def searchRankedIndexOn(oi: graft.sources.IndexStore.OpenIndex,
-                          query: String, k: Int = 20): DataFrame = {
-    val id = oi.universe.columns.head
-    val (_, _, _, scoredCand) = rankedIndexFramesOn(oi, query, k)
-    scoredCand
-      .orderBy(col("score").desc, col(id))
+                          query: String, k: Int = 20): DataFrame =
+    rankedScoresOn(oi, query)
+      .orderBy(col("score").desc, col(oi.universe.columns.head))
       .limit(k)
-  }
 
-  /** The shared MaxScore ladder of [[searchRankedIndex]] /
-    * [[searchRankedIndexStats]]: (docUb, theta, cand, scoredCand).
-    * The per-query form plans over a one-query handle
-    * ([[graft.sources.IndexStore.openOnce]]: read-latest, versions and
-    * takedowns resolved inline, nothing materialized); serving
-    * sessions hold one [[graft.sources.IndexStore.OpenIndex]] and go
-    * through [[rankedIndexFramesOn]].
+  /** The (id, score) rows of every document [[searchRankedIndex]]
+    * ranks, before the top-k cut.
     */
-  private def rankedIndexFrames(spark: SparkSession, indexPath: String,
-                                query: String, k: Int, nBuckets: Int,
-                                id: String): (DataFrame, DataFrame, DataFrame, DataFrame) =
-    rankedIndexFramesOn(
-      graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets,
-        withMeta = fieldLeaves(parse(query)).nonEmpty), query, k)
-
-  private def rankedIndexFramesOn(oi: graft.sources.IndexStore.OpenIndex,
-                                  query: String, k: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  private def rankedScoresOn(oi: graft.sources.IndexStore.OpenIndex,
+                             query: String): DataFrame = {
     val id = oi.universe.columns.head
     val (k1, b) = (1.2, 0.75)
     val ast = parse(query)
@@ -685,28 +618,7 @@ object Query {
     // literals (collected once per handle; a store whose manifests
     // carry no dl fails here, naming the upgrade)
     val (n, avgdl) = oi.corpus
-    // LADDER GATE (measured, r14): the ladder's extra stages (fetch
-    // checkpoint, bound pass, seed scoring, θ broadcast) carry ~1.5s+
-    // of fixed stage latency on a local session, while the single-pass
-    // tail they prune (dl join + aggregation + TakeOrdered over the
-    // matched posting rows) stays sub-second until posting lists reach
-    // tens of millions of rows — the always-on ladder REGRESSED the
-    // 500k-store ranked p50 1.38s → 3.3s. The gate adds no job (n
-    // comes with the handle's corpus scalars): the upper bound
-    // |positive terms| · n against
-    // `spark.graft.maxscoreRows` (default 10M). Below it the plan is
-    // the r13 single pass over the bucket-pruned layout, exactly; at or
-    // above it the fetch materializes ONCE (localCheckpoint) and the
-    // bound-prune-rescore ladder runs over the pinned rows (pruning
-    // audited on the fetch subtree — `searchranked_fetch`; the
-    // ladder's final plan carries no index scan). Both branches rank
-    // identically (parity specs force the gate both ways);
-    // [[searchRankedIndexStats]] always prices the ladder's
-    // scored-vs-candidates split.
-    val ladder = terms.size.toLong * n.toLong >= oi.spark.conf
-      .get("spark.graft.maxscoreRows", "10000000").toLong
-    val postings0 = leafPostingsOn(oi, ast)
-    val postings = if (ladder) postings0.localCheckpoint() else postings0
+    val postings = leafPostingsOn(oi, ast)
     // the universe frame only enters the plan when the query can match
     // a document without its terms (`x OR NOT y`); a NOT-less ranked
     // query never scans beyond its terms' buckets
@@ -718,36 +630,21 @@ object Query {
     val ranked = (if (postings.columns.contains("field"))
         ranked0.filter(col("field") === "body") else ranked0)
       .select(col(id), col("term"), col("tf").cast("double").as("tf"))
-    // df AND the bound's maxtf ride the same complete-list fetch
-    val tstats = ranked.groupBy("term").agg(
-      count(lit(1)).cast("double").as("df"), max(col("tf")).as("maxtf"))
+    // df rides the same complete-list fetch
+    val df = ranked.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
     val boostCol = boosts.foldLeft(lit(1.0)) { case (acc, (t, bw)) =>
       when(col("term") === t, lit(bw)).otherwise(acc)
     }
-    // n counts the same live docs df does, so df ≤ n and idf > 0: a
-    // term weight is never negative and UB stays a bound
-    val idfCol = log((lit(n) - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-    val ub = tstats.select(col("term"), col("df"),
-      (boostCol * idfCol * (col("maxtf") * (k1 + 1.0)) /
-        (col("maxtf") + lit(k1) * lit(1.0 - b))).as("ubt"))
-    val rankedM = ranked.join(matches, Seq(id), "left_semi")
-    val docUb = rankedM.join(broadcast(ub.select("term", "ubt")), "term")
-      .groupBy(id).agg(round(sum(col("ubt")), 4).as("ub"))
     // every scored doc has a live dl row: both sides resolve through
     // the handle's one dead-key set
-    def scored(sel: DataFrame): DataFrame =
-      rankedM.join(sel, Seq(id), "left_semi")
-        .join(broadcast(tstats.select("term", "df")), "term")
-        .join(oi.dl, Seq(id))
-        .withColumn("w", boostCol * idfCol *
-          (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))))
-        .groupBy(id).agg(round(sum(col("w")), 4).as("score"))
-    val seed = docUb.orderBy(col("ub").desc, col(id)).limit(k).select(id)
-    val theta = scored(seed).agg(min(col("score")).as("theta"))
-    val cand = docUb.crossJoin(broadcast(theta))
-      .filter(col("ub") >= col("theta")).select(id)
-    (docUb, theta, cand, if (ladder) scored(cand) else scored(matches))
+    ranked.join(matches, Seq(id), "left_semi")
+      .join(broadcast(df), "term")
+      .join(oi.dl, Seq(id))
+      .withColumn("w", boostCol *
+        log((lit(n) - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
+        (col("tf") * (k1 + 1.0)) /
+        (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))))
+      .groupBy(id).agg(round(sum(col("w")), 4).as("score"))
   }
 
   /** Gate query: a fixed compound query over the documents table. */

@@ -690,7 +690,7 @@ object IndexStore {
     * runs — the dead-key set is planned here and held by the first
     * query.
     * `withMeta = false` skips the `_meta` resolution — the per-query
-    * wrappers ([[openOnce]]) pass it when the query has no field
+    * ranked path ([[openOnce]]) passes it when the query has no field
     * leaf, so field-less queries never pay that listing (sessions keep
     * the default and hold everything).
     */
@@ -699,8 +699,8 @@ object IndexStore {
            withMeta: Boolean = true): OpenIndex =
     snapshot(spark, path, nBuckets, withMeta, hold = true)
 
-  /** A handle for ONE query — the per-query ranked wrappers'
-    * (`Query.searchRankedIndex` and its siblings). It is read-latest
+  /** A handle for ONE query — the per-query ranked path's
+    * (`Query.searchRankedIndex`). It is read-latest
     * like [[load]]: its [[OpenIndex.idx]] is `load`'s plan, the
     * dead-key set resolved inline with the query, so it holds nothing.
     */

@@ -1024,6 +1024,26 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("events_anomaly: one day, or days of equal count, give a null z and no flag") {
+    import spark.implicits._
+    // (day, n_events, mean, z, is_anomaly) rows of an events table
+    // holding `perDay` events on each of `days` consecutive days
+    def anomalies(days: Int, perDay: Int): Seq[(Long, Long, Double, Option[Double], Long)] = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-anomaly").toString
+      (for (d <- 0 until days; e <- 0 until perDay)
+        yield ((d * perDay + e).toLong, s"2024-01-0${d + 1} 0$e:10:00")).toDF("event_id", "ts")
+        .withColumn("ts", to_timestamp(col("ts")))
+        .write.parquet(s"$dir/events.parquet")
+      operators.Analytics.eventsAnomaly(spark, dir).collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getDouble(2),
+          Option(r.get(3)).map(_.asInstanceOf[Double]), r.getLong(4))).toSeq
+    }
+    // 2024-01-01 is day 19723 since the epoch
+    assert(anomalies(days = 1, perDay = 3) === Seq((19723L, 3L, 3.0, None, 0L)))
+    assert(anomalies(days = 2, perDay = 2) ===
+      Seq((19723L, 2L, 2.0, None, 0L), (19724L, 2L, 2.0, None, 0L)))
+  }
+
   test("ivf_elbow: inertia is monotone non-increasing in k") {
     val e = Similarity.ivfElbow(spark, sfDir).orderBy("k").collect()
     assert(e.map(_.getLong(0)).toSeq === Seq(2L, 4L, 8L, 16L))

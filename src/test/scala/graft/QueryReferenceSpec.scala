@@ -205,12 +205,9 @@ class QueryReferenceSpec extends SparkSpec {
       q => ids(Query.searchIndex(spark, path, q, nBuckets = 4)))(
       reference(_, live, liveTokened, liveMeta))
 
-    // ranked match sets through the forced MaxScore ladder
+    // ranked match sets through the handle
     val ranked = plain.filter(q => positiveTerms(parse(q)).nonEmpty)
-    spark.conf.set("spark.graft.maxscoreRows", "0")
-    try {
-      agree("searchRankedIndexOn", ranked)(q => ids(Query.searchRankedIndexOn(oi, q, k = 100)))(
-        rankedReference(_, live, liveTokened, liveMeta))
-    } finally spark.conf.unset("spark.graft.maxscoreRows")
+    agree("searchRankedIndexOn", ranked)(q => ids(Query.searchRankedIndexOn(oi, q, k = 100)))(
+      rankedReference(_, live, liveTokened, liveMeta))
   }
 }

@@ -18,6 +18,8 @@ import scala.jdk.CollectionConverters._
   *    every publish goes through `SegmentedStore.land`/`fold`,
   *    `StoreSwap.swap` or the side-table `StoreSwap.publish`, which own
   *    the crash-safety protocol. Only those two files rename.
+  *  - `"spark.graft.*"` literals: every conf key is a second code path
+  *    to keep correct, so the set is pinned and a new knob fails here.
   */
 class SourceLintSpec extends AnyFunSuite {
   import SourceLintSpec._
@@ -33,6 +35,18 @@ class SourceLintSpec extends AnyFunSuite {
       .flatMap(f => renameCalls(read(f)).map(n => s"$f:$n"))
     assert(hits.isEmpty, "rename outside the store protocol (use SegmentedStore.land/fold, " +
       "StoreSwap.swap or StoreSwap.publish) at: " + hits.mkString(", "))
+  }
+
+  test("lint: the spark.graft.* conf keys in src/main/scala are exactly the known knobs") {
+    val keys = mainSources.flatMap(f => confKeys(read(f))).toSet
+    assert(keys === Knobs, "a conf key was added or dropped; update Knobs only with its reason")
+  }
+
+  test("lint: the conf-key detector reads quoted keys on code lines only") {
+    assert(confKeys("val K = \"spark.graft.maxBucket\"\nconf.get(\"spark.sql.x\")") ===
+      Seq("spark.graft.maxBucket"))
+    assert(confKeys("// \"spark.graft.old\" in a comment\n  * `spark.graft.doc` in a scaladoc")
+      .isEmpty)
   }
 
   test("lint: the rename detector flags rename calls, not comments or look-alikes") {
@@ -82,6 +96,18 @@ object SourceLintSpec {
     assert(files.nonEmpty)
     files
   }
+
+  /** The `spark.graft.*` conf keys the engine reads or sets. */
+  val Knobs: Set[String] = Set("spark.graft.parallelizeScans", "spark.graft.bpeRounds",
+    "spark.graft.maxBucket")
+
+  /** The same pattern `tools/netlines.py` counts knobs with. */
+  private val ConfKey = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
+
+  /** The quoted `spark.graft.*` keys on the non-comment lines of `src`. */
+  def confKeys(src: String): Seq[String] =
+    src.split("\n", -1).toSeq.filterNot(isComment)
+      .flatMap(line => ConfKey.findAllMatchIn(line).map(_.group(1)))
 
   private val RenameCall = raw"\bmustRename\(|\.rename\(".r
 

@@ -407,6 +407,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("ranked query over saved index: BM25 matches the corpus path row for row") {
+    import spark.implicits._
     val docs = sources.Tables.documents(spark, sfDir)
     val path = tmpDir("graft-idxrank") + "/index"
     IndexStore.save(Index.invertedIndexOf(docs), path, nBuckets = 8)
@@ -431,88 +432,43 @@ class SourcesSpec extends SparkSpec {
     legacyFails()
     IndexStore.saveStats(spark, path)
     assert(spark.read.parquet(docsP.toString).columns.toSeq === Seq("doc_id", "dl"))
+    // a fat-df corpus: every doc holds `the` twice, every 10th also
+    // holds `rare`
+    val fat = (0L until 200L).map { i =>
+      (i, "the the common words here" + (if (i % 10 == 0) " rare" else ""))
+    }.toDF("doc_id", "text")
+    val fatPath = tmpDir("graft-idxfat") + "/index"
+    IndexStore.save(Index.invertedIndexOf(fat), fatPath, nBuckets = 4)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // parity across the ranked surface: plain, NOT, boost, multi-term,
-    // phrase (ranks all phrase words), NEAR — exact row equality
+    // phrase (ranks all phrase words), NEAR, and a fat-df term beside a
+    // rare one — corpus ↔ per-query ↔ handle, exact row equality
     // including score rounding and tie order
-    val queries = Seq(
-      "spark AND NOT slow",
-      "spark^3 AND NOT slow",
-      "spark AND join",
-      "\"key order\" OR spark",
-      "spark NEAR/4 join")
-    queries.foreach { q =>
-      val want = operators.Query.searchRanked(docs, q, k = 20)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val got = operators.Query.searchRankedIndex(spark, path, q, k = 20, nBuckets = 8)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(got === want, s"ranked corpus↔index parity for '$q'")
-      assert(got.nonEmpty, s"vacuous parity for '$q'")
-      // ...and through the FORCED MaxScore ladder (maxscoreRows=0):
-      // the bound-prune-rescore path must be row-identical too
-      spark.conf.set("spark.graft.maxscoreRows", "0")
-      try {
-        val viaLadder = operators.Query
-          .searchRankedIndex(spark, path, q, k = 20, nBuckets = 8)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(viaLadder === want, s"MaxScore-ladder parity for '$q'")
-      } finally spark.conf.unset("spark.graft.maxscoreRows")
+    Seq(
+      (docs, path, 8, 20, Seq(
+        "spark AND NOT slow",
+        "spark^3 AND NOT slow",
+        "spark AND join",
+        "\"key order\" OR spark",
+        "spark NEAR/4 join")),
+      (fat, fatPath, 4, 10, Seq("the OR rare"))).foreach { case (corpus, p, nb, k, queries) =>
+      val oi = IndexStore.open(spark, p, nBuckets = nb)
+      try queries.foreach { q =>
+        val want = rows(operators.Query.searchRanked(corpus, q, k = k))
+        assert(want.nonEmpty, s"vacuous parity for '$q'")
+        assert(rows(operators.Query.searchRankedIndex(spark, p, q, k = k, nBuckets = nb)) === want,
+          s"ranked corpus↔index parity for '$q'")
+        assert(rows(operators.Query.searchRankedIndexOn(oi, q, k = k)) === want,
+          s"ranked corpus↔handle parity for '$q'")
+      } finally oi.release()
     }
-    // plan contracts, both branches: the DEFAULT (single-pass) plan is
-    // bucket-pruned and corpus-free; the FORCED MaxScore plan reads
-    // its checkpointed fetch (no index scan at all — pruning audited
-    // on the fetch subtree, which must itself be bucket-pruned)
+    // the plan is bucket-pruned and corpus-free
     val plan = operators.Query.searchRankedIndex(
       spark, path, "spark AND join", 20, nBuckets = 8)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"))
     assert(!plan.contains("documents"), "ranked serving must not scan the corpus")
-    val fetchPlan = operators.Query.rankedFetchPlan(
-      spark, path, "spark AND join", nBuckets = 8)
-      .queryExecution.executedPlan.toString
-    assert(fetchPlan.contains("PartitionFilters") && fetchPlan.contains("term_bucket"))
-    spark.conf.set("spark.graft.maxscoreRows", "0")
-    try {
-      val ladderPlan = operators.Query.searchRankedIndex(
-        spark, path, "spark AND join", 20, nBuckets = 8)
-        .queryExecution.executedPlan.toString
-      assert(!ladderPlan.contains("term_bucket"),
-        "the ladder's final plan must read the checkpointed fetch, not the layout")
-      assert(!ladderPlan.contains("documents"))
-    } finally spark.conf.unset("spark.graft.maxscoreRows")
-  }
-
-  test("ranked serving prunes the fat term's tail: bound >= theta bounds the scored set, result exact") {
-    import spark.implicits._
-    // 200 docs all contain the fat term; 20 (>= k, so the seed frame
-    // is all-rare and theta sits at rare-doc score level) also hold
-    // the rare one — the fat-df shape where r13 scored every match
-    val docs = (0L until 200L).map { i =>
-      val rare = if (i % 10 == 0) " rare" else ""
-      (i, s"the the common words here$rare")
-    }.toDF("doc_id", "text")
-    val path = tmpDir("graft-idxwand") + "/index"
-    IndexStore.save(Index.invertedIndexOf(docs), path, nBuckets = 4)
-    val q = "the OR rare"
-    // force the ladder (the adaptive gate would take the single pass
-    // at this toy size — the crossover is 10M matched posting rows)
-    spark.conf.set("spark.graft.maxscoreRows", "0")
-    try {
-    // exactness first: pruned serving == unpruned corpus ranking
-    val want = operators.Query.searchRanked(docs, q, k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val got = operators.Query.searchRankedIndex(spark, path, q, k = 10, nBuckets = 4)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got === want && got.nonEmpty)
-    // the diagnostic: every doc matches (OR of the fat term), but the
-    // fat term's near-zero idf puts only-fat docs under theta — the dl
-    // join and aggregation see a bounded candidate set, not the tail
-    val d = operators.Query
-      .searchRankedIndexStats(spark, path, q, k = 10, nBuckets = 4).head()
-    val (nCand, nScored) = (d.getLong(0), d.getLong(1))
-    assert(nCand === 200L, "every doc holds the fat term")
-    assert(nScored < nCand, "the bound must prune the fat-only tail")
-    assert(nScored >= 10L, "at least k docs must be fully scored")
-    } finally spark.conf.unset("spark.graft.maxscoreRows")
   }
 
   test("fielded query over saved index: lang:/source: leaves match the corpus path") {
@@ -644,7 +600,7 @@ class SourcesSpec extends SparkSpec {
         .collect().map(_.getLong(0)).sorted.toSeq
       assert(got === want && got.nonEmpty, s"prepared parity for '$q'")
     }
-    // ranked (MaxScore ladder over the held frames)
+    // ranked
     Seq("spark AND NOT slow", "spark^3 OR join", "lang:en AND spark").foreach { q =>
       val want = operators.Query.searchRankedIndex(spark, path, q, k = 20, nBuckets = 8)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -974,21 +930,17 @@ class SourcesSpec extends SparkSpec {
     val queries = Seq("spark", "spark OR join", "spark^2 AND NOT slow", "\"key order\" OR query")
     // no refresh call anywhere: each snapshot's per-query and handle
     // rankings equal the corpus path over exactly the live docs, row
-    // for row with scores, on the single-pass branch and the forced
-    // MaxScore ladder
+    // for row with scores
     def exact(stage: String): Unit = {
       val liveDocs = live.toSeq.toDF("doc_id", "text")
       val oi = IndexStore.open(spark, path, nBuckets = 4)
-      try Seq("10000000", "0").foreach { maxRows =>
-        spark.conf.set("spark.graft.maxscoreRows", maxRows)
-        try queries.foreach { q =>
-          val want = scores(operators.Query.searchRanked(liveDocs, q, k = 10))
-          assert(want.nonEmpty, s"vacuous exactness for '$q'")
-          assert(scores(operators.Query.searchRankedIndex(spark, path, q, k = 10,
-            nBuckets = 4)) === want, s"$stage, maxscoreRows=$maxRows: per-query '$q'")
-          assert(scores(operators.Query.searchRankedIndexOn(oi, q, k = 10)) === want,
-            s"$stage, maxscoreRows=$maxRows: handle '$q'")
-        } finally spark.conf.unset("spark.graft.maxscoreRows")
+      try queries.foreach { q =>
+        val want = scores(operators.Query.searchRanked(liveDocs, q, k = 10))
+        assert(want.nonEmpty, s"vacuous exactness for '$q'")
+        assert(scores(operators.Query.searchRankedIndex(spark, path, q, k = 10,
+          nBuckets = 4)) === want, s"$stage: per-query '$q'")
+        assert(scores(operators.Query.searchRankedIndexOn(oi, q, k = 10)) === want,
+          s"$stage: handle '$q'")
       } finally oi.release()
     }
     land(0L, 0L -> "spark query engine", 1L -> "spark join fast", 2L -> "key order spark slow")
@@ -1396,6 +1348,32 @@ class SourcesSpec extends SparkSpec {
       ids(m)
     }
     assert(manifests === Seq((0L to 5L).toSet, Set(1L, 9L), Set(3L, 11L)))
+  }
+
+  test("ranked serving: jobs per query on a fresh handle, a warm handle and the per-query path") {
+    import spark.implicits._
+    // (first query on a fresh handle, second query, per-query path),
+    // each counted from planning through collect
+    def jobs(path: String): Seq[Int] = {
+      val q = "spark OR join"
+      def ran(df: => org.apache.spark.sql.DataFrame): Int = jobsOf(df.collect())._2
+      val oi = IndexStore.open(spark, path, nBuckets = 4)
+      try Seq(ran(operators.Query.searchRankedIndexOn(oi, q, k = 10)),
+        ran(operators.Query.searchRankedIndexOn(oi, q, k = 10)),
+        ran(operators.Query.searchRankedIndex(spark, path, q, k = 10, nBuckets = 4)))
+      finally oi.release()
+    }
+    val one = tmpDir("graft-rankjobs1") + "/index"
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(Seq(
+      0L -> "spark makes key order fast and spark is neat",
+      1L -> "key order matters spark join",
+      2L -> "spark join seven").toDF("doc_id", "text")), one, 0L, nBuckets = 4))
+    assert(jobs(one) === Seq(8, 7, 8), "1-segment store")
+    val churned = tmpDir("graft-rankjobs3") + "/index"
+    churnedStore(churned)
+    // the per-query path resolves the dead-key set twice: once for
+    // the (n, avgdl) collect and once inside the query plan
+    assert(jobs(churned) === Seq(11, 8, 12), "3-segment store with tombstones")
   }
 
   test("batch-keyed ledger: the prior frame over two segments is built with no job") {
