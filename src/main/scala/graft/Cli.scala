@@ -16,18 +16,20 @@ import org.apache.spark.sql.functions._
   *     positional index from `title \t body` lines and save it
   *     term-bucketed (nBuckets plays the reference's num-reducers
   *     role: it fixes the index's partition fan-out).
-  *   - `search <indexPath> <term> [k]` — term lookup against the
-  *     SAVED index, tf-ranked; planning-time bucket pruning means one
-  *     partition is read, not the index.
+  *   - `search <indexPath> <term> [k] [nBuckets]` — term lookup
+  *     against the SAVED index, tf-ranked; planning-time bucket pruning
+  *     means one partition is read, not the index.
   *   - `query <input.tsv|indexPath> '<boolean query>' [k]` — parsed
   *     boolean/phrase retrieval (AND/OR/NOT/"...") with BM25 ranking.
   *     Given a corpus file it ranks off the corpus; given a SAVED
   *     index directory it dispatches to the index-served ranked path
-  *     (bucket-pruned leaf fetch + persisted stats — no corpus scan
-  *     per query).
+  *     (bucket-pruned leaf fetch + the `_docs` manifests' document
+  *     lengths — no corpus scan per query).
   *   - `bquery <indexPath> '<boolean query>' [nBuckets]` — the same
   *     grammar against the SAVED index (bucket-pruned leaf reads:
-  *     index once, query many times).
+  *     index once, query many times). An omitted `nBuckets`, here
+  *     and in `search`, is the count the index was saved with
+  *     ([[IndexStore.buckets]]).
   *   - `stats <indexPath>` — per-bucket balance of the SAVED index
   *     (terms/postings per term bucket: the observable form of the
   *     reference's num-reducers knob, for picking nBuckets).
@@ -74,7 +76,8 @@ object Cli {
       val k = rest.headOption.map(_.toInt).getOrElse(10)
       // must match the nBuckets the index was saved with (exactly as
       // the reference's reducer count shaped its output layout)
-      val nBuckets = rest.lift(1).map(_.toInt).getOrElse(IndexStore.DefaultBuckets)
+      val nBuckets = rest.lift(1).map(_.toInt)
+        .getOrElse(IndexStore.buckets(spark, indexPath).getOrElse(IndexStore.DefaultBuckets))
       val hits = IndexStore.lookup(spark, indexPath, term, nBuckets)
       // id column follows the indexed corpus: title (tsv) or doc_id
       val idCol = Seq("title", "doc_id").find(hits.columns.contains).get
@@ -86,11 +89,8 @@ object Cli {
         // a saved index serves ranked queries without touching any
         // corpus: bucket-pruned leaf fetch + the document lengths its
         // `_docs` manifests carry
-        val nBuckets = IndexStore.buckets(spark, input)
-          .getOrElse(IndexStore.DefaultBuckets)
-        val idCol = Seq("title", "doc_id")
-          .find(IndexStore.load(spark, input).columns.contains).get
-        Query.searchRankedIndex(spark, input, q, k, nBuckets, id = idCol)
+        Query.searchRankedIndex(spark, input, q, k,
+          IndexStore.buckets(spark, input).getOrElse(IndexStore.DefaultBuckets))
       } else {
         val (corpus, id) = readCorpus(spark, input)
         Query.searchRanked(corpus, q, k, id = id)
@@ -98,11 +98,10 @@ object Cli {
     case Seq("bquery", indexPath, q, rest @ _*) =>
       // boolean/phrase/prefix retrieval against the SAVED index: only
       // the query terms' buckets are read (Query.searchIndex)
-      val nBuckets = rest.headOption.map(_.toInt).getOrElse(IndexStore.DefaultBuckets)
-      val idCol = Seq("title", "doc_id")
-        .find(IndexStore.load(spark, indexPath).columns.contains).get
-      Query.searchIndex(spark, indexPath, q, nBuckets, id = idCol)
-        .orderBy(idCol)
+      val nBuckets = rest.headOption.map(_.toInt)
+        .getOrElse(IndexStore.buckets(spark, indexPath).getOrElse(IndexStore.DefaultBuckets))
+      val hits = Query.searchIndex(spark, indexPath, q, nBuckets)
+      hits.orderBy(hits.columns.head)
     case Seq("stats", indexPath) =>
       IndexStore.load(spark, indexPath)
         .groupBy(col("term_bucket"))
@@ -160,7 +159,7 @@ object Cli {
     case _ =>
       throw new IllegalArgumentException(
         "usage: index <in.tsv> <indexPath> [nBuckets] | " +
-          "search <indexPath> <term> [k] | query <in.tsv> '<query>' [k] | " +
+          "search <indexPath> <term> [k] [nBuckets] | query <in.tsv> '<query>' [k] | " +
           "bquery <indexPath> '<query>' [nBuckets] | stats <indexPath> | " +
           "takedown <indexPath> <id,id,...> [compact] | " +
           "clean <in.(tsv|jsonl|csv)> <outPath> | " +

@@ -12,7 +12,7 @@ import org.apache.spark.sql.DataFrame
   * from the index's 60 highest-df entries so the workload hits real
   * postings: single-term lookup, boolean AND through the query
   * grammar, exact phrase, and BM25-ranked top-10 — the ranked leg runs
-  * the REAL index-served ranker ([[operators.Query.searchRankedIndex]]:
+  * the REAL index-served ranker ([[operators.Query.searchRankedIndexOn]]:
   * bucket-pruned leaf fetch + the manifests' document lengths), not a
   * tf-ordered lookup stand-in (the r12 gap: the measured serving story
   * didn't cover the engine's own headline ranker).
@@ -33,6 +33,9 @@ object Serving {
     def p(shape: String, q: Double): Double =
       pct(if (shape == "all") all else latencies.getOrElse(shape, Vector.empty), q)
   }
+
+  /** Walks executed plans through AQE stages and subqueries. */
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   def pct(xs: Seq[Double], p: Double): Double =
     if (xs.isEmpty) -1.0
@@ -61,6 +64,12 @@ object Serving {
     * the full-dictionary levenshtein scan; exempt from the pruning
     * counter because the scan fallback cannot bucket-prune by
     * design).
+    *
+    * Every shape runs its `*On` query against an index handle:
+    * `prepared` = one [[sources.IndexStore.open]] handle for the whole
+    * mix, otherwise one one-query handle per query — exactly what the
+    * per-query calls (`lookup`, `searchIndex`, `searchRankedIndex`)
+    * run.
     */
   def mix(spark: org.apache.spark.sql.SparkSession, idxPath: String,
           nBuckets: Int, vocab: Array[String], nQueries: Int = 100,
@@ -80,12 +89,15 @@ object Serving {
     // manifests, the `_meta`/`_fuzzy` side tables and the plan of the
     // dead-key set (superseded segment versions + takedowns), which the
     // first query holds once; every query plans against the held frames
-    // (`*On` variants) instead of re-listing the store and re-reading
-    // the `_docs` manifests and tombstones — the per-query planning
-    // floor. Results are parity-specced identical; only latency may
-    // differ.
-    val oi = if (prepared) Some(sources.IndexStore.open(spark, idxPath, nBuckets))
-             else None
+    // instead of re-listing the store and re-reading the `_docs`
+    // manifests and tombstones — the per-query planning floor. Without
+    // it each query opens its own one-query handle, resolving `_meta`
+    // for the fielded shape and `_fuzzy` for the fuzzy one. Results are
+    // parity-specced identical, only latency may differ.
+    val held = if (prepared) Some(sources.IndexStore.open(spark, idxPath, nBuckets))
+               else None
+    def handle(meta: Boolean = false, fuzzy: Boolean = false) = held.getOrElse(
+      sources.IndexStore.openOnce(spark, idxPath, nBuckets, meta = meta, fuzzy = fuzzy))
     // with the `_fuzzy` SymSpell table present, the fuzzy shape's
     // candidate-probe postings fetch must bucket-prune like any term
     // lookup — only the table-less dictionary-scan fallback earns the
@@ -96,38 +108,16 @@ object Serving {
       val t2 = vocab((i * 7 + 3) % vocab.length)
       val shape = shapes(i % shapes.length)
       shape -> (shape match {
-        case "term" => () => oi match {
-          case Some(h) => sources.IndexStore.lookupOn(h, t1)
-          case None => sources.IndexStore.lookup(spark, idxPath, t1, nBuckets)
-        }
-        case "bool" => () => oi match {
-          case Some(h) => operators.Query.searchIndexOn(h, s"$t1 AND $t2")
-          case None =>
-            operators.Query.searchIndex(spark, idxPath, s"$t1 AND $t2", nBuckets)
-        }
-        case "phrase" => () => oi match {
-          case Some(h) => operators.Query.searchIndexOn(h, "\"" + t1 + " " + t2 + "\"")
-          case None =>
-            operators.Query.searchIndex(spark, idxPath, "\"" + t1 + " " + t2 + "\"", nBuckets)
-        }
-        case "ranked" => () => oi match {
-          case Some(h) => operators.Query.searchRankedIndexOn(h, s"$t1 OR $t2", k = 10)
-          case None =>
-            operators.Query.searchRankedIndex(spark, idxPath, s"$t1 OR $t2",
-              k = 10, nBuckets = nBuckets)
-        }
+        case "term" => () => sources.IndexStore.lookupOn(handle(), t1)
+        case "bool" => () => operators.Query.searchIndexOn(handle(), s"$t1 AND $t2")
+        case "phrase" => () =>
+          operators.Query.searchIndexOn(handle(), "\"" + t1 + " " + t2 + "\"")
+        case "ranked" => () =>
+          operators.Query.searchRankedIndexOn(handle(), s"$t1 OR $t2", k = 10)
         case "fielded" =>
           val q = s"lang:${safeLangs(i % safeLangs.length)} AND $t1"
-          () => oi match {
-            case Some(h) => operators.Query.searchIndexOn(h, q)
-            case None => operators.Query.searchIndex(spark, idxPath, q, nBuckets)
-          }
-        case "fuzzy" =>
-          val q = s"$t1~1"
-          () => oi match {
-            case Some(h) => operators.Query.searchIndexOn(h, q)
-            case None => operators.Query.searchIndex(spark, idxPath, q, nBuckets)
-          }
+          () => operators.Query.searchIndexOn(handle(meta = true), q)
+        case "fuzzy" => () => operators.Query.searchIndexOn(handle(fuzzy = true), s"$t1~1")
       })
     }
     val unpruned = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -137,16 +127,19 @@ object Serving {
       val df = mk()
       df.queryExecution.toRdd.count()
       val dt = (System.nanoTime() - t0) / 1e9
-      // pruned = either a planning-time-pruned layout scan
-      // (PartitionFilters) or NO layout scan at all. A term_bucket scan
-      // WITHOUT PartitionFilters is the regression this counter exists
-      // for.
+      // pruned = every scan of an index layout (a `term_bucket`-
+      // partitioned relation) carries a term_bucket partition filter.
+      // An index scan without one is the regression this counter
+      // exists for (the plan string is no test: every scan prints a
+      // `PartitionFilters` entry, empty or not).
       // the table-less fuzzy fallback is exempt: its dictionary scan
       // reads every bucket BY CONTRACT (an edit can land in any
       // bucket), so an unpruned term_bucket scan is its correct plan
-      val plan = df.queryExecution.executedPlan.toString
       val ok = (shape == "fuzzy" && fuzzyScans) ||
-        plan.contains("PartitionFilters") || !plan.contains("term_bucket")
+        Plans.collect(df.queryExecution.executedPlan) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.relation.partitionSchema.fieldNames.contains("term_bucket") => s
+        }.forall(_.partitionFilters.exists(_.references.exists(_.name == "term_bucket")))
       if (!ok) unpruned.incrementAndGet()
       shape -> dt
     }

@@ -368,73 +368,59 @@ object Query {
   /** Parse + run a query string against a SAVED index
     * ([[graft.sources.IndexStore]]) instead of re-tokenizing a corpus —
     * the index-once / query-many path the reference builds its index
-    * for. The query's leaves arrive in ONE fetch ([[leafPostings]]:
-    * exact terms bucket-pruned, prefix leaves with a pushed
-    * StartsWith), and the stored position lists feed [[matchesOf]]
-    * as they are — the same evaluator as the corpus path, so only
-    * the leaf source changes, and it reads ≤ |query terms| / nBuckets
-    * of the index.
-    *
-    * The call reads ONE snapshot: the leaves and the NOT universe
-    * both come off one [[graft.sources.IndexStore.load]] (one root
-    * listing), and the universe enters the plan only when the query
-    * needs it. NOT ranges over the INDEXED documents (the index has
-    * no row for a zero-token document — same universe the reference's
-    * artifact defines).
+    * for, read-latest: [[searchIndexOn]] over a one-query handle
+    * ([[graft.sources.IndexStore.openOnce]]) that resolves `_meta` only
+    * for a field leaf and `_fuzzy` only for a fuzzy leaf. The result's
+    * one column is the index's id ([[graft.sources.IndexStore.OpenIndex.id]]).
     */
   def searchIndex(spark: SparkSession, indexPath: String, query: String,
-                  nBuckets: Int = graft.sources.IndexStore.DefaultBuckets,
-                  id: String = "doc_id"): DataFrame = {
-    val ast = parse(query)
-    graft.sources.IndexStore.requireBucketsMatch(spark, indexPath, nBuckets)
-    val idx = graft.sources.IndexStore.load(spark, indexPath)
-    def fuzzy =
-      if (graft.sources.IndexStore.hasFuzzy(spark, indexPath))
-        Some(graft.sources.IndexStore.loadFuzzy(spark, indexPath))
-      else None
-    matchesOf(leafPostings(idx, nBuckets, fuzzy, ast), ast, id,
-      idx.select(col(id)).distinct(), metaOf(spark, indexPath, ast))
-  }
+                  nBuckets: Int = graft.sources.IndexStore.DefaultBuckets): DataFrame =
+    searchIndexOn(openFor(spark, indexPath, nBuckets, parse(query)), query)
 
-  /** [[searchIndex]] against a pinned serving snapshot
-    * ([[graft.sources.IndexStore.open]]) — identical results and
-    * pruning, but the index listing, its dead-key set and `_meta` are
-    * resolved ONCE per handle instead of per query (the measured
-    * per-query planning floor of the serving mix; see
-    * [[graft.sources.IndexStore.OpenIndex]]). Snapshot semantics are
-    * the handle's: takedowns/segments landed after `open` need a
-    * re-open.
+  /** [[searchIndex]] against an index handle. The query's leaves arrive
+    * in ONE fetch ([[leafPostings]]: exact terms bucket-pruned, prefix
+    * leaves with a pushed StartsWith), and the stored position lists
+    * feed [[matchesOf]] as they are — the same evaluator as the corpus
+    * path, so only the leaf source changes, and it reads ≤ |query
+    * terms| / nBuckets of the index.
+    *
+    * The call reads the handle's ONE snapshot: the leaves and the NOT
+    * universe both come off its [[graft.sources.IndexStore.OpenIndex.idx]],
+    * and the universe enters the plan only when the query needs it.
+    * NOT ranges over the INDEXED documents (the index has no row for a
+    * zero-token document — same universe the reference's artifact
+    * defines). Against a serving handle ([[graft.sources.IndexStore.open]])
+    * the index listing, its dead-key set and `_meta` are resolved ONCE
+    * per handle instead of per query (the measured per-query planning
+    * floor of the serving mix); takedowns/segments landed after `open`
+    * need a re-open.
     */
   def searchIndexOn(oi: graft.sources.IndexStore.OpenIndex,
                     query: String): DataFrame = {
-    val id = oi.universe.columns.head
     val ast = parse(query)
-    matchesOf(leafPostingsOn(oi, ast), ast, id, oi.universe, oi.meta.orNull)
+    matchesOf(leafPostings(oi, ast), ast, oi.id, oi.universe, oi.meta.orNull)
   }
 
-  /** The index's `_meta` side table when the QUERY needs one (fielded
-    * `lang:`/`source:` leaves evaluate against it, doc-keyed and
-    * tombstone-filtered), else null — [[matchesOf]] then fails loudly
-    * only if the query actually HAS a field leaf. Field-less queries
-    * skip even the existence check's read.
+  /** The one-query handle of a per-query call: `_meta` resolved only
+    * when the query has a field leaf, `_fuzzy` only when it has a fuzzy
+    * leaf.
     */
-  private def metaOf(spark: SparkSession, indexPath: String, ast: Q): DataFrame =
-    if (fieldLeaves(ast).nonEmpty && graft.sources.IndexStore.hasMeta(spark, indexPath))
-      graft.sources.IndexStore.loadMeta(spark, indexPath)
-    else null
+  private def openFor(spark: SparkSession, indexPath: String, nBuckets: Int,
+                      ast: Q): graft.sources.IndexStore.OpenIndex =
+    graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets,
+      meta = fieldLeaves(ast).nonEmpty, fuzzy = leaves(ast)._3.nonEmpty)
 
-  /** The posting rows a query's leaves need, fetched from a resolved
-    * index relation `idx` in ONE filtered scan: exact-term leaves
+  /** The posting rows a query's leaves need, fetched from the handle's
+    * resolved index relation in ONE filtered scan: exact-term leaves
     * bucket-pruned, prefix leaves by a pushed StartsWith (term-sorted
     * row groups prune inside each bucket), fuzzy leaves through the
     * `_fuzzy` table when there is one. Each posting row arrives at
     * most once, however many leaves it serves. Returns (id, term, tf,
-    * positions[, field]) rows — the leaf source of [[searchIndex]]
-    * and of [[searchRankedIndex]] (which also reads tf and per-term
+    * positions[, field]) rows — the leaf source of [[searchIndexOn]]
+    * and of [[searchRankedIndexOn]] (which also reads tf and per-term
     * row counts off the SAME fetch).
     */
-  private def leafPostings(idx: DataFrame, nBuckets: Int, fuzzyTable: => Option[DataFrame],
-                           ast: Q): DataFrame = {
+  private def leafPostings(oi: graft.sources.IndexStore.OpenIndex, ast: Q): DataFrame = {
     val (ts, ps, fz) = leaves(ast)
     // fuzzy leaves can't bucket-prune directly (an edit can land in
     // any bucket). With the `_fuzzy` SymSpell side table the leaf
@@ -443,7 +429,7 @@ object Query {
     // term list), and the candidates fetch bucket-pruned beside the
     // exact terms; without it, the declared fallback is the
     // full-dictionary levenshtein scan
-    val table = if (fz.isEmpty) None else fuzzyTable
+    val table = if (fz.isEmpty) None else oi.fuzzy
     val (probed, scanned) =
       if (table.isEmpty) (Nil, fz)
       else fz.distinct.partition(_._2 <= graft.sources.IndexStore.FuzzyMaxEdits)
@@ -453,17 +439,11 @@ object Query {
     }
     val exact = (ts ++ cands).distinct
     val byTerm =
-      if (exact.isEmpty) lit(false) else graft.sources.IndexStore.termsIn(exact, nBuckets)
+      if (exact.isEmpty) lit(false) else graft.sources.IndexStore.termsIn(exact, oi.nBuckets)
     // a pure-field query (`lang:en`) fetches nothing: the filter is
     // false and its evaluation rides `_meta` alone
-    idx.filter(byTerm || leafHit(Nil, ps, scanned)).drop("term_bucket")
+    oi.idx.filter(byTerm || leafHit(Nil, ps, scanned)).drop("term_bucket")
   }
-
-  /** [[leafPostings]] against a handle's resolved relation and its
-    * pinned `_fuzzy` table.
-    */
-  private def leafPostingsOn(oi: graft.sources.IndexStore.OpenIndex, ast: Q): DataFrame =
-    leafPostings(oi.idx, oi.nBuckets, oi.fuzzy, ast)
 
   /** The positive (non-negated) words of a query — the terms ranking
     * should score. NOT-subtrees only exclude documents.
@@ -547,8 +527,10 @@ object Query {
   /** [[searchRanked]] served from a SAVED index — the retrieve-then-
     * rank path a deployment actually runs (r12 VERDICT item 1: the
     * corpus path re-tokenizes the whole corpus per query, the plan
-    * you'd never run at 100 TB). Everything per-query rides the ONE
-    * bucket-pruned leaf fetch [[searchIndex]] already does:
+    * you'd never run at 100 TB), read-latest: [[searchRankedIndexOn]]
+    * over a one-query handle, opened like [[searchIndex]]'s. Everything
+    * per-query rides the ONE bucket-pruned leaf fetch [[searchIndexOn]]
+    * already does:
     *
     *   - matching: the same evaluator ([[matchesOf]]) over the
     *     fetched position lists;
@@ -584,31 +566,17 @@ object Query {
     */
   def searchRankedIndex(spark: SparkSession, indexPath: String, query: String,
                         k: Int = 20,
-                        nBuckets: Int = graft.sources.IndexStore.DefaultBuckets,
-                        id: String = "doc_id"): DataFrame =
-    // a one-query handle ([[graft.sources.IndexStore.openOnce]]):
-    // read-latest, versions and takedowns resolved inline, nothing held
-    rankedScoresOn(graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets,
-        withMeta = fieldLeaves(parse(query)).nonEmpty), query)
-      .orderBy(col("score").desc, col(id))
-      .limit(k)
+                        nBuckets: Int = graft.sources.IndexStore.DefaultBuckets): DataFrame =
+    searchRankedIndexOn(openFor(spark, indexPath, nBuckets, parse(query)), query, k)
 
-  /** [[searchRankedIndex]] against a pinned serving snapshot — the
-    * same plan over [[graft.sources.IndexStore.open]]'s resolved
-    * frames (see [[searchIndexOn]] for the snapshot contract).
+  /** [[searchRankedIndex]] against an index handle — the one ranked
+    * plan; over a serving handle ([[graft.sources.IndexStore.open]])
+    * it reads the held frames (see [[searchIndexOn]] for the snapshot
+    * contract).
     */
   def searchRankedIndexOn(oi: graft.sources.IndexStore.OpenIndex,
-                          query: String, k: Int = 20): DataFrame =
-    rankedScoresOn(oi, query)
-      .orderBy(col("score").desc, col(oi.universe.columns.head))
-      .limit(k)
-
-  /** The (id, score) rows of every document [[searchRankedIndex]]
-    * ranks, before the top-k cut.
-    */
-  private def rankedScoresOn(oi: graft.sources.IndexStore.OpenIndex,
-                             query: String): DataFrame = {
-    val id = oi.universe.columns.head
+                          query: String, k: Int = 20): DataFrame = {
+    val id = oi.id
     val (k1, b) = (1.2, 0.75)
     val ast = parse(query)
     val terms = positiveTerms(ast)
@@ -618,7 +586,7 @@ object Query {
     // literals (collected once per handle; a store whose manifests
     // carry no dl fails here, naming the upgrade)
     val (n, avgdl) = oi.corpus
-    val postings = leafPostingsOn(oi, ast)
+    val postings = leafPostings(oi, ast)
     // the universe frame only enters the plan when the query can match
     // a document without its terms (`x OR NOT y`); a NOT-less ranked
     // query never scans beyond its terms' buckets
@@ -645,6 +613,8 @@ object Query {
         (col("tf") * (k1 + 1.0)) /
         (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))))
       .groupBy(id).agg(round(sum(col("w")), 4).as("score"))
+      .orderBy(col("score").desc, col(id))
+      .limit(k)
   }
 
   /** Gate query: a fixed compound query over the documents table. */

@@ -130,14 +130,21 @@ object IndexStore {
     try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  /** The bucket count the index at `path` was saved with — the public
-    * face of the [[BucketsMarker]]: callers that only hold an index
-    * path (Cli dispatch, serving setup) read the layout's own truth
-    * instead of guessing [[DefaultBuckets]]. None for a pre-marker
-    * index.
+  /** The bucket count the index at `path` was saved with, from the
+    * [[BucketsMarker]] file: callers that only hold an index path (Cli
+    * dispatch, serving setup) read the layout's own truth instead of
+    * guessing [[DefaultBuckets]]. None for a pre-marker index.
     */
-  def buckets(spark: SparkSession, path: String): Option[Int] =
-    savedBuckets(spark, path)
+  def buckets(spark: SparkSession, path: String): Option[Int] = {
+    val p = new org.apache.hadoop.fs.Path(path, BucketsMarker)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8").trim.toInt)
+      finally in.close()
+    }
+  }
 
   /** Whether `path` holds a saved index layout (plain or segmented) —
     * the dispatch test `Cli query` uses to route a query string to the
@@ -154,20 +161,6 @@ object IndexStore {
     }
   }
 
-  /** The bucket count the index at `path` was saved with, from the
-    * [[BucketsMarker]] file; None for a pre-marker index.
-    */
-  private def savedBuckets(spark: SparkSession, path: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(path, BucketsMarker)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toInt)
-      finally in.close()
-    }
-  }
-
   // ---- tombstone deletes (shared discipline: [[Tombstones]]) -----------
   //
   // The full batch-keyed contract — O(|ids|) landings, the applied-
@@ -178,9 +171,10 @@ object IndexStore {
   // These wrappers keep the index store's public surface.
 
   /** Mark documents DELETED without rewriting the index — the one-shot
-    * operational form ([[Tombstones.append]]). Readers ([[load]], and
-    * therefore every lookup and [[merge]]) anti-join the set out;
-    * [[compact]]/[[compactSegments]] fold it into a clean rewrite.
+    * operational form ([[Tombstones.append]]). Readers ([[load]],
+    * [[merge]], and every query through an [[OpenIndex]] opened after
+    * the call — the per-query calls open one each) anti-join the set
+    * out; [[compact]]/[[compactSegments]] fold it into a clean rewrite.
     */
   def delete(spark: SparkSession, path: String, docIds: Seq[Long]): Unit =
     Tombstones.append(spark, path, docIds)
@@ -214,7 +208,7 @@ object IndexStore {
   def compact(spark: SparkSession, path: String, outPath: String,
               nBuckets: Option[Int] = None): Unit = {
     save(load(spark, path).drop("term_bucket"), outPath,
-      nBuckets.orElse(savedBuckets(spark, path)).getOrElse(DefaultBuckets))
+      nBuckets.orElse(buckets(spark, path)).getOrElse(DefaultBuckets))
     if (hasMeta(spark, path)) carryMeta(spark, path, outPath, outPath)
     // the fuzzy dictionary rebuilds from the compacted output (terms
     // whose last postings folded away leave the dictionary here)
@@ -491,7 +485,9 @@ object IndexStore {
     * side, so partition pruning and term pushdown are unaffected
     * (auditIndex asserts this); the dead-key side is a doc-count-sized
     * frame AQE broadcasts. A store with at most one segment and no
-    * tombstones reads with no join at all.
+    * tombstones reads with no join at all. The per-query calls
+    * ([[lookup]], `Query.searchIndex`, ...) read this same plan as the
+    * [[OpenIndex.idx]] of a one-query handle ([[openOnce]]).
     */
   def load(spark: SparkSession, path: String): DataFrame =
     loadListed(spark, path, SegmentedStore.listing(spark, path))
@@ -543,7 +539,7 @@ object IndexStore {
     */
   private[graft] def requireBucketsMatch(spark: SparkSession, path: String,
                                   nBuckets: Int): Unit =
-    savedBuckets(spark, path) match {
+    buckets(spark, path) match {
       case Some(saved) =>
         require(saved == nBuckets,
           s"index at $path was saved with nBuckets=$saved, not $nBuckets; " +
@@ -564,14 +560,20 @@ object IndexStore {
             s"with nBuckets=$nBuckets; pass the bucket count used at save time")
     }
 
-  /** A PINNED serving snapshot of one index (r14 — the serving
-    * latency floor): every per-query `lookup`/`searchIndex`/
-    * `searchRankedIndex` call re-resolves the index relation — it
-    * lists the bucket directories and reads footers again, a
-    * driver-side cost that grows with the store and was the measured
-    * ~0.3s p50 floor on the 500k-doc store.
+  /** A resolved snapshot of one index, the one relation every index
+    * query reads. Each query is written once, against a handle: the
+    * `*On` variants ([[lookupOn]], [[lookupTermsOn]],
+    * [[graft.operators.Query.searchIndexOn]]/
+    * [[graft.operators.Query.searchRankedIndexOn]],
+    * [[graft.streaming.Stream.hybridServeOn]]). Each per-query call
+    * ([[lookup]], [[lookupTerms]], `Query.searchIndex`/
+    * `searchRankedIndex`, `Stream.hybridServe`'s batches) is its `*On`
+    * twin over a one-query handle ([[openOnce]]), which holds nothing
+    * and re-lists the store per call — read-latest, like [[load]], at
+    * a driver-side cost that grows with the store (the measured ~0.3s
+    * p50 floor on the 500k-doc store, r14).
     *
-    * What a handle resolves ONCE:
+    * What a serving handle ([[open]]) resolves ONCE:
     *  - at [[open]], on the driver and with no job: the store
     *    [[fingerprint]], then one
     *    [[SegmentedStore.Listing]] that fixes the segment set the
@@ -598,11 +600,7 @@ object IndexStore {
     * What each query still plans for itself: its own bucket-pruned
     * filters over [[idx]] and, only when its AST can match a document
     * without its terms (a NOT that can hold there), the NOT-universe
-    * distinct ([[universe]]). The `*On` query variants ([[lookupOn]],
-    * [[lookupTermsOn]], [[graft.operators.Query.searchIndexOn]]/
-    * [[graft.operators.Query.searchRankedIndexOn]],
-    * [[graft.streaming.Stream.hybridServeOn]]) plan against the held
-    * frames.
+    * distinct ([[universe]]).
     *
     * Snapshot semantics, stated plainly: segments, tombstones and
     * side tables landed AFTER `open` are not visible through the
@@ -611,12 +609,11 @@ object IndexStore {
     * deployment's usual snapshot contract (the maintenance loops
     * publish by atomic rename; a handle pins one published state).
     * Ranked scores are exact at the pinned snapshot: dl, n and avgdl
-    * resolve through the same dead-key set as the postings. The
-    * per-query paths keep their read-latest semantics unchanged.
+    * resolve through the same dead-key set as the postings.
     */
   final case class OpenIndex(spark: SparkSession, path: String, nBuckets: Int,
                              raw: DataFrame, deadKeys: Option[DataFrame],
-                             docs: Option[DataFrame],
+                             manifests: () => Option[DataFrame],
                              meta: Option[DataFrame],
                              fuzzy: Option[DataFrame] = None,
                              fp: String = "", hold: Boolean = false) {
@@ -637,17 +634,21 @@ object IndexStore {
 
     private lazy val dead: Option[DataFrame] = deadKeys.map(held)
 
+    /** The layouts' `_docs` manifests ([[manifestsOf]]). */
+    lazy val docs: Option[DataFrame] = manifests()
+
+    /** The id column of the indexed corpus: `doc_id`, or `title` for a
+      * title-keyed (TSV) index.
+      */
+    val id: String = if (raw.columns.contains("doc_id")) "doc_id" else "title"
+
     /** The resolved index relation: [[raw]] anti-joined against the
       * dead-key set.
       */
     lazy val idx: DataFrame = SegmentedStore.live(raw, dead, "doc_id")
 
-    /** The indexed doc set NOT ranges over; its id column follows the
-      * indexed corpus (title for tsv, doc_id otherwise).
-      */
-    lazy val universe: DataFrame =
-      idx.select(Seq("doc_id", "title").find(raw.columns.contains).getOrElse("doc_id"))
-        .distinct()
+    /** The indexed doc set NOT ranges over, keyed by [[id]]. */
+    lazy val universe: DataFrame = idx.select(col(id)).distinct()
 
     /** The live `(id, dl)` rows: the manifests resolved through the
       * same dead-key set as [[idx]]. Fails loudly on a store whose
@@ -682,52 +683,56 @@ object IndexStore {
     def release(): Unit = heldRdds.forEach(rdd => rdd.unpersist())
   }
 
-  /** Resolve a serving snapshot (see [[OpenIndex]] for what it holds).
+  /** Resolve a serving snapshot (see [[OpenIndex]] for what it holds):
+    * its [[fingerprint]], the store listing and both side tables.
     * `open` runs no job: the listings and the footer reads that fix
     * each relation's schema run on the driver ([[ParquetFooters]];
     * local sessions list partition directories on the driver too, see
     * [[graft.GraftSession]]), and nothing is computed until a query
     * runs — the dead-key set is planned here and held by the first
     * query.
-    * `withMeta = false` skips the `_meta` resolution — the per-query
-    * ranked path ([[openOnce]]) passes it when the query has no field
-    * leaf, so field-less queries never pay that listing (sessions keep
-    * the default and hold everything).
     */
   def open(spark: SparkSession, path: String,
-           nBuckets: Int = DefaultBuckets,
-           withMeta: Boolean = true): OpenIndex =
-    snapshot(spark, path, nBuckets, withMeta, hold = true)
+           nBuckets: Int = DefaultBuckets): OpenIndex =
+    snapshot(spark, path, nBuckets, meta = true, fuzzy = true, hold = true)
 
-  /** A handle for ONE query — the per-query ranked path's
-    * (`Query.searchRankedIndex`). It is read-latest
-    * like [[load]]: its [[OpenIndex.idx]] is `load`'s plan, the
-    * dead-key set resolved inline with the query, so it holds nothing.
+  /** A handle for ONE query: every per-query call is its `*On` twin
+    * over one. It is read-latest like [[load]] — its [[OpenIndex.idx]]
+    * is `load`'s plan, the dead-key set resolved inline with the query
+    * — and holds nothing. It resolves `_meta` and `_fuzzy` only when
+    * the query asks (a field leaf, a fuzzy leaf) and takes no
+    * fingerprint: nothing asks a one-query handle whether it is stale.
     */
   private[graft] def openOnce(spark: SparkSession, path: String, nBuckets: Int,
-                              withMeta: Boolean): OpenIndex =
-    snapshot(spark, path, nBuckets, withMeta, hold = false)
+                              meta: Boolean = false, fuzzy: Boolean = false): OpenIndex =
+    snapshot(spark, path, nBuckets, meta, fuzzy, hold = false)
 
   private def snapshot(spark: SparkSession, path: String, nBuckets: Int,
-                       withMeta: Boolean, hold: Boolean): OpenIndex = {
+                       meta: Boolean, fuzzy: Boolean, hold: Boolean): OpenIndex = {
     requireBucketsMatch(spark, path, nBuckets)
     // the fingerprint BEFORE the listing: a landing between the two
     // leaves the handle [[stale]] (so it is re-opened), never missing
     // a landing its fingerprint claims to cover
-    val fp = fingerprint(spark, path)
+    val fp = if (hold) fingerprint(spark, path) else ""
     val l = SegmentedStore.listing(spark, path)
-    val docs = manifestsOf(spark, path, l)
+    // a serving handle reads the manifests' footers now, like every
+    // other schema; a one-query handle only when its plan needs them (a
+    // dead-key set over two or more segments, a ranked query's dl), as
+    // `load` does
+    lazy val docs = manifestsOf(spark, path, l)
+    if (hold) docs
     OpenIndex(spark, path, nBuckets, rawOf(spark, path, l),
-      SegmentedStore.deadKeys(spark, path, l, "doc_id")(docs.get), docs,
-      if (withMeta && hasMeta(spark, path)) Some(loadMeta(spark, path)) else None,
-      if (hasFuzzy(spark, path)) Some(loadFuzzy(spark, path)) else None,
+      SegmentedStore.deadKeys(spark, path, l, "doc_id")(docs.get), () => docs,
+      if (meta && hasMeta(spark, path)) Some(loadMeta(spark, path)) else None,
+      if (fuzzy && hasFuzzy(spark, path)) Some(loadFuzzy(spark, path)) else None,
       fp, hold)
   }
 
-  /** [[lookup]] against a pinned [[OpenIndex]] snapshot — same plan
-    * (planning-time bucket pruning + pushed term equality), no
-    * re-listing, and no manifest or tombstone read: the dead-key side
-    * is the handle's held rows.
+  /** Single-term lookup against an [[OpenIndex]]: the `term_bucket`
+    * equality prunes directories at planning time; the `term` equality
+    * pushes down into the parquet scan of the one surviving bucket.
+    * Against a serving handle there is no re-listing and no manifest or
+    * tombstone read: the dead-key side is the handle's held rows.
     */
   def lookupOn(oi: OpenIndex, term: String): DataFrame =
     oi.idx
@@ -735,7 +740,13 @@ object IndexStore {
         col("term") === term)
       .drop("term_bucket")
 
-  /** [[lookupTerms]] against a pinned [[OpenIndex]] snapshot. */
+  /** Multi-term lookup against an [[OpenIndex]] (a boolean query's
+    * leaf set fetched in ONE scan): the bucket IN-list prunes to at most
+    * |distinct buckets| directories at planning time and the term
+    * IN-list pushes into the surviving buckets' row groups — for a
+    * q-term query the read is ≤ q/nBuckets of the index however large
+    * the index is.
+    */
   def lookupTermsOn(oi: OpenIndex, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "lookupTerms needs at least one term")
     oi.idx.filter(termsIn(terms, oi.nBuckets)).drop("term_bucket")
@@ -749,30 +760,19 @@ object IndexStore {
     col("term_bucket").isin(terms.map(bucketOf(_, nBuckets)).distinct: _*) &&
       col("term").isin(terms: _*)
 
-  /** Partition-pruned single-term lookup: the `term_bucket` equality
-    * prunes directories at planning time; the `term` equality pushes
-    * down into the parquet scan of the one surviving bucket.
+  /** Partition-pruned single-term lookup, read-latest: [[lookupOn]]
+    * over a one-query handle ([[openOnce]]).
     */
   def lookup(spark: SparkSession, path: String, term: String,
-             nBuckets: Int = DefaultBuckets): DataFrame = {
-    requireBucketsMatch(spark, path, nBuckets)
-    load(spark, path)
-      .filter(col("term_bucket") === bucketOf(term, nBuckets) && col("term") === term)
-      .drop("term_bucket")
-  }
+             nBuckets: Int = DefaultBuckets): DataFrame =
+    lookupOn(openOnce(spark, path, nBuckets), term)
 
-  /** Multi-term lookup (a boolean query's leaf set fetched in ONE
-    * scan): the bucket IN-list prunes to at most |distinct buckets|
-    * directories at planning time and the term IN-list pushes into
-    * the surviving buckets' row groups — for a q-term query the read
-    * is ≤ q/nBuckets of the index however large the index is.
+  /** Multi-term lookup, read-latest: [[lookupTermsOn]] over a one-query
+    * handle ([[openOnce]]).
     */
   def lookupTerms(spark: SparkSession, path: String, terms: Seq[String],
-                  nBuckets: Int = DefaultBuckets): DataFrame = {
-    require(terms.nonEmpty, "lookupTerms needs at least one term")
-    requireBucketsMatch(spark, path, nBuckets)
-    load(spark, path).filter(termsIn(terms, nBuckets)).drop("term_bucket")
-  }
+                  nBuckets: Int = DefaultBuckets): DataFrame =
+    lookupTermsOn(openOnce(spark, path, nBuckets), terms)
 
   /** Incremental index maintenance: merge a delta index (the postings
     * of new + re-crawled documents) into a base index. Document
@@ -851,7 +851,7 @@ object IndexStore {
     val spark = delta.sparkSession
     // a segment with a DIFFERENT bucket count would make term lookups
     // silently miss postings in half the layout — fail loudly instead
-    savedBuckets(spark, path).foreach(saved =>
+    buckets(spark, path).foreach(saved =>
       require(saved == nBuckets,
         s"segmented store at $path was created with nBuckets=$saved, " +
           s"not $nBuckets; pass the store's bucket count"))
@@ -861,7 +861,7 @@ object IndexStore {
       // batch). Written BEFORE the segment rename: any VISIBLE segment
       // then implies the marker exists, so a marker-less segmented
       // store can never silently accept lookups with any bucket count
-      if (savedBuckets(spark, path).isEmpty) writeBuckets(spark, path, nBuckets)
+      if (buckets(spark, path).isEmpty) writeBuckets(spark, path, nBuckets)
       save(delta, tmp, nBuckets)
     }
   }
@@ -876,7 +876,7 @@ object IndexStore {
     * No-op below two segments without tombstones.
     */
   def compactSegments(spark: SparkSession, path: String): Unit = {
-    val nb = savedBuckets(spark, path).getOrElse(DefaultBuckets)
+    val nb = buckets(spark, path).getOrElse(DefaultBuckets)
     SegmentedStore.fold(spark, path)(
       dir => save(load(spark, path).drop("term_bucket"), dir, nb),
       (root, data) => {

@@ -525,14 +525,13 @@ object Stream {
     * filesystem). Deployments pairing both loops accept that retry
     * or point serving at a snapshot the maintainer publishes by
     * versioned directory + pointer file; single-writer single-reader
-    * sequential use (the spec's shape) never observes the gap.
+    * sequential use (the spec's shape) never observes the gap. Each
+    * batch is [[knnServeOn]] over a fresh [[openEmbedStore]].
     */
   def knnServe(queries: DataFrame, centroidPath: String, storePath: String,
                outPath: String, k: Int = 5): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     batchSink(queries) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      knnBatchOf(batch, spark.read.parquet(centroidPath),
-          loadEmbedStore(spark, storePath), k)
+      knnServeOn(openEmbedStore(batch.sparkSession, storePath, centroidPath), batch, k)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
     }
 
@@ -1598,7 +1597,10 @@ object Stream {
     * collect is the batch's distinct term list — bounded by the query
     * batch, the collect a serving loop legitimately makes. Both
     * stores stay partition-pruned however large the corpus is; the
-    * fusion frames are ≤ 4k rows per query.
+    * fusion frames are ≤ 4k rows per query. Each batch with terms is
+    * [[hybridServeOn]] over a one-query index handle
+    * ([[graft.sources.IndexStore.openOnce]]) and a fresh
+    * [[openEmbedStore]], so every batch reads the latest stores.
     */
   def hybridServe(queries: DataFrame, indexPath: String, centroidPath: String,
       storePath: String, outPath: String, k: Int = 5,
@@ -1606,12 +1608,12 @@ object Stream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     batchSink(queries) { (batch, batchId) =>
       val spark = batch.sparkSession
-      val terms = batch.select("term").distinct()
-        .collect().map(_.getString(0)).toSeq
+      val terms = termsOf(batch)
+      // a batch with no term rows has nothing to serve (and no handle
+      // to open)
       if (terms.nonEmpty) {
-        hybridBatchOf(batch,
-            graft.sources.IndexStore.lookupTerms(spark, indexPath, terms, nBuckets),
-            spark.read.parquet(centroidPath), loadEmbedStore(spark, storePath), k)
+        hybridTermsOn(graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets),
+            openEmbedStore(spark, storePath, centroidPath), batch, terms, k)
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       }
     }
@@ -1682,12 +1684,20 @@ object Stream {
   def hybridServeOn(oi: graft.sources.IndexStore.OpenIndex,
                     oes: OpenEmbedStore, queries: DataFrame,
                     k: Int = 5): DataFrame = {
-    val terms = queries.select("term").distinct()
-      .collect().map(_.getString(0)).toSeq
+    val terms = termsOf(queries)
     require(terms.nonEmpty, "hybridServeOn needs at least one query term")
+    hybridTermsOn(oi, oes, queries, terms, k)
+  }
+
+  /** The distinct query terms of a hybrid query frame (one collect). */
+  private def termsOf(queries: DataFrame): Seq[String] =
+    queries.select("term").distinct().collect().map(_.getString(0)).toSeq
+
+  /** [[hybridServeOn]] over the already-collected `terms` of `queries`. */
+  private def hybridTermsOn(oi: graft.sources.IndexStore.OpenIndex, oes: OpenEmbedStore,
+                            queries: DataFrame, terms: Seq[String], k: Int): DataFrame =
     hybridBatchOf(queries, graft.sources.IndexStore.lookupTermsOn(oi, terms),
       oes.cent, oes.store, k)
-  }
 
   /** Continuous weighted reservoir: a document stream keeps the
     * global top-k Efraimidis–Spirakis sample fresh — each micro-batch

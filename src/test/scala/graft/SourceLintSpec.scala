@@ -20,6 +20,10 @@ import scala.jdk.CollectionConverters._
   *    the crash-safety protocol. Only those two files rename.
   *  - `"spark.graft.*"` literals: every conf key is a second code path
   *    to keep correct, so the set is pinned and a new knob fails here.
+  *  - `IndexStore.load(`, `hasMeta(`, `loadMeta(`, `hasFuzzy(`,
+  *    `loadFuzzy(` in `operators/Query.scala`: every index query reads
+  *    its relations through an `IndexStore.OpenIndex` (a per-query call
+  *    opens a one-query handle), so a second read path there fails.
   */
 class SourceLintSpec extends AnyFunSuite {
   import SourceLintSpec._
@@ -40,6 +44,32 @@ class SourceLintSpec extends AnyFunSuite {
   test("lint: the spark.graft.* conf keys in src/main/scala are exactly the known knobs") {
     val keys = mainSources.flatMap(f => confKeys(read(f))).toSet
     assert(keys === Knobs, "a conf key was added or dropped; update Knobs only with its reason")
+  }
+
+  test("lint: operators/Query.scala resolves no index relation outside an OpenIndex") {
+    val f = Paths.get("src/main/scala/graft/operators/Query.scala")
+    assert(mainSources.contains(f))
+    val hits = indexReads(read(f))
+    assert(hits.isEmpty, s"index read outside an OpenIndex (use IndexStore.openOnce or a " +
+      s"held handle) at $f lines: " + hits.mkString(", "))
+  }
+
+  test("lint: the index-read detector flags store reads, not comments or handle fields") {
+    val flagged = Seq(
+      "val idx = graft.sources.IndexStore.load(spark, p)",
+      "if (IndexStore.hasMeta(spark, p)) 1",
+      "  Some(graft.sources.IndexStore.loadMeta(spark, indexPath))",
+      "def fuzzy = if (hasFuzzy(spark, p)) Some(loadFuzzy(spark, p)) else None")
+    flagged.foreach(src => assert(indexReads(src).nonEmpty, src))
+    assert(indexReads("val x = 1\nIndexStore.load(spark, p)") === Seq(2))
+    val clean = Seq(
+      "// IndexStore.load(spark, p) in a comment",
+      "  * [[graft.sources.IndexStore.load]] in a scaladoc, hasMeta(spark, p)",
+      "val table = if (fz.isEmpty) None else oi.fuzzy",
+      "matchesOf(rows, ast, oi.id, oi.universe, oi.meta.orNull)",
+      "IndexStore.loadListed(spark, path, l)",
+      "Tables.load(spark, dir)")
+    clean.foreach(src => assert(indexReads(src).isEmpty, src))
   }
 
   test("lint: the conf-key detector reads quoted keys on code lines only") {
@@ -118,6 +148,17 @@ object SourceLintSpec {
   def renameCalls(src: String): Seq[Int] =
     src.split("\n", -1).toSeq.zipWithIndex.collect {
       case (line, i) if !isComment(line) && RenameCall.findFirstIn(line).nonEmpty => i + 1
+    }
+
+  private val IndexRead = raw"\bIndexStore\.load\(|\b(?:hasMeta|loadMeta|hasFuzzy|loadFuzzy)\(".r
+
+  /** 1-based line numbers of code lines that read an index relation
+    * or side table directly: `IndexStore.load(`, `hasMeta(`,
+    * `loadMeta(`, `hasFuzzy(`, `loadFuzzy(`.
+    */
+  def indexReads(src: String): Seq[Int] =
+    src.split("\n", -1).toSeq.zipWithIndex.collect {
+      case (line, i) if !isComment(line) && IndexRead.findFirstIn(line).nonEmpty => i + 1
     }
 
   private def isComment(line: String): Boolean = {

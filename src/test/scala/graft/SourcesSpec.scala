@@ -611,15 +611,20 @@ class SourcesSpec extends SparkSpec {
     // the held relation still bucket-prunes at planning time
     val plan = IndexStore.lookupOn(oi, "spark").queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"))
-    // 6-shape serving-mix wiring (r14 fielded + fuzzy): every shape
-    // measured against this store, and fuzzy's declared
-    // full-dictionary probe is NOT counted as a pruning violation
-    val mr = Serving.mix(spark, path, 8, Serving.vocabOf(spark, path, n = 8),
-      nQueries = 12, langs = Array("en"))
-    assert(mr.shapes ===
-      Seq("term", "bool", "phrase", "ranked", "fielded", "fuzzy"))
-    assert(mr.shapes.forall(s => mr.latencies(s).nonEmpty))
-    assert(mr.unpruned === 0)
+    // 6-shape serving-mix wiring (r14 fielded + fuzzy), per-query and
+    // prepared: every shape measured against this store, every plan
+    // pruned. With `_fuzzy` saved the fuzzy shape must prune too: a
+    // per-query handle that skipped `_fuzzy` would fall back to the
+    // unpruned dictionary scan
+    val vocab = Serving.vocabOf(spark, path, n = 8)
+    Seq(false, true).foreach { prepared =>
+      val mr = Serving.mix(spark, path, 8, vocab, nQueries = 12, prepared = prepared,
+        langs = Array("en"))
+      assert(mr.shapes ===
+        Seq("term", "bool", "phrase", "ranked", "fielded", "fuzzy"), s"prepared=$prepared")
+      assert(mr.shapes.forall(s => mr.latencies(s).nonEmpty), s"prepared=$prepared")
+      assert(mr.unpruned === 0, s"prepared=$prepared")
+    }
     // snapshot semantics, stated and tested: a takedown after open()
     // is visible to fresh per-query reads but NOT through the handle
     val victim = IndexStore.lookupOn(oi, "spark")
@@ -760,6 +765,16 @@ class SourcesSpec extends SparkSpec {
     val bq = Cli.run(spark,
         Seq("bquery", s"$dir/index", "spark AND NOT filter", "4")).collect()
     assert(bq.map(_.getAs[String]("title")).toSeq === Seq("Doc One"))
+    // without a trailing bucket count, `search` and `bquery` read the
+    // one the index was saved with (4, not the default 64)
+    assert(Cli.run(spark, Seq("search", s"$dir/index", "spark")).collect()
+      .map(r => (r.getAs[String]("title"), r.getAs[Long]("tf"))).toSeq === hits.toSeq)
+    assert(Cli.run(spark, Seq("bquery", s"$dir/index", "spark AND NOT filter")).collect()
+      .toSeq === bq.toSeq)
+    // the per-query calls key a title-keyed index by title with no id
+    // argument: the handle knows its id column
+    assert(operators.Query.searchIndex(spark, s"$dir/index", "spark AND NOT filter",
+      nBuckets = 4).collect().toSeq === bq.toSeq)
     val bstats = Cli.run(spark, Seq("stats", s"$dir/index")).collect()
     assert(bstats.map(_.getAs[Long]("terms")).sum === 5L)
     assert(bstats.map(_.getAs[Long]("postings")).sum === 6L)
@@ -774,6 +789,9 @@ class SourcesSpec extends SparkSpec {
         Seq("query", s"$dir/docs.tsv", "spark AND NOT filter")).collect()
       .map(r => (r.getAs[String]("title"), r.getAs[Double]("score")))
     assert(iq.toSeq === cq.toSeq && iq.nonEmpty)
+    assert(operators.Query.searchRankedIndex(spark, s"$dir/index", "spark AND NOT filter",
+        k = 10, nBuckets = 4).collect()
+      .map(r => (r.getAs[String]("title"), r.getAs[Double]("score"))).toSeq === iq.toSeq)
     assert(spark.read.parquet(s"$dir/index/_docs").columns.toSeq === Seq("title", "dl"))
     // the build persisted the SymSpell dictionary: `~1` against the
     // index goes through the candidate probe, not the scan fallback
