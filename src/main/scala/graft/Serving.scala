@@ -4,9 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Shared serving-workload driver: the mixed query load every serving
   * claim is measured against (r12 VERDICT items 1/5/8). One workload
-  * definition, three consumers — [[IndexScaleStress]] (500k-doc store,
-  * sequential AND concurrent rows), [[Bench]] (per-round `serve:*`
-  * regression entries), and specs.
+  * definition, two consumers — [[Bench]] (the `serve:*` rows, at any
+  * store size its `SPARK_GRAFT_SF_DIR` points at) and specs.
   *
   * The mix is 4 shapes round-robin over an n-query run, terms drawn
   * from the index's 60 highest-df entries so the workload hits real
@@ -16,12 +15,6 @@ import org.apache.spark.sql.DataFrame
   * bucket-pruned leaf fetch + the manifests' document lengths), not a
   * tf-ordered lookup stand-in (the r12 gap: the measured serving story
   * didn't cover the engine's own headline ranker).
-  *
-  * `threads` > 1 submits queries from a fixed pool of caller threads
-  * against the one SparkSession (the supported concurrency model —
-  * Spark schedules the resulting jobs concurrently); latency stays
-  * per-query wall clock, so p50/p95 under overlap are directly
-  * comparable to the sequential row.
   */
 object Serving {
 
@@ -33,9 +26,6 @@ object Serving {
     def p(shape: String, q: Double): Double =
       pct(if (shape == "all") all else latencies.getOrElse(shape, Vector.empty), q)
   }
-
-  /** Walks executed plans through AQE stages and subqueries. */
-  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
   def pct(xs: Seq[Double], p: Double): Double =
     if (xs.isEmpty) -1.0
@@ -73,7 +63,7 @@ object Serving {
     */
   def mix(spark: org.apache.spark.sql.SparkSession, idxPath: String,
           nBuckets: Int, vocab: Array[String], nQueries: Int = 100,
-          threads: Int = 1, prepared: Boolean = false,
+          prepared: Boolean = false,
           langs: Array[String] = Array.empty): MixResult = {
     // fielded queries interpolate lang values into the query grammar —
     // restrict them to the grammar's token charset (r15): a metadata
@@ -120,44 +110,25 @@ object Serving {
         case "fuzzy" => () => operators.Query.searchIndexOn(handle(fuzzy = true), s"$t1~1")
       })
     }
-    val unpruned = new java.util.concurrent.atomic.AtomicInteger(0)
+    var unpruned = 0
     def run(i: Int): (String, Double) = {
       val (shape, mk) = mkQuery(i)
       val t0 = System.nanoTime()
       val df = mk()
       df.queryExecution.toRdd.count()
       val dt = (System.nanoTime() - t0) / 1e9
-      // pruned = every scan of an index layout (a `term_bucket`-
-      // partitioned relation) carries a term_bucket partition filter.
-      // An index scan without one is the regression this counter
-      // exists for (the plan string is no test: every scan prints a
-      // `PartitionFilters` entry, empty or not).
-      // the table-less fuzzy fallback is exempt: its dictionary scan
-      // reads every bucket BY CONTRACT (an edit can land in any
-      // bucket), so an unpruned term_bucket scan is its correct plan
-      val ok = (shape == "fuzzy" && fuzzyScans) ||
-        Plans.collect(df.queryExecution.executedPlan) {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.relation.partitionSchema.fieldNames.contains("term_bucket") => s
-        }.forall(_.partitionFilters.exists(_.references.exists(_.name == "term_bucket")))
-      if (!ok) unpruned.incrementAndGet()
+      // an index scan without a term_bucket partition filter is the
+      // regression this counter exists for. The table-less fuzzy
+      // fallback is exempt: its dictionary scan reads every bucket BY
+      // CONTRACT (an edit can land in any bucket), so an unpruned
+      // term_bucket scan is its correct plan
+      if (!(shape == "fuzzy" && fuzzyScans) && !Explain.prunes(df, Explain.TermBucket))
+        unpruned += 1
       shape -> dt
     }
-    val results: Seq[(String, Double)] =
-      if (threads <= 1) (0 until nQueries).map(run)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val fs = (0 until nQueries).map(i => scala.concurrent.Future(run(i)))
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(fs),
-            scala.concurrent.duration.Duration(30, "min"))
-        } finally pool.shutdown()
-      }
+    val results = (0 until nQueries).map(run)
     MixResult(
       results.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).toVector },
-      unpruned.get(), shapes.toSeq)
+      unpruned, shapes.toSeq)
   }
 }

@@ -113,10 +113,8 @@ object Dedup {
 
   /** Buckets above this many members take [[boundedBucketPairs]]'
     * self-join fallback instead of the in-buffer combination
-    * expansion. Plan-construction-time conf, so specs can force the fallback at tiny scale. */
-  val MaxBucketConfKey = "spark.graft.maxBucket"
-  private def maxBucketOf(df: DataFrame): Int =
-    df.sparkSession.conf.get(MaxBucketConfKey, "4096").toInt
+    * expansion. */
+  val MaxBucket = 4096
 
   /** SIZE-BOUNDED per-bucket pair expansion over pre-aggregation
     * (bucket keys, item) rows — same unordered i<j pair set as
@@ -129,7 +127,7 @@ object Dedup {
     * One exchange on the bucket keys feeds three consumers: a window
     * `count` sizes every bucket (WindowExec buffers through a
     * spillable row array — unlike an aggregation buffer), buckets
-    * ≤ [[MaxBucketConfKey]] take the in-buffer combination expansion
+    * ≤ `maxBucket` take the in-buffer combination expansion
     * (cheapest for the many-small-buckets regime), and oversize
     * buckets fall back to the key-equi self-join ([[simhashPairsOf]]'s
     * shape), whose sort-merge pair stream spills instead of
@@ -138,11 +136,12 @@ object Dedup {
     * exactly the full pair set — the oracle never sees the switch.
     *
     * `item` must be distinct within a bucket (every caller buckets an
-    * (id, key)-unique relation), so `<` loses no pairs.
+    * (id, key)-unique relation), so `<` loses no pairs. `maxBucket`
+    * defaults to [[MaxBucket]]; specs pass a smaller one to force the
+    * fallback at tiny scale.
     */
   private[graft] def boundedBucketPairs(rows: DataFrame, keys: Seq[String],
-      itemCol: String): DataFrame = {
-    val maxBucket = maxBucketOf(rows)
+      itemCol: String, maxBucket: Int = MaxBucket): DataFrame = {
     val sized = rows.select(keys.map(col) :+ col(itemCol).as("it"): _*)
       .withColumn("__n",
         count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))

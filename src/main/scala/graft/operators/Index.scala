@@ -481,8 +481,8 @@ object Index {
     * where r13's uncapped co-probe relation carried Θ(n²/cells)
     * by declared design.
     *
-    * 384, from a measured cap sweep (r14, CosineRecallStress frames,
-    * caps 128/192/256/384): in a saturated-profile regime (clone
+    * 384, from a measured cap sweep (r14 clone-corpus recall frames,
+    * SURVEY §6, caps 128/192/256/384): in a saturated-profile regime (clone
     * corpora project onto near-identical profiles) the in-cell
     * similarity RANKING carries little signal beyond co-probe itself,
     * so recall@τ tracks kept-fraction almost linearly — 128 halved
@@ -519,7 +519,7 @@ object Index {
     * [[ProfileProbes]] cells by cosine, and emit each doc's
     * top-[[ProfileCap]] most profile-similar co-probed neighbors
     * (union-kNN — r14; a pair survives when either endpoint keeps the
-    * other). Measured on the clone corpora (CosineRecallStress):
+    * other). Measured on the clone corpora (r14, SURVEY §6):
     * top-50 recall 1.000 / 0.92, τ=0.3 recall 0.89 / 0.96 — where
     * every textual generator reads ≈ 0.
     *
@@ -728,7 +728,7 @@ object Index {
   /** Coverage floor below which [[tfidfBlockingCoverage]] declares the
     * rare-term blocking regime DEGENERATE. The two measured regimes sit
     * far apart (coverage 1.000 on Zipfian corpora vs ~0.000 on the
-    * 31-word clone corpora — CosineRecallStress), so any mid threshold
+    * 31-word clone corpora — SURVEY §6), so any mid threshold
     * separates them; 0.5 reads as "most docs can't even enter the
     * candidate relation".
     */
@@ -770,9 +770,8 @@ object Index {
     tfidfBlockingCoverageOf(Tables.documents(spark, dir))
 
   /** [[tfidfBlockingCoverage]] over an arbitrary (doc_id, text) frame —
-    * the form CosineRecallStress runs against its synthetic corpora so
-    * the guard is measured in exactly the regimes the recall audit
-    * measures.
+    * the form the synthetic clone corpora were measured with, so the
+    * guard reads the same regimes the recall audit measures.
     */
   def tfidfBlockingCoverageOf(docs: DataFrame): DataFrame = {
     val base = tokenStreamOf(docs).groupBy("doc_id", "term")

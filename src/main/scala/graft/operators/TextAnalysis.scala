@@ -979,17 +979,9 @@ object TextAnalysis {
   def bpeTrainOf(docs: DataFrame): DataFrame =
     bpeTrainerOf(docs, bpeRoundCount(docs.sparkSession))._1
 
-  /** Pair-aggregation scan count of the most recent [[bpeTrainerOf]]
-    * run (1 for the initial pair rollup, plus one per batched-fallback
-    * scan) — the denominator of the §6 merges-per-scan curve
-    * ([[graft.BpeStress]] reads it). Diagnostic only; never feeds a
-    * query result.
-    */
-  @volatile private[graft] var lastBpeScans: Int = 0
-
   /** Super-round count of the most recent [[bpeTrainerOf]] run (one
     * super-round = one window fetch + one slice pull + one
-    * write-back). Diagnostic only, like [[lastBpeScans]].
+    * write-back). Diagnostic only; never feeds a query result.
     */
   @volatile private[graft] var lastBpeSuperRounds: Int = 0
 
@@ -1018,10 +1010,10 @@ object TextAnalysis {
     * candidates (one bounded TakeOrdered collect), select the provably
     * independent prefix ([[compatibleBatch]]), apply ALL of them in
     * ONE fold pass over the word table via a map literal, repeat. It
-    * runs up to `totalMerges` merges from the given word table and
-    * adds one to [[lastBpeScans]] per scan. Measured at 1.4–2.0 merges
-    * per scan where a one-merge step does 1, and no slice is pulled to
-    * the driver, so no vocabulary shape can overflow it.
+    * runs up to `totalMerges` merges from the given word table.
+    * Measured at 1.4–2.0 merges per scan where a one-merge step does 1,
+    * and no slice is pulled to the driver, so no vocabulary shape can
+    * overflow it.
     */
   private def bpeBatchedCore(words0: DataFrame, totalMerges: Int)
       : (Seq[(String, String, Long)], DataFrame) = {
@@ -1030,7 +1022,6 @@ object TextAnalysis {
     var exhausted = false
     var sinceCheckpoint = 0
     while (merges.size < totalMerges && !exhausted) {
-      lastBpeScans += 1
       val top = bpePairCounts(words)
         .orderBy(col("freq").desc, col("l"), col("r"))
         .limit(BpeBatchMax + 1)
@@ -1279,8 +1270,8 @@ object TextAnalysis {
     * Returns the merge table (round, l, r, merged, freq), in round
     * order, and the final (term, syms, cnt) word table — the trained
     * tokenizer APPLIED to the vocab. `window` and `sliceCap` default to
-    * [[BpeWindow]] and [[BpeSliceCap]]; specs and [[graft.BpeStress]]
-    * pass smaller ones to force many super-rounds or the fallback.
+    * [[BpeWindow]] and [[BpeSliceCap]]; specs pass smaller ones to
+    * force many super-rounds or the fallback.
     *
     * INCREMENTAL pair-count maintenance. The corpus is touched once
     * (the word rollup); the (l, r, freq) pair table is aggregated from
@@ -1320,7 +1311,6 @@ object TextAnalysis {
       .localCheckpoint() // vocab-bounded; every super-round reads this, not the corpus
     // the ONE full pair aggregation (scan #1); incremental thereafter
     var pairs = bpePairCounts(words).localCheckpoint()
-    lastBpeScans = 1
     lastBpeSuperRounds = 0
     lastBpeFellBack = false
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()

@@ -2385,21 +2385,33 @@ class OperatorsSpec extends SparkSpec {
     val others = (1000L until 1040L).map(i =>
       (i, s"unique document number $i carrying words w${i * 7} w${i * 13} w${i * 31}"))
     val docs = (mega ++ others).toDF("doc_id", "text")
-    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lshInline = pairSet(Dedup.minhashLshPairsOf(docs))
-    val jacInline = pairSet(Dedup.jaccardPairsOf(docs, 0.5))
-    spark.conf.set(Dedup.MaxBucketConfKey, "64") // force the fallback
-    try {
-      val lshFb = pairSet(Dedup.minhashLshPairsOf(docs))
-      val jacFb = pairSet(Dedup.jaccardPairsOf(docs, 0.5))
-      assert(lshFb === lshInline)
-      assert(jacFb === jacInline)
-      // the family's complete 300-choose-2 pair set survived the switch
-      val famPairs = for (a <- 0L until 300L; b <- a + 1 to 299L) yield (a, b)
-      assert(famPairs.forall(lshFb.contains) && famPairs.forall(jacFb.contains))
-    } finally spark.conf.unset(Dedup.MaxBucketConfKey)
+    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
+      df.select("doc_a", "doc_b").collect().map(r => (r.get(0), r.get(1))).toSet
+    // the operators, on the inline path: the family's complete
+    // 300-choose-2 pair set comes out of both
+    val famPairs = for (a <- 0L until 300L; b <- a + 1 to 299L) yield (a, b)
+    val lsh = pairSet(Dedup.minhashLshPairsOf(docs))
+    val jac = pairSet(Dedup.jaccardPairsOf(docs, 0.5))
+    assert(famPairs.forall(lsh.contains) && famPairs.forall(jac.contains))
+    // the bucketed rows both callers pass, each with a 300-member
+    // family bucket and small background buckets: the LSH bands'
+    // scalar doc_id item under (band, k), and the jaccard prefix
+    // join's (doc_id, pos, n) struct item under hh. A cap of 64 sends
+    // the family buckets down the self-join fallback.
+    val bands = ((for (band <- 0 until 4; d <- 0L until 300L) yield (band, "fam", d)) ++
+      (1000L until 1040L).map(d => ((d % 2).toInt, s"k${d / 6}", d)))
+      .toDF("band", "k", "doc_id")
+    val prefixes = ((for (h <- 0L until 3L; d <- 0L until 300L) yield (h, d, h.toInt, 12)) ++
+      (1000L until 1040L).map(d => (d / 5, d, 0, 9)))
+      .toDF("hh", "doc_id", "pos", "n")
+      .select(col("hh"), struct(col("doc_id"), col("pos"), col("n")).as("it"))
+    Seq((bands, Seq("band", "k"), "doc_id"), (prefixes, Seq("hh"), "it")).foreach {
+      case (rows, keys, item) =>
+        val inline = pairSet(Dedup.boundedBucketPairs(rows, keys, item))
+        val fallback = pairSet(Dedup.boundedBucketPairs(rows, keys, item, maxBucket = 64))
+        assert(fallback === inline, s"item $item")
+        assert(inline.size >= 300 * 299 / 2, s"item $item")
+    }
   }
 
   test("tfidf_blocking_coverage: guard separates the Zipf-like and clone regimes") {
@@ -2412,7 +2424,7 @@ class OperatorsSpec extends SparkSpec {
     // shared term's df is way above 5%, each doc's only rare term is
     // its UNSHARED suffix (df = 1, can't key a pair). Coverage must
     // read 0 and the regime 'degenerate' — exactly the corpus where
-    // CosineRecallStress measured recall 0.003/0.000.
+    // the r11 recall audit measured recall 0.003/0.000 (SURVEY §6).
     val clones = (0L until 60L).map(i =>
       (i, s"the quick brown fox jumps over the lazy dog suffix$i"))
     val c = row(clones.toDF("doc_id", "text"))

@@ -24,6 +24,11 @@ import scala.jdk.CollectionConverters._
   *    `loadFuzzy(` in `operators/Query.scala`: every index query reads
   *    its relations through an `IndexStore.OpenIndex` (a per-query call
   *    opens a one-query handle), so a second read path there fails.
+  *  - `def main` / `extends App`: the engine is timed by `Bench`, its
+  *    plans audited by `Explain`, its results dumped by `Verify`, and
+  *    `Cli` is the command surface. A new entry point is a harness
+  *    that copies shipped code and drifts from it, so the set is
+  *    pinned.
   */
 class SourceLintSpec extends AnyFunSuite {
   import SourceLintSpec._
@@ -72,9 +77,31 @@ class SourceLintSpec extends AnyFunSuite {
     clean.foreach(src => assert(indexReads(src).isEmpty, src))
   }
 
+  test("lint: the entry points in src/main/scala are exactly Bench, Cli, Explain and Verify") {
+    val mains = mainSources.flatMap(f => entryPoints(read(f)))
+    assert(mains.sorted === EntryPoints, "an entry point was added or dropped: time the " +
+      "engine through Bench, audit plans through Explain")
+  }
+
+  test("lint: the entry-point detector names objects with a main, not comments or look-alikes") {
+    assert(entryPoints("object Foo {\n  def main(args: Array[String]): Unit = ()\n}") ===
+      Seq("Foo"))
+    assert(entryPoints("object Soak extends App {\n  run()\n}") === Seq("Soak"))
+    assert(entryPoints("object A {\n  def run() = 1\n}\n\nobject B {\n" +
+      "  private object Helper\n  def main(args: Array[String]): Unit = {\n  }\n}") ===
+      Seq("B"))
+    val clean = Seq(
+      "object Foo {\n  // def main(args: Array[String]) in a comment\n}",
+      "object Foo {\n  * `def main(args)` in a scaladoc\n}",
+      "object Foo {\n  def mainly(x: Int) = x\n  val main = 1\n}",
+      "object Foo extends AppLike {\n}",
+      "class Bar {\n  def run(): Unit = ()\n}")
+    clean.foreach(src => assert(entryPoints(src).isEmpty, src))
+  }
+
   test("lint: the conf-key detector reads quoted keys on code lines only") {
-    assert(confKeys("val K = \"spark.graft.maxBucket\"\nconf.get(\"spark.sql.x\")") ===
-      Seq("spark.graft.maxBucket"))
+    assert(confKeys("val K = \"spark.graft.example\"\nconf.get(\"spark.sql.x\")") ===
+      Seq("spark.graft.example"))
     assert(confKeys("// \"spark.graft.old\" in a comment\n  * `spark.graft.doc` in a scaladoc")
       .isEmpty)
   }
@@ -128,8 +155,10 @@ object SourceLintSpec {
   }
 
   /** The `spark.graft.*` conf keys the engine reads or sets. */
-  val Knobs: Set[String] = Set("spark.graft.parallelizeScans", "spark.graft.bpeRounds",
-    "spark.graft.maxBucket")
+  val Knobs: Set[String] = Set("spark.graft.parallelizeScans", "spark.graft.bpeRounds")
+
+  /** The objects in `src/main/scala` that define a `main`, sorted. */
+  val EntryPoints: Seq[String] = Seq("Bench", "Cli", "Explain", "Verify")
 
   /** The same pattern `tools/netlines.py` counts knobs with. */
   private val ConfKey = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
@@ -160,6 +189,25 @@ object SourceLintSpec {
     src.split("\n", -1).toSeq.zipWithIndex.collect {
       case (line, i) if !isComment(line) && IndexRead.findFirstIn(line).nonEmpty => i + 1
     }
+
+  private val ObjectDecl = raw"^(?:(?:private|final|case)\s+)*object\s+([A-Za-z_][A-Za-z0-9_]*)".r
+  private val MainDef = raw"\bdef\s+main\s*\(".r
+  private val AppObject = raw"\bobject\s+([A-Za-z_][A-Za-z0-9_]*)[^{\n]*\bextends\s+App\b".r
+
+  /** The objects of `src` that are entry points: each `def main(` on a
+    * code line names the nearest top-level `object` (declared at
+    * column 0) above it, and an `object … extends App` names itself.
+    * A textual check: a `main` in a nested object or a class is named
+    * after the top-level object above it.
+    */
+  def entryPoints(src: String): Seq[String] = {
+    var current = "<no object>"
+    src.split("\n", -1).toSeq.filterNot(isComment).flatMap { line =>
+      ObjectDecl.findFirstMatchIn(line).foreach(m => current = m.group(1))
+      AppObject.findFirstMatchIn(line).map(_.group(1)).toSeq ++
+        MainDef.findFirstIn(line).map(_ => current)
+    }
+  }
 
   private def isComment(line: String): Boolean = {
     val t = line.trim

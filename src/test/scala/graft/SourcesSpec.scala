@@ -120,9 +120,8 @@ class SourcesSpec extends SparkSpec {
     assert(got.nonEmpty)
 
     // the bucket equality must prune at planning time, not post-scan
-    val plan = IndexStore.lookup(spark, path, term, nBuckets = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"))
+    assert(Explain.prunes(IndexStore.lookup(spark, path, term, nBuckets = 8),
+      Explain.TermBucket))
 
     // the persisted save-time bucket count rejects ANY other value:
     // a LARGER count passes the directory-id bound but hashes terms
@@ -182,9 +181,8 @@ class SourcesSpec extends SparkSpec {
     assert(IndexStore.load(spark, path)
       .filter(col("doc_id").isin(before.head, before.last)).count() === 0)
     // planning-time bucket pruning survives the tombstone anti-join
-    val plan = IndexStore.lookup(spark, path, term, nBuckets = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"))
+    assert(Explain.prunes(IndexStore.lookup(spark, path, term, nBuckets = 8),
+      Explain.TermBucket))
     // compaction drops the rows for real and clears the tombstone dir
     // no explicit bucket count: compact must INHERIT the saved 8, not
     // re-bucket to the 64 default
@@ -209,9 +207,8 @@ class SourcesSpec extends SparkSpec {
       .select("term", "doc_id", "tf").orderBy("term", "doc_id").collect()
     assert(got.toSeq === want.toSeq && got.nonEmpty)
     // planning-time partition pruning on the bucket IN-list
-    val plan = IndexStore.lookupTerms(spark, path, terms, nBuckets = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"))
+    assert(Explain.prunes(IndexStore.lookupTerms(spark, path, terms, nBuckets = 8),
+      Explain.TermBucket))
   }
 
   test("index store: positions stored delta-gap encoded, decoded on read") {
@@ -464,11 +461,11 @@ class SourcesSpec extends SparkSpec {
       } finally oi.release()
     }
     // the plan is bucket-pruned and corpus-free
-    val plan = operators.Query.searchRankedIndex(
+    val ranked = operators.Query.searchRankedIndex(
       spark, path, "spark AND join", 20, nBuckets = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"))
-    assert(!plan.contains("documents"), "ranked serving must not scan the corpus")
+    assert(Explain.prunes(ranked, Explain.TermBucket))
+    assert(!ranked.queryExecution.executedPlan.toString.contains("documents"),
+      "ranked serving must not scan the corpus")
   }
 
   test("fielded query over saved index: lang:/source: leaves match the corpus path") {
@@ -609,8 +606,7 @@ class SourcesSpec extends SparkSpec {
       assert(got === want && got.nonEmpty, s"prepared ranked parity for '$q'")
     }
     // the held relation still bucket-prunes at planning time
-    val plan = IndexStore.lookupOn(oi, "spark").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"))
+    assert(Explain.prunes(IndexStore.lookupOn(oi, "spark"), Explain.TermBucket))
     // 6-shape serving-mix wiring (r14 fielded + fuzzy), per-query and
     // prepared: every shape measured against this store, every plan
     // pruned. With `_fuzzy` saved the fuzzy shape must prune too: a
@@ -719,8 +715,7 @@ class SourcesSpec extends SparkSpec {
     assert(de.count() ===
       docs.filter(col("lang") === "de").count())
     // the lang filter must prune at planning time, not post-scan
-    val plan = de.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("lang"))
+    assert(Explain.prunes(de, "lang"))
   }
 
   test("corpus store: compaction folds per-batch landing dirs into the canonical layout") {
@@ -742,8 +737,7 @@ class SourcesSpec extends SparkSpec {
       s"compaction did not reduce files: $filesBefore -> $filesAfter")
     // compacted layout keeps the planning-time lang pruning
     val de = sources.CorpusStore.loadLang(spark, s"$base/corpus", "de")
-    val plan = de.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("lang"))
+    assert(Explain.prunes(de, "lang"))
     assert(de.count() === docs.filter(col("lang") === "de").count())
   }
 
@@ -1131,10 +1125,7 @@ class SourcesSpec extends SparkSpec {
         operators.Query.searchIndexOn(oi, "spark AND \"key order\""),
         operators.Query.searchRankedIndexOn(oi, "spark OR join", k = 5)).foreach { df =>
       assert(metaScans(df).isEmpty, df.queryExecution.executedPlan.toString)
-      val postings = scans(df).filter(_.relation.partitionSchema.fieldNames.contains("term_bucket"))
-      assert(postings.nonEmpty && postings.forall(_.partitionFilters
-        .exists(_.references.exists(_.name == "term_bucket"))),
-        df.queryExecution.executedPlan.toString)
+      assert(Explain.prunes(df, Explain.TermBucket), df.queryExecution.executedPlan.toString)
     }
   }
 
@@ -1248,10 +1239,9 @@ class SourcesSpec extends SparkSpec {
       }
     // a title: leaf is the SAME bucket-pruned term fetch as a plain
     // term — field never costs pruning
-    val plan = operators.Query.searchIndex(spark, path, "title:spark", nBuckets = 4)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"),
-      s"fielded leaf fetch not bucket-pruned:\n$plan")
+    val titled = operators.Query.searchIndex(spark, path, "title:spark", nBuckets = 4)
+    assert(Explain.prunes(titled, Explain.TermBucket),
+      s"fielded leaf fetch not bucket-pruned:\n${titled.queryExecution.executedPlan}")
     // ranked serving over a fielded index scores BODY tf only: row
     // parity with a plain body-only index (incl. dl from the
     // manifest's body-only sum)

@@ -292,10 +292,8 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       assert(graft.sources.IndexStore.tombstoneBatchCount(spark, path) === 1)
       // planning-time bucket pruning survives the BATCH-KEYED
       // tombstone anti-join (the plain-append twin is SourcesSpec's)
-      val prunedPlan = graft.sources.IndexStore
-        .lookup(spark, path, "spark", nBuckets = 4)
-        .queryExecution.executedPlan.toString
-      assert(prunedPlan.contains("PartitionFilters"))
+      assert(Explain.prunes(graft.sources.IndexStore.lookup(spark, path, "spark", nBuckets = 4),
+        Explain.TermBucket))
       // a REPLAYED batch overwrites its own landing: same dir count,
       // same file count, same accumulated set
       def tombFiles(): Int = {
@@ -503,12 +501,13 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
         .map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(s2 === Map(100L -> 1L, 101L -> 1L, 102L -> 0L)) // old 100→0 row gone
       // bucket-partitioned layout: a bucket read prunes directories
-      val plan = spark.read.parquet(storePath).filter(col("bucket") === 0L)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters") && plan.contains("bucket"))
+      assert(Explain.prunes(spark.read.parquet(storePath).filter(col("bucket") === 0L),
+        "bucket"))
       // ...and the pruning survives the segment RESOLVER (the serve
       // path): the bucket predicate pushes through the last-writer-
-      // wins semi-join into each segment's partition filters
+      // wins semi-join into each segment's partition filters. Not
+      // Explain.prunes: the dead-key scan reads every bucket by
+      // design, since a re-embedded vector can move buckets
       val rPlan = Stream.loadEmbedStore(spark, storePath)
         .filter(col("bucket") === 0L)
         .queryExecution.executedPlan.toString
@@ -646,12 +645,10 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     // the store scan is LITERALLY partition-pruned to the probed
     // buckets at planning time (not left to runtime DPP, whose cost
     // heuristics can elide the pruning into a full store scan)
-    val probePlan = Stream.knnServeOn(oes,
-        queries.take(1).toDF("vec_id", "embedding"), k = 2)
-      .queryExecution.executedPlan.toString
-    assert(probePlan.split('\n').exists(l =>
-      l.contains("PartitionFilters: [") && l.contains("bucket#") &&
-        l.contains("=")), s"store scan not literally bucket-pruned:\n$probePlan")
+    val probe = Stream.knnServeOn(oes, queries.take(1).toDF("vec_id", "embedding"), k = 2)
+    val probePlan = probe.queryExecution.executedPlan.toString
+    assert(Explain.prunes(probe, "bucket") && !probePlan.contains("dynamicpruning"),
+      s"store scan not literally bucket-pruned:\n$probePlan")
     // snapshot semantics, the handle family's contract: a takedown
     // landed after open() is invisible through the held frames but
     // live on a re-open (and on the per-batch streaming path)
@@ -2116,11 +2113,9 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
     assert(quantFull === raw,
       "bucket-covering shortlist + exact rerank must equal raw serving")
     // the code scan is literally bucket-pruned like the raw scan
-    val plan = Stream.knnServeQuantized(oq,
-        queries.take(1).toDF("vec_id", "embedding"), k = 5)
-      .queryExecution.executedPlan.toString
-    assert(plan.split('\n').exists(l =>
-      l.contains("PartitionFilters: [") && l.contains("bucket#")),
+    val codes = Stream.knnServeQuantized(oq, queries.take(1).toDF("vec_id", "embedding"), k = 5)
+    val plan = codes.queryExecution.executedPlan.toString
+    assert(Explain.prunes(codes, "bucket") && !plan.contains("dynamicpruning"),
       s"code scan not literally bucket-pruned:\n$plan")
     // on-disk: codes must undercut the raw fp32 layout
     val fs = new org.apache.hadoop.fs.Path(storeP)
