@@ -50,7 +50,7 @@ object Serving {
   /** `langs` non-empty widens the 4-shape mix with the two r14
     * serving surfaces: `fielded` (`lang:<l> AND term` — `_meta` side
     * table must exist at `idxPath`) and `fuzzy` (`term~1` — served
-    * via the `_fuzzy` SymSpell probe when that table exists, else
+    * via the `_fuzzy` SymSpell probe when that table is current, else
     * the full-dictionary levenshtein scan; exempt from the pruning
     * counter because the scan fallback cannot bucket-prune by
     * design).
@@ -88,11 +88,11 @@ object Serving {
                else None
     def handle(meta: Boolean = false, fuzzy: Boolean = false) = held.getOrElse(
       sources.IndexStore.openOnce(spark, idxPath, nBuckets, meta = meta, fuzzy = fuzzy))
-    // with the `_fuzzy` SymSpell table present, the fuzzy shape's
+    // with a current `_fuzzy` SymSpell table, the fuzzy shape's
     // candidate-probe postings fetch must bucket-prune like any term
-    // lookup — only the table-less dictionary-scan fallback earns the
-    // pruning-counter exemption
-    val fuzzyScans = !sources.IndexStore.hasFuzzy(spark, idxPath)
+    // lookup — only the dictionary-scan fallback (no table, or one a
+    // later landing left behind) earns the pruning-counter exemption
+    val fuzzyScans = !sources.IndexStore.fuzzyCurrent(spark, idxPath)
     def mkQuery(i: Int): (String, () => DataFrame) = {
       val t1 = vocab(i % vocab.length)
       val t2 = vocab((i * 7 + 3) % vocab.length)

@@ -27,18 +27,16 @@ object CorpusStore {
       .partitionBy("lang")
       .parquet(path)
 
+  /** The corpus with takedowns anti-joined out at read time
+    * ([[SegmentedStore.Snapshot.tombstones]] — the same contract as
+    * IndexStore postings: deletion is live at the next read without
+    * rewriting a 100 TB layout, and [[foldTombstones]] purges for
+    * real). lang/source predicates still push through the anti-join's
+    * streamed side, so partition pruning is unaffected.
+    */
   def load(spark: SparkSession, path: String): DataFrame = {
-    val raw = ParquetFooters.read(spark, Seq(path))
-    // takedowns anti-join out at read time ([[Tombstones]] — the same
-    // contract as IndexStore postings: deletion is live at the next
-    // read without rewriting a 100 TB layout, and [[foldTombstones]]
-    // purges for real). lang/source predicates still push through the
-    // anti-join's streamed side, so partition pruning is unaffected.
-    Tombstones.setOf(spark, path) match {
-      case Some(t) if raw.columns.contains("doc_id") =>
-        raw.join(t, Seq("doc_id"), "left_anti")
-      case _ => raw
-    }
+    val snap = SegmentedStore.snapshot(spark, path, "doc_id")
+    SegmentedStore.live(snap.raw, snap.tombstones, "doc_id")
   }
 
   /** Partition-pruned single-language read. */

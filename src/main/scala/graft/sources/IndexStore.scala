@@ -53,8 +53,8 @@ object IndexStore {
     * path stays inside whole-stage codegen.
     *
     * Every layout written here carries its `_docs` manifest (see
-    * [[DocsManifest]]): plain roots, [[compact]]/[[merge]] outputs,
-    * segments and fold outputs alike.
+    * [[DocsManifest]]): plain roots, [[merge]] outputs, segments and
+    * fold outputs alike.
     */
   def save(index: DataFrame, path: String, nBuckets: Int = DefaultBuckets): Unit = {
     val encoded =
@@ -87,7 +87,7 @@ object IndexStore {
     * index only the body field counts (ranking scores body tf, and
     * title rows would overcount every titled doc), and a doc with no
     * body postings has a null dl. The ids are the layout's versions
-    * for the dead-key resolution ([[SegmentedStore.deadKeys]]); the
+    * for the dead-key resolution ([[SegmentedStore.Snapshot.deadKeys]]); the
     * lengths are BM25's dl, n and avgdl ([[OpenIndex.dl]]), kept with
     * the postings that name the document like Lucene's per-segment
     * norms.
@@ -174,7 +174,7 @@ object IndexStore {
     * operational form ([[Tombstones.append]]). Readers ([[load]],
     * [[merge]], and every query through an [[OpenIndex]] opened after
     * the call — the per-query calls open one each) anti-join the set
-    * out; [[compact]]/[[compactSegments]] fold it into a clean rewrite.
+    * out; [[compactSegments]] folds it into a clean rewrite.
     */
   def delete(spark: SparkSession, path: String, docIds: Seq[Long]): Unit =
     Tombstones.append(spark, path, docIds)
@@ -196,25 +196,6 @@ object IndexStore {
     */
   def tombstoneBatchCount(spark: SparkSession, path: String): Int =
     Tombstones.batchCount(spark, path)
-
-  /** Rewrite the index at `path` with tombstoned docs dropped for
-    * real, into `outPath` with no tombstone directory — the compaction
-    * that bounds how long the reader-side anti-join list grows. One
-    * full index pass; the bucket layout is INHERITED from the source
-    * index's persisted `_nbuckets` marker unless the caller overrides
-    * it (a fixed default would silently re-bucket an 8-bucket index
-    * to 64 and break every existing lookup's bucket count).
-    */
-  def compact(spark: SparkSession, path: String, outPath: String,
-              nBuckets: Option[Int] = None): Unit = {
-    save(load(spark, path).drop("term_bucket"), outPath,
-      nBuckets.orElse(buckets(spark, path)).getOrElse(DefaultBuckets))
-    if (hasMeta(spark, path)) carryMeta(spark, path, outPath, outPath)
-    // the fuzzy dictionary rebuilds from the compacted output (terms
-    // whose last postings folded away leave the dictionary here)
-    if (hasFuzzy(spark, path)) saveFuzzy(spark, outPath)
-    Tombstones.carryEpoch(spark, path, outPath)
-  }
 
   /** Rewrite the `_meta` table of the index at `fromPath` into
     * `toPath`, semi-joined to the docs surviving at `survivorsPath` —
@@ -376,18 +357,17 @@ object IndexStore {
     * Fails loudly when absent: a fielded query against an index with
     * no `_meta` has nothing correct to return.
     */
-  def loadMeta(spark: SparkSession, path: String): DataFrame = {
-    require(hasMeta(spark, path),
-      s"index at $path has no $MetaDir side table — fielded (lang:/" +
+  def loadMeta(spark: SparkSession, path: String): DataFrame =
+    metaOf(SegmentedStore.snapshot(spark, path, "doc_id"))
+
+  /** [[loadMeta]] against the tombstone keys of `snap`. */
+  private def metaOf(snap: SegmentedStore.Snapshot): DataFrame = {
+    require(hasMeta(snap.spark, snap.path),
+      s"index at ${snap.path} has no $MetaDir side table — fielded (lang:/" +
         "source:) queries need IndexStore.saveMeta(meta, path) run " +
         "beside the index build (compaction carries it forward)")
-    val raw = ParquetFooters.read(spark,
-      Seq(new org.apache.hadoop.fs.Path(path, MetaDir).toString))
-    Tombstones.setOf(spark, path) match {
-      case Some(t) if raw.columns.contains("doc_id") =>
-        raw.join(t, Seq("doc_id"), "left_anti")
-      case _ => raw
-    }
+    SegmentedStore.live(ParquetFooters.read(snap.spark,
+      Seq(new org.apache.hadoop.fs.Path(snap.path, MetaDir).toString)), snap.tombstones, "doc_id")
   }
 
   // ---- SymSpell deletion-neighborhood fuzzy dictionary -------------
@@ -408,9 +388,13 @@ object IndexStore {
   // levenshtein verify over the (tiny) candidate set. Dictionary-
   // sized × O(L²) rows, hash-partitioned and variant-sorted so the
   // IN probe prunes row groups; refreshed by compaction like the
-  // other side tables. A takedown can orphan a dictionary term until
-  // the next fold — harmless: its postings lookup anti-joins to
-  // empty, identical to the scan path's behavior.
+  // other side tables. The table is stamped with the store's data
+  // stamp ([[SegmentedStore.dataStamp]]): a segment landed or a fold
+  // run after the build makes it not current ([[fuzzyCurrent]]), and
+  // readers then fall back to the levenshtein scan, which returns the
+  // same rows. A takedown can orphan a dictionary term until the next
+  // fold — harmless: its postings lookup anti-joins to empty,
+  // identical to the scan path's behavior.
 
   private val FuzzyDir = "_fuzzy"
 
@@ -439,17 +423,29 @@ object IndexStore {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Whether the index at `path` carries a `_fuzzy` table built from
+    * its current data ([[SegmentedStore.sideCurrent]]) — the one
+    * question a handle ([[open]], [[openOnce]]) and the serving mix's
+    * pruning counter ask before probing it.
+    */
+  def fuzzyCurrent(spark: SparkSession, path: String): Boolean =
+    SegmentedStore.sideCurrent(spark, path, FuzzyDir)
+
   /** Build + land the `_fuzzy` table from the saved index's distinct
     * terms (one dictionary pass; the same crash-safe landing as
-    * [[saveMeta]]).
+    * [[saveMeta]]), stamped with the data it was built from.
     */
   def saveFuzzy(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
+    val stamp = SegmentedStore.dataStamp(spark, path)
     val table = load(spark, path).select("term").distinct().as[String]
       .flatMap(t => deleteVariants(t, FuzzyMaxEdits).map(v => (v, t)))
       .toDF("variant", "term")
       .repartition(col("variant")).sortWithinPartitions("variant")
-    publishSide(spark, path, FuzzyDir)(table.write.mode("overwrite").parquet(_))
+    publishSide(spark, path, FuzzyDir) { dir =>
+      table.write.mode("overwrite").parquet(dir)
+      SegmentedStore.stampSide(spark, dir, stamp)
+    }
   }
 
   /** The persisted fuzzy dictionary; fails loudly when absent. */
@@ -477,7 +473,7 @@ object IndexStore {
   /** Read an index back, read-latest: the raw relation (a delta-gap
     * `gaps` column decoded back to absolute `positions`, see [[save]])
     * anti-joined against the store's dead-key set
-    * ([[SegmentedStore.deadKeys]] over the segments' `_docs`
+    * ([[SegmentedStore.Snapshot]] over the segments' `_docs`
     * manifests), planned here and run with the query — every call
     * re-lists the store, so it sees every landing and takedown so far.
     * The decode is a narrow codegen'd map AFTER scan filters apply,
@@ -497,26 +493,31 @@ object IndexStore {
     * since.
     */
   private[graft] def loadListed(spark: SparkSession, path: String,
-                                l: SegmentedStore.Listing): DataFrame =
-    SegmentedStore.live(rawOf(spark, path, l),
-      SegmentedStore.deadKeys(spark, path, l, "doc_id")(manifestsOf(spark, path, l).get), "doc_id")
+                                l: SegmentedStore.Listing): DataFrame = {
+    val snap = snapshotAt(spark, path, l, hold = false)._1
+    snap.live(decoded(snap.raw))
+  }
 
-  /** The index relation at `path` as written, before version and
-    * takedown resolution ([[SegmentedStore.read]] of the segments of
-    * `l`), with `gaps` decoded to `positions`.
+  /** The index store's [[SegmentedStore.Snapshot]] over listing `l`,
+    * with its `_docs` manifests ([[manifestsOf]], read at most once)
+    * as both the row versions and the second value.
     */
-  private def rawOf(spark: SparkSession, path: String,
-                    l: SegmentedStore.Listing): DataFrame = {
-    val raw = SegmentedStore.read(spark, path, l)
+  private def snapshotAt(spark: SparkSession, path: String, l: SegmentedStore.Listing,
+                         hold: Boolean): (SegmentedStore.Snapshot, () => Option[DataFrame]) = {
+    lazy val docs = manifestsOf(spark, path, l)
+    (new SegmentedStore.Snapshot(spark, path, l, "doc_id", hold)(_ => docs.get), () => docs)
+  }
+
+  /** The index relation as written, with `gaps` decoded to `positions`. */
+  private def decoded(raw: DataFrame): DataFrame =
     if (!raw.columns.contains("gaps")) raw
     else raw.withColumn("positions", PostingsFns.deltaDecode(col("gaps"))).drop("gaps")
-  }
 
   /** The `_docs` manifests of the layouts of `l` as one relation: every
     * segment's (with its `seg` column, [[SegmentedStore.read]]), or a
     * plain root's own — None for a plain root written before roots
     * carried one. With two or more segments these are the versions the
-    * dead-key set resolves ([[SegmentedStore.deadKeys]]).
+    * dead-key set resolves ([[SegmentedStore.Snapshot.deadKeys]]).
     */
   private def manifestsOf(spark: SparkSession, path: String,
                           l: SegmentedStore.Listing): Option[DataFrame] =
@@ -573,21 +574,23 @@ object IndexStore {
     * a driver-side cost that grows with the store (the measured ~0.3s
     * p50 floor on the 500k-doc store, r14).
     *
-    * What a serving handle ([[open]]) resolves ONCE:
+    * The handle is a [[SegmentedStore.Snapshot]] of the store (one
+    * listing; the raw relation; the dead-key set over the `_docs`
+    * manifests and the tombstones; the holding and [[release]]) plus
+    * the index's own pieces. What a serving handle ([[open]]) resolves
+    * ONCE:
     *  - at [[open]], on the driver and with no job: the store
-    *    [[fingerprint]], then one
-    *    [[SegmentedStore.Listing]] that fixes the segment set the
-    *    `raw` relation (its file listing), the `_docs` manifests
-    *    ([[docs]]) and the plan of the dead-key set
-    *    ([[SegmentedStore.deadKeys]], over those manifests and the
-    *    tombstone files listed then) read, then `_meta` and `_fuzzy` —
-    *    every schema from a footer read on the driver
-    *    ([[ParquetFooters]]);
-    *  - at the first query: the dead-key set, run and held
-    *    ([[org.apache.spark.sql.GraftBridge.persisted]]) — the rows
-    *    every later query anti-joins, so no query re-reads a `_docs`
-    *    manifest or a tombstone file. A store with at most one segment
-    *    and no tombstones has no set to hold and no join in [[idx]];
+    *    [[fingerprint]], then the snapshot's listing, which fixes the
+    *    segment set the `raw` relation (its file listing), the `_docs`
+    *    manifests ([[docs]]) and the plan of the dead-key set read,
+    *    then `_meta` (anti-joined against the snapshot's tombstone
+    *    keys) and a current `_fuzzy` ([[fuzzyCurrent]]) — every schema
+    *    from a footer read on the driver ([[ParquetFooters]]);
+    *  - at the first query: the dead-key set, run and held by the
+    *    snapshot — the rows every later query anti-joins, so no query
+    *    re-reads a `_docs` manifest or a tombstone file. A store with
+    *    at most one segment and no tombstones has no set to hold and no
+    *    join in [[idx]];
     *  - at the first ranked query: the live document lengths
     *    ([[dl]]), held the same way, and the corpus scalars n and
     *    avgdl ([[corpus]]), collected once.
@@ -611,28 +614,15 @@ object IndexStore {
     * Ranked scores are exact at the pinned snapshot: dl, n and avgdl
     * resolve through the same dead-key set as the postings.
     */
-  final case class OpenIndex(spark: SparkSession, path: String, nBuckets: Int,
-                             raw: DataFrame, deadKeys: Option[DataFrame],
-                             manifests: () => Option[DataFrame],
-                             meta: Option[DataFrame],
-                             fuzzy: Option[DataFrame] = None,
-                             fp: String = "", hold: Boolean = false) {
-    private val heldRdds =
-      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+  final class OpenIndex private[sources] (private[graft] val snapshot: SegmentedStore.Snapshot,
+                                          val nBuckets: Int, manifests: () => Option[DataFrame],
+                                          val meta: Option[DataFrame], val fuzzy: Option[DataFrame],
+                                          val fp: String) {
+    def spark: SparkSession = snapshot.spark
+    def path: String = snapshot.path
 
-    /** `df`, held with its lineage when the handle holds its rows
-      * ([[open]], [[org.apache.spark.sql.GraftBridge.persisted]]); a
-      * one-query handle ([[openOnce]]) plans everything inline.
-      */
-    private def held(df: DataFrame): DataFrame =
-      if (!hold) df
-      else {
-        val (rows, rdd) = org.apache.spark.sql.GraftBridge.persisted(df)
-        heldRdds.add(rdd)
-        rows
-      }
-
-    private lazy val dead: Option[DataFrame] = deadKeys.map(held)
+    /** The postings as written, `gaps` decoded to `positions`. */
+    val raw: DataFrame = decoded(snapshot.raw)
 
     /** The layouts' `_docs` manifests ([[manifestsOf]]). */
     lazy val docs: Option[DataFrame] = manifests()
@@ -645,7 +635,7 @@ object IndexStore {
     /** The resolved index relation: [[raw]] anti-joined against the
       * dead-key set.
       */
-    lazy val idx: DataFrame = SegmentedStore.live(raw, dead, "doc_id")
+    lazy val idx: DataFrame = snapshot.live(raw)
 
     /** The indexed doc set NOT ranges over, keyed by [[id]]. */
     lazy val universe: DataFrame = idx.select(col(id)).distinct()
@@ -659,7 +649,7 @@ object IndexStore {
       require(docs.exists(_.columns.contains("dl")),
         s"index at $path has no document lengths in its _docs manifests — " +
           "run IndexStore.saveStats(spark, path) once to upgrade the store")
-      held(SegmentedStore.live(docs.get, dead, "doc_id"))
+      snapshot.held(snapshot.live(docs.get))
     }
 
     /** The live corpus scalars `(n, avgdl)` over [[dl]]: n counts the
@@ -676,11 +666,8 @@ object IndexStore {
       (n.toDouble, if (n == 0L) 0.0 else total / n)
     }
 
-    /** Drop the rows this handle holds (a no-op for what it never
-      * materialized). The handle stays usable: later queries recompute
-      * from lineage.
-      */
-    def release(): Unit = heldRdds.forEach(rdd => rdd.unpersist())
+    /** Drop the rows this handle holds ([[SegmentedStore.Snapshot.release]]). */
+    def release(): Unit = snapshot.release()
   }
 
   /** Resolve a serving snapshot (see [[OpenIndex]] for what it holds):
@@ -694,7 +681,7 @@ object IndexStore {
     */
   def open(spark: SparkSession, path: String,
            nBuckets: Int = DefaultBuckets): OpenIndex =
-    snapshot(spark, path, nBuckets, meta = true, fuzzy = true, hold = true)
+    handle(spark, path, nBuckets, meta = true, fuzzy = true, hold = true)
 
   /** A handle for ONE query: every per-query call is its `*On` twin
     * over one. It is read-latest like [[load]] — its [[OpenIndex.idx]]
@@ -705,27 +692,28 @@ object IndexStore {
     */
   private[graft] def openOnce(spark: SparkSession, path: String, nBuckets: Int,
                               meta: Boolean = false, fuzzy: Boolean = false): OpenIndex =
-    snapshot(spark, path, nBuckets, meta, fuzzy, hold = false)
+    handle(spark, path, nBuckets, meta, fuzzy, hold = false)
 
-  private def snapshot(spark: SparkSession, path: String, nBuckets: Int,
-                       meta: Boolean, fuzzy: Boolean, hold: Boolean): OpenIndex = {
+  private def handle(spark: SparkSession, path: String, nBuckets: Int,
+                     meta: Boolean, fuzzy: Boolean, hold: Boolean): OpenIndex = {
     requireBucketsMatch(spark, path, nBuckets)
     // the fingerprint BEFORE the listing: a landing between the two
     // leaves the handle [[stale]] (so it is re-opened), never missing
     // a landing its fingerprint claims to cover
     val fp = if (hold) fingerprint(spark, path) else ""
-    val l = SegmentedStore.listing(spark, path)
+    val (snap, docs) = snapshotAt(spark, path, SegmentedStore.listing(spark, path), hold)
     // a serving handle reads the manifests' footers now, like every
     // other schema; a one-query handle only when its plan needs them (a
     // dead-key set over two or more segments, a ranked query's dl), as
-    // `load` does
-    lazy val docs = manifestsOf(spark, path, l)
-    if (hold) docs
-    OpenIndex(spark, path, nBuckets, rawOf(spark, path, l),
-      SegmentedStore.deadKeys(spark, path, l, "doc_id")(docs.get), () => docs,
-      if (meta && hasMeta(spark, path)) Some(loadMeta(spark, path)) else None,
-      if (fuzzy && hasFuzzy(spark, path)) Some(loadFuzzy(spark, path)) else None,
-      fp, hold)
+    // `load` does. Both plan the dead-key set here.
+    if (hold) docs()
+    snap.deadKeys
+    new OpenIndex(snap, nBuckets, docs,
+      if (meta && hasMeta(spark, path)) Some(metaOf(snap)) else None,
+      // after the listing: a segment landed since the table was built
+      // leaves it not current, and the fuzzy leaf scans
+      if (fuzzy && fuzzyCurrent(spark, path)) Some(loadFuzzy(spark, path)) else None,
+      fp)
   }
 
   /** Single-term lookup against an [[OpenIndex]]: the `term_bucket`
@@ -831,7 +819,7 @@ object IndexStore {
   // whole-store rewrite is O(|store|) whatever the delta. Documents
   // resolve last-writer-wins through each segment's tiny `_docs`
   // manifest — doc-count-sized, so a bucket-pruned lookup never scans
-  // other buckets to resolve versions ([[SegmentedStore.deadKeys]]). Read
+  // other buckets to resolve versions ([[SegmentedStore.Snapshot]]). Read
   // amplification is |segments| per bucket, which compaction bounds.
 
   /** Segment ids present at `path` (empty for a plain single layout). */

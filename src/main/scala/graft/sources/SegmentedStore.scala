@@ -25,9 +25,11 @@ import org.apache.spark.sql.types.StructType
   *    `_tombstones`, ...), marker files, and in-flight temp dirs. A
   *    store written whole (never segmented) has its data at the root
   *    instead, and [[land]] refuses to mix the two.
-  *  - '''Listing.''' A reader takes ONE root listing ([[Listing]]) and
-  *    derives everything it reads from it, so a segment renamed in
-  *    while it resolves is in every side of the read or in none.
+  *  - '''Snapshot.''' A reader takes ONE root listing ([[Listing]]) and
+  *    derives everything it reads from it ([[Snapshot]]: the raw
+  *    relation, the dead-key set, the tombstone keys), so a segment
+  *    renamed in while it resolves is in every side of the read or in
+  *    none.
   *  - '''Landing.''' [[land]] builds the segment in a dot-prefixed
   *    temp dir (`.seg-tmp-<id>`, swept if a dead build left it) and
   *    publishes it with ONE atomic rename: a visible segment is
@@ -40,8 +42,12 @@ import org.apache.spark.sql.types.StructType
   *    and [[priorBatches]] reads what the earlier batches landed.
   *  - '''Resolution.''' Keys resolve last-writer-wins across
   *    segments: a row `(key, seg)` is dead iff a newer segment holds
-  *    `key` or `key` is tombstoned ([[deadKeys]]); readers anti-join
-  *    the dead set ([[live]]).
+  *    `key` or `key` is tombstoned ([[Snapshot.deadKeys]]); readers
+  *    anti-join the dead set ([[live]]).
+  *  - '''Provenance.''' A side table derived from the data (`_fuzzy`,
+  *    `_sq8`) is stamped with the [[dataStamp]] it was built from;
+  *    readers treat a table whose stamp is not current as absent
+  *    ([[sideCurrent]]).
   *  - '''Folding.''' [[fold]] rewrites the resolved content as
   *    `seg=<max>` of a fresh root (`<root>.compacting`) — or as a
   *    plain root for a never-segmented store — with the horizon
@@ -99,40 +105,92 @@ private[graft] object SegmentedStore {
   /** The segments of `l` as one relation (a `sub` path such as
     * `/_docs` reads that entry of each segment instead). With the root
     * as basePath each row carries its segment as a `seg` column, typed
-    * long like [[deadKeys]]' so anti-join keys compare without a cast.
-    * A never-segmented store reads its root. The schema comes from one
-    * footer read on the driver ([[ParquetFooters]]), so building the
-    * relation runs no job.
+    * long so anti-join keys compare without a cast. A never-segmented
+    * store reads its root. The schema comes from one footer read on
+    * the driver ([[ParquetFooters]]), so building the relation runs no
+    * job.
     */
   def read(spark: SparkSession, path: String, l: Listing, sub: String = ""): DataFrame =
     if (l.segs.isEmpty) ParquetFooters.read(spark, Seq(path))
     else ParquetFooters.read(spark, l.segs.map(dir(path, _) + sub), options = Map("basePath" -> path))
       .withColumn("seg", col("seg").cast("long"))
 
-  /** The DEAD-KEY set of the store at `path` — the keys of every row a
-    * reader must drop, planned (not computed) from the listing `l`:
+  /** [[read]] over a fresh listing of the store at `path`. */
+  def read(spark: SparkSession, path: String): DataFrame = read(spark, path, listing(spark, path))
+
+  /** ONE pinned read of the store at `path`, keyed by column `key`:
+    * every relation below derives from the one [[listing]], so a
+    * landing after it is in no side of the read.
     *
-    *  - at most one segment: the tombstoned keys, keyed `key` (None
-    *    without tombstones — the reader then carries no join);
-    *  - two or more segments: the `(key, seg)` pairs a NEWER segment
-    *    supersedes, from ONE aggregation over `versions` (the `(key,
-    *    seg)` pair of every row version the segments of `l` hold).
-    *    Tombstoned keys enter that union at seg = Long.MaxValue, so
-    *    every real version of a tombstoned key is superseded too and
-    *    the one aggregation yields both rules.
+    *  - [[raw]]: the segments as written ([[read]]), no job;
+    *  - [[deadKeys]]: the keys of every row a reader must drop, planned
+    *    (not computed). At most one segment: the tombstoned keys (None
+    *    without tombstones, and the reader carries no join). Two or
+    *    more: the `(key, seg)` pairs a NEWER segment supersedes, from
+    *    ONE aggregation over `versions` (the `(key, seg)` pair of every
+    *    row version the segments hold); tombstoned keys enter that
+    *    union at seg = Long.MaxValue, so the one aggregation yields
+    *    both rules;
+    *  - [[tombstones]]: the distinct tombstoned keys, for a side table
+    *    keyed by `key` that has no versions of its own;
+    *  - [[live]]: a relation anti-joined against the dead-key set.
+    *
+    * A HELD snapshot (`hold`, a serving handle) runs the dead-key set
+    * once, at its first use, and keeps the rows with their lineage
+    * ([[org.apache.spark.sql.GraftBridge.persisted]]), so later reads
+    * anti-join the held rows instead of re-reading versions and
+    * tombstone files; [[release]] drops them. A one-query snapshot
+    * plans everything inline.
     */
-  def deadKeys(spark: SparkSession, path: String, l: Listing, key: String)
-              (versions: => DataFrame): Option[DataFrame] = {
-    val tombs = if (l.tombstoned) Tombstones.keysOf(spark, path, key) else None
-    if (l.segs.size < 2) tombs
-    else Some((versions.select(col(key), col("seg")) +:
-        tombs.toSeq.map(_.select(col(key), lit(Long.MaxValue).as("seg"))))
-      .reduce(_.unionByName(_))
-      .withColumn("newest", max(col("seg")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(key)))
-      .filter(col("seg") < col("newest"))
-      .select(key, "seg"))
+  final class Snapshot(val spark: SparkSession, val path: String, val listing: Listing,
+                       key: String, hold: Boolean)(versions: Snapshot => DataFrame) {
+    lazy val raw: DataFrame = read(spark, path, listing)
+
+    private def tombstoneKeys: Option[DataFrame] =
+      if (listing.tombstoned) Tombstones.keysOf(spark, path, key) else None
+
+    lazy val deadKeys: Option[DataFrame] =
+      if (listing.segs.size < 2) tombstoneKeys
+      else Some((versions(this).select(col(key), col("seg")) +:
+          tombstoneKeys.toSeq.map(_.select(col(key), lit(Long.MaxValue).as("seg"))))
+        .reduce(_.unionByName(_))
+        .withColumn("newest", max(col("seg")).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(key)))
+        .filter(col("seg") < col("newest"))
+        .select(key, "seg"))
+
+    lazy val tombstones: Option[DataFrame] = tombstoneKeys.map(_.distinct())
+
+    private val heldRdds =
+      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+
+    /** `df`, held with its lineage on a held snapshot; as is otherwise. */
+    def held(df: DataFrame): DataFrame =
+      if (!hold) df
+      else {
+        val (rows, rdd) = org.apache.spark.sql.GraftBridge.persisted(df)
+        heldRdds.add(rdd)
+        rows
+      }
+
+    private lazy val dead: Option[DataFrame] = deadKeys.map(held)
+
+    /** `df` (by default [[raw]]) as readers see it ([[SegmentedStore.live]]
+      * against the dead-key set).
+      */
+    def live(df: DataFrame = raw): DataFrame = SegmentedStore.live(df, dead, key)
+
+    /** Drop the rows this snapshot holds (a no-op for what it never
+      * materialized). It stays usable: later reads recompute from lineage.
+      */
+    def release(): Unit = heldRdds.forEach(rdd => rdd.unpersist())
   }
+
+  /** A [[Snapshot]] over a fresh listing whose row versions are its own
+    * raw relation (the `(key, seg)` of every stored row).
+    */
+  def snapshot(spark: SparkSession, path: String, key: String, hold: Boolean = false): Snapshot =
+    new Snapshot(spark, path, listing(spark, path), key, hold)(_.raw)
 
   /** The rows of `raw` readers see: `raw` anti-joined on the dead-key
     * set's columns, then the `seg` column dropped (output columns:
@@ -148,6 +206,51 @@ private[graft] object SegmentedStore {
     }
     if (!raw.columns.contains("seg")) kept
     else kept.select((key +: raw.columns.filter(c => c != key && c != "seg")).map(col): _*)
+  }
+
+  // ---- provenance -----------------------------------------------------
+
+  private val ProvenanceFile = "_provenance"
+
+  /** The store's DATA STAMP: the sorted relative names of its visible
+    * data files at every depth ([[dataFiles]]: side tables, tombstones,
+    * markers and temp dirs excluded). A landing adds a segment's files
+    * and a fold rewrites them under fresh part-file names, so both
+    * change it, a one-segment fold that only purges tombstones too; a
+    * takedown lands under `_tombstones` and does not. One recursive
+    * driver-side listing, no job. "absent" for a missing store.
+    */
+  def dataStamp(spark: SparkSession, path: String): String = {
+    val (fs, p) = fsOf(spark, path)
+    if (!fs.exists(p)) "absent"
+    else {
+      val root = fs.makeQualified(p).toUri.getPath
+      dataFiles(fs, p).map(_.getPath.toUri.getPath.stripPrefix(root)).toSeq.sorted.mkString(",")
+    }
+  }
+
+  /** Stamp the side table being built in `dir` with `stamp`, the
+    * [[dataStamp]] taken BEFORE its build read the store: a landing
+    * during the build leaves the table stale, never current with
+    * rows it lacks.
+    */
+  def stampSide(spark: SparkSession, dir: String, stamp: String): Unit = {
+    val (fs, p) = fsOf(spark, dir)
+    val out = fs.create(new Path(p, ProvenanceFile), true)
+    try out.write(stamp.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Whether side table `name` of the store at `path` exists and its
+    * stamp is the store's current [[dataStamp]]. Readers treat a table
+    * that is not current as absent. Jobless (listings and one file read).
+    */
+  def sideCurrent(spark: SparkSession, path: String, name: String): Boolean = {
+    val (fs, p) = fsOf(spark, s"$path/$name/$ProvenanceFile")
+    fs.exists(p) && {
+      val in = fs.open(p)
+      val stamped = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      stamped == dataStamp(spark, path)
+    }
   }
 
   // ---- applied horizon ------------------------------------------------

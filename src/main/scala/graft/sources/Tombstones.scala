@@ -23,11 +23,11 @@ import org.apache.spark.sql.functions._
   *    outstanding landings — overwriting an earlier batch's dir would
   *    silently un-delete its takedowns. An id EQUAL to the horizon is
   *    the legitimate replay of the last uncommitted batch.
-  *  - [[setOf]] — the accumulated distinct key set readers anti-join
-  *    out ([[keysOf]] is the same read without the distinct, for a
-  *    reader that aggregates the keys itself); a file-less tree
-  *    (crash between mkdir and file commit) reads as None instead of
-  *    bricking every load with a schema-inference error.
+  *  - [[keysOf]] — every landed key, read only through a store's
+  *    [[SegmentedStore.Snapshot]] (its dead-key set and its distinct
+  *    tombstone keys); a file-less tree (crash between mkdir and file
+  *    commit) reads as None instead of bricking every load with a
+  *    schema-inference error.
   *
   *  Folding tombstones away for real is [[SegmentedStore.fold]]: the
   *  rewrite reads through the store's (anti-joined) reader and the
@@ -140,7 +140,7 @@ object Tombstones {
   }
 
   /** Copy the epoch into the root of a rewrite at another path
-    * (`compact(in, out)`): the epoch is the one takedown artifact that
+    * ([[CorpusStore.compact]]): the epoch is the one takedown artifact that
     * SURVIVES the purge, by design. An in-place [[SegmentedStore.fold]]
     * carries it itself.
     */
@@ -195,19 +195,11 @@ object Tombstones {
     true
   }
 
-  /** The store's accumulated tombstone set (distinct keys across all
-    * landings); None when nothing was ever deleted — or when the tree
-    * holds no data file yet (crash leftover).
-    */
-  def setOf(spark: SparkSession, path: String,
-            key: String = "doc_id"): Option[DataFrame] =
-    keysOf(spark, path, key).map(_.distinct())
-
-  /** Every landed tombstone key, duplicates kept — [[setOf]] without
-    * its distinct, for readers that fold the keys into an aggregation
-    * of their own ([[IndexStore]]'s dead-key set). The recursive read
-    * skips partition inference so [[append]] files at the dir root
-    * and [[landBatch]] `src_batch=` subdirs mix freely.
+  /** Every landed tombstone key, duplicates kept; None when nothing
+    * was ever deleted, or when the tree holds no data file yet (crash
+    * leftover). The recursive read skips partition inference so
+    * [[append]] files at the dir root and [[landBatch]] `src_batch=`
+    * subdirs mix freely.
     */
   private[sources] def keysOf(spark: SparkSession, path: String,
                               key: String = "doc_id"): Option[DataFrame] =

@@ -480,22 +480,19 @@ object Stream {
     }
 
   /** Read an [[embedIndexMaintenance]] store with vector-granular
-    * last-writer-wins resolution ([[SegmentedStore.deadKeys]]): a
-    * vec_id's rows from any segment older than its newest, and every
-    * row of a taken-down vec_id, anti-join out. The versions are one
-    * column-pruned `(vec_id, seg)` projection of the store — ids are
-    * ~100× narrower than the embedding payload — and a store with at
-    * most one segment resolves takedowns only. Bucket predicates
-    * still prune each segment's `bucket=` dirs and push through the
-    * anti-join's streamed side. The read is PINNED to one root
-    * listing: a segment landed after it is in no side of this read.
+    * last-writer-wins resolution ([[SegmentedStore.Snapshot]], keyed
+    * `vec_id`): a vec_id's rows from any segment older than its newest,
+    * and every row of a taken-down vec_id, anti-join out. The versions
+    * are one column-pruned `(vec_id, seg)` projection of the store —
+    * ids are ~100× narrower than the embedding payload — and a store
+    * with at most one segment resolves takedowns only. Bucket
+    * predicates still prune each segment's `bucket=` dirs and push
+    * through the anti-join's streamed side. The read is PINNED to one
+    * root listing: a segment landed after it is in no side of this
+    * read.
     */
-  def loadEmbedStore(spark: SparkSession, storePath: String): DataFrame = {
-    val l = SegmentedStore.listing(spark, storePath)
-    val raw = SegmentedStore.read(spark, storePath, l)
-    SegmentedStore.live(raw,
-      SegmentedStore.deadKeys(spark, storePath, l, "vec_id")(raw), "vec_id")
-  }
+  def loadEmbedStore(spark: SparkSession, storePath: String): DataFrame =
+    SegmentedStore.snapshot(spark, storePath, "vec_id").live()
 
   /** Fold every segment of the embed store into one, bucket-partitioned
     * ([[SegmentedStore.fold]]) — tombstoned vectors leave disk (the
@@ -511,9 +508,16 @@ object Stream {
     * of the saved assignment store (the `bucket` equality prunes the
     * partitioned store's directories at planning time, exactly like a
     * term lookup on the IndexStore), exact-cosine top-k re-ranked, and
-    * landed per batch (idempotent replay, like [[qualityGate]]). At
-    * 100 TB the per-batch read is |buckets hit| / |buckets| of the
-    * store, never a full scan.
+    * landed per batch (idempotent replay, like [[qualityGate]]).
+    *
+    * Each batch is [[knnServeOn]] over a fresh one-query handle, so it
+    * reads the latest store. What a batch reads of the store: the
+    * |buckets hit| / |buckets| it probes, plus, to resolve versions,
+    * the tombstone files on a store with tombstones and one scan of
+    * every bucket's `vec_id` on a store with two or more segments (a
+    * re-embedded vector can move buckets). A held handle
+    * ([[openEmbedStore]]) pays that resolution once, at its first
+    * query; later queries read only the buckets they hit.
     *
     * Concurrent serve + maintain: a segment LANDING is one atomic
     * rename (no window at all); only [[compactEmbedStore]]'s
@@ -525,13 +529,12 @@ object Stream {
     * filesystem). Deployments pairing both loops accept that retry
     * or point serving at a snapshot the maintainer publishes by
     * versioned directory + pointer file; single-writer single-reader
-    * sequential use (the spec's shape) never observes the gap. Each
-    * batch is [[knnServeOn]] over a fresh [[openEmbedStore]].
+    * sequential use (the spec's shape) never observes the gap.
     */
   def knnServe(queries: DataFrame, centroidPath: String, storePath: String,
                outPath: String, k: Int = 5): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     batchSink(queries) { (batch, batchId) =>
-      knnServeOn(openEmbedStore(batch.sparkSession, storePath, centroidPath), batch, k)
+      knnServeOn(embedHandle(batch.sparkSession, storePath, centroidPath, hold = false), batch, k)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
     }
 
@@ -589,22 +592,41 @@ object Stream {
   }
 
   /** A pinned DENSE serving session — the embed-store analogue of
-    * [[graft.sources.IndexStore.OpenIndex]] (r14's prepared sparse
-    * sessions, applied to the ANN path): one segment-resolved,
-    * tombstone-anti-joined store read ([[loadEmbedStore]]) and one
-    * centroid read held for the session, so each query pays only its
-    * own bucket-pruned probe instead of re-listing the store and
-    * re-reading centroids. Snapshot semantics are the handle family's:
-    * takedowns or segments landed after [[openEmbedStore]] need a
-    * re-open; the streaming [[knnServe]] loop stays read-latest
-    * per batch.
+    * [[graft.sources.IndexStore.OpenIndex]], on the same
+    * [[SegmentedStore.Snapshot]] (keyed `vec_id`, its row versions the
+    * store's own `(vec_id, seg)` pairs): one listing, the resolved
+    * store read ([[store]]) and one centroid read. A held handle
+    * ([[openEmbedStore]]) runs the dead-key set at its first query and
+    * holds it, so each later query pays only its own bucket-pruned
+    * probe instead of re-listing the store, re-reading centroids and
+    * re-resolving versions over every bucket. [[release]] drops the
+    * held rows. Snapshot semantics are the handle family's: takedowns
+    * or segments landed after [[openEmbedStore]] need a re-open; the
+    * streaming [[knnServe]] and [[hybridServe]] loops open a one-query
+    * handle per batch and stay read-latest.
     */
-  final case class OpenEmbedStore(store: DataFrame, cent: DataFrame,
-                                  sq8: Option[(DataFrame, DataFrame)] = None)
+  final case class OpenEmbedStore private[graft] (private[graft] snapshot: SegmentedStore.Snapshot,
+                                                  cent: DataFrame,
+                                                  sq8: Option[(DataFrame, DataFrame)] = None) {
+    /** The store as readers see it ([[SegmentedStore.Snapshot.live]]). */
+    lazy val store: DataFrame = snapshot.live()
 
+    /** Drop the rows this handle holds. */
+    def release(): Unit = snapshot.release()
+  }
+
+  /** A held [[OpenEmbedStore]]. */
   def openEmbedStore(spark: SparkSession, storePath: String,
                      centroidPath: String): OpenEmbedStore =
-    OpenEmbedStore(loadEmbedStore(spark, storePath),
+    embedHandle(spark, storePath, centroidPath, hold = true)
+
+  /** An [[OpenEmbedStore]] that holds its dead-key set (`hold`, a
+    * serving handle) or plans everything inline (a one-query handle,
+    * as each [[knnServe]]/[[hybridServe]] batch opens).
+    */
+  private[graft] def embedHandle(spark: SparkSession, storePath: String, centroidPath: String,
+                                 hold: Boolean): OpenEmbedStore =
+    OpenEmbedStore(SegmentedStore.snapshot(spark, storePath, "vec_id", hold),
       spark.read.parquet(centroidPath))
 
   /** Per-request ANN top-`k` against a pinned [[OpenEmbedStore]] —
@@ -634,40 +656,18 @@ object Stream {
 
   private val Sq8Dir = "_sq8"
 
-  /** Recursive file-name fingerprint of the store's DATA (underscore
-    * and dot entries — `_sq8`, `_tombstones`, markers, temp dirs —
-    * excluded at every depth): the provenance key the quantized
-    * layout stamps. Segments landing or folding flip it; takedowns
-    * do NOT (the codes reader anti-joins tombstones live, so a
-    * takedown needs no requantize).
-    */
-  private def embedDataFingerprint(spark: SparkSession,
-                                   storePath: String): String = {
-    val base = new org.apache.hadoop.fs.Path(storePath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return "absent"
-    val baseStr = base.toUri.getPath
-    val names = scala.collection.mutable.ArrayBuffer[String]()
-    val it = fs.listFiles(base, true)
-    while (it.hasNext) {
-      val rel = it.next().getPath.toUri.getPath.stripPrefix(baseStr)
-      if (!rel.split("/").exists(s => s.startsWith("_") || s.startsWith(".")))
-        names += rel
-    }
-    names.sorted.mkString(",")
-  }
-
   /** Build (or refresh) the `_sq8` quantized serving layout from the
     * store's resolved content: per-dimension (mn, mx) levels (one
     * tiny agg) and a bucket-partitioned codes table (vec_id, nm of
     * the DEQUANTIZED vector, 1-byte-per-dim code). One store pass at
     * deploy time for dense serving. Landed crash-safe
-    * ([[StoreSwap.publish]]) and stamped with the store's data
-    * fingerprint, so a later segment landing/fold makes
-    * [[openEmbedStoreQuantized]] fail loudly instead of silently
+    * ([[StoreSwap.publish]]) and stamped with the store's data stamp
+    * ([[SegmentedStore.dataStamp]]), so a later segment landing/fold
+    * makes [[openEmbedStoreQuantized]] fail loudly instead of silently
     * missing the new vectors.
     */
   def quantizeEmbedStore(spark: SparkSession, storePath: String): Unit = {
+    val stamp = SegmentedStore.dataStamp(spark, storePath)
     val resolved = loadEmbedStore(spark, storePath)
     val dest = new org.apache.hadoop.fs.Path(storePath, Sq8Dir)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -691,32 +691,23 @@ object Stream {
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$dir/codes")
-      val prov = fs.create(new org.apache.hadoop.fs.Path(dir, "_provenance"), true)
-      try prov.write(embedDataFingerprint(spark, storePath).getBytes("UTF-8"))
-      finally prov.close()
+      SegmentedStore.stampSide(spark, dir, stamp)
     }
   }
 
   /** Whether the `_sq8` layout exists AND still matches the store
     * data it was built from. Jobless (one listing + one file read).
     */
-  def embedQuantFresh(spark: SparkSession, storePath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(storePath, Sq8Dir), "_provenance")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    val in = fs.open(p)
-    val stamped = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    stamped == embedDataFingerprint(spark, storePath)
-  }
+  def embedQuantFresh(spark: SparkSession, storePath: String): Boolean =
+    SegmentedStore.sideCurrent(spark, storePath, Sq8Dir)
 
   /** [[openEmbedStore]] plus the pinned `_sq8` frames for
     * [[knnServeQuantized]]. Fails loudly when the quantized layout is
     * absent or STALE (segments landed/folded after the quantize) —
     * serving a code table that silently misses vectors is the failure
     * mode the provenance stamp exists to prevent. Takedowns do not
-    * stale the layout: codes anti-join the live tombstone set here,
-    * exactly like the raw reader.
+    * stale the layout: codes anti-join the handle snapshot's tombstone
+    * keys, exactly like the raw reader.
     */
   def openEmbedStoreQuantized(spark: SparkSession, storePath: String,
                               centroidPath: String): OpenEmbedStore = {
@@ -724,19 +715,11 @@ object Stream {
       s"embed store at $storePath has no current $Sq8Dir layout — run " +
         "Stream.quantizeEmbedStore(spark, storePath) after the last " +
         "segment landing/fold (takedowns alone need no requantize)")
-    val codesRaw = spark.read.parquet(
-      new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(storePath, Sq8Dir), "codes").toString)
-    val codes = graft.sources.Tombstones.setOf(spark, storePath,
-        key = "vec_id") match {
-      case Some(t) => codesRaw.join(t, Seq("vec_id"), "left_anti")
-      case None => codesRaw
-    }
-    val levels = spark.read.parquet(
-      new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(storePath, Sq8Dir), "levels").toString)
-    OpenEmbedStore(loadEmbedStore(spark, storePath),
-      spark.read.parquet(centroidPath), Some((codes, levels)))
+    val oes = openEmbedStore(spark, storePath, centroidPath)
+    val sq8 = s"$storePath/$Sq8Dir"
+    oes.copy(sq8 = Some((
+      SegmentedStore.live(spark.read.parquet(s"$sq8/codes"), oes.snapshot.tombstones, "vec_id"),
+      spark.read.parquet(s"$sq8/levels"))))
   }
 
   /** ADC-style quantized top-`k`: bucket-pruned shortlist of
@@ -885,9 +868,10 @@ object Stream {
           .filter(col("n") > 0L)
         // Σ n_tokens is additive across the partial pack rows, so the
         // offset needs one column-pruned scan of the segments
+        val l = SegmentedStore.listing(spark, storePath)
         val offset: Long =
-          if (SegmentedStore.listing(spark, storePath).hasData)
-            spark.read.parquet(storePath)
+          if (l.hasData)
+            SegmentedStore.read(spark, storePath, l)
               .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
           else 0L
         val cum = graft.operators.GraftOps.runningTotal(counts,
@@ -925,7 +909,7 @@ object Stream {
     // takedown tripwire: refuse a store whose stamped corpus epoch
     // lags the corpus's current one ([[requirePackFresh]])
     corpusPath.foreach(cp => requirePackFresh(spark, storePath, cp))
-    val raw = spark.read.parquet(storePath)
+    val raw = SegmentedStore.read(spark, storePath)
     if (!raw.columns.contains("seg")) raw
     else raw.groupBy("pack_id")
       .agg(sum(col("n_docs")).as("n_docs"),
@@ -980,9 +964,10 @@ object Stream {
         // the offset needs only Σ n_tokens across segments (sums are
         // additive across the partial pack rows) — a column-pruned
         // scan, never a full-store materialization
+        val l = SegmentedStore.listing(spark, storePath)
         val offset: Long =
-          if (SegmentedStore.listing(spark, storePath).hasData)
-            spark.read.parquet(storePath)
+          if (l.hasData)
+            SegmentedStore.read(spark, storePath, l)
               .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
           else 0L
         val cum = graft.operators.GraftOps.runningTotal(segs,
@@ -1029,7 +1014,7 @@ object Stream {
                         partitionCol: Option[String] = None): Unit = {
     val spark = rows.sparkSession
     landThenFold(rows, storePath, Some(batchId), partitionCol)(
-      SegmentedStore.read(spark, storePath, SegmentedStore.listing(spark, storePath)).drop("seg"))
+      SegmentedStore.read(spark, storePath).drop("seg"))
   }
 
   /** Land `delta` as the next segment of the store at `storePath`
@@ -1073,7 +1058,7 @@ object Stream {
                     corpusPath: Option[String] = None): DataFrame = {
     // takedown tripwire ([[requirePackFresh]], like [[loadChunkStore]])
     corpusPath.foreach(cp => requirePackFresh(spark, storePath, cp))
-    val raw = spark.read.parquet(storePath)
+    val raw = SegmentedStore.read(spark, storePath)
     if (!raw.columns.contains("seg")) raw
     else raw
       .groupBy("pack_id")
@@ -1084,7 +1069,7 @@ object Stream {
         min(col("first_doc")).as("first_doc"),
         max(col("last_doc")).as("last_doc"),
         array_join(filter(transform(
-          sort_array(collect_list(struct(col("seg").cast("long").as("s"),
+          sort_array(collect_list(struct(col("seg").as("s"),
             col("media_refs").as("r")))),
           x => x.getField("r")), s => length(s) > 0), ",").as("media_refs"))
       .select("pack_id", "n_segs", "n_text_segs", "n_media_segs",
@@ -1123,7 +1108,7 @@ object Stream {
         md5(concat(lit("sample:"), col("doc_id").cast("string"))).as("h"))
       val all =
         if (fs.exists(basePath))
-          spark.read.parquet(storePath).unionByName(delta)
+          SegmentedStore.read(spark, storePath).unionByName(delta)
         else delta
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy(col("h"), col("doc_id"))
@@ -1599,8 +1584,8 @@ object Stream {
     * stores stay partition-pruned however large the corpus is; the
     * fusion frames are ≤ 4k rows per query. Each batch with terms is
     * [[hybridServeOn]] over a one-query index handle
-    * ([[graft.sources.IndexStore.openOnce]]) and a fresh
-    * [[openEmbedStore]], so every batch reads the latest stores.
+    * ([[graft.sources.IndexStore.openOnce]]) and a one-query embed
+    * handle, so every batch reads the latest stores.
     */
   def hybridServe(queries: DataFrame, indexPath: String, centroidPath: String,
       storePath: String, outPath: String, k: Int = 5,
@@ -1613,7 +1598,7 @@ object Stream {
       // to open)
       if (terms.nonEmpty) {
         hybridTermsOn(graft.sources.IndexStore.openOnce(spark, indexPath, nBuckets),
-            openEmbedStore(spark, storePath, centroidPath), batch, terms, k)
+            embedHandle(spark, storePath, centroidPath, hold = false), batch, terms, k)
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       }
     }
@@ -1721,7 +1706,8 @@ object Stream {
         .withColumn("src_batch", lit(batchId))
       val all =
         if (fs.exists(basePath))
-          spark.read.parquet(storePath).filter(col("src_batch") =!= batchId).unionByName(scored)
+          SegmentedStore.read(spark, storePath).filter(col("src_batch") =!= batchId)
+            .unionByName(scored)
         else scored
       val merged = all
         .orderBy(col("es_key").desc, col("doc_id"))

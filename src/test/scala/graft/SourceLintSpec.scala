@@ -24,6 +24,16 @@ import scala.jdk.CollectionConverters._
   *    `loadFuzzy(` in `operators/Query.scala`: every index query reads
   *    its relations through an `IndexStore.OpenIndex` (a per-query call
   *    opens a one-query handle), so a second read path there fails.
+  *  - `Tombstones.` reads outside `sources/SegmentedStore.scala` and
+  *    `sources/Tombstones.scala`: a reader drops taken-down rows through
+  *    a `SegmentedStore.Snapshot` (its dead-key set or its tombstone
+  *    keys), so a hand-written tombstone anti-join fails. The landings
+  *    and counters (`append`, `landBatch`, `batchCount`, `horizon`,
+  *    `epoch`, `carryEpoch`, `treeFingerprint`) are not reads of the
+  *    key set.
+  *  - `spark.read.parquet(storePath` in `streaming/Stream.scala`: a
+  *    store is read through `SegmentedStore.read` over one listing or
+  *    through a snapshot, never by a plain parquet read of its root.
   *  - `def main` / `extends App`: the engine is timed by `Bench`, its
   *    plans audited by `Explain`, its results dumped by `Verify`, and
   *    `Cli` is the command surface. A new entry point is a harness
@@ -75,6 +85,60 @@ class SourceLintSpec extends AnyFunSuite {
       "IndexStore.loadListed(spark, path, l)",
       "Tables.load(spark, dir)")
     clean.foreach(src => assert(indexReads(src).isEmpty, src))
+  }
+
+  test("lint: no tombstone read in src/main/scala outside SegmentedStore and Tombstones") {
+    val owners = Set("SegmentedStore.scala", "Tombstones.scala")
+    val hits = mainSources.filterNot(f => owners(f.getFileName.toString))
+      .flatMap(f => tombstoneReads(read(f)).map(n => s"$f:$n"))
+    assert(hits.isEmpty, "tombstone read outside a snapshot (use SegmentedStore.Snapshot's " +
+      "live or tombstones) at: " + hits.mkString(", "))
+  }
+
+  test("lint: the tombstone-read detector flags key reads, not landings, counters or comments") {
+    val flagged = Seq(
+      "Tombstones.setOf(spark, path) match {",
+      "val t = graft.sources.Tombstones.keysOf(spark, p, key)",
+      "if (Tombstones.hasAny(spark, path)) 1",
+      "new Path(path, Tombstones.Dir)")
+    flagged.foreach(src => assert(tombstoneReads(src).nonEmpty, src))
+    assert(tombstoneReads("val x = 1\nTombstones.keysOf(spark, p)") === Seq(2))
+    val clean = Seq(
+      "Tombstones.append(spark, path, docIds)",
+      "graft.sources.Tombstones.landBatch(ids, ep, batchId, key = \"vec_id\")",
+      "if (Tombstones.batchCount(spark, p) >= n) fold()",
+      "Tombstones.horizon(spark, path)",
+      "try out.write(graft.sources.Tombstones.epoch(spark, corpusPath)",
+      "Tombstones.carryEpoch(spark, inPath, outPath)",
+      "top + Tombstones.treeFingerprint(spark, path)",
+      "// Tombstones.setOf(spark, path) in a comment",
+      "  * [[Tombstones.keysOf]] in a scaladoc",
+      "SegmentedStore.live(raw, snap.tombstones, \"doc_id\")")
+    clean.foreach(src => assert(tombstoneReads(src).isEmpty, src))
+  }
+
+  test("lint: streaming/Stream.scala reads no store with a plain parquet read") {
+    val f = Paths.get("src/main/scala/graft/streaming/Stream.scala")
+    assert(mainSources.contains(f))
+    val hits = plainStoreReads(read(f))
+    assert(hits.isEmpty, s"plain parquet read of a store (use SegmentedStore.read or a " +
+      s"snapshot) at $f lines: " + hits.mkString(", "))
+  }
+
+  test("lint: the plain-store-read detector flags storePath reads, not other paths or comments") {
+    val flagged = Seq(
+      "val raw = spark.read.parquet(storePath)",
+      "    spark.read.parquet(storePath).unionByName(delta)",
+      "spark.read.parquet(storePath + \"/x\")")
+    flagged.foreach(src => assert(plainStoreReads(src).nonEmpty, src))
+    assert(plainStoreReads("val x = 1\nspark.read.parquet(storePath)") === Seq(2))
+    val clean = Seq(
+      "val cent = spark.read.parquet(centroidPath)",
+      "SegmentedStore.read(spark, storePath)",
+      "spark.read.parquet(s\"$sq8/codes\")",
+      "// spark.read.parquet(storePath) in a comment",
+      "  * `spark.read.parquet(storePath)` in a scaladoc")
+    clean.foreach(src => assert(plainStoreReads(src).isEmpty, src))
   }
 
   test("lint: the entry points in src/main/scala are exactly Bench, Cli, Explain and Verify") {
@@ -188,6 +252,27 @@ object SourceLintSpec {
   def indexReads(src: String): Seq[Int] =
     src.split("\n", -1).toSeq.zipWithIndex.collect {
       case (line, i) if !isComment(line) && IndexRead.findFirstIn(line).nonEmpty => i + 1
+    }
+
+  private val TombstoneRead = ("\\bTombstones\\.(?!(?:append|landBatch|batchCount|horizon|epoch|" +
+    "carryEpoch|treeFingerprint)\\b)\\w").r
+
+  /** 1-based line numbers of code lines that name a `Tombstones` member
+    * other than its landings and counters: a read of the key set.
+    */
+  def tombstoneReads(src: String): Seq[Int] =
+    src.split("\n", -1).toSeq.zipWithIndex.collect {
+      case (line, i) if !isComment(line) && TombstoneRead.findFirstIn(line).nonEmpty => i + 1
+    }
+
+  private val PlainStoreRead = raw"\bspark\.read\.parquet\(storePath\b".r
+
+  /** 1-based line numbers of code lines reading `storePath` with a
+    * plain `spark.read.parquet`.
+    */
+  def plainStoreReads(src: String): Seq[Int] =
+    src.split("\n", -1).toSeq.zipWithIndex.collect {
+      case (line, i) if !isComment(line) && PlainStoreRead.findFirstIn(line).nonEmpty => i + 1
     }
 
   private val ObjectDecl = raw"^(?:(?:private|final|case)\s+)*object\s+([A-Za-z_][A-Za-z0-9_]*)".r

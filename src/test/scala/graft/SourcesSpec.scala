@@ -183,17 +183,18 @@ class SourcesSpec extends SparkSpec {
     // planning-time bucket pruning survives the tombstone anti-join
     assert(Explain.prunes(IndexStore.lookup(spark, path, term, nBuckets = 8),
       Explain.TermBucket))
-    // compaction drops the rows for real and clears the tombstone dir
-    // no explicit bucket count: compact must INHERIT the saved 8, not
-    // re-bucket to the 64 default
-    val compacted = s"$base/compacted"
-    IndexStore.compact(spark, path, compacted)
-    val cGot = IndexStore.lookup(spark, compacted, term, nBuckets = 8)
+    // compaction drops the rows for real and clears the tombstone dir,
+    // in place: the plain store folds to a plain root. No explicit
+    // bucket count: the fold must INHERIT the saved 8, not re-bucket to
+    // the 64 default
+    val liveRows = IndexStore.load(spark, path).count()
+    IndexStore.compactSegments(spark, path)
+    val cGot = IndexStore.lookup(spark, path, term, nBuckets = 8)
       .select("doc_id").collect().map(_.getLong(0)).sorted
     assert(cGot.toSeq === after.toSeq)
-    assert(!new java.io.File(s"$compacted/_tombstones").exists())
-    assert(IndexStore.load(spark, compacted).count() ===
-      IndexStore.load(spark, path).count())
+    assert(!new java.io.File(s"$path/_tombstones").exists())
+    assert(IndexStore.segmentIds(spark, path).isEmpty && IndexStore.buckets(spark, path) === Some(8))
+    assert(IndexStore.load(spark, path).count() === liveRows)
   }
 
   test("index store: multi-term lookup prunes to the terms' buckets in one scan") {
@@ -566,11 +567,45 @@ class SourcesSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(idsIdx(path) === fromCorpus && fromCorpus.nonEmpty)
     // compaction rebuilds the dictionary inside the fold and the
-    // compacted index answers identically
-    val out = tmpDir("graft-idxfuzzy-c") + "/index"
-    IndexStore.compact(spark, path, out)
-    assert(IndexStore.hasFuzzy(spark, out))
-    assert(idsIdx(out) === fromCorpus)
+    // compacted index answers identically. A clean one-layout store has
+    // nothing to fold, so a takedown comes first; it alone leaves the
+    // table current
+    val victim = fromCorpus.head
+    IndexStore.delete(spark, path, Seq(victim))
+    assert(IndexStore.fuzzyCurrent(spark, path), "a takedown must not stale _fuzzy")
+    IndexStore.compactSegments(spark, path)
+    assert(!new java.io.File(s"$path/_tombstones").exists())
+    assert(IndexStore.fuzzyCurrent(spark, path))
+    assert(idsIdx(path) === fromCorpus.filter(_ != victim))
+  }
+
+  test("fuzzy dictionary: a segment landed after saveFuzzy is served by the scan, not missed") {
+    import spark.implicits._
+    val path = tmpDir("graft-fuzzystale") + "/index"
+    val first = Seq((0L, "spark join"), (1L, "query engine")).toDF("doc_id", "text")
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(first), path, 0L, nBuckets = 4))
+    IndexStore.saveFuzzy(spark, path)
+    assert(IndexStore.fuzzyCurrent(spark, path))
+    // the new segment brings a term the dictionary was built without
+    val second = Seq((2L, "zebra crossing")).toDF("doc_id", "text")
+    assert(IndexStore.saveSegment(Index.invertedIndexOf(second), path, 1L, nBuckets = 4))
+    assert(!IndexStore.fuzzyCurrent(spark, path), "a landing must stale _fuzzy")
+    val q = "zebro~1 OR sparc~1"
+    val want = operators.Query.search(first.unionByName(second), q)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(want === Seq(0L, 2L))
+    def got(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.collect().map(_.getLong(0)).sorted.toSeq
+    assert(got(operators.Query.searchIndex(spark, path, q, nBuckets = 4)) === want)
+    val oi = IndexStore.open(spark, path, nBuckets = 4)
+    try {
+      assert(oi.fuzzy.isEmpty, "a handle must treat a stale _fuzzy as absent")
+      assert(got(operators.Query.searchIndexOn(oi, q)) === want)
+    } finally oi.release()
+    // a fold rebuilds the table from its output, current again
+    IndexStore.compactSegments(spark, path)
+    assert(IndexStore.fuzzyCurrent(spark, path))
+    assert(got(operators.Query.searchIndex(spark, path, q, nBuckets = 4)) === want)
   }
 
   test("prepared serving session: OpenIndex *On variants match the per-query path row for row") {
@@ -1260,11 +1295,11 @@ class SourcesSpec extends SparkSpec {
   test("tombstones: landings keyed under both doc_id and a custom key normalize at read") {
     val store = tmpDir("graft-tombkeys") + "/store"
     // a vec_id-keyed landing plus a default doc_id-keyed one: the
-    // union schema carries BOTH columns; setOf must coalesce instead
+    // union schema carries BOTH columns; the read must coalesce instead
     // of renaming into a duplicate-column wreck
     sources.Tombstones.append(spark, store, Seq(1L), key = "vec_id")
     sources.Tombstones.append(spark, store, Seq(2L))
-    val got = sources.Tombstones.setOf(spark, store, key = "vec_id").get
+    val got = sources.SegmentedStore.snapshot(spark, store, "vec_id").tombstones.get
     assert(got.columns.toSeq === Seq("vec_id"))
     assert(got.collect().map(_.getLong(0)).toSet === Set(1L, 2L))
   }
@@ -1327,7 +1362,8 @@ class SourcesSpec extends SparkSpec {
 
     val (oi, openJobs) = jobsOf(IndexStore.open(spark, path))
     assert(openJobs === 0, "open must resolve every relation on the driver")
-    assert(oi.docs.isDefined && oi.meta.isDefined && oi.fuzzy.isDefined && oi.deadKeys.isDefined)
+    assert(oi.docs.isDefined && oi.meta.isDefined && oi.fuzzy.isDefined &&
+      oi.snapshot.deadKeys.isDefined)
     def served(h: IndexStore.OpenIndex, q: String): Set[Long] =
       operators.Query.searchIndexOn(h, q).collect().map(_.getLong(0)).toSet
     // doc 1's first version and taken-down doc 2 held w10
@@ -1382,6 +1418,47 @@ class SourcesSpec extends SparkSpec {
     // the per-query path resolves the dead-key set twice: once for
     // the (n, avgdl) collect and once inside the query plan
     assert(jobs(churned) === Seq(11, 8, 12), "3-segment store with tombstones")
+  }
+
+  test("knn serving: jobs per query on a fresh handle, a warm handle and the per-batch path") {
+    import spark.implicits._
+    val base = tmpDir("graft-knnjobs")
+    val cent = s"$base/cent"
+    operators.Similarity.saveCentroids(
+      Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("vec_id", "embedding"), cent)
+    // one embed-store segment, as embedIndexMaintenance lands a batch
+    def land(store: String, seg: Long, vecs: Seq[(Long, Array[Float])]): Unit = {
+      val assigned = operators.Similarity.ivfAssignTo(operators.Similarity.withNormOf(
+          vecs.toDF("vec_id", "embedding")), spark.read.parquet(cent))
+        .select("vec_id", "embedding", "nm", "bucket")
+      assert(sources.SegmentedStore.land(spark, store, seg, partitioned = true)(
+        assigned.repartition(col("bucket")).write.partitionBy("bucket").parquet(_)))
+    }
+    val q = Seq((1000L, Array(1f, 0.05f))).toDF("vec_id", "embedding")
+    // (first query on a fresh held handle, second query, per-batch
+    // path), each counted from planning through collect
+    def jobs(store: String): Seq[Int] = {
+      def ran(df: => org.apache.spark.sql.DataFrame): Int = jobsOf(df.collect())._2
+      val oes = streaming.Stream.openEmbedStore(spark, store, cent)
+      try Seq(ran(streaming.Stream.knnServeOn(oes, q, k = 2)),
+        ran(streaming.Stream.knnServeOn(oes, q, k = 2)),
+        ran(streaming.Stream.knnServeOn(
+          streaming.Stream.embedHandle(spark, store, cent, hold = false), q, k = 2)))
+      finally oes.release()
+    }
+    val vecs = Seq((100L, Array(0.9f, 0.1f)), (101L, Array(0.8f, 0.3f)),
+      (102L, Array(0.1f, 0.9f)), (103L, Array(0.2f, 0.8f)))
+    val one = s"$base/one"
+    land(one, 0L, vecs)
+    assert(jobs(one) === Seq(8, 8, 9), "1-segment store")
+    // vec 100 re-embedded into bucket 1, vec 104 new, vec 101 taken down
+    val churned = s"$base/churned"
+    land(churned, 0L, vecs)
+    land(churned, 1L, Seq((100L, Array(0.05f, 0.9f)), (104L, Array(1f, 0.2f))))
+    sources.Tombstones.append(spark, churned, Seq(101L), key = "vec_id")
+    // the held handle resolves the dead-key set at its first query and
+    // holds it; the per-batch path resolves it inside every query
+    assert(jobs(churned) === Seq(10, 9, 11), "2-segment store with tombstones")
   }
 
   test("batch-keyed ledger: the prior frame over two segments is built with no job") {

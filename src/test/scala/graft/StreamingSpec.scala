@@ -503,15 +503,21 @@ class StreamingSpec extends SparkSpec with TimeLimitedTests {
       // bucket-partitioned layout: a bucket read prunes directories
       assert(Explain.prunes(spark.read.parquet(storePath).filter(col("bucket") === 0L),
         "bucket"))
-      // ...and the pruning survives the segment RESOLVER (the serve
-      // path): the bucket predicate pushes through the last-writer-
-      // wins semi-join into each segment's partition filters. Not
-      // Explain.prunes: the dead-key scan reads every bucket by
-      // design, since a re-embedded vector can move buckets
-      val rPlan = Stream.loadEmbedStore(spark, storePath)
-        .filter(col("bucket") === 0L)
-        .queryExecution.executedPlan.toString
-      assert(rPlan.contains("PartitionFilters") && rPlan.contains("bucket"))
+      // ...and the pruning survives the segment RESOLVER on a held
+      // handle: after its first query the dead-key set is held rows, so
+      // every store scan is bucket-pruned. A one-query read still scans
+      // every bucket's vec_id to resolve versions, since a re-embedded
+      // vector can move buckets
+      sources.Tombstones.append(spark, storePath, Seq(101L), key = "vec_id")
+      assert(!Explain.prunes(Stream.loadEmbedStore(spark, storePath)
+        .filter(col("bucket") === 0L), "bucket"))
+      val held = Stream.openEmbedStore(spark, storePath, centPath)
+      try {
+        val probe = Seq((1000L, Array(1f, 0.05f))).toDF("vec_id", "embedding")
+        assert(Stream.knnServeOn(held, probe, k = 2).collect().map(_.getLong(2)).toSeq ===
+          Seq(102L))
+        assert(Explain.prunes(Stream.knnServeOn(held, probe, k = 2), "bucket"))
+      } finally held.release()
     } finally q.stop()
   }
 
